@@ -10,7 +10,16 @@ import graft.ner.{BracketNer, CapitalizedNer}
 
 /** CLI mirroring `python -m arelight.run.infer` (reference
   * arelight/run/infer.py:48-343): pages in -> samples + predictions + triples
-  * parquet out + d3js force/radial JSON.
+  * parquet out + d3js force/radial JSON. `--fused on` writes the triples
+  * only; `--checkpoint` writes them bucket by bucket and stops there.
+  *
+  * The graph is built from the written triples aggregate-first
+  * (`GraphBuilder.tripleEdges`): one hash aggregation to typed-triple
+  * multiplicities, then the value->type map, node keys and edge counts on
+  * that small relation, then the min-links filter and one driver collect
+  * finished by `GraphBuilder.collectedGraph`. The last stdout line is
+  * `{"pages_out","samples","triples","nodes","links"}`; `triples` is the
+  * written row count, summed from the multiplicities.
   *
   * Usage:
   *   runMain graft.cli.Infer --synthetic 1000 --out /tmp/out [options]
@@ -284,39 +293,27 @@ object Infer {
         s""""asserted":${current.count()}}""")
     }
 
-    // graph build (driver-side finish: edges are post-aggregation small)
-    import org.apache.spark.sql.functions._
+    // graph build, aggregate-first (GraphBuilder.tripleEdges): the WRITTEN
+    // triples collapse once to their typed multiplicities, the type map, node
+    // keys and edge counts come from that small relation, and the graph is
+    // finished on the driver from one collect
     val minLinks = opts.getOrElse("--min-links", "1").toDouble
     val name = opts.getOrElse("--name", "pages")
-    val t = spark.read.parquet(s"$out/triples")
-    // last-occurrence-wins value->type map with an EXPLICIT deterministic order
-    // (docId, sentInd, sampleId, subj-before-obj): plain last() over an unordered
-    // aggregation can flip node keys between runs/retries, breaking resume-stable
-    // determinism (reference: dict-overwrite in flatten order, J2)
-    val sides = t.select(col("subj").as("value"), col("subjType").as("type"),
-        struct(col("docId"), col("sentInd"), col("sampleId"), lit(0).as("side")).as("ord"))
-      .union(t.select(col("obj"), col("objType"),
-        struct(col("docId"), col("sentInd"), col("sampleId"), lit(1).as("side"))))
-    val typeMap = sides.groupBy("value").agg(max_by(col("type"), col("ord")).as("type"))
-    val rels = t.select(col("subj").as("source"), col("obj").as("target"), col("pred").as("sent"))
-    // persist: the guard count + nodes collect + edges collect would otherwise
-    // re-run the scan+join+aggregation lineage three times
-    val keyed = GraphBuilder.withNodeKeys(rels, typeMap)
+    val built = GraphBuilder.tripleEdges(spark.read.parquet(s"$out/triples"))
     // --edge-store: fold this batch's UNFILTERED edge counts into the
     // persistent store (exactly-once per --batch-id) and build the graph from
     // the ACCRETED state — the continuous-crawl KG maintenance surface. Node
     // keys use this batch's value->type map; cross-batch key stability holds
     // when types are deterministic per value (true for annotated-page NER).
-    val edges = opts.get("--edge-store") match {
+    val edges = (opts.get("--edge-store") match {
       case Some(storeDir) =>
         val batchId = opts.getOrElse("--batch-id",
           sys.error("--edge-store requires --batch-id (the idempotent-retry token)"))
-        if (!graft.ops.EdgeStore.merge(GraphBuilder.edgeState(keyed), storeDir, batchId))
+        if (!graft.ops.EdgeStore.merge(built.state, storeDir, batchId))
           System.err.println(s"batch '$batchId' already in $storeDir ledger; fold skipped (idempotent retry)")
-        graft.ops.EdgeStore.edges(spark, storeDir, minLinks).persist()
-      case None => GraphBuilder.edges(keyed, minLinks).persist()
-    }
-    val nodes = GraphBuilder.nodes(edges)
+        graft.ops.EdgeStore.edges(spark, storeDir, minLinks)
+      case None => GraphBuilder.edgesFromState(built.state, minLinks)
+    }).persist() // the guard count and the one collect (or JSON write) share it
     // --ntriples y: RDF dump of the aggregated edges next to the graph JSON —
     // a distributed sharded-.nt write (never collects), the triple-store
     // bulk-load artifact
@@ -328,27 +325,22 @@ object Infer {
     // instead of one pretty d3js file.
     val maxEdges = opts.getOrElse("--max-collected-edges", "2000000").toLong
     val nEdges = edges.count()
-    if (nEdges > maxEdges) {
+    val graph = if (nEdges > maxEdges) {
       edges.write.mode(SaveMode.Overwrite).json(s"$out/force_edges_json")
-      nodes.write.mode(SaveMode.Overwrite).json(s"$out/force_nodes_json")
+      GraphBuilder.nodes(edges).write.mode(SaveMode.Overwrite).json(s"$out/force_nodes_json")
       System.err.println(s"graph too large to collect ($nEdges edges > cap $maxEdges); " +
         s"wrote distributed JSON under $out/force_{edges,nodes}_json")
-    }
-    val graph = if (nEdges > maxEdges) graft.core.Graph(Seq(name), s"[$name]", Seq.empty, Seq.empty)
-    else graft.core.Graph(
-      Seq(name), s"[$name]",
-      nodes.orderBy("id").collect().map(r =>
-        graft.core.GraphNode(r.getString(0), r.getDouble(1))).toSeq,
-      edges.orderBy("source", "target", "sent").collect().map(r =>
-        graft.core.GraphLink(r.getString(0), r.getString(1), r.getDouble(3), r.getString(2))).toSeq)
-    if (nEdges <= maxEdges) {
-      D3Json.save(graph, out, name, intLinkC = true, intNodeC = false)
+      graft.core.Graph(Seq(name), s"[$name]", Seq.empty, Seq.empty)
+    } else {
+      val g = GraphBuilder.collectedGraph(name, edges.collect().toSeq)
+      D3Json.save(g, out, name, intLinkC = true, intNodeC = false)
       // reference parity: --out is an OPENABLE artifact — a viewer page next
       // to the force/radial JSON folders (backend/d3js/ui_web.py layout)
       graft.graph.Viewer.save(out, name)
+      g
     }
 
-    val nTriples = t.count() // count the WRITTEN parquet, not a pipeline re-run
+    val nTriples = built.triples // the WRITTEN rows, summed from the multiplicities
     val nSamples = if (fusedMode) nTriples else samples.count() // fused: 1 sample == 1 triple
     println(s"""{"pages_out":"$out","samples":$nSamples,"triples":$nTriples,""" +
       s""""nodes":${graph.nodes.size},"links":${graph.links.size}}""")

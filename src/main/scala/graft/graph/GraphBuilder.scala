@@ -7,9 +7,14 @@ import graft.core.{Graph, GraphLink, GraphNode}
 /** Force-graph construction (reference
   * arelight/backend/d3js/relations_graph_builder.py:4-91).
   *
-  * Two implementations with identical math:
-  *  - DataFrame operators for scale (hash aggregate with map-side partials; the
-  *    endpoint value->type lookup is a broadcast join);
+  * Three builds with identical math:
+  *  - DataFrame operators over raw relation rows (hash aggregate with map-side
+  *    partials; the endpoint value->type lookup is a broadcast join);
+  *  - the aggregate-first build over a triples relation ([[tripleEdges]],
+  *    what `graft.cli.Infer` runs): the triples collapse once to their typed
+  *    multiplicities, and the type map, node keys and edge counts are all
+  *    computed on that small relation; [[collectedGraph]] finishes a
+  *    driver-sized edge relation with the local build's node rollup;
   *  - a pure-Scala local build replicating the reference float-for-float, used
   *    for golden tests and for the post-aggregation driver-sized graph algebra.
   */
@@ -299,18 +304,95 @@ object GraphBuilder {
     edgesFromState(edgeState(relations), minLinks, weights)
 
   /** Attach composed node keys to raw (source,target,sent) relation rows using a
-    * broadcast value->type map (UNKNOWN fallback). */
+    * broadcast value->type map (UNKNOWN fallback). Other columns of
+    * `relations` pass through after `sent`. */
   def withNodeKeys(relations: DataFrame, typeMap: DataFrame): DataFrame = {
     val tm = broadcast(typeMap)
     val s = tm.withColumnRenamed("value", "s_value").withColumnRenamed("type", "s_type")
     val t = tm.withColumnRenamed("value", "t_value").withColumnRenamed("type", "t_type")
+    val rest = relations.columns.filterNot(Set("source", "target", "sent")).map(relations(_))
     relations
       .join(s, relations("source") === s("s_value"), "left")
       .join(t, relations("target") === t("t_value"), "left")
-      .select(
+      .select(Seq(
         concat_ws(".", coalesce(col("s_type"), lit("UNKNOWN")), cleanValueCol(col("source"))).as("source"),
         concat_ws(".", coalesce(col("t_type"), lit("UNKNOWN")), cleanValueCol(col("target"))).as("target"),
-        col("sent"))
+        col("sent")) ++ rest: _*)
+  }
+
+  // --------------------------------------------------- aggregate-first build
+
+  /** The aggregate-first graph state of a triples relation: `state` is the
+    * UNFILTERED edge state (source, target, sent, cnt), equal to
+    * [[edgeState]] over the relation rows keyed with the last-occurrence type
+    * map. It reads two persisted aggregates: the typed-triple multiplicities
+    * `counts` (subj, subjType, obj, objType, pred, n) and the per-value type
+    * summary `types`. */
+  final class TripleEdges private[GraphBuilder] (
+      val state: DataFrame, counts: DataFrame, types: DataFrame) {
+    /** Rows of the triples relation: `counts` partitions them exactly, so
+      * this needs no second scan of the triples. */
+    def triples: Long =
+      counts.agg(coalesce(sum(col("n")), lit(0L))).first().getLong(0)
+
+    def unpersist(): Unit = { counts.unpersist(); types.unpersist() }
+  }
+
+  /** Persist a small aggregate at the cluster's parallelism: a cached plan
+    * keeps every `spark.sql.shuffle.partitions` partition of its last shuffle
+    * (adaptive execution may not coalesce it), and each later scan would pay
+    * one task per partition. */
+  private def persistCoalesced(df: DataFrame): DataFrame =
+    df.coalesce(df.sparkSession.sparkContext.defaultParallelism).persist()
+
+  /** Last-occurrence-wins value->type map (reference: dict overwrite in
+    * flatten order, J2) with an EXPLICIT deterministic order (docId,
+    * sentInd, sampleId, subj-before-obj): plain last() over an unordered
+    * aggregation can flip node keys between runs/retries. */
+  private def lastOccurrenceTypes(triples: DataFrame): DataFrame =
+    triples.select(col("subj").as("value"), col("subjType").as("type"),
+        struct(col("docId"), col("sentInd"), col("sampleId"), lit(0).as("side")).as("ord"))
+      .union(triples.select(col("obj"), col("objType"),
+        struct(col("docId"), col("sentInd"), col("sampleId"), lit(1).as("side"))))
+
+  /** Aggregate-first edge state of a triples relation (subj, subjType, pred,
+    * obj, objType, docId, sentInd, sampleId):
+    *  1. one hash aggregation collapses the triples to their typed
+    *     multiplicities (persisted: a crawl's 3.1 M triples are ~1.1 k rows);
+    *  2. a value seen with exactly one type (null included) takes it; only
+    *     values seen with several types scan the triples again, for the
+    *     last-occurrence winner ([[lastOccurrenceTypes]]) — one small driver
+    *     job decides whether any exist;
+    *  3. node keys and the per-key sums of `n` are computed on the
+    *     multiplicities, so raw values that clean to one key merge exactly as
+    *     they do over the rows.
+    * A struct-ordered `max_by` carried inside step 1 would turn its hash
+    * aggregation into a sort aggregation; the fallback avoids that. */
+  def tripleEdges(triples: DataFrame): TripleEdges = {
+    val counts = persistCoalesced(triples
+      .groupBy(col("subj"), col("subjType"), col("obj"), col("objType"), col("pred"))
+      .agg(count(lit(1)).as("n")))
+    // persisted: the check for multi-typed values and the type map share it
+    val typed = persistCoalesced(counts.select(col("subj").as("value"), col("subjType").as("type"))
+      .union(counts.select(col("obj"), col("objType")))
+      .groupBy(col("value"))
+      .agg(min(col("type")).as("type"), max(col("type")).as("hi"),
+        max(col("type").isNull).as("hasNull")))
+    // min ignores nulls: a null minimum means every occurrence is untyped
+    val single = col("type").isNull || (col("type") === col("hi") && !col("hasNull"))
+    val multi = typed.filter(!single).select(col("value"))
+    val singles = typed.filter(single).select(col("value"), col("type"))
+    val typeMap =
+      if (multi.isEmpty) singles
+      else singles.unionByName(lastOccurrenceTypes(triples)
+        .join(multi, Seq("value"), "left_semi")
+        .groupBy(col("value")).agg(max_by(col("type"), col("ord")).as("type")))
+    val state = withNodeKeys(counts.select(col("subj").as("source"), col("obj").as("target"),
+        col("pred").as("sent"), col("n")), typeMap)
+      .na.drop(Seq("source", "target", "sent")) // F4, as in edgeState
+      .groupBy(col("source"), col("target"), col("sent"))
+      .agg(sum(col("n")).as("cnt"))
+    new TripleEdges(state, counts, typed)
   }
 
   /** Node relation: degree over surviving edges, max-normalized
@@ -362,20 +444,53 @@ object GraphBuilder {
       }
     }
 
+    val linkSeq = links.iterator.collect { case ((s, t, sent), c) if c >= minLinks =>
+      GraphLink(s, t, if (weights) c.toDouble else 1.0, sent)
+    }.toSeq
+    Graph(Seq(graphName), s"[$graphName]", nodeRollup(linkSeq, weights), linkSeq)
+  }
+
+  /** Node rollup over surviving links: degree (a self-pair counts twice),
+    * max-normalized (relations_graph_builder.py:80-89), in first-seen order. */
+  private def nodeRollup(links: Seq[GraphLink], weights: Boolean = true): Seq[GraphNode] = {
     val used = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val outLinks = Seq.newBuilder[GraphLink]
-    links.foreach { case ((s, t, sent), c) =>
-      if (c >= minLinks) {
-        outLinks += GraphLink(s, t, if (weights) c.toDouble else 1.0, sent)
-        used.update(s, used.getOrElse(s, 0L) + 1L)
-        used.update(t, used.getOrElse(t, 0L) + 1L)
-      }
+    links.foreach { l =>
+      used.update(l.source, used.getOrElse(l.source, 0L) + 1L)
+      used.update(l.target, used.getOrElse(l.target, 0L) + 1L)
     }
-    val linkSeq = outLinks.result()
     val maxDeg = if (used.isEmpty) 0L else used.values.max
-    val nodeSeq = used.iterator.map { case (id, d) =>
+    used.iterator.map { case (id, d) =>
       GraphNode(id, if (weights) d.toDouble / maxDeg else 1.0)
     }.toSeq
-    Graph(Seq(graphName), s"[$graphName]", nodeSeq, linkSeq)
+  }
+
+  /** Spark's string order: `UTF8String` compares UTF-8 bytes, which is code
+    * point order. `String.compareTo` compares UTF-16 units and so sorts a
+    * supplementary character (surrogates 0xD800-0xDFFF) before a high-BMP
+    * one (0xE000-0xFFFF); this ordering does not. */
+  val sparkStringOrdering: Ordering[String] = (a: String, b: String) => {
+    var i = 0
+    var j = 0
+    var d = 0
+    while (d == 0 && i < a.length && j < b.length) {
+      val ca = a.codePointAt(i)
+      val cb = b.codePointAt(j)
+      d = Integer.compare(ca, cb)
+      i += Character.charCount(ca)
+      j += Character.charCount(cb)
+    }
+    if (d != 0) d else Integer.compare(a.length - i, b.length - j)
+  }
+
+  /** Driver finish of a collected edge relation (source, target, sent, c):
+    * links ordered by (source, target, sent) and nodes ([[nodeRollup]]) by
+    * id, both in Spark's `orderBy` order — the d3js graph [[edges]] +
+    * [[nodes]] + two sorted collects would give, from one collect. */
+  def collectedGraph(graphName: String, edgeRows: Seq[org.apache.spark.sql.Row]): Graph = {
+    implicit val ord: Ordering[String] = sparkStringOrdering
+    val links = edgeRows
+      .map(r => GraphLink(r.getString(0), r.getString(1), r.getDouble(3), r.getString(2)))
+      .sortBy(l => (l.source, l.target, l.sent))
+    Graph(Seq(graphName), s"[$graphName]", nodeRollup(links).sortBy(_.id), links)
   }
 }
