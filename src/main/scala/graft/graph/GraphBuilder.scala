@@ -40,23 +40,6 @@ object GraphBuilder {
 
   // ---------------------------------------------------------------- DataFrame
 
-  /** Entity value->type dictionary from per-sample parallel arrays (J2).
-    * Reference semantics: dict overwrite while flattening all samples in order —
-    * LAST occurrence wins. `orderCol` fixes the deterministic order (e.g.
-    * (docId, opinionId)); rows are exploded and the max-order row wins. */
-  def entityTypeMap(samples: DataFrame, orderCol: Column): DataFrame = {
-    val exploded = samples
-      .withColumn("ord", orderCol)
-      .select(col("ord"), posexplode(arrays_zip(col("entityValues"), col("entityTypes"))))
-      .select(
-        col("col.entityValues").as("value"),
-        col("col.entityTypes").as("type"),
-        (col("ord") * 1000000 + col("pos")).as("ord"))
-    exploded
-      .groupBy(col("value"))
-      .agg(max_by(col("type"), col("ord")).as("type"))
-  }
-
   /** UNFILTERED edge counts — the mergeable state behind [[edges]]:
     * (source, target, sent, cnt). The min-links HAVING must NOT be applied to
     * state that will be merged again (an edge seen once per batch but many
@@ -409,14 +392,6 @@ object GraphBuilder {
       degrees.crossJoin(broadcast(m)).select(col("id"), (col("degree") / col("maxd")).as("c"))
     }
   }
-
-  /** A2: raw mention-value frequencies over relations (the reference computes
-    * this Counter and never uses it for output weights,
-    * relations_graph_builder.py:35,52-53 — kept for parity audits). */
-  def mentionFrequencies(relations: DataFrame): DataFrame =
-    relations
-      .select(explode(array(col("source"), col("target"))).as("value"))
-      .groupBy("value").agg(count(lit(1)).as("freq"))
 
   /** F3: optional label predicate on graph-A relations
     * (arelight/pipelines/items/backend_d3js_graphs.py:26,44-46). */

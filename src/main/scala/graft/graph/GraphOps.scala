@@ -248,45 +248,12 @@ object GraphOps {
     * with the number of consumers each round's relation feeds (linear chains
     * tolerate ~8 rounds; two-consumer shapes double per round).
     *
-    * Over-budget loops truncate with a tunable policy (A/B-measured per
-    * round; see tools/IterProbe):
-    *   - `spark.graft.iter.stride` (default 1): truncate every stride-th
-    *     round only — fewer barriers, plan growth bounded by growth^stride;
-    *   - `spark.graft.iter.eager` (default true): eager materializes the
-    *     round in its own job (old behavior); lazy (`false`) truncates the
-    *     LOGICAL plan immediately (LogicalRDD) but defers computation to
-    *     the consuming action, removing the per-round job barrier;
-    *   - `spark.graft.iter.skipFinal` (default false): never checkpoint the
-    *     loop's last round — its single downstream consumer materializes it
-    *     anyway; callers that fan the result out re-checkpoint themselves. */
-  private[graft] def roundCkpt(rounds: Int, maxLazy: Int): DataFrame => DataFrame = {
-    var r = 0
-    df => {
-      r += 1
-      if (rounds <= maxLazy) df
-      else {
-        val conf = df.sparkSession.conf
-        val stride = conf.get("spark.graft.iter.stride", "1").toInt
-        val eager = conf.get("spark.graft.iter.eager", "true").toBoolean
-        val skipFinal = conf.get("spark.graft.iter.skipFinal", "false").toBoolean
-        if (skipFinal && r == rounds) df
-        else if (r % stride != 0) df
-        else if (eager) df.localCheckpoint(true)
-        else {
-          // Lazy truncation: plan the round WITHOUT AQE — an adaptive plan
-          // materializes its shuffle stages with blocking jobs even under
-          // localCheckpoint(eager = false), which would re-introduce the
-          // per-round barrier this mode exists to remove. Planning happens
-          // inside the localCheckpoint call, so the conf flip is scoped.
-          val sess = df.sparkSession
-          val key = "spark.sql.adaptive.enabled"
-          val prev = sess.conf.get(key, "true")
-          sess.conf.set(key, "false")
-          try df.localCheckpoint(false) finally sess.conf.set(key, prev)
-        }
-      }
-    }
-  }
+    * Over-budget loops checkpoint every round eagerly. The round-5 A/Bs
+    * (COVERAGE.md, "Round-5") measured the alternatives slower on the
+    * multi-consumer loops: truncating every 2nd round +35–57%, lazy
+    * (deferred) truncation +64–103%. */
+  private[graft] def roundCkpt(rounds: Int, maxLazy: Int): DataFrame => DataFrame =
+    df => if (rounds <= maxLazy) df else df.localCheckpoint(true)
 
   /** The [[prPrep]]ed edge relation collected when small enough for the
     * PageRank-family driver fast paths: (source, target, w, ow) — strings
@@ -812,24 +779,20 @@ object GraphOps {
     // auth feeds two consumers per round (hub update + the final zip), so
     // the lazy plan doubles per iteration — a tighter budget than the
     // linear-chain operators
-    // one truncation chain PER ARM: a shared instance would count each
-    // arm's call as a round and misfire stride/skipFinal under non-default
-    // knobs (one arm starved of truncation, the other skipping mid-loop)
-    val ckA = roundCkpt(iters, maxLazy = 4)
-    val ckS = roundCkpt(iters, maxLazy = 4)
+    val ck = roundCkpt(iters, maxLazy = 4)
     var scores = nodes.select(col("id"), lit(1000000L).as("hub"), lit(1000000L).as("auth"))
     for (_ <- 1 to iters) {
       val aRaw = ew.join(scores.select(col("id"), col("hub")), ew("source") === col("id"))
         .groupBy(col("target")).agg(sum(col("hub") * col("w")).as("a_raw"))
       val aNorm = aRaw.agg(sum(col("a_raw")).as("asum"))
-      val auth = ckA(nodes.join(aRaw, nodes("id") === aRaw("target"), "left")
+      val auth = ck(nodes.join(aRaw, nodes("id") === aRaw("target"), "left")
         .crossJoin(broadcast(aNorm))
         .select(col("id"),
           expr("coalesce(a_raw, 0L) div greatest(1L, asum div 1000000L)").as("auth")))
       val hRaw = ew.join(auth.select(col("id"), col("auth")), ew("target") === col("id"))
         .groupBy(col("source")).agg(sum(col("auth") * col("w")).as("h_raw"))
       val hNorm = hRaw.agg(sum(col("h_raw")).as("hsum"))
-      scores = ckS(nodes.join(hRaw, nodes("id") === hRaw("source"), "left")
+      scores = ck(nodes.join(hRaw, nodes("id") === hRaw("source"), "left")
         .crossJoin(broadcast(hNorm))
         .select(col("id"),
           expr("coalesce(h_raw, 0L) div greatest(1L, hsum div 1000000L)").as("hub"))
@@ -960,7 +923,7 @@ object GraphOps {
     * eager truncation IS the measured optimum here: the state feeds ~5
     * consumers per round, so the lazy-chain alternative multiplies the plan
     * ~5x per round and its Catalyst analysis dwarfs the saved barriers
-    * (tools/IterProbe, round 5; contrast [[betweenness]]'s linear chain).
+    * (COVERAGE.md "Round-5" A/B; contrast [[betweenness]]'s linear chain).
     * Integer range: scores reach k_{x,C}·2m ≲ (2m)², exact in BIGINT up to
     * 2m ≈ 3e9 total edge weight — beyond that, bucket the graph first (the
     * same envelope as kg_modularity's q_num).
@@ -1744,18 +1707,15 @@ object GraphOps {
       .union(adj.select(col("dst").as("id"))).distinct().localCheckpoint(true)
     var c = nodes.select(col("id"), lit(1000000L).as("c"))
     var katzAcc = nodes.select(col("id"), lit(0L).as("k"))
-    // c feeds two consumers per round (next hop + the accumulator join);
-    // one truncation chain per arm (see hits) so stride/skipFinal count
-    // rounds, not calls
-    val ckC = roundCkpt(rounds, maxLazy = 5)
-    val ckK = roundCkpt(rounds, maxLazy = 5)
+    // c feeds two consumers per round (next hop + the accumulator join)
+    val ck = roundCkpt(rounds, maxLazy = 5)
     for (_ <- 1 to rounds) {
       val next = adj.join(c, adj("src") === c("id"))
         .select(col("dst").as("id"), expr(s"($num * c) div $den").as("contrib"))
         .groupBy(col("id")).agg(sum(col("contrib")).as("c"))
-      c = ckC(nodes.join(next, Seq("id"), "left")
+      c = ck(nodes.join(next, Seq("id"), "left")
         .select(col("id"), coalesce(col("c"), lit(0L)).as("c")))
-      katzAcc = ckK(katzAcc.join(c.select(col("id"), col("c")), Seq("id"))
+      katzAcc = ck(katzAcc.join(c.select(col("id"), col("c")), Seq("id"))
         .select(col("id"), (col("k") + col("c")).as("k")))
     }
     katzAcc
@@ -2402,9 +2362,7 @@ object GraphOps {
       .union(adjd.select(col("dst"))).distinct()
     // cur feeds two consumers per step (next hop + the output union)
     val ck = roundCkpt(walkLen, maxLazy = 5)
-    // the pre-loop state uses its OWN instance so the loop's counter maps
-    // 1:1 to rounds (stride/skipFinal correctness under non-default knobs)
-    var cur = roundCkpt(walkLen, maxLazy = 5)(
+    var cur = ck(
       nodes.select(col("id").as("start"), col("id").as("node")))
     var out = cur.select(col("start"), lit(0L).as("step"), col("node"))
     for (t <- 1 to walkLen) {
@@ -2999,13 +2957,12 @@ object GraphOps {
     var b = f
     // two independent frontier chains, each 2x plan growth per round —
     // rounds <= 4 stays one lazy plan (the roundCkpt policy note)
-    val ckF = roundCkpt(rounds, maxLazy = 4)
-    val ckB = roundCkpt(rounds, maxLazy = 4)
+    val ck = roundCkpt(rounds, maxLazy = 4)
     for (_ <- 1 to rounds) {
-      f = ckF(f.union(adj.join(f.withColumnRenamed("id", "src"), "src")
+      f = ck(f.union(adj.join(f.withColumnRenamed("id", "src"), "src")
           .select(col("dst").as("id")))
         .distinct())
-      b = ckB(b.union(adj.join(b.withColumnRenamed("id", "dst"), "dst")
+      b = ck(b.union(adj.join(b.withColumnRenamed("id", "dst"), "dst")
           .select(col("src").as("id")))
         .distinct())
     }

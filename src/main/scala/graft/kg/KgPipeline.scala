@@ -91,72 +91,9 @@ object KgPipeline {
     }
   }
 
-  /** Fully fused fast path: pairs + crop + lexicon scoring -> triples with no
-    * intermediate Sample rows and O(1) scoring per pair via per-sentence cue
-    * prefix sums. Semantically identical to
-    * `triples(samples(parsed, cfg), LexiconScorer(pos, neg))` (asserted by
-    * KgPipelineSpec) — this is the 100 TB scan shape: one row-local flatMap,
-    * minimal garbage per emitted triple. */
-  def triplesFast(docs: Dataset[ParsedDoc], cfg: Config, scorer: LexiconScorer)(
-      implicit spark: SparkSession): Dataset[Triple] = {
-    import spark.implicits._
-    val sCfg = cfg.sampler
-    val pos = scorer.positive
-    val neg = scorer.negative
-    docs.flatMap { doc =>
-      val out = Seq.newBuilder[Triple]
-      var opinionId = 0L
-      doc.sentences.foreach { sent =>
-        val ms = sent.mentions.toIndexedSeq
-        val nm = ms.length
-        if (nm >= 2) {
-          val terms = sent.terms.toIndexedSeq
-          val n = terms.length
-          // prefix sums of cue signs (+1 pos, -1 neg), entity positions zeroed
-          val prefix = new Array[Int](n + 1)
-          val entityAt = new Array[Boolean](n)
-          ms.foreach(m => if (m.ind < n) entityAt(m.ind) = true)
-          var i = 0
-          while (i < n) {
-            var v = 0
-            if (!entityAt(i)) {
-              val w = graft.text.TextOps.cueKey(terms(i))
-              if (pos.contains(w)) v = 1 else if (neg.contains(w)) v = -1
-            }
-            prefix(i + 1) = prefix(i) + v
-            i += 1
-          }
-          var si = 0
-          while (si < nm) {
-            val s = ms(si)
-            var ti = 0
-            while (ti < nm) {
-              val t = ms(ti)
-              if (s.id != t.id && s.groupId != t.groupId &&
-                  math.abs(s.ind - t.ind) <= sCfg.distInTermsBound) {
-                val (start, end) = Sampler.cropBounds(n, s.ind, t.ind, sCfg.termsPerContext)
-                val score = prefix(end) - prefix(start)
-                val label =
-                  if (score > 0) Sentiment.Positive
-                  else if (score < 0) Sentiment.Negative
-                  else Sentiment.Neutral
-                out += Triple(s.value, s.eType, Sentiment.name(label), t.value, t.eType,
-                  doc.url, sent.sentInd, s"${doc.url}#$opinionId")
-                opinionId += 1
-              }
-              ti += 1
-            }
-            si += 1
-          }
-        }
-      }
-      out.result()
-    }
-  }
-
   /** Zero-token-allocation fused kernel: pages -> triples in ONE pass over the
     * raw text, materializing a String ONLY per emitted mention (~5/doc) and
-    * per emitted triple — never per token (~400/doc). [[triplesFast]] still
+    * per emitted triple — never per token (~400/doc). The object path
     * allocates every token String plus the ParsedDoc object graph (~20-30 KB
     * of garbage per document), which at tens of kdocs/s/core is hundreds of
     * MB/s/core of DRAM write traffic — measurably the resource that caps the
@@ -166,8 +103,8 @@ object KgPipeline {
     * (hash, region-equals) against the scorer lexicon without substring
     * allocation.
     *
-    * Bit-identical output to
-    * `triplesFast(parsePages(pages, BracketNer, cfg), cfg, scorer)` — the
+    * Bit-identical output to the object path
+    * `triples(samples(parsePages(pages, BracketNer, cfg), cfg), scorer)` — the
     * replicated semantics (each pinned by KgPipelineSpec's fused-parity spec):
     * splitLines' `split("\n", -1)` + Java trim, tokenize's \s runs,
     * BracketNer's bracket/type/value rules INCLUDING the term rewrite of
@@ -207,9 +144,10 @@ object KgPipeline {
     val tpc = cfg.sampler.termsPerContext
     pages.mapPartitions { it =>
       // cue lexicon keyed by String.hashCode-compatible region hash. A word
-      // present in BOTH sets scores +1 — triplesFast checks positive FIRST
-      // (`if (pos.contains(w)) 1 else if (neg.contains(w)) -1`), so negative
-      // entries are inserted first and positive ones overwrite
+      // present in BOTH sets scores +1 — LexiconScorer.respond checks
+      // positive FIRST (`if (positive.contains(w)) ... else if
+      // (negative.contains(w))`), so negative entries are inserted first and
+      // positive ones overwrite
       val cueSign = new java.util.HashMap[String, Integer]
       neg.foreach(w => cueSign.put(w, -1))
       pos.foreach(w => cueSign.put(w, 1))

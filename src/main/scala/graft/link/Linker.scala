@@ -146,22 +146,6 @@ object Linker {
     canon.indices.map(i => canon(i) -> hashGroupId(canon(find(i)))).toMap
   }
 
-  /** Driver-side front of [[lshGroups]]: collect the distinct mention
-    * vocabulary (bounded), link it driver-side, return the broadcastable
-    * canonical dictionary. Appropriate for vocabularies that comfortably fit
-    * one machine (≲1M values); above that use [[lshDictionaryDf]] /
-    * [[withLshGroups]], which run the SAME blocking+verify+components shape
-    * as a distributed DataFrame job. */
-  def lshDictionary(docs: Dataset[ParsedDoc], maxEntries: Int = 10_000_000,
-      jaccardThreshold: Double = DefaultJaccardThreshold)(implicit spark: SparkSession): Map[String, Long] = {
-    import spark.implicits._
-    val vals = docs
-      .flatMap(_.sentences.flatMap(_.mentions.map(m => TextOps.canonicalKey(m.value))))
-      .distinct().orderBy("value").limit(maxEntries).as[String].collect()
-    lshGroups(scala.collection.immutable.ArraySeq.unsafeWrapArray(vals),
-      jaccardThreshold = jaccardThreshold)
-  }
-
   // ------------------------------------- distributed LSH linking (DataFrame)
 
   /** Distributed entity linking over a distinct-value relation — the web-scale

@@ -879,23 +879,17 @@ object Bgp {
     * materializes the round (the Dedup.clusters discipline), lineage
     * truncated per materialization so plans stay bounded.
     *
-    * `hopsPerAction` > 1 folds several hop expansions into one action
-    * (convergence certified per chunk, not per hop). MEASURED SLOWER at the
-    * registered query's scale and kept non-default (tools/ReachProbe,
-    * round 5: hpa=1 2.8s vs hpa=4 5.2s best-of-3, same 545-row closure) —
-    * the chunk's in-plan deltas are re-evaluated by each later hop's
-    * anti-join (plan copies, not shared state), and the post-fixpoint
-    * overshoot hops each re-scan the full accumulated closure, so the
-    * saved job barriers are bought with strictly more dataflow. Per-hop
-    * actions with a materialized delta remain the right shape; the knob
-    * stays for graphs whose diameter actually dwarfs the per-action cost.
+    * One action per hop: each expands the last materialized delta against
+    * the accumulated closure. Folding several hops into one action was
+    * measured slower (COVERAGE.md "Round-5": 4 hops per action 5.2 s vs
+    * 2.8 s per hop, same 545-row closure) — in-action deltas are
+    * re-evaluated as plan copies by each later hop's anti-join, and the
+    * overshoot hops past the fixpoint re-scan the whole closure.
     * A diameter beyond `maxIter` total hops still fails fast rather than
     * returning a silent partial closure. Output: (x, z). Engine extension,
     * no reference counterpart. */
   def reachability(rel: DataFrame, preds: Seq[String], seeds: Seq[String] = Nil,
-      maxIter: Int = 30, hopsPerAction: Int = 1,
-      distinctInput: Boolean = false): DataFrame = {
-    require(hopsPerAction >= 1, s"hopsPerAction must be >= 1: $hopsPerAction")
+      maxIter: Int = 30, distinctInput: Boolean = false): DataFrame = {
     require(preds.nonEmpty, "empty predicate alternation")
     // distinctInput: caller asserts the (s, o) projection of the filtered
     // relation is already duplicate-free (e.g. a distinct KG whose predicate
@@ -925,34 +919,21 @@ object Bgp {
     val metricBase = s"graft_tc_${java.util.UUID.randomUUID().toString.take(8)}_"
     while (growing && it < maxIter) {
       val metricName = metricBase + it
-      // one ACTION = `chunk` lazy hop expansions; hop i+1 expands hop i's
-      // un-materialized delta and anti-joins everything seen so far
-      // (materialized closure + in-chunk deltas), so the chunk's deltas are
-      // pairwise disjoint and their union is exactly "novel this action"
-      val chunk = math.min(hopsPerAction, maxIter - it)
-      val chunkDeltas = collection.mutable.Buffer.empty[DataFrame]
-      var d = delta
-      for (_ <- 1 to chunk) {
-        val prior = (Seq(closure) ++ chunkDeltas).reduce(_ union _)
-        // SEEDED closure: the frontier delta is the provably small side
-        // (it shrinks toward the fixpoint), but the checkpoint-propagated
-        // stats UNDERESTIMATE the step relation, so the planner was
-        // broadcasting step — a full hash-relation build of the transition
-        // relation per round (measured 1.4s/round at sf0.1 vs 40ms with
-        // the frontier broadcast). Hint the frontier explicitly; in the
-        // unseeded (full-closure) regime the delta starts at |step| and
-        // the hint would be wrong — leave the planner alone there.
-        val dd = if (seeds.nonEmpty) broadcast(d) else d
-        val fresh = dd.join(step, col("z") === col("hs"))
-          .select(col("x"), col("ho").as("z")).distinct()
-          .join(prior, Seq("x", "z"), "left_anti")
-        chunkDeltas += fresh
-        d = fresh
-      }
-      val combined = chunkDeltas.reduce(_ union _)
+      // SEEDED closure: the frontier delta is the provably small side
+      // (it shrinks toward the fixpoint), but the checkpoint-propagated
+      // stats UNDERESTIMATE the step relation, so the planner was
+      // broadcasting step — a full hash-relation build of the transition
+      // relation per round (measured 1.4s/round at sf0.1 vs 40ms with
+      // the frontier broadcast). Hint the frontier explicitly; in the
+      // unseeded (full-closure) regime the delta starts at |step| and
+      // the hint would be wrong — leave the planner alone there.
+      val d = if (seeds.nonEmpty) broadcast(delta) else delta
+      val fresh = d.join(step, col("z") === col("hs"))
+        .select(col("x"), col("ho").as("z")).distinct()
+        .join(closure, Seq("x", "z"), "left_anti")
         .observe(metricName, count(lit(1)).as("novel"))
-      val materialized = combined.localCheckpoint()
-      val novel = combined.queryExecution.observedMetrics.get(metricName) match {
+      val materialized = fresh.localCheckpoint()
+      val novel = fresh.queryExecution.observedMetrics.get(metricName) match {
         case Some(row) => row.getLong(0)
         case None => throw new IllegalStateException(
           s"observe metric $metricName not collected during checkpoint — " +
@@ -963,7 +944,7 @@ object Bgp {
         deltas += materialized
         delta = materialized
       }
-      it += chunk
+      it += 1
     }
     if (growing) throw new IllegalStateException(
       s"Bgp.reachability did not converge in $maxIter rounds — path diameter " +

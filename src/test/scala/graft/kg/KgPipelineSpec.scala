@@ -12,6 +12,12 @@ class KgPipelineSpec extends AnyFunSuite with SparkTestSession {
 
   private val cfg = KgPipeline.Config(nerTypes = Set("ORG", "PERSON", "LOC", "GPE"))
 
+  // cue words in BOTH lexicons: LexiconScorer checks positive first, so
+  // they score +1 — the fused kernel's cue table must agree
+  private val overlapScorer = LexiconScorer(
+    LexiconScorer.defaultPositive ++ Set("war", "slow", "small"),
+    LexiconScorer.defaultNegative ++ Set("fast", "good", "big"))
+
   private def run(n: Int, seed: Long = 42L) = {
     val pages = PageGen.pages(n, seed, partitions = 4)
     val parsed = KgPipeline.parsePages(pages, BracketNer, cfg)
@@ -51,19 +57,17 @@ class KgPipelineSpec extends AnyFunSuite with SparkTestSession {
     assert(viaText.map(_.textA).toSeq == viaHtml.map(_.textA).toSeq)
   }
 
-  test("scorer + triples: all three classes appear, fused == joined == fast path") {
-    val (parsed, ss) = run(60)
+  test("scorer + triples: all three classes appear, fused == joined") {
+    val (_, ss) = run(60)
     val scorer = LexiconScorer()
     val fused = KgPipeline.triples(ss, scorer).collect()
     assert(fused.map(_.pred).toSet == Set("pos", "neg", "neu"))
     val preds = KgPipeline.predictions(ss, scorer)
     val joined = KgPipeline.triplesJoined(ss, preds).collect()
     assert(joined.sortBy(_.sampleId).toSeq == fused.sortBy(_.sampleId).toSeq)
-    val fast = KgPipeline.triplesFast(parsed, cfg, scorer).collect()
-    assert(fast.sortBy(_.sampleId).toSeq == fused.sortBy(_.sampleId).toSeq)
   }
 
-  test("triplesFused == triplesFast bit-for-bit on generated corpus + edge-case pages") {
+  test("triplesFused == object path bit-for-bit on corpus + edge-case pages") {
     import spark.implicits._
     val fcfg = KgPipeline.Config(sampler = Sampler.Config(renderText = false))
     val gen = PageGen.pages(300, 99L, 64, sentsMin = 1, sentsMax = 40)
@@ -84,13 +88,15 @@ class KgPipelineSpec extends AnyFunSuite with SparkTestSession {
       Page("e9", null, null, "[or_g:a] [ORG:b] win [GPE:c]", "en")) // lowercase type -> untyped
     val pages = gen.union(edge.toDS())
     val scorer = LexiconScorer()
-    val fast = KgPipeline.triplesFast(
-      KgPipeline.parsePages(pages, BracketNer, fcfg), fcfg, scorer)
-      .collect().sortBy(_.sampleId)
-    val fused = KgPipeline.triplesFused(pages, fcfg, scorer)
-      .collect().sortBy(_.sampleId)
-    assert(fast.length == fused.length && fast.nonEmpty)
-    assert(fast.toSeq == fused.toSeq)
+    for (sc <- Seq(scorer, overlapScorer)) {
+      val obj = KgPipeline.triples(KgPipeline.samples(
+        KgPipeline.parsePages(pages, BracketNer, fcfg), fcfg), sc)
+        .collect().sortBy(_.sampleId)
+      val fused = KgPipeline.triplesFused(pages, fcfg, sc)
+        .collect().sortBy(_.sampleId)
+      assert(obj.length == fused.length && obj.nonEmpty)
+      assert(obj.toSeq == fused.toSeq)
+    }
     // unsupported configurations fail fast
     intercept[IllegalArgumentException] {
       KgPipeline.triplesFused(pages, fcfg.copy(splitter = "sentence"), scorer)
@@ -130,12 +136,14 @@ class KgPipelineSpec extends AnyFunSuite with SparkTestSession {
       termsPerContext = 7, distInTermsBound = 5, renderText = false))
     val scorer = LexiconScorer()
     // bracket mode
-    val objB = KgPipeline.triplesFast(
-      KgPipeline.parsePages(pages, BracketNer, fcfg), fcfg, scorer)
-      .collect().sortBy(_.sampleId).toSeq
-    val fusB = KgPipeline.triplesFused(pages, fcfg, scorer)
-      .collect().sortBy(_.sampleId).toSeq
-    assert(objB == fusB && objB.nonEmpty)
+    for (sc <- Seq(scorer, overlapScorer)) {
+      val objB = KgPipeline.triples(KgPipeline.samples(
+        KgPipeline.parsePages(pages, BracketNer, fcfg), fcfg), sc)
+        .collect().sortBy(_.sampleId).toSeq
+      val fusB = KgPipeline.triplesFused(pages, fcfg, sc)
+        .collect().sortBy(_.sampleId).toSeq
+      assert(objB == fusB && objB.nonEmpty)
+    }
     // lexicon mode
     val lex = Map("spark" -> "ORG", "customer" -> "PERSON", "ab" -> "GPE",
       "caf\u00e9" -> "LOC") // non-ASCII key: slow-path lookup must MATCH
