@@ -126,19 +126,6 @@ object GraphBuilder {
         max(col("ts_epoch")).as("last_seen"),
         count_distinct(floor(col("ts_epoch") / 86400L)).as("n_days"))
 
-  /** Contradictory-evidence report over the triple relation: entity pairs
-    * the corpus asserts with MORE THAN ONE distinct predicate — the
-    * knowledge-base quality signal a KG builder triages before publishing
-    * (ARElight renders one edge per (pair, sentiment) and leaves the
-    * contradiction implicit in the graph; this rollup surfaces it as a
-    * first-class relation, reference graph_ops has no counterpart). Output
-    * per conflicted (source, target): the three per-polarity evidence
-    * counts, total observations, the dominant label (max count, ties to the
-    * lexicographically smallest label), and `conflict_permille` = the share
-    * of observations that contradict the dominant label, in exact integer
-    * permille (1000 * (n_obs - max_count) div n_obs). One shuffle on the
-    * pair key with map-side partial aggregation; the conflict filter and
-    * permille math are post-aggregation row-local. */
   /** Stance-drift detection over the timestamped observation stream: per
     * entity pair, does the MOST RECENT assertion disagree with the
     * historical consensus? `dominant` = argmax label by observation count
@@ -219,6 +206,19 @@ object GraphBuilder {
         count(lit(1)).as("n_claims")), "src")
   }
 
+  /** Contradictory-evidence report over the triple relation: entity pairs
+    * the corpus asserts with MORE THAN ONE distinct predicate — the
+    * knowledge-base quality signal a KG builder triages before publishing
+    * (ARElight renders one edge per (pair, sentiment) and leaves the
+    * contradiction implicit in the graph; this rollup surfaces it as a
+    * first-class relation, reference graph_ops has no counterpart). Output
+    * per conflicted (source, target): the three per-polarity evidence
+    * counts, total observations, the dominant label (max count, ties to the
+    * lexicographically smallest label), and `conflict_permille` = the share
+    * of observations that contradict the dominant label, in exact integer
+    * permille (1000 * (n_obs - max_count) div n_obs). One shuffle on the
+    * pair key with map-side partial aggregation; the conflict filter and
+    * permille math are post-aggregation row-local. */
   def conflicts(triples: DataFrame): DataFrame =
     triples
       .groupBy(concat(col("subj_type"), lit("."), col("subj")).as("source"),

@@ -3,6 +3,9 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.{Graph, GraphLink, GraphNode}
+import graft.exec.Bounded
+import graft.exec.Bounded.{Lng, Str}
+import GraphBuilder.sparkStringOrdering
 
 /** Graph set algebra — the reference's entire query surface beyond the fixed
   * pipeline (arelight/backend/d3js/relations_graph_operations.py:17-109; CLI
@@ -174,30 +177,6 @@ object GraphOps {
       df.select(col("source"), col("target"), col("sent"), lit(1.0).as("c"))
     else maxNormalize(df)
 
-  /** Exact fixed-point PageRank over an aggregated edge relation
-    * (source, target, c) — engine extension for post-construction graph
-    * analytics. All arithmetic is BIGINT with truncating division on
-    * positive values, so ranks are BIT-IDENTICAL across engines and
-    * partitionings (no float-summation order sensitivity — the property that
-    * makes a double-valued PageRank un-oracle-able):
-    *
-    *   T        = 10^12 div N                      (initial rank, total mass 10^12)
-    *   r_0(v)   = T
-    *   r_t+1(v) = (15*T div 100) + Σ_{u->v} (85 * r_t(u) * w_uv) div (100 * W_u)
-    *
-    * where W_u = Σ_v w_uv. Dangling mass (nodes with no out-edges) is dropped,
-    * not redistributed (documented deviation from the classic formulation;
-    * ranks stay proportional for ranking purposes). Per iteration: one join
-    * of the lineage-truncated edge relation with the rank relation on the
-    * SAME key (source) — co-partitioned under one shuffle partitioning — plus
-    * a partial+final aggregation on target. Guarded: non-integral c and
-    * collapsed-weight (w <= 0) edges raise instead of silently producing
-    * teleport-only ranks, and w is capped at 100,000 so 85 * r * w stays
-    * under 2^63 (r <= 10^12 since mass is non-increasing under floor) —
-    * Spark would wrap Long overflow silently where the DuckDB mirror errors.
-    *
-    * Output: (id, r) with Σ r <= 10^12. `iters` fixed (unrolled in the SQL
-    * oracle); convergence-by-epsilon is a driver-side stop rule at scale. */
   /** Shared PageRank prep: validated integer edge weights with per-source
     * out-weight, the node set, and the exact-arithmetic constants. */
   private final case class PrGraph(ew: DataFrame, nodes: DataFrame,
@@ -255,43 +234,39 @@ object GraphOps {
   private[graft] def roundCkpt(rounds: Int, maxLazy: Int): DataFrame => DataFrame =
     df => if (rounds <= maxLazy) df else df.localCheckpoint(true)
 
-  /** The [[prPrep]]ed edge relation collected when small enough for the
-    * PageRank-family driver fast paths: (source, target, w, ow) — strings
-    * + longs only, no nulls, else None (the distributed loop runs). The
-    * relation is prPrep's CHECKPOINT, so the weight validation has already
-    * executed; at the documented bounds (rank ≤ 10^12, w ≤ 10^5) every
-    * driver product stays under 2^63 exactly like the distributed plan. */
-  private def collectSmallEw(ew: DataFrame,
-      bound: Int = louvainSmallBound): Option[Array[(String, String, Long, Long)]] = {
-    if (bound <= 0) return None
-    import org.apache.spark.sql.types.{LongType, StringType}
-    val f = ew.schema.fields
-    if (f.length != 4 || f(0).dataType != StringType || f(1).dataType != StringType ||
-        f(2).dataType != LongType || f(3).dataType != LongType) return None
-    val rows = ew.limit(bound + 1).collect()
-    if (rows.length > bound || rows.isEmpty ||
-        rows.exists(r => (0 to 3).exists(r.isNullAt))) None
-    else Some(rows.map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))))
-  }
+  /** Row bound of every GraphOps driver fast path: a relation with at most
+    * this many rows is collected ONCE ([[Bounded.collect]]) and the
+    * operator replays its distributed loop's integer arithmetic
+    * driver-side. This is the shape production multilevel Louvain takes
+    * anyway — coarsen until the graph fits one machine, finish locally —
+    * so it is the honest final-level path, not a shortcut: above the bound
+    * every operator runs the unchanged distributed loop. */
+  private val localBound = 32768
 
-  /** Nodes of a collected [[collectSmallEw]] relation (= prPrep's node set). */
-  private def ewNodes(es: Array[(String, String, Long, Long)]): Array[String] =
-    (es.map(_._1) ++ es.map(_._2)).distinct
+  /** The [[prPrep]]ed edge relation (source, target, w, ow) and its node
+    * set on the driver, else None. The relation is prPrep's CHECKPOINT, so
+    * the weight validation has already executed; at the documented bounds
+    * (rank ≤ 10^12, w ≤ 10^5) every driver product stays under 2^63
+    * exactly like the distributed plan. The ow join drops null-source
+    * edges that prPrep's node set still counts, so the nodes must number
+    * `g.n` too. */
+  private def localEw(g: PrGraph): Option[(Array[(String, String, Long, Long)], Array[String])] =
+    Bounded.collect(g.ew, localBound, Str, Str, Lng, Lng).map { rows =>
+      val es = rows.map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
+      (es, (es.map(_._1) ++ es.map(_._2)).distinct)
+    }.filter(_._2.length == g.n)
 
-  /** A 2-column string pair relation collected when small enough, else
-    * None (same guards as [[collectSmallAdj]]). */
-  private def collectSmallPairs(adj: DataFrame,
-      bound: Int = louvainSmallBound): Option[Array[(String, String)]] = {
-    if (bound <= 0) return None
-    import org.apache.spark.sql.types.StringType
-    val f = adj.schema.fields
-    if (f.length != 2 || f(0).dataType != StringType ||
-        f(1).dataType != StringType) return None
-    val rows = adj.limit(bound + 1).collect()
-    if (rows.length > bound || rows.isEmpty ||
-        rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-    else Some(rows.map(r => (r.getString(0), r.getString(1))))
-  }
+  /** A (string, string) pair relation on the driver, else None. */
+  private def localPairs(adj: DataFrame): Option[Array[(String, String)]] =
+    Bounded.collect(adj, localBound, Str, Str)
+      .map(_.map(r => (r.getString(0), r.getString(1))))
+
+  /** A (string, string, long) weighted adjacency on the driver, else None:
+    * only string-keyed, long-weighted relations are replayable (the
+    * comparators are UTF-8 byte order / exact Long). */
+  private def localAdj(adj: DataFrame): Option[Array[(String, String, Long)]] =
+    Bounded.collect(adj, localBound, Str, Str, Lng)
+      .map(_.map(r => (r.getString(0), r.getString(1), r.getLong(2))))
 
   /** One PageRank-style contribution pass driver-side: per edge,
     * (85 * r(source) * w) div (100 * ow) summed into the target — the
@@ -306,16 +281,38 @@ object GraphOps {
     cin
   }
 
-  def pageRank(edges: DataFrame, iters: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  /** Exact fixed-point PageRank over an aggregated edge relation
+    * (source, target, c) — engine extension for post-construction graph
+    * analytics. All arithmetic is BIGINT with truncating division on
+    * positive values, so ranks are BIT-IDENTICAL across engines and
+    * partitionings (no float-summation order sensitivity — the property that
+    * makes a double-valued PageRank un-oracle-able):
+    *
+    *   T        = 10^12 div N                      (initial rank, total mass 10^12)
+    *   r_0(v)   = T
+    *   r_t+1(v) = (15*T div 100) + Σ_{u->v} (85 * r_t(u) * w_uv) div (100 * W_u)
+    *
+    * where W_u = Σ_v w_uv. Dangling mass (nodes with no out-edges) is dropped,
+    * not redistributed (documented deviation from the classic formulation;
+    * ranks stay proportional for ranking purposes). Per iteration: one join
+    * of the lineage-truncated edge relation with the rank relation on the
+    * SAME key (source) — co-partitioned under one shuffle partitioning — plus
+    * a partial+final aggregation on target. Guarded: non-integral c and
+    * collapsed-weight (w <= 0) edges raise instead of silently producing
+    * teleport-only ranks, and w is capped at 100,000 so 85 * r * w stays
+    * under 2^63 (r <= 10^12 since mass is non-increasing under floor) —
+    * Spark would wrap Long overflow silently where the DuckDB mirror errors.
+    *
+    * Output: (id, r) with Σ r <= 10^12. `iters` fixed (unrolled in the SQL
+    * oracle); convergence-by-epsilon is a driver-side stop rule at scale. */
+  def pageRank(edges: DataFrame, iters: Int = 3): DataFrame = {
     val g = prPrep(edges)
     // SMALL-GRAPH FAST PATH (the louvain-family discipline): one bounded
     // collect of the validated edge relation, then the identical exact
     // BIGINT recurrence driver-side — bit-equal ranks, spec-pinned.
-    collectSmallEw(g.ew, smallBound).foreach { es =>
+    localEw(g).foreach { case (es, nodes) =>
       val spark = edges.sparkSession
       import spark.implicits._
-      val nodes = ewNodes(es)
       var r: collection.Map[String, Long] = nodes.map(_ -> g.t).toMap
       for (_ <- 1 to iters) {
         val cin = prContribs(es, r)
@@ -346,30 +343,24 @@ object GraphOps {
     * stored ranks (new entities since the snapshot) start at the uniform
     * share 10^12 div N of the CURRENT node set; stale rank rows for nodes no
     * longer in the graph are dropped. */
-  def pageRankResume(edges: DataFrame, prevRanks: DataFrame, iters: Int = 1,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def pageRankResume(edges: DataFrame, prevRanks: DataFrame, iters: Int = 1): DataFrame = {
     require(iters >= 1 && iters <= 16, s"iters must be in [1,16]: $iters")
     val g = prPrep(edges)
     // small-graph fast path: the stored ranks are node-sized, so both
     // collects are bounded; new nodes start at the uniform share, stale
     // stored rows drop — exactly the distributed left-join semantics
-    collectSmallEw(g.ew, smallBound).foreach { es =>
-      val prevRows = prevRanks.select(col("id"), col("r")).limit(smallBound + 1).collect()
-      if (prevRows.length <= smallBound &&
-          prevRows.forall(r => !r.isNullAt(0) && !r.isNullAt(1) &&
-            r.get(0).isInstanceOf[String] && r.get(1).isInstanceOf[Long])) {
-        val spark = edges.sparkSession
-        import spark.implicits._
-        val prev = prevRows.map(r => r.getString(0) -> r.getLong(1)).toMap
-        val nodes = ewNodes(es)
-        var r: collection.Map[String, Long] =
-          nodes.map(n => n -> prev.getOrElse(n, g.t)).toMap
-        for (_ <- 1 to iters) {
-          val cin = prContribs(es, r)
-          r = nodes.map(n => n -> (g.base + cin(n))).toMap
-        }
-        return nodes.toSeq.map(n => (n, r(n))).toDF("id", "r")
+    for ((es, nodes) <- localEw(g);
+         prevRows <- Bounded.collect(prevRanks.select(col("id"), col("r")), localBound, Str, Lng)) {
+      val spark = edges.sparkSession
+      import spark.implicits._
+      val prev = prevRows.map(r => r.getString(0) -> r.getLong(1)).toMap
+      var r: collection.Map[String, Long] =
+        nodes.map(n => n -> prev.getOrElse(n, g.t)).toMap
+      for (_ <- 1 to iters) {
+        val cin = prContribs(es, r)
+        r = nodes.map(n => n -> (g.base + cin(n))).toMap
       }
+      return nodes.toSeq.map(n => (n, r(n))).toDF("id", "r")
     }
     val (ew, nodes, base) = (g.ew, g.nodes, g.base)
     val ck = roundCkpt(iters, maxLazy = 8)
@@ -405,18 +396,16 @@ object GraphOps {
     * Engine extension with no reference counterpart (the reference computes
     * d3js edge weights, not centrality — see [[pageRank]]'s deviation note);
     * 85/100 damping follows the classic public formulation. */
-  def pageRankDangling(edges: DataFrame, iters: Int = 3, eps: Long = 0L,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def pageRankDangling(edges: DataFrame, iters: Int = 3, eps: Long = 0L): DataFrame = {
     require(eps >= 0 && eps < 1000000000000L, s"eps out of [0, 1e12): $eps")
     val g = prPrep(edges)
     // small-graph fast path: the per-round job (co-partitioned join +
     // one-row dangling broadcast + observe barrier) replays driver-side —
     // same dangling-mass term (85*D) div (100*N), same max-|delta| epsilon
     // stop BEFORE the next round, bit-equal ranks (spec-pinned)
-    collectSmallEw(g.ew, smallBound).foreach { es =>
+    localEw(g).foreach { case (es, nodes) =>
       val spark = edges.sparkSession
       import spark.implicits._
-      val nodes = ewNodes(es)
       val sources = es.map(_._1).toSet
       var r: collection.Map[String, Long] = nodes.map(_ -> g.t).toMap
       var maxDelta = Long.MaxValue
@@ -491,15 +480,13 @@ object GraphOps {
     * [[pageRank]]; iters fixed (unrolled in the SQL oracle). One
     * co-partitioned join + aggregation per round, lineage truncated.
     * Engine extension, no reference counterpart (see [[pageRank]]). */
-  def personalizedPageRank(edges: DataFrame, source: String, iters: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def personalizedPageRank(edges: DataFrame, source: String, iters: Int = 3): DataFrame = {
     val g = prPrep(edges)
     // small-graph fast path: identical restart-at-source recurrence
     // driver-side (contributions from r=0 nodes are 0 either way)
-    collectSmallEw(g.ew, smallBound).foreach { es =>
+    localEw(g).foreach { case (es, nodes) =>
       val spark = edges.sparkSession
       import spark.implicits._
-      val nodes = ewNodes(es)
       val m = 1000000000000L
       val pb = (15L * m) / 100L
       var r: collection.Map[String, Long] =
@@ -628,8 +615,7 @@ object GraphOps {
     * not one node at a time). Per round: one degree aggregation + two
     * semi-joins on the adjacency relation, all co-partitioned on the node
     * key; lineage truncated per round. */
-  def kCore(edges: DataFrame, k: Long = 2, rounds: Int = 4,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def kCore(edges: DataFrame, k: Long = 2, rounds: Int = 4): DataFrame = {
     require(k >= 1 && rounds >= 1, s"k and rounds must be positive: k=$k rounds=$rounds")
     val und = edges.filter(col("source") =!= col("target"))
       .select(least(col("source"), col("target")).as("a"),
@@ -641,7 +627,7 @@ object GraphOps {
     // small-graph fast path: the fixed-round peeling driver-side — each
     // round drops every node below k in the surviving adjacency, exactly
     // the distributed degree-filter + double semi-join (spec-pinned)
-    collectSmallPairs(adj, smallBound).foreach { a0 =>
+    localPairs(adj).foreach { a0 =>
       val spark = edges.sparkSession
       import spark.implicits._
       var a = a0
@@ -681,13 +667,12 @@ object GraphOps {
     * exact-int in double, so it is bit-identical cross-engine. At scale, hub
     * neighbors fan out quadratically — `maxDegree` drops neighbors above the
     * cap from wedge generation (a skew guard pinned in the oracle too). */
-  def neighborJaccard(edges: DataFrame, maxDegree: Long = 10000L,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def neighborJaccard(edges: DataFrame, maxDegree: Long = 10000L): DataFrame = {
     // small-graph fast path: wedge pairs through each hub-capped shared
     // neighbor, full degrees for the jaccard denominator (one double
     // division of exact ints, as distributed)
     val und0 = undirectedSimple(edges).localCheckpoint()
-    wedgeDriver(und0, smallBound).foreach { case (deg, members) =>
+    wedgeDriver(und0).foreach { case (deg, members) =>
       val spark = edges.sparkSession
       import spark.implicits._
       val acc = collection.mutable.HashMap.empty[(String, String), Long]
@@ -736,8 +721,7 @@ object GraphOps {
     * out-edges) hold authority (resp. hub) 0 after the first round. One
     * co-partitioned join + aggregation per half-round, lineage truncated.
     * Output: (id, hub, auth). Engine extension, no reference counterpart. */
-  def hits(edges: DataFrame, iters: Int = 2,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def hits(edges: DataFrame, iters: Int = 2): DataFrame = {
     val g = prPrep(edges) // validated integer weights + node set
     // SMALL-GRAPH FAST PATH (the louvain-family discipline): each HITS
     // round is 2 truncation arms x (join + agg + one-row broadcast) whose
@@ -748,31 +732,24 @@ object GraphOps {
     // `x div greatest(1, total div 1e6)` truncating normalization — all
     // operands non-negative, so Spark's div == Scala /). Bit-equal scores,
     // spec-pinned; above the bound the distributed loop runs unchanged.
-    if (smallBound > 0) {
-      val probe = g.ew.select(col("source"), col("target"), col("w"))
-        .limit(smallBound + 1).collect()
-      if (probe.length <= smallBound && probe.nonEmpty &&
-          probe.head.get(0).isInstanceOf[String]) {
-        val es = probe.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        val nodeSet = (es.map(_._1) ++ es.map(_._2)).distinct
-        var hub = nodeSet.map(_ -> 1000000L).toMap
-        var auth = nodeSet.map(_ -> 1000000L).toMap
-        for (_ <- 1 to iters) {
-          val aRaw = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
-          es.foreach { case (s, t, w) => aRaw(t) += hub(s) * w }
-          val asum = aRaw.valuesIterator.sum
-          val aDiv = math.max(1L, asum / 1000000L)
-          auth = nodeSet.map(n => n -> aRaw(n) / aDiv).toMap
-          val hRaw = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
-          es.foreach { case (s, t, w) => hRaw(s) += auth(t) * w }
-          val hsum = hRaw.valuesIterator.sum
-          val hDiv = math.max(1L, hsum / 1000000L)
-          hub = nodeSet.map(n => n -> hRaw(n) / hDiv).toMap
-        }
-        val spark = edges.sparkSession
-        import spark.implicits._
-        return nodeSet.toSeq.map(n => (n, hub(n), auth(n))).toDF("id", "hub", "auth")
+    localEw(g).foreach { case (es, nodeSet) =>
+      var hub = nodeSet.map(_ -> 1000000L).toMap
+      var auth = nodeSet.map(_ -> 1000000L).toMap
+      for (_ <- 1 to iters) {
+        val aRaw = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
+        es.foreach { case (s, t, w, _) => aRaw(t) += hub(s) * w }
+        val asum = aRaw.valuesIterator.sum
+        val aDiv = math.max(1L, asum / 1000000L)
+        auth = nodeSet.map(n => n -> aRaw(n) / aDiv).toMap
+        val hRaw = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
+        es.foreach { case (s, t, w, _) => hRaw(s) += auth(t) * w }
+        val hsum = hRaw.valuesIterator.sum
+        val hDiv = math.max(1L, hsum / 1000000L)
+        hub = nodeSet.map(n => n -> hRaw(n) / hDiv).toMap
       }
+      val spark = edges.sparkSession
+      import spark.implicits._
+      return nodeSet.toSeq.map(n => (n, hub(n), auth(n))).toDF("id", "hub", "auth")
     }
     val ew = g.ew.select(col("source"), col("target"), col("w")).localCheckpoint()
     val nodes = g.nodes
@@ -813,8 +790,7 @@ object GraphOps {
     * Per round: one co-partitioned join + weighted count + one
     * WindowGroupLimit-shaped argmax, lineage truncated. Output: (id, label).
     * Engine extension, no reference counterpart. */
-  def labelPropagation(edges: DataFrame, rounds: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int = 3): DataFrame = {
     val und = edges.filter(col("source") =!= col("target"))
       .groupBy(least(col("source"), col("target")).as("a"),
         greatest(col("source"), col("target")).as("b"))
@@ -822,21 +798,22 @@ object GraphOps {
     val adj = und.select(col("a").as("x"), col("b").as("n"), col("w"))
       .union(und.select(col("b"), col("a"), col("w")))
       .localCheckpoint()
-    lpaOn(adj, rounds, smallBound)
-  }
-
-  /** The LPA round loop over a prepared doubled adjacency ([[modularity]]
-    * shares it so the undirected collapse is built once, not per consumer). */
-  private def lpaOn(adj: DataFrame, rounds: Int, smallBound: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // small-graph fast path: one collect + the identical synchronous
     // argmax rounds driver-side ((wsum desc, label asc) with labels in
     // UTF-8 binary order) — bit-equal labels, spec-pinned
-    collectSmallAdj(adj, smallBound).foreach { a =>
+    localAdj(adj).foreach { a =>
       val spark = adj.sparkSession
       import spark.implicits._
       return lpaDriver(a, rounds).toSeq.toDF("id", "label")
     }
+    lpaOn(adj, rounds)
+  }
+
+  /** The distributed LPA round loop over a prepared doubled adjacency
+    * ([[modularity]] shares it so the undirected collapse is built once,
+    * not per consumer). */
+  private def lpaOn(adj: DataFrame, rounds: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     var labels = adj.select(col("x").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
     val ck = roundCkpt(rounds, maxLazy = 8)
@@ -874,7 +851,9 @@ object GraphOps {
         var bestL: String = null
         var bestW = Long.MinValue
         m.foreach { case (l, w) =>
-          if (w > bestW || (w == bestW && utf8Less(l, bestL))) { bestW = w; bestL = l }
+          if (w > bestW || (w == bestW && sparkStringOrdering.lt(l, bestL))) {
+            bestW = w; bestL = l
+          }
         }
         x -> bestL
       }
@@ -883,51 +862,6 @@ object GraphOps {
     nodes.map(x => x -> label(x))
   }
 
-  /** Deterministic distributed Louvain-style local moves (phase 1 of the
-    * Louvain method) over the undirected weighted graph. Classic Louvain
-    * moves nodes one-at-a-time in visit order — inherently sequential — so
-    * the distributed relaxation schedules moves by a deterministic hash
-    * COLORING: round r lets only nodes with `md5(id) % colors == r % colors`
-    * move, everyone else keeps their label. Coloring is how production
-    * parallel Louvain serializes conflicting moves (Lu, Halappanavar,
-    * Kalyanaraman 2015); pure synchronous argmax oscillates (two singletons
-    * sharing an edge swap labels forever), which a fixed budget alone cannot
-    * repair. A mover adopts the candidate community (its neighbors' current
-    * communities plus its own) with the LARGEST exact integer modularity
-    * gain, ties by smallest label; the same paper's minimum-label heuristic
-    * guards the residual same-color conflict — a singleton may enter another
-    * SINGLETON's community only when the target label is smaller. The gain
-    * of joining C is ΔQ ∝ k_{x,C}/m − ki·Σtot_C/(2m²); both engines compare
-    * the common-denominator integer numerator
-    * `k_{x,C}·2m − ki·(Σtot_C − ki·[x∈C])` (self-mass excluded when scoring
-    * the node's own community) — rng-free and division-free, so the move
-    * sequence is bit-identical cross-engine. `rounds` is fixed and unrolled
-    * in the oracle like [[labelPropagation]]; the default is one full color
-    * sweep.
-    *
-    * Round shape (round-5 restructure, oracle-pinned bit-identical to the
-    * original): the loop state is (id, label, ki) — folding the weighted
-    * degree into the state removes the per-round nodes/deg joins (comm and
-    * the mover's ki read the state row directly); the mover color class is
-    * recomputed per round as a row-local md5 EXPRESSION (no nodes join);
-    * the own-community "stay" candidate is an unconditional kxc = 0 row
-    * merged by the same (x, own, label) SUM that aggregates real votes
-    * (replacing a per-round anti-join with a union); the per-mover argmax
-    * is a `min(struct(-score, label))` hash aggregation (map-side partial)
-    * instead of a window sort; and 2m — constant across rounds — is
-    * collected once (one-row aggregate, the scc pivot convention) and
-    * enters each round as a literal, not a broadcast join. Per round that
-    * leaves: the neighbor-label join, the comm aggregation, the candidate
-    * SUM, two broadcast-sized comm lookups, and the argmax aggregation —
-    * measured 3.2s -> ~2.3s at sf0.1 over the round-4 shape. A per-round
-    * eager truncation IS the measured optimum here: the state feeds ~5
-    * consumers per round, so the lazy-chain alternative multiplies the plan
-    * ~5x per round and its Catalyst analysis dwarfs the saved barriers
-    * (COVERAGE.md "Round-5" A/B; contrast [[betweenness]]'s linear chain).
-    * Integer range: scores reach k_{x,C}·2m ≲ (2m)², exact in BIGINT up to
-    * 2m ≈ 3e9 total edge weight — beyond that, bucket the graph first (the
-    * same envelope as kg_modularity's q_num).
-    * Output: (id, label). Engine extension, no reference counterpart. */
   /** Shared prep for the community family: the undirected weighted collapse
     * (a < b, self-loops dropped, BIGINT weights), its doubled adjacency,
     * and the weighted degrees — adjacency and degrees checkpointed (every
@@ -949,39 +883,6 @@ object GraphOps {
     val deg = adj.groupBy(col("x")).agg(sum(col("w")).as("ki")).localCheckpoint()
     (und, adj, deg)
   }
-
-  /** Bound for the Louvain family's small-graph driver fast path: graphs
-    * whose doubled adjacency fits under this many rows are collected ONCE
-    * and the moves loop / rollups replay driver-side with bit-identical
-    * integer arithmetic. This is the shape production multilevel Louvain
-    * takes anyway — coarsen until the graph fits one machine, finish
-    * locally — so it is the honest final-level path, not a shortcut:
-    * above the bound every operator runs the unchanged distributed loop. */
-  private val louvainSmallBound = 32768
-
-  /** The doubled adjacency collected when small enough, else None. */
-  private def collectSmallAdj(adj: DataFrame,
-      bound: Int = louvainSmallBound): Option[Array[(String, String, Long)]] = {
-    if (bound <= 0) return None
-    // only string-keyed, long-weighted adjacencies are driver-replayable
-    // (the comparators below are UTF-8 binary / exact Long)
-    val dt = adj.schema.fields.map(_.dataType)
-    if (dt.length != 3 ||
-        dt(0) != org.apache.spark.sql.types.StringType ||
-        dt(1) != org.apache.spark.sql.types.StringType ||
-        dt(2) != org.apache.spark.sql.types.LongType) return None
-    val rows = adj.limit(bound + 1).collect()
-    if (rows.length > bound || rows.isEmpty ||
-        rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))) None
-    else Some(rows.map(r => (r.getString(0), r.getString(1), r.getLong(2))))
-  }
-
-  /** Spark's binary UTF-8 string order, driver-side (UTF8String semantics —
-    * unsigned byte comparison, NOT Java's UTF-16 compareTo). */
-  private def utf8Less(a: String, b: String): Boolean =
-    java.util.Arrays.compareUnsigned(
-      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
 
   /** Driver replica of the loop's color assignment:
     * conv(substring(md5(cast(id as binary)), 1, 15), 16, 10) % colors —
@@ -1033,12 +934,12 @@ object GraphOps {
           var bestLabel: String = null
           var bestNs = Long.MaxValue
           cand.foreach { case (cl, kw) =>
-            val keep = !(csize(own) == 1L && csize(cl) == 1L && utf8Less(own, cl))
+            val keep = !(csize(own) == 1L && csize(cl) == 1L && sparkStringOrdering.lt(own, cl))
             if (keep) {
               val score = kw * m2 - ki(x) * (tot(cl) - (if (cl == own) ki(x) else 0L))
               val ns = -score
               if (bestLabel == null || ns < bestNs ||
-                  (ns == bestNs && utf8Less(cl, bestLabel))) {
+                  (ns == bestNs && sparkStringOrdering.lt(cl, bestLabel))) {
                 bestNs = ns; bestLabel = cl
               }
             }
@@ -1051,29 +952,76 @@ object GraphOps {
     nodes.map(x => x -> label(x))
   }
 
-  def louvainMoves(edges: DataFrame, rounds: Int = 4, colors: Int = 4,
-      smallBound: Int = louvainSmallBound): DataFrame =
-    louvainMovesOn(communityPrep(edges), rounds, colors, smallBound)
-
-  /** Moves loop over an already-materialized [[communityPrep]] tuple —
-    * coarsen/profile call this so the undirected collapse + degree
-    * checkpoints are built ONCE and shared between the loop and their own
-    * rollups (previously each ran communityPrep twice: two materializations
-    * of the same adjacency off the full upstream pipeline). */
-  private def louvainMovesOn(prep: (DataFrame, DataFrame, DataFrame),
-                             rounds: Int, colors: Int,
-                             smallBound: Int = louvainSmallBound): DataFrame = {
+  /** Deterministic distributed Louvain-style local moves (phase 1 of the
+    * Louvain method) over the undirected weighted graph. Classic Louvain
+    * moves nodes one-at-a-time in visit order — inherently sequential — so
+    * the distributed relaxation schedules moves by a deterministic hash
+    * COLORING: round r lets only nodes with `md5(id) % colors == r % colors`
+    * move, everyone else keeps their label. Coloring is how production
+    * parallel Louvain serializes conflicting moves (Lu, Halappanavar,
+    * Kalyanaraman 2015); pure synchronous argmax oscillates (two singletons
+    * sharing an edge swap labels forever), which a fixed budget alone cannot
+    * repair. A mover adopts the candidate community (its neighbors' current
+    * communities plus its own) with the LARGEST exact integer modularity
+    * gain, ties by smallest label; the same paper's minimum-label heuristic
+    * guards the residual same-color conflict — a singleton may enter another
+    * SINGLETON's community only when the target label is smaller. The gain
+    * of joining C is ΔQ ∝ k_{x,C}/m − ki·Σtot_C/(2m²); both engines compare
+    * the common-denominator integer numerator
+    * `k_{x,C}·2m − ki·(Σtot_C − ki·[x∈C])` (self-mass excluded when scoring
+    * the node's own community) — rng-free and division-free, so the move
+    * sequence is bit-identical cross-engine. `rounds` is fixed and unrolled
+    * in the oracle like [[labelPropagation]]; the default is one full color
+    * sweep.
+    *
+    * Round shape (round-5 restructure, oracle-pinned bit-identical to the
+    * original): the loop state is (id, label, ki) — folding the weighted
+    * degree into the state removes the per-round nodes/deg joins (comm and
+    * the mover's ki read the state row directly); the mover color class is
+    * recomputed per round as a row-local md5 EXPRESSION (no nodes join);
+    * the own-community "stay" candidate is an unconditional kxc = 0 row
+    * merged by the same (x, own, label) SUM that aggregates real votes
+    * (replacing a per-round anti-join with a union); the per-mover argmax
+    * is a `min(struct(-score, label))` hash aggregation (map-side partial)
+    * instead of a window sort; and 2m — constant across rounds — is
+    * collected once (one-row aggregate, the scc pivot convention) and
+    * enters each round as a literal, not a broadcast join. Per round that
+    * leaves: the neighbor-label join, the comm aggregation, the candidate
+    * SUM, two broadcast-sized comm lookups, and the argmax aggregation —
+    * measured 3.2s -> ~2.3s at sf0.1 over the round-4 shape. A per-round
+    * eager truncation IS the measured optimum here: the state feeds ~5
+    * consumers per round, so the lazy-chain alternative multiplies the plan
+    * ~5x per round and its Catalyst analysis dwarfs the saved barriers
+    * (COVERAGE.md "Round-5" A/B; contrast [[betweenness]]'s linear chain).
+    * Integer range: scores reach k_{x,C}·2m ≲ (2m)², exact in BIGINT up to
+    * 2m ≈ 3e9 total edge weight — beyond that, bucket the graph first (the
+    * same envelope as kg_modularity's q_num).
+    * Output: (id, label). Engine extension, no reference counterpart. */
+  def louvainMoves(edges: DataFrame, rounds: Int = 4, colors: Int = 4): DataFrame = {
     require(colors >= 2, s"need >= 2 colors, got $colors")
-    val (_, adj, deg) = prep
+    val prep = communityPrep(edges)
     // SMALL-GRAPH FAST PATH: the eager per-round loop is ~6 jobs/round of
     // microseconds of real work on a coarsened/small graph — collect the
     // checkpointed adjacency once and replay the identical moves loop
     // driver-side ([[louvainMovesDriver]]; bit-equal labels, spec-pinned).
-    collectSmallAdj(adj, smallBound).foreach { a =>
-      val spark = adj.sparkSession
+    localAdj(prep._2).foreach { a =>
+      val spark = edges.sparkSession
       import spark.implicits._
       return louvainMovesDriver(a, rounds, colors).toSeq.toDF("id", "label")
     }
+    louvainMovesOn(prep, rounds, colors)
+  }
+
+  /** The distributed moves loop over an already-materialized
+    * [[communityPrep]] tuple — moves/coarsen/profile call this once their
+    * own fast-path probe declined, so the undirected collapse + degree
+    * checkpoints are built ONCE and shared between the loop and their own
+    * rollups (previously each ran communityPrep twice: two materializations
+    * of the same adjacency off the full upstream pipeline). */
+  private def louvainMovesOn(prep: (DataFrame, DataFrame, DataFrame),
+                             rounds: Int, colors: Int): DataFrame = {
+    require(colors >= 2, s"need >= 2 colors, got $colors")
+    val (_, adj, deg) = prep
     // 2m is constant across rounds: one-row aggregate collected once (the
     // scc pivot convention), a literal in every round's score expression.
     // A graph with zero non-self-loop edges sums to NULL — short-circuit to
@@ -1138,29 +1086,28 @@ object GraphOps {
     * Louvain scales to web graphs. One labels join per endpoint + one
     * groupBy on the (community, community) key. Output: (ca, cb, w) with
     * ca <= cb. Engine extension, no reference counterpart. */
-  def louvainCoarsen(edges: DataFrame, rounds: Int = 4, colors: Int = 4,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def louvainCoarsen(edges: DataFrame, rounds: Int = 4, colors: Int = 4): DataFrame = {
     val prep = communityPrep(edges)
     // small-graph fast path: moves AND the coarsening rollup driver-side
     // off the one collected adjacency (same least/greatest-by-binary-UTF-8
     // collapse, 2x self-loop convention, exact Long sums)
-    collectSmallAdj(prep._2, smallBound).foreach { a =>
+    localAdj(prep._2).foreach { a =>
       val spark = edges.sparkSession
       import spark.implicits._
       val label = louvainMovesDriver(a, rounds, colors).toMap
       val rolled = collection.mutable.HashMap.empty[(String, String), Long]
         .withDefaultValue(0L)
       a.foreach { case (x, n, w) =>
-        if (utf8Less(x, n)) { // the und view: each a<b edge once
+        if (sparkStringOrdering.lt(x, n)) { // the und view: each a<b edge once
           val (la, lb) = (label(x), label(n))
-          val key = if (utf8Less(lb, la)) (lb, la) else (la, lb)
+          val key = if (sparkStringOrdering.lt(lb, la)) (lb, la) else (la, lb)
           rolled(key) += (if (la == lb) w * 2L else w)
         }
       }
       return rolled.toSeq.map { case ((ca, cb), w) => (ca, cb, w) }
         .toDF("ca", "cb", "w")
     }
-    val labels = louvainMovesOn(prep, rounds, colors, smallBound).localCheckpoint()
+    val labels = louvainMovesOn(prep, rounds, colors).localCheckpoint()
     val (und, _, _) = prep
     und
       .join(labels.select(col("id").as("a"), col("label").as("la")), "a")
@@ -1180,14 +1127,13 @@ object GraphOps {
     * edge-sized relations; the labels relation is checkpointed once and
     * consumed three ways. Output: (label, csize, tot_ki, in2_w,
     * top_member). Engine extension, no reference counterpart. */
-  def communityProfile(edges: DataFrame, rounds: Int = 4, colors: Int = 4,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def communityProfile(edges: DataFrame, rounds: Int = 4, colors: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val prep = communityPrep(edges)
     // small-graph fast path: moves and all three rollups driver-side off
     // the one collected adjacency (exact Long sums; representative = max
     // weighted degree, ties to the smallest id in binary UTF-8 order)
-    collectSmallAdj(prep._2, smallBound).foreach { a =>
+    localAdj(prep._2).foreach { a =>
       val spark = edges.sparkSession
       import spark.implicits._
       val label = louvainMovesDriver(a, rounds, colors).toMap
@@ -1200,18 +1146,18 @@ object GraphOps {
         csize(l) += 1L
         totKi(l) += ki(x)
         top.get(l) match {
-          case Some(t) if ki(t) > ki(x) || (ki(t) == ki(x) && utf8Less(t, x)) => ()
+          case Some(t) if ki(t) > ki(x) || (ki(t) == ki(x) && sparkStringOrdering.lt(t, x)) => ()
           case _ => top(l) = x
         }
       }
       val in2 = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       a.foreach { case (x, n, w) =>
-        if (utf8Less(x, n) && label(x) == label(n)) in2(label(x)) += w * 2L
+        if (sparkStringOrdering.lt(x, n) && label(x) == label(n)) in2(label(x)) += w * 2L
       }
       return csize.keys.toSeq.map(l => (l, csize(l), totKi(l), in2(l), top(l)))
         .toDF("label", "csize", "tot_ki", "in2_w", "top_member")
     }
-    val labels = louvainMovesOn(prep, rounds, colors, smallBound).localCheckpoint()
+    val labels = louvainMovesOn(prep, rounds, colors).localCheckpoint()
     val (und, _, deg) = prep
     val withKi = labels.join(deg.select(col("x").as("id"), col("ki")), "id")
       .localCheckpoint()
@@ -1245,8 +1191,7 @@ object GraphOps {
     * adjacency⨝labels join + one per-node sorted collect (bounded by
     * degree), lineage truncated. Output: (id, wl). Engine extension, no
     * reference counterpart. */
-  def wlLabels(edges: DataFrame, rounds: Int = 2,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def wlLabels(edges: DataFrame, rounds: Int = 2): DataFrame = {
     val und = edges.filter(col("source") =!= col("target"))
       .select(least(col("source"), col("target")).as("a"),
         greatest(col("source"), col("target")).as("b"))
@@ -1257,7 +1202,7 @@ object GraphOps {
     // small-graph fast path: degree-seeded md5 relabeling driver-side —
     // per round lbl := md5hex(lbl | "|" | sorted-neighbor-lbls joined ",")
     // with the neighbor multiset sorted in UTF-8 binary order
-    collectSmallPairs(adj, smallBound).foreach { a =>
+    localPairs(adj).foreach { a =>
       val spark = edges.sparkSession
       import spark.implicits._
       val nbrs = a.groupBy(_._1).map { case (x, g) => x -> g.map(_._2) }
@@ -1265,7 +1210,7 @@ object GraphOps {
         nbrs.map { case (x, ns) => x -> ns.length.toString }
       for (_ <- 1 to rounds) {
         lbl = nbrs.map { case (x, ns) =>
-          val nl = ns.map(lbl).sortWith(utf8Less).mkString(",")
+          val nl = ns.map(lbl).sorted(sparkStringOrdering).mkString(",")
           val d = java.security.MessageDigest.getInstance("MD5")
             .digest((lbl(x) + "|" + nl)
               .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -1291,13 +1236,13 @@ object GraphOps {
     * when small — (full degrees, per-node SORTED neighbor list in UTF-8
     * binary order so pair loops emit a < b exactly once). None when the
     * graph is big or non-string-keyed (distributed path runs). */
-  private def wedgeDriver(und: DataFrame, smallBound: Int)
+  private def wedgeDriver(und: DataFrame)
       : Option[(collection.Map[String, Long], collection.Map[String, Array[String]])] = {
-    collectSmallPairs(und, smallBound).map { pairs =>
+    localPairs(und).map { pairs =>
       val deg = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       pairs.foreach { case (a, b) => deg(a) += 1L; deg(b) += 1L }
       val members = (pairs.map { case (a, b) => (b, a) } ++ pairs)
-        .groupBy(_._1).map { case (n, g) => n -> g.map(_._2).sortWith(utf8Less) }
+        .groupBy(_._1).map { case (n, g) => n -> g.map(_._2).sorted(sparkStringOrdering) }
       (deg, members)
     }
   }
@@ -1324,13 +1269,12 @@ object GraphOps {
     * construction, so ilog2 >= 1 — never a division by zero), summed as
     * BIGINT. Same wedge-join shape and hub cap as [[neighborJaccard]].
     * Output: (a, b, inter, aa_scaled). */
-  def adamicAdar(edges: DataFrame, maxDegree: Long = 10000L,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def adamicAdar(edges: DataFrame, maxDegree: Long = 10000L): DataFrame = {
     // small-graph fast path: each shared neighbor z with deg in [2, cap]
     // contributes 1e6 div floor(log2(deg z)) to every pair of its
     // neighbors — the length(bin(deg))-1 expression verbatim
     val undA = undirectedSimple(edges).localCheckpoint()
-    wedgeDriver(undA, smallBound).foreach { case (deg, members) =>
+    wedgeDriver(undA).foreach { case (deg, members) =>
       val spark = edges.sparkSession
       import spark.implicits._
       val inter = collection.mutable.HashMap.empty[(String, String), Long]
@@ -1389,15 +1333,14 @@ object GraphOps {
     * oracle unrolls the identical expansion as chained MATERIALIZED CTEs.
     * Distances are exact BIGINTs — bit-identical cross-engine. Output:
     * (id, dist) for every node within `rounds` hops (source included, dist 0). */
-  def bfs(edges: DataFrame, source: String, rounds: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def bfs(edges: DataFrame, source: String, rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 64, s"rounds must be in [1,64]: $rounds")
     val adj = edges.filter(col("source") =!= col("target"))
       .select(col("source").as("src"), col("target").as("dst"))
       .distinct().localCheckpoint(true)
     // small-graph fast path: the frontier BFS driver-side (identical
     // hop-count distances; nodes unreached within the budget are absent)
-    collectSmallPairs(adj, smallBound).foreach { es =>
+    localPairs(adj).foreach { es =>
       val spark0 = edges.sparkSession
       import spark0.implicits._
       val d = allPairsDistDriver(es, rounds, Array(source))
@@ -1527,8 +1470,7 @@ object GraphOps {
     * same undirected weighted collapse LPA uses, two label joins, bounded
     * aggregations; the 2m total rides a one-row broadcast. Keep
     * deg_c · 2m < 2^63 (weights are edge counts here — far under). */
-  def modularity(edges: DataFrame, rounds: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def modularity(edges: DataFrame, rounds: Int = 3): DataFrame = {
     // ONE undirected collapse feeds LPA and all the rollups (previously
     // labelPropagation built its own copy of the same aggregation — two
     // materializations of the full upstream pipeline)
@@ -1542,7 +1484,7 @@ object GraphOps {
     // small-graph fast path: LPA labels AND the modularity rollups
     // driver-side off the one collected adjacency (exact Long sums,
     // q_num = in2_w * 2m - deg_w^2 — the distributed expression verbatim)
-    collectSmallAdj(adjLazy, smallBound).foreach { a =>
+    localAdj(adjLazy).foreach { a =>
       val spark = edges.sparkSession
       import spark.implicits._
       val label = lpaDriver(a, rounds).toMap
@@ -1552,14 +1494,14 @@ object GraphOps {
       val in2 = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       val degW = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       a.foreach { case (x, n, w) =>
-        if (utf8Less(x, n) && label(x) == label(n)) in2(label(x)) += w * 2L
+        if (sparkStringOrdering.lt(x, n) && label(x) == label(n)) in2(label(x)) += w * 2L
       }
       label.foreach { case (x, l) => degW(l) += dw(x) }
       return degW.keys.toSeq
         .map(l => (l, in2(l), degW(l), in2(l) * m2 - degW(l) * degW(l)))
         .toDF("label", "in2_w", "deg_w", "q_num")
     }
-    val labels = lpaOn(adjLazy.localCheckpoint(), rounds, smallBound = 0)
+    val labels = lpaOn(adjLazy.localCheckpoint(), rounds)
       .localCheckpoint()
     val within = und
       .join(labels.select(col("id").as("a"), col("label").as("la")), "a")
@@ -1599,7 +1541,7 @@ object GraphOps {
     * raise `rounds`). Independence and maximality (given no undecided rows)
     * are spec-asserted. */
   def maximalIndependentSet(edges: DataFrame, rounds: Int = 3,
-      seed: String = "mis", smallBound: Int = louvainSmallBound): DataFrame = {
+      seed: String = "mis"): DataFrame = {
     require(rounds >= 1 && rounds <= 32, s"rounds must be in [1,32]: $rounds")
     val und = undirectedSimple(edges)
     val adj = und.select(col("a").as("x"), col("b").as("n"))
@@ -1611,8 +1553,8 @@ object GraphOps {
     // one bounded collect + the identical Luby rounds driver-side — the
     // priority is the same md5(id|seed)||id string compared in UTF-8
     // binary order, winners/covered/undecided evolve identically
-    // (spec-pinned vs the distributed loop via smallBound=0)
-    collectSmallPairs(adj, smallBound).foreach { a =>
+    // (spec-pinned vs the distributed loop)
+    localPairs(adj).foreach { a =>
       val spark = edges.sparkSession
       import spark.implicits._
       def prioD(id: String): String = {
@@ -1628,7 +1570,7 @@ object GraphOps {
       for (_ <- 1 to rounds) {
         val winners = undec.filter { x =>
           val live = nbrs(x).filter(undec)
-          live.isEmpty || live.forall(n => utf8Less(pr(x), pr(n)))
+          live.isEmpty || live.forall(n => sparkStringOrdering.lt(pr(x), pr(n)))
         }
         val newlyCov = winners.flatMap(nbrs(_)).diff(winners).diff(cov)
         mis ++= winners
@@ -1679,8 +1621,7 @@ object GraphOps {
     * Unweighted (each edge one path); per round one co-partitioned join +
     * aggregation on target, lineage truncated. The PageRank/PPR sibling for
     * path-count influence without the stochastic normalization. */
-  def katz(edges: DataFrame, rounds: Int = 3, num: Long = 1L, den: Long = 8L,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def katz(edges: DataFrame, rounds: Int = 3, num: Long = 1L, den: Long = 8L): DataFrame = {
     require(rounds >= 1 && rounds <= 16, s"rounds must be in [1,16]: $rounds")
     require(num >= 1 && den > num, s"alpha = $num/$den must be in (0,1)")
     val adj = edges.filter(col("source") =!= col("target"))
@@ -1689,7 +1630,7 @@ object GraphOps {
     // small-graph fast path: c_t(v) = Σ_{u→v} (num·c_{t-1}(u)) div den,
     // katz = Σ_t c_t — per-edge truncating division on non-negatives, so
     // the driver replica is exact (spec-pinned vs the loop)
-    collectSmallPairs(adj, smallBound).foreach { es =>
+    localPairs(adj).foreach { es =>
       val spark = edges.sparkSession
       import spark.implicits._
       val nodes = (es.map(_._1) ++ es.map(_._2)).distinct
@@ -1721,16 +1662,6 @@ object GraphOps {
     katzAcc
   }
 
-  /** Exact outward harmonic centrality within `rounds` hops:
-    * h(v) = Σ_{u ∈ B(v,rounds), u≠v} (10^6 div dist(v,u)) — scaled-integer
-    * reciprocal distances, so the sum is order-insensitive and bit-identical
-    * cross-engine (a float 1/d sum is not). The all-source min-distance
-    * relation is the [[bfs]] recurrence seeded with EVERY node — O(V·E) per
-    * round, which is fine on the post-aggregation KG; at web-graph scale the
-    * same quantity is ESTIMATED from [[hyperBall]] ball sizes (harmonic =
-    * Σ_t (|B(v,t)|−|B(v,t−1)|)/t), which is why the two live side by side.
-    *
-    * Output: (id, h) for every node (h=0 for sinks with no out-reach). */
   /** Bounded all-pairs BFS distances driver-side — the [[harmonic]]/
     * [[closeness]]/[[neighborhoodFunction]] min-dist recurrence's fixpoint
     * within `rounds` hops (Bellman-Ford over unit edges == per-source BFS):
@@ -1759,15 +1690,24 @@ object GraphOps {
     out
   }
 
-  def harmonic(edges: DataFrame, rounds: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  /** Exact outward harmonic centrality within `rounds` hops:
+    * h(v) = Σ_{u ∈ B(v,rounds), u≠v} (10^6 div dist(v,u)) — scaled-integer
+    * reciprocal distances, so the sum is order-insensitive and bit-identical
+    * cross-engine (a float 1/d sum is not). The all-source min-distance
+    * relation is the [[bfs]] recurrence seeded with EVERY node — O(V·E) per
+    * round, which is fine on the post-aggregation KG; at web-graph scale the
+    * same quantity is ESTIMATED from [[hyperBall]] ball sizes (harmonic =
+    * Σ_t (|B(v,t)|−|B(v,t−1)|)/t), which is why the two live side by side.
+    *
+    * Output: (id, h) for every node (h=0 for sinks with no out-reach). */
+  def harmonic(edges: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 16, s"rounds must be in [1,16]: $rounds")
     val adj = edges.filter(col("source") =!= col("target"))
       .select(col("source").as("asrc"), col("target").as("adst"))
       .distinct().localCheckpoint(true)
     // small-graph fast path: the bounded all-pairs relation driver-side,
     // same Σ 1e6 div dist rollup (integer div, non-negative) — spec-pinned
-    collectSmallPairs(adj, smallBound).foreach { es =>
+    localPairs(adj).foreach { es =>
       val spark = edges.sparkSession
       import spark.implicits._
       val ns = (es.map(_._1) ++ es.map(_._2)).distinct
@@ -1800,15 +1740,14 @@ object GraphOps {
     * web-graph studies quote; harmonic handles disconnected graphs more
     * gracefully, closeness is the classical definition. Zero for sinks.
     * Output: (id, n_reach, sum_dist, closeness) — every column BIGINT. */
-  def closeness(edges: DataFrame, rounds: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def closeness(edges: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 16, s"rounds must be in [1,16]: $rounds")
     val adj = edges.filter(col("source") =!= col("target"))
       .select(col("source").as("asrc"), col("target").as("adst"))
       .distinct().localCheckpoint(true)
     // small-graph fast path: same BFS relation + the exact 1e6·reach div
     // Σdist rollup, zero for sinks — spec-pinned
-    collectSmallPairs(adj, smallBound).foreach { es =>
+    localPairs(adj).foreach { es =>
       val spark = edges.sparkSession
       import spark.implicits._
       val ns = (es.map(_._1) ++ es.map(_._2)).distinct
@@ -1966,8 +1905,7 @@ object GraphOps {
     * truncated lineage; the pivot pick is a one-row driver agg (the bounded
     * collect convention); undecided shrinks monotonically. Output:
     * (id, scc) — scc = pivot id, or 'UNDECIDED'. */
-  def scc(edges: DataFrame, outerRounds: Int = 3, innerRounds: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def scc(edges: DataFrame, outerRounds: Int = 3, innerRounds: Int = 3): DataFrame = {
     require(outerRounds >= 1 && outerRounds <= 9 && innerRounds >= 1 && innerRounds <= 9,
       s"rounds must be in [1,9]: outer=$outerRounds inner=$innerRounds")
     val adj = edges.filter(col("source") =!= col("target"))
@@ -1978,7 +1916,7 @@ object GraphOps {
     // semantics (min-id pivot in UTF-8 binary order, innerRounds-bounded
     // forward/backward balls over the undecided-restricted edges, the
     // UNDECIDED sentinel for budget exhaustion). Spec-pinned vs the loop.
-    collectSmallPairs(adj, smallBound).foreach { es =>
+    localPairs(adj).foreach { es =>
       val spark = edges.sparkSession
       import spark.implicits._
       var undec = (es.map(_._1) ++ es.map(_._2)).distinct.toSet
@@ -1986,7 +1924,7 @@ object GraphOps {
       var outer = 0
       while (outer < outerRounds && undec.nonEmpty) {
         outer += 1
-        val pivot = undec.reduce((a, b) => if (utf8Less(a, b)) a else b)
+        val pivot = undec.reduce((a, b) => if (sparkStringOrdering.lt(a, b)) a else b)
         val live = es.filter { case (s, t) => undec(s) && undec(t) }
         def reach(forward: Boolean): Set[String] = {
           var set = Set(pivot)
@@ -2061,8 +1999,7 @@ object GraphOps {
     * ground truth (HyperBallSpec pins the registers to the BFS balls).
     *
     * Output: (radius, pairs_at, pairs_within, is_effective_diameter). */
-  def neighborhoodFunction(edges: DataFrame, rounds: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def neighborhoodFunction(edges: DataFrame, rounds: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(rounds >= 1 && rounds <= 16, s"rounds must be in [1,16]: $rounds")
     val adj = edges.filter(col("source") =!= col("target"))
@@ -2071,7 +2008,7 @@ object GraphOps {
     // small-graph fast path: same BFS relation; the cumulative/effective-
     // diameter read is over rounds+1 rows — pure driver arithmetic
     // (pairs_within·10 >= total·9, first radius reaching it flagged)
-    collectSmallPairs(adj, smallBound).foreach { es =>
+    localPairs(adj).foreach { es =>
       val spark = edges.sparkSession
       import spark.implicits._
       val ns = (es.map(_._1) ++ es.map(_._2)).distinct
@@ -2154,11 +2091,10 @@ object GraphOps {
     * unroll the identical peeling as chained MATERIALIZED CTEs. Output:
     * (a, b, support) — surviving edges with their within-truss support,
     * exact BIGINTs. */
-  def kTruss(edges: DataFrame, k: Long = 3, rounds: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def kTruss(edges: DataFrame, k: Long = 3, rounds: Int = 3): DataFrame = {
     require(k >= 2 && rounds >= 1, s"k must be >= 2 and rounds positive: k=$k rounds=$rounds")
     def support(und: DataFrame): DataFrame = {
-      val tri = trianglesOfSimple(und)
+      val tri = trianglesJoin(und)
       tri.select(col("a"), col("b"))
         .union(tri.select(col("b"), col("c")))
         .union(tri.select(col("a"), col("c")))
@@ -2169,7 +2105,7 @@ object GraphOps {
     // per round, support = per-edge triangle count from the same a<b<c
     // enumeration, edges below k-2 dropped; final support recomputed on
     // the surviving relation (spec-pinned vs the loop)
-    collectSmallPairs(und, smallBound).foreach { pairs0 =>
+    localPairs(und).foreach { pairs0 =>
       val spark = edges.sparkSession
       import spark.implicits._
       def supportOf(u: Array[(String, String)]): collection.Map[(String, String), Long] = {
@@ -2230,18 +2166,18 @@ object GraphOps {
       .groupBy(col("cluster")).agg(count(lit(1)).as("size"))
       .groupBy(col("size")).agg(count(lit(1)).as("n_components"))
 
-  /** Degree distribution of the undirected simple graph: (deg, n_nodes) —
-    * the hub/power-law diagnostic a web-scale KG job reads BEFORE choosing
-    * salt factors and wedge caps. Output is at most max-degree rows (the
-    * bounded-cardinality exact-histogram pattern of text_len_quantiles):
-    * two partial-agg shuffles on small key spaces, nothing node-sized leaves
-    * the executors. */
   /** (id, deg) over an [[undirectedSimple]] relation — the shared degree
     * rollup of degreeHistogram/assortativity/clusteringCoeff. */
   private def degreesOfSimple(und: DataFrame): DataFrame =
     und.select(col("a").as("id")).union(und.select(col("b")))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
 
+  /** Degree distribution of the undirected simple graph: (deg, n_nodes) —
+    * the hub/power-law diagnostic a web-scale KG job reads BEFORE choosing
+    * salt factors and wedge caps. Output is at most max-degree rows (the
+    * bounded-cardinality exact-histogram pattern of text_len_quantiles):
+    * two partial-agg shuffles on small key spaces, nothing node-sized leaves
+    * the executors. */
   def degreeHistogram(edges: DataFrame): DataFrame =
     degreesOfSimple(undirectedSimple(edges))
       .groupBy(col("deg")).agg(count(lit(1)).as("n_nodes"))
@@ -2290,6 +2226,21 @@ object GraphOps {
         (col("m") * col("sxy") - col("sx") * col("sx")).cast("double") / den).as("r"))
   }
 
+  /** The 15-hex-char md5 pick value the walk operators use, driver-side:
+    * conv(substring(md5(s), 1, 15), 16, 10) — 60 bits, fits a Long. */
+  private def hashPick(s: String): Long = {
+    val d = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.lang.Long.parseLong(d.map(b => f"$b%02x").mkString.substring(0, 15), 16)
+  }
+
+  /** Ranked adjacency driver-side: per source, neighbors sorted by key in
+    * UTF-8 binary order (== the distributed row_number over dst ASC). */
+  private def rankedAdj(es: Array[(String, String)]): Map[String, Array[String]] =
+    es.groupBy(_._1).map { case (s, g) =>
+      s -> g.map(_._2).sorted(sparkStringOrdering)
+    }
+
   /** Deterministic "random" walks from every node — the DeepWalk/node2vec
     * corpus generator (walk windows feed skip-gram embedding training), made
     * reproducible and oracle-able by replacing the RNG with a hash decision:
@@ -2303,23 +2254,7 @@ object GraphOps {
     * residual), lineage truncated per step; walks leaving a sink node simply
     * end (their rows stop being emitted). Output: (start, step, node) for
     * steps 0..walkLen — at most |V|·(walkLen+1) rows. */
-  /** The 15-hex-char md5 pick value the walk operators use, driver-side:
-    * conv(substring(md5(s), 1, 15), 16, 10) — 60 bits, fits a Long. */
-  private def hashPick(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.lang.Long.parseLong(d.map(b => f"$b%02x").mkString.substring(0, 15), 16)
-  }
-
-  /** Ranked adjacency driver-side: per source, neighbors sorted by key in
-    * UTF-8 binary order (== the distributed row_number over dst ASC). */
-  private def rankedAdj(es: Array[(String, String)]): Map[String, Array[String]] =
-    es.groupBy(_._1).map { case (s, g) =>
-      s -> g.map(_._2).sortWith(utf8Less)
-    }
-
-  def randomWalks(edges: DataFrame, walkLen: Int = 4, seed: String = "w",
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def randomWalks(edges: DataFrame, walkLen: Int = 4, seed: String = "w"): DataFrame = {
     require(walkLen >= 1 && walkLen <= 64, s"walkLen must be in [1,64]: $walkLen")
     val adj = edges.filter(col("source") =!= col("target"))
       .select(col("source").as("src"), col("target").as("dst")).distinct()
@@ -2332,7 +2267,7 @@ object GraphOps {
     // the ranked adjacency — one bounded collect and every walk replays
     // driver-side (same md5(node|t|seed) pick mod degree over the same
     // dst-ascending neighbor ranks; sink nodes end walks). Spec-pinned.
-    collectSmallPairs(adjd.select(col("src"), col("dst")), smallBound).foreach { es =>
+    localPairs(adjd.select(col("src"), col("dst"))).foreach { es =>
       val spark = edges.sparkSession
       import spark.implicits._
       val ranked = rankedAdj(es)
@@ -2392,8 +2327,7 @@ object GraphOps {
     * flag + one per-walk window — lineage truncated per step. Output:
     * (start, step, node), the [[walkPairs]] input schema. */
   def node2vecWalks(edges: DataFrame, walkLen: Int = 4, returnMult: Int = 1,
-      sharedMult: Int = 2, awayMult: Int = 4, seed: String = "n2v",
-      smallBound: Int = louvainSmallBound): DataFrame = {
+      sharedMult: Int = 2, awayMult: Int = 4, seed: String = "n2v"): DataFrame = {
     require(walkLen >= 1 && walkLen <= 64, s"walkLen must be in [1,64]: $walkLen")
     require(returnMult >= 1 && sharedMult >= 1 && awayMult >= 1,
       s"multiplicities must be >= 1: ($returnMult, $sharedMult, $awayMult)")
@@ -2409,7 +2343,7 @@ object GraphOps {
     // md5(prev|cur|t|seed) mod Σmult over the cumulative ranges of the
     // rank-ordered candidates with the same return/shared/away
     // multiplicities. Dead ends truncate. Spec-pinned vs the loop.
-    collectSmallPairs(adjd.select(col("src"), col("dst")), smallBound).foreach { es =>
+    localPairs(adjd.select(col("src"), col("dst"))).foreach { es =>
       val spark = edges.sparkSession
       import spark.implicits._
       val ranked = rankedAdj(es)
@@ -2504,20 +2438,6 @@ object GraphOps {
       .groupBy(col("center"), col("context")).agg(count(lit(1)).as("cnt"))
   }
 
-  /** Local clustering coefficient per node over the undirected simple graph:
-    * cc(v) = 2·tri(v) / (deg(v)·(deg(v)−1)) — how close v's neighborhood is
-    * to a clique (engine extension for KG quality monitoring: hub entities
-    * with near-zero cc are topic mixers; high-cc nodes sit in tight entity
-    * communities).
-    *
-    * Triangle counting is the node-ordered wedge join (each triangle
-    * enumerated exactly once as a < b < c, then exploded to its three
-    * corners), the same shape as [[graft.ops.DocKg.trianglesFromEdges]]; the
-    * integer pieces (deg, tri) are exact BIGINTs and the single double
-    * division of two exact integers is bit-identical cross-engine (the
-    * kg_node_jaccard recipe). Nodes with deg < 2 have no defined coefficient
-    * and are filtered BEFORE the division — total, not plan-order dependent
-    * (the Adamic-Adar ANSI lesson). Output: (id, deg, tri, coeff). */
   /** Collapse to the undirected simple graph: distinct node-ordered pairs
     * a < b, self-loops dropped — the shared prep of every undirected
     * analytic (kCore, kTruss, clusteringCoeff, components, the wedge ops). */
@@ -2532,15 +2452,20 @@ object GraphOps {
     * a < b < c, two key joins. The ONE copy of the algorithm
     * ([[clusteringCoeff]], [[kTruss]], and [[graft.ops.DocKg.trianglesFromEdges]]
     * all call it). */
-  private[graft] def trianglesOfSimple(und: DataFrame,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  private[graft] def trianglesOfSimple(und: DataFrame): DataFrame = {
     // small-graph fast path: the same a<b<c wedge-close enumeration off one
     // bounded collect (each triangle exactly once)
-    collectSmallPairs(und, smallBound).foreach { pairs =>
+    localPairs(und).foreach { pairs =>
       val spark = und.sparkSession
       import spark.implicits._
       return trianglesDriver(pairs).toSeq.toDF("a", "b", "c")
     }
+    trianglesJoin(und)
+  }
+
+  /** The distributed wedge-close join of [[trianglesOfSimple]], for callers
+    * whose own fast-path probe of `und` already declined. */
+  private def trianglesJoin(und: DataFrame): DataFrame = {
     val wedges = und.as("x").join(und.as("y"), col("x.b") === col("y.a"))
       .select(col("x.a").as("a"), col("x.b").as("b"), col("y.b").as("c"))
     wedges.as("w")
@@ -2560,13 +2485,26 @@ object GraphOps {
     }
   }
 
-  def clusteringCoeff(edges: DataFrame,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  /** Local clustering coefficient per node over the undirected simple graph:
+    * cc(v) = 2·tri(v) / (deg(v)·(deg(v)−1)) — how close v's neighborhood is
+    * to a clique (engine extension for KG quality monitoring: hub entities
+    * with near-zero cc are topic mixers; high-cc nodes sit in tight entity
+    * communities).
+    *
+    * Triangle counting is the node-ordered wedge join (each triangle
+    * enumerated exactly once as a < b < c, then exploded to its three
+    * corners), the same shape as [[graft.ops.DocKg.trianglesFromEdges]]; the
+    * integer pieces (deg, tri) are exact BIGINTs and the single double
+    * division of two exact integers is bit-identical cross-engine (the
+    * kg_node_jaccard recipe). Nodes with deg < 2 have no defined coefficient
+    * and are filtered BEFORE the division — total, not plan-order dependent
+    * (the Adamic-Adar ANSI lesson). Output: (id, deg, tri, coeff). */
+  def clusteringCoeff(edges: DataFrame): DataFrame = {
     val und = undirectedSimple(edges).localCheckpoint(true)
     // small-graph fast path: degrees, per-corner triangle counts and the
     // one double division of exact ints driver-side (deg < 2 filtered
     // before the division, as distributed)
-    collectSmallPairs(und, smallBound).foreach { pairs =>
+    localPairs(und).foreach { pairs =>
       val spark = edges.sparkSession
       import spark.implicits._
       val deg = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
@@ -2581,7 +2519,7 @@ object GraphOps {
       }.toDF("id", "deg", "tri", "coeff")
     }
     val deg = degreesOfSimple(und)
-    val triangles = trianglesOfSimple(und)
+    val triangles = trianglesJoin(und)
     val triPerNode = triangles.select(col("a").as("id"))
       .union(triangles.select(col("b")))
       .union(triangles.select(col("c")))
@@ -2618,7 +2556,7 @@ object GraphOps {
     * Output: (id, dist) for nodes reachable within `rounds` hops.
     * Engine extension, no reference counterpart. */
   def sssp(edges: DataFrame, source: String, rounds: Int = 4,
-      costScale: Long = 1000000L, smallBound: Int = louvainSmallBound): DataFrame = {
+      costScale: Long = 1000000L): DataFrame = {
     require(rounds >= 1 && rounds <= 32, s"rounds must be in [1,32]: $rounds")
     require(costScale >= 1L, s"costScale must be positive: $costScale")
     val cInt = when(col("c") =!= floor(col("c")),
@@ -2632,7 +2570,7 @@ object GraphOps {
     // small-graph fast path: bounded Bellman-Ford driver-side off the
     // validated cost relation (same min-plus relaxation per round over the
     // cumulative settled set; costs are the already-divided Longs)
-    collectSmallAdj(adj, smallBound).foreach { es =>
+    localAdj(adj).foreach { es =>
       val spark0 = edges.sparkSession
       import spark0.implicits._
       val nbrs = es.groupBy(_._1)
@@ -2918,8 +2856,7 @@ object GraphOps {
     * direction (same shape as [[bfs]]), every frontier localCheckpointed to
     * truncate lineage; the classify step is two left joins on the node id
     * and one vocabulary-sized rollup. No driver-side data beyond the plan. */
-  def bowTie(edges: DataFrame, rounds: Int = 3,
-      smallBound: Int = louvainSmallBound): DataFrame = {
+  def bowTie(edges: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 9, s"rounds must be in [1,9]: $rounds")
     val adj = edges.filter(col("source") =!= col("target"))
       .select(col("source").as("src"), col("target").as("dst"))
@@ -2927,11 +2864,11 @@ object GraphOps {
     // small-graph fast path: pivot = min node id in UTF-8 binary order,
     // F/B = bounded forward/backward balls, then the four-way classify —
     // one bounded collect replaces the two frontier chains (spec-pinned)
-    collectSmallPairs(adj, smallBound).foreach { es =>
+    localPairs(adj).foreach { es =>
       val spark = edges.sparkSession
       import spark.implicits._
       val ns = (es.map(_._1) ++ es.map(_._2)).distinct
-      val pivot = ns.reduce((a, b) => if (utf8Less(a, b)) a else b)
+      val pivot = ns.reduce((a, b) => if (sparkStringOrdering.lt(a, b)) a else b)
       val fwd = es.groupBy(_._1); val bwd = es.groupBy(_._2)
       def ball(out: Boolean): Set[String] = {
         var set = Set(pivot)

@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.exec.Bounded
+import graft.exec.Bounded.Key
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -183,6 +185,9 @@ object Dedup {
         (inter.cast("double") / sb.cast("double")).as("containment_b"))
     }
 
+  /** Pair-list row bound of [[clusters]]' driver union-find. */
+  private val localBound = 65536
+
   /** Duplicate-cluster assignment: connected components over verified
     * candidate pairs via iterative min-label propagation (the distributed
     * union-find). Output: (id, cluster) with cluster = smallest member id —
@@ -190,69 +195,58 @@ object Dedup {
     *
     * Each iteration is one join + aggregate; iteration count is O(log n) for
     * the near-clique components dedup produces. Labels are persisted per
-    * round and lineage is cut so plans stay bounded.
+    * round and lineage is cut so plans stay bounded. `maxIter` bounds only
+    * this distributed loop, which raises rather than return a labeling that
+    * has not converged; the driver union-find below [[localBound]] always
+    * converges. The (id, cluster) contract does not depend on which path
+    * ran; run the call inside [[graft.exec.Bounded.distributedOnly]] to
+    * force the distributed loop (the parity spec does).
     */
-  def clusters(pairs: DataFrame, maxIter: Int = 20,
-      smallBound: Int = 65536): DataFrame = {
+  def clusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // SMALL-GRAPH FAST PATH: the output contract is ALGORITHM-INDEPENDENT —
     // (id, cluster) with cluster = the smallest member of id's component —
-    // so when the pair list fits under `smallBound` one bounded collect +
+    // so when the pair list fits under `localBound` one bounded collect +
     // driver union-find yields the identical relation without the
     // per-round propagate/halve jobs (each a join + aggregate + checkpoint
     // whose real work is microseconds on a dedup-sized pair graph). Ids are
-    // compared exactly as Spark's min would (longs numerically, strings in
-    // UTF-8 binary order). Above the bound, or on an id type the driver
-    // comparator does not cover, the unchanged distributed loop runs —
-    // 10^9-doc candidate graphs never collect. Pass smallBound=0 to force
-    // the distributed path (the parity spec does).
-    if (smallBound > 0) {
-      val probe = pairs.select(col("a_id"), col("b_id")).limit(smallBound + 1).collect()
-      def cmp(x: Any, y: Any): Int = (x, y) match {
-        case (a: Long, b: Long)     => java.lang.Long.compare(a, b)
-        case (a: Int, b: Int)       => Integer.compare(a, b)
-        case (a: String, b: String) =>
-          java.util.Arrays.compareUnsigned(
-            a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-            b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        case _ => throw new MatchError(x)
+    // compared exactly as Spark's min would ([[Bounded.keyOrdering]]).
+    // Above the bound, or on an id type the driver order does not cover,
+    // the unchanged distributed loop runs — 10^9-doc candidate graphs
+    // never collect.
+    val ids = pairs.select(col("a_id"), col("b_id"))
+    Bounded.collect(ids, localBound, Key, Key).foreach { probe =>
+      val parent = collection.mutable.HashMap.empty[Any, Any]
+      def find(x: Any): Any = {
+        var r = x
+        while (parent(r) != r) r = parent(r)
+        var c = x
+        while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
+        r
       }
-      val comparable = probe.forall(r => !r.isNullAt(0) && !r.isNullAt(1) &&
-        (r.get(0).isInstanceOf[Long] || r.get(0).isInstanceOf[Int] ||
-          r.get(0).isInstanceOf[String]))
-      if (probe.length <= smallBound && comparable) {
-        val parent = collection.mutable.HashMap.empty[Any, Any]
-        def find(x: Any): Any = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        probe.foreach { r =>
-          val (a, b) = (r.get(0), r.get(1))
-          parent.getOrElseUpdate(a, a)
-          parent.getOrElseUpdate(b, b)
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(ra) = rb
-        }
-        val minOf = collection.mutable.HashMap.empty[Any, Any]
-        parent.keys.foreach { n =>
-          val r = find(n)
-          minOf.get(r) match {
-            case Some(m) if cmp(m, n) <= 0 => ()
-            case _ => minOf(r) = n
-          }
-        }
-        val spark = pairs.sparkSession
-        val idType = pairs.schema(pairs.schema.fieldIndex("a_id")).dataType
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id", idType),
-          org.apache.spark.sql.types.StructField("cluster", idType)))
-        val rows = parent.keys.toSeq.map(n =>
-          org.apache.spark.sql.Row(n, minOf(find(n))))
-        import scala.jdk.CollectionConverters._
-        return spark.createDataFrame(rows.asJava, schema)
+      probe.foreach { r =>
+        val (a, b) = (r.get(0), r.get(1))
+        parent.getOrElseUpdate(a, a)
+        parent.getOrElseUpdate(b, b)
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(ra) = rb
       }
+      val minOf = collection.mutable.HashMap.empty[Any, Any]
+      parent.keys.foreach { n =>
+        val r = find(n)
+        minOf.get(r) match {
+          case Some(m) if Bounded.keyOrdering.lteq(m, n) => ()
+          case _ => minOf(r) = n
+        }
+      }
+      val spark = pairs.sparkSession
+      val idType = pairs.schema(pairs.schema.fieldIndex("a_id")).dataType
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id", idType),
+        org.apache.spark.sql.types.StructField("cluster", idType)))
+      val rows = parent.keys.toSeq.map(n =>
+        org.apache.spark.sql.Row(n, minOf(find(n))))
+      import scala.jdk.CollectionConverters._
+      return spark.createDataFrame(rows.asJava, schema)
     }
     // localCheckpoint (NOT persist): each round must TRUNCATE the logical plan,
     // otherwise the plan tree deepens per iteration and AQE's per-action plan

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.exec.Bounded
+import graft.exec.Bounded.{Key, Lng, arrayOf}
 
 /** Similarity search over an embedding column (array<float>).
   *
@@ -267,14 +269,18 @@ object Similarity {
     require(rows.length >= k,
       s"seed sample has ${rows.length} < k=$k points; raise seedSampleFraction")
     // sort driver-side by id with SQL ordering semantics (no global sort
-    // job; [[idLess]]), then maximin with the exact path's start/tie rules
-    // ([[maximinDriver]]: pts is id-sorted, so the first index attaining
-    // the max distance is the smaller id).
+    // job; [[Bounded.keyOrdering]]), then maximin with the exact path's
+    // start/tie rules ([[maximinDriver]]: pts is id-sorted, so the first
+    // index attaining the max distance is the smaller id).
     val pts: Array[Array[Long]] =
       rows.map(r => (r.get(0), r.getSeq[Long](1).toArray))
-        .sortWith((a, b) => idLess(a._1, b._1)).map(_._2)
+        .sortBy(_._1)(Bounded.keyOrdering).map(_._2)
     maximinDriver(pts, k).toArray
   }
+
+  /** Corpus row bound of the [[kmeansCentroids]]/[[pqCodebooks]] driver
+    * training path. */
+  private val localBound = 16384
 
   /** Lloyd's k-means coarse quantizer for IVF — the learned replacement for
     * the [[bucket]] heuristic. Deterministic farthest-point (maximin)
@@ -296,8 +302,7 @@ object Similarity {
     * floor(sum/count) over quantized coordinates (exact; empty clusters keep
     * their previous centroid). Returns the K×dim centroid matrix. */
   def kmeansCentroids(df: DataFrame, id: Column, vec: Column, k: Int, iters: Int,
-      scale: Int = 1000, seedSampleFraction: Option[Double] = None,
-      smallCollectBound: Int = 16384): Array[Array[Long]] = {
+      scale: Int = 1000, seedSampleFraction: Option[Double] = None): Array[Array[Long]] = {
     require(k >= 1, s"k=$k must be >= 1")
     // SMALL-CORPUS FAST PATH: training is a driver-synchronous loop of tiny
     // jobs whose wall cost is almost entirely per-action overhead when the
@@ -308,19 +313,18 @@ object Similarity {
     // quantization expression evaluated IN Spark, same maximin start/tie
     // rules, Long sums — order-independent — and the same
     // floor(sum.toDouble/cnt) update), so the returned matrix is
-    // bit-identical (KmSpec pins the two paths equal). Above the bound the
+    // bit-identical (PqSpec pins the two paths equal). Above the bound the
     // probe is abandoned and the scale-correct job loop runs — the driver
-    // never holds more than smallCollectBound+1 quantized points (~8 MB at
-    // the default bound for dim=64). Callers can pass 0 to force the
-    // distributed path.
-    if (seedSampleFraction.isEmpty && smallCollectBound > 0) {
-      val head = quantized(df, id, vec, scale).limit(smallCollectBound + 1).collect()
-      if (head.length <= smallCollectBound) {
-        require(head.length >= k, s"corpus has fewer than k=$k vectors")
-        val pts = head.map(r => (r.get(0), r.getSeq[Long](1).toArray))
-          .sortWith((a, b) => idLess(a._1, b._1)).map(_._2)
-        return kmeansDriver(pts, k, iters)
-      }
+    // never holds more than localBound+1 quantized points (~8 MB for
+    // dim=64).
+    if (seedSampleFraction.isEmpty) {
+      Bounded.collect(quantized(df, id, vec, scale), localBound, Key, arrayOf(Lng))
+        .foreach { head =>
+          require(head.length >= k, s"corpus has fewer than k=$k vectors")
+          val pts = head.map(r => (r.get(0), r.getSeq[Long](1).toArray))
+            .sortBy(_._1)(Bounded.keyOrdering).map(_._2)
+          return kmeansDriver(pts, k, iters)
+        }
     }
     // localCheckpoint, not persist: iterative consumers (memory note — AQE
     // re-stringifies nested plans per action otherwise)
@@ -570,8 +574,7 @@ object Similarity {
     * more than K×dim rows per iteration. */
   def pqCodebooks(df: DataFrame, id: Column, vec: Column, dim: Int, m: Int,
       ksub: Int, iters: Int, scale: Int = 1000,
-      seedSampleFraction: Option[Double] = None,
-      smallCollectBound: Int = 16384): Array[Array[Array[Long]]] = {
+      seedSampleFraction: Option[Double] = None): Array[Array[Array[Long]]] = {
     require(m >= 1 && dim % m == 0, s"dim=$dim not divisible by m=$m")
     require(ksub >= 1, s"ksub=$ksub must be >= 1")
     val w = dim / m
@@ -593,13 +596,12 @@ object Similarity {
     // subspace then trains through [[kmeansDriver]], whose math is the
     // distributed loop's bit-for-bit (PqSpec pins the paths equal). Above
     // the bound the probe is abandoned for the scale-correct job loop.
-    if (seedSampleFraction.isEmpty && smallCollectBound > 0) {
-      val head = df.select(id.as("id"), qs.as("qs"))
-        .limit(smallCollectBound + 1).collect()
-      if (head.length <= smallCollectBound) {
+    if (seedSampleFraction.isEmpty) {
+      val probe = df.select(id.as("id"), qs.as("qs"))
+      Bounded.collect(probe, localBound, Key, arrayOf(arrayOf(Lng))).foreach { head =>
         require(head.length >= ksub, s"corpus has fewer than ksub=$ksub vectors")
         val pts = head.map(r => (r.get(0), subvecs(r, 1)))
-          .sortWith((a, b) => idLess(a._1, b._1)).map(_._2)
+          .sortBy(_._1)(Bounded.keyOrdering).map(_._2)
         return Array.tabulate(m)(s => kmeansDriver(pts.map(_(s)), ksub, iters))
       }
     }
@@ -614,9 +616,8 @@ object Similarity {
             .select(col("id"), col("qs")).collect()
           require(rows.length >= ksub,
             s"seed sample has ${rows.length} < ksub=$ksub points; raise seedSampleFraction")
-          val pts = rows.map(r => (r.get(0), subvecs(r, 1))).sortWith { (a, b) =>
-            idLess(a._1, b._1)
-          }
+          val pts = rows.map(r => (r.get(0), subvecs(r, 1)))
+            .sortBy(_._1)(Bounded.keyOrdering)
           Array.tabulate(m) { s =>
             maximinDriver(pts.map(_._2(s)), ksub)
           }
@@ -662,20 +663,6 @@ object Similarity {
       books = next
     }
     books
-  }
-
-  /** SQL id ordering driver-side: longs/ints numerically, strings as
-    * unsigned UTF-8 bytes (Spark's UTF8String binary order, which differs
-    * from Java's UTF-16 code-unit order for supplementary characters). */
-  private def idLess(x: Any, y: Any): Boolean = (x, y) match {
-    case (a: Long, b: Long) => a < b
-    case (a: Int, b: Int)   => a < b
-    case (a: String, b: String) =>
-      java.util.Arrays.compareUnsigned(
-        a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
-    case _ => throw new IllegalArgumentException(
-      s"unorderable id type for sampled seeding: ${x.getClass} vs ${y.getClass}")
   }
 
   /** Driver-side maximin over an id-ordered point set (first point = the

@@ -1,0 +1,116 @@
+package graft.exec
+
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkTestSession
+import graft.exec.Bounded.{Key, Lng, Str, arrayOf, distributedOnly}
+import graft.graph.{GraphBuilder, GraphOps}
+import graft.ops.{Dedup, Similarity}
+
+/** The one bounded-collect probe of the driver fast paths: when it declines,
+  * the seam that forces every operator onto its distributed path, the Spark
+  * key order it shares with the driver replicas, and null-keyed inputs, on
+  * which each fast-path family must return the distributed path's answer. */
+class BoundedSpec extends AnyFunSuite with SparkTestSession {
+  import spark.implicits._
+
+  private def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+
+  test("collect: rows of a small, typed, null-free relation; None otherwise") {
+    val df = Seq(("a", 1L), ("b", 2L)).toDF("k", "v")
+    assert(Bounded.collect(df, 2, Str, Lng).map(_.map(_.toSeq).toSet) ==
+      Some(Set(Seq("a", 1L), Seq("b", 2L))))
+    assert(Bounded.collect(df, 1, Str, Lng).isEmpty, "above the bound")
+    assert(Bounded.collect(df.filter(lit(false)), 2, Str, Lng).isEmpty, "no rows")
+    assert(Bounded.collect(df, 2, Str, Str).isEmpty, "a column type the caller cannot decode")
+    assert(Bounded.collect(df, 2, Str).isEmpty, "column count")
+    assert(Bounded.collect(Seq(("a", Some(1L)), ("b", None)).toDF("k", "v"), 2, Str, Lng).isEmpty,
+      "a null value")
+    val vecs = Seq((1, Seq(1L, 2L)), (2, Seq(3L))).toDF("id", "q")
+    assert(Bounded.collect(vecs, 2, Key, arrayOf(Lng)).map(_.length) == Some(2))
+  }
+
+  test("distributedOnly: collect declines inside, and the seam resets after body throws") {
+    val df = Seq(("a", 1L)).toDF("k", "v")
+    assert(distributedOnly(Bounded.collect(df, 10, Str, Lng)).isEmpty)
+    assert(distributedOnly(distributedOnly(1) + Bounded.collect(df, 10, Str, Lng).size) == 1)
+    intercept[IllegalStateException](distributedOnly(throw new IllegalStateException("boom")))
+    assert(Bounded.collect(df, 10, Str, Lng).isDefined)
+  }
+
+  test("sparkStringOrdering is UTF-8 byte order on 20,000 random boundary-character pairs") {
+    val rnd = new scala.util.Random(11)
+    val alphabet = Seq("\u0000", "a", "\u007f", "\u0080", "߿", "ࠀ", "퟿",
+      "", "￿", "😀", "𐀀", "􏿿")
+    def word() = Seq.fill(rnd.nextInt(5))(alphabet(rnd.nextInt(alphabet.size))).mkString
+    val mismatches = (1 to 20000).count { _ =>
+      val (a, b) = (word(), word())
+      val bytes =
+        Integer.signum(java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8)))
+      Integer.signum(GraphBuilder.sparkStringOrdering.compare(a, b)) != bytes ||
+        Integer.signum(Bounded.keyOrdering.compare(a, b)) != bytes
+    }
+    assert(mismatches == 0)
+    assert(Bounded.keyOrdering.lt(-3L, 2L) && Bounded.keyOrdering.lt(2, 10))
+    intercept[IllegalArgumentException](Bounded.keyOrdering.compare(1, 1L))
+  }
+
+  // one graph per family with a null-source and a null-target edge: the
+  // distributed joins drop null keys, a driver replay keyed on them would not
+  private def nullKeyed: DataFrame =
+    Seq[(String, String, Double)](("A", "B", 2), ("B", "C", 1), ("C", "A", 1), ("C", "D", 3),
+      (null, "B", 1), ("D", null, 2)).toDF("source", "target", "c")
+
+  test("null keys: HITS equals its distributed path") {
+    val e = nullKeyed
+    for (it <- Seq(1, 2))
+      assert(rows(GraphOps.hits(e, it)) == rows(distributedOnly(GraphOps.hits(e, it))),
+        s"iters=$it")
+  }
+
+  test("null keys: pageRank and pageRankResume equal their distributed paths") {
+    val e = nullKeyed
+    assert(rows(GraphOps.pageRank(e, 3)) == rows(distributedOnly(GraphOps.pageRank(e, 3))))
+    val prev = distributedOnly(GraphOps.pageRank(e, 2))
+    assert(rows(GraphOps.pageRankResume(e, prev, 1)) ==
+      rows(distributedOnly(GraphOps.pageRankResume(e, prev, 1))))
+    // a null source alone: the probed (source-joined) relation holds no
+    // null, but prPrep's node set still counts the null node
+    val src = Seq[(String, String, Double)](("A", "B", 1), ("B", "A", 1), (null, "C", 1))
+      .toDF("source", "target", "c")
+    assert(rows(GraphOps.pageRank(src, 2)) == rows(distributedOnly(GraphOps.pageRank(src, 2))))
+    assert(rows(GraphOps.hits(src, 2)) == rows(distributedOnly(GraphOps.hits(src, 2))))
+  }
+
+  test("null keys: pair family (kCore, bfs) equals its distributed path") {
+    val e = nullKeyed
+    assert(rows(GraphOps.kCore(e, k = 2)) == rows(distributedOnly(GraphOps.kCore(e, k = 2))))
+    assert(rows(GraphOps.bfs(e, "A", rounds = 3)) ==
+      rows(distributedOnly(GraphOps.bfs(e, "A", rounds = 3))))
+  }
+
+  test("null keys: adjacency family (labelPropagation, louvainMoves) equals its distributed path") {
+    val e = nullKeyed
+    assert(rows(GraphOps.labelPropagation(e, rounds = 3)) ==
+      rows(distributedOnly(GraphOps.labelPropagation(e, rounds = 3))))
+    assert(rows(GraphOps.louvainMoves(e, rounds = 4)) ==
+      rows(distributedOnly(GraphOps.louvainMoves(e, rounds = 4))))
+  }
+
+  test("null keys: Dedup.clusters with a null id equals its distributed path") {
+    val pairs = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, 3L), (null, 4L), (5L, 6L))
+      .toDF("a_id", "b_id")
+    assert(rows(Dedup.clusters(pairs)) == rows(distributedOnly(Dedup.clusters(pairs))))
+  }
+
+  test("null keys: kmeansCentroids with a null vector equals its distributed path") {
+    val pts = (1 to 12).map(i => (i.toLong, Seq(i % 3 * 10.0 + i * 0.1, i % 2 * 5.0)))
+    val df = (pts.map { case (i, v) => (i, Option(v)) } :+ ((99L, None: Option[Seq[Double]])))
+      .toDF("id", "v")
+    def cents() = Similarity.kmeansCentroids(df, col("id"), col("v"), k = 3, iters = 2)
+      .map(_.toSeq).toSeq
+    assert(cents() == distributedOnly(cents()))
+  }
+}

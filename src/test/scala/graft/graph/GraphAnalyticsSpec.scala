@@ -2,6 +2,7 @@ package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.exec.Bounded.distributedOnly
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -262,7 +263,7 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     for (it <- Seq(1, 2, 3))
       assert(rows(GraphOps.hits(e, iters = it)) ==
-        rows(GraphOps.hits(e, iters = it, smallBound = 0)), s"iters=$it")
+        rows(distributedOnly(GraphOps.hits(e, iters = it))), s"iters=$it")
   }
 
   test("pagerank family / katz / mis: driver fast path == distributed loop") {
@@ -272,27 +273,27 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
       ("A", "B", 1), ("E", "E", 4), ("X", "Y", 1))
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     assert(rows(GraphOps.pageRank(e, iters = 3)) ==
-      rows(GraphOps.pageRank(e, iters = 3, smallBound = 0)))
+      rows(distributedOnly(GraphOps.pageRank(e, iters = 3))))
     assert(rows(GraphOps.pageRankDangling(e, iters = 3)) ==
-      rows(GraphOps.pageRankDangling(e, iters = 3, smallBound = 0)))
+      rows(distributedOnly(GraphOps.pageRankDangling(e, iters = 3))))
     // epsilon stop must fire at the same round on both paths
     assert(rows(GraphOps.pageRankDangling(e, iters = 20, eps = 100000000L)) ==
-      rows(GraphOps.pageRankDangling(e, iters = 20, eps = 100000000L, smallBound = 0)))
+      rows(distributedOnly(GraphOps.pageRankDangling(e, iters = 20, eps = 100000000L))))
     assert(rows(GraphOps.personalizedPageRank(e, "A", iters = 3)) ==
-      rows(GraphOps.personalizedPageRank(e, "A", iters = 3, smallBound = 0)))
+      rows(distributedOnly(GraphOps.personalizedPageRank(e, "A", iters = 3))))
     val prev = GraphOps.pageRank(e, iters = 2)
     assert(rows(GraphOps.pageRankResume(e, prev, iters = 1)) ==
-      rows(GraphOps.pageRankResume(e, prev, iters = 1, smallBound = 0)))
+      rows(distributedOnly(GraphOps.pageRankResume(e, prev, iters = 1))))
     // resume == full run, through the fast path too
     assert(rows(GraphOps.pageRankResume(e, prev, iters = 1)) ==
       rows(GraphOps.pageRank(e, iters = 3)))
     assert(rows(GraphOps.katz(e, rounds = 3)) ==
-      rows(GraphOps.katz(e, rounds = 3, smallBound = 0)))
+      rows(distributedOnly(GraphOps.katz(e, rounds = 3))))
     assert(rows(GraphOps.maximalIndependentSet(e, rounds = 3)) ==
-      rows(GraphOps.maximalIndependentSet(e, rounds = 3, smallBound = 0)))
+      rows(distributedOnly(GraphOps.maximalIndependentSet(e, rounds = 3))))
     // an undecided-leaving round budget must also agree
     assert(rows(GraphOps.maximalIndependentSet(e, rounds = 1)) ==
-      rows(GraphOps.maximalIndependentSet(e, rounds = 1, smallBound = 0)))
+      rows(distributedOnly(GraphOps.maximalIndependentSet(e, rounds = 1))))
   }
 
   test("wedge family / wl / ktruss: driver fast path == distributed loop") {
@@ -303,20 +304,20 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
       ("H", "D", 1))
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     assert(rows(GraphOps.trianglesOfSimple(GraphOps.undirectedSimple(e))) ==
-      rows(GraphOps.trianglesOfSimple(GraphOps.undirectedSimple(e), smallBound = 0)))
+      rows(distributedOnly(GraphOps.trianglesOfSimple(GraphOps.undirectedSimple(e)))))
     assert(rows(GraphOps.clusteringCoeff(e)) ==
-      rows(GraphOps.clusteringCoeff(e, smallBound = 0)))
+      rows(distributedOnly(GraphOps.clusteringCoeff(e))))
     for (r <- Seq(1, 2))
       assert(rows(GraphOps.wlLabels(e, rounds = r)) ==
-        rows(GraphOps.wlLabels(e, rounds = r, smallBound = 0)), s"wl r=$r")
+        rows(distributedOnly(GraphOps.wlLabels(e, rounds = r))), s"wl r=$r")
     for (k <- Seq(2L, 3L, 4L))
       assert(rows(GraphOps.kTruss(e, k = k)) ==
-        rows(GraphOps.kTruss(e, k = k, smallBound = 0)), s"ktruss k=$k")
+        rows(distributedOnly(GraphOps.kTruss(e, k = k))), s"ktruss k=$k")
     for (cap <- Seq(3L, 10000L)) {
       assert(rows(GraphOps.neighborJaccard(e, maxDegree = cap)) ==
-        rows(GraphOps.neighborJaccard(e, maxDegree = cap, smallBound = 0)), s"nj $cap")
+        rows(distributedOnly(GraphOps.neighborJaccard(e, maxDegree = cap))), s"nj $cap")
       assert(rows(GraphOps.adamicAdar(e, maxDegree = cap)) ==
-        rows(GraphOps.adamicAdar(e, maxDegree = cap, smallBound = 0)), s"aa $cap")
+        rows(distributedOnly(GraphOps.adamicAdar(e, maxDegree = cap))), s"aa $cap")
     }
   }
 
@@ -326,9 +327,9 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     for (r <- Seq(1, 4)) {
       assert(rows(GraphOps.sssp(e, "A", rounds = r)) ==
-        rows(GraphOps.sssp(e, "A", rounds = r, smallBound = 0)), s"sssp r=$r")
+        rows(distributedOnly(GraphOps.sssp(e, "A", rounds = r))), s"sssp r=$r")
       assert(rows(GraphOps.bowTie(e, rounds = r)) ==
-        rows(GraphOps.bowTie(e, rounds = r, smallBound = 0)), s"bowtie r=$r")
+        rows(distributedOnly(GraphOps.bowTie(e, rounds = r))), s"bowtie r=$r")
     }
   }
 
@@ -339,17 +340,17 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     for (r <- Seq(1, 3)) {
       assert(rows(GraphOps.harmonic(e, rounds = r)) ==
-        rows(GraphOps.harmonic(e, rounds = r, smallBound = 0)), s"harmonic r=$r")
+        rows(distributedOnly(GraphOps.harmonic(e, rounds = r))), s"harmonic r=$r")
       assert(rows(GraphOps.closeness(e, rounds = r)) ==
-        rows(GraphOps.closeness(e, rounds = r, smallBound = 0)), s"closeness r=$r")
+        rows(distributedOnly(GraphOps.closeness(e, rounds = r))), s"closeness r=$r")
       assert(rows(GraphOps.neighborhoodFunction(e, rounds = r)) ==
-        rows(GraphOps.neighborhoodFunction(e, rounds = r, smallBound = 0)), s"nf r=$r")
+        rows(distributedOnly(GraphOps.neighborhoodFunction(e, rounds = r))), s"nf r=$r")
       assert(rows(GraphOps.bfs(e, "A", rounds = r)) ==
-        rows(GraphOps.bfs(e, "A", rounds = r, smallBound = 0)), s"bfs r=$r")
+        rows(distributedOnly(GraphOps.bfs(e, "A", rounds = r))), s"bfs r=$r")
     }
     // a source with no out-edges still reports itself at distance 0
     assert(rows(GraphOps.bfs(e, "Y", rounds = 2)) ==
-      rows(GraphOps.bfs(e, "Y", rounds = 2, smallBound = 0)))
+      rows(distributedOnly(GraphOps.bfs(e, "Y", rounds = 2))))
   }
 
   test("walks: driver fast path == distributed loop (first and second order)") {
@@ -360,13 +361,13 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     for (len <- Seq(1, 4))
       assert(rows(GraphOps.randomWalks(e, walkLen = len)) ==
-        rows(GraphOps.randomWalks(e, walkLen = len, smallBound = 0)), s"rw len=$len")
+        rows(distributedOnly(GraphOps.randomWalks(e, walkLen = len))), s"rw len=$len")
     assert(rows(GraphOps.node2vecWalks(e, walkLen = 4)) ==
-      rows(GraphOps.node2vecWalks(e, walkLen = 4, smallBound = 0)))
+      rows(distributedOnly(GraphOps.node2vecWalks(e, walkLen = 4))))
     assert(rows(GraphOps.node2vecWalks(e, walkLen = 3, returnMult = 3,
         sharedMult = 1, awayMult = 2)) ==
-      rows(GraphOps.node2vecWalks(e, walkLen = 3, returnMult = 3,
-        sharedMult = 1, awayMult = 2, smallBound = 0)))
+      rows(distributedOnly(GraphOps.node2vecWalks(e, walkLen = 3, returnMult = 3,
+        sharedMult = 1, awayMult = 2))))
   }
 
   test("scc / kcore: driver fast path == distributed loop") {
@@ -376,10 +377,10 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     for ((o, i) <- Seq((3, 3), (1, 1), (2, 2)))
       assert(rows(GraphOps.scc(e, o, i)) ==
-        rows(GraphOps.scc(e, o, i, smallBound = 0)), s"scc outer=$o inner=$i")
+        rows(distributedOnly(GraphOps.scc(e, o, i))), s"scc outer=$o inner=$i")
     for (k <- Seq(1L, 2L))
       assert(rows(GraphOps.kCore(e, k = k)) ==
-        rows(GraphOps.kCore(e, k = k, smallBound = 0)), s"kcore k=$k")
+        rows(distributedOnly(GraphOps.kCore(e, k = k))), s"kcore k=$k")
   }
 
   test("lpa/modularity: small-graph driver fast path == distributed loop") {
@@ -388,9 +389,9 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     for (r <- Seq(1, 3))
       assert(rows(GraphOps.labelPropagation(e, rounds = r)) ==
-        rows(GraphOps.labelPropagation(e, rounds = r, smallBound = 0)), s"lpa r=$r")
+        rows(distributedOnly(GraphOps.labelPropagation(e, rounds = r))), s"lpa r=$r")
     assert(rows(GraphOps.modularity(e)) ==
-      rows(GraphOps.modularity(e, smallBound = 0)))
+      rows(distributedOnly(GraphOps.modularity(e))))
   }
 
   test("labelPropagation: a weakly-bridged barbell splits into two communities") {
@@ -448,7 +449,7 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("louvain family: small-graph driver fast path == distributed loop, bit for bit") {
-    // smallBound=0 forces the distributed per-round loop; the default takes
+    // distributedOnly forces the distributed per-round loop; the default takes
     // the one-collect driver path on these fixtures. Mixed weights + a
     // bridge exercise the color schedule, the stay row, the singleton-swap
     // guard and the (score desc, label asc) argmax on both paths.
@@ -457,11 +458,11 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
       ("F", "F", 9), ("B", "A", 1)) // self-loop dropped, reverse edge folds in
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     assert(rows(GraphOps.louvainMoves(e, rounds = 4)) ==
-      rows(GraphOps.louvainMoves(e, rounds = 4, smallBound = 0)))
+      rows(distributedOnly(GraphOps.louvainMoves(e, rounds = 4))))
     assert(rows(GraphOps.louvainCoarsen(e)) ==
-      rows(GraphOps.louvainCoarsen(e, smallBound = 0)))
+      rows(distributedOnly(GraphOps.louvainCoarsen(e))))
     assert(rows(GraphOps.communityProfile(e)) ==
-      rows(GraphOps.communityProfile(e, smallBound = 0)))
+      rows(distributedOnly(GraphOps.communityProfile(e))))
   }
 
   test("louvainCoarsen: barbell collapses to 2 supernodes; level-2 moves merge them") {

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.exec.Bounded.distributedOnly
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends AnyFunSuite with SparkTestSession {
@@ -51,10 +52,10 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     import spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L), (10L, 3L), (11L, 11L)).toDF("a_id", "b_id")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
-    assert(rows(Dedup.clusters(pairs)) == rows(Dedup.clusters(pairs, smallBound = 0)))
+    assert(rows(Dedup.clusters(pairs)) == rows(distributedOnly(Dedup.clusters(pairs))))
     val sp = Seq(("B.x", "A.y"), ("A.y", "C\u00e9.z"), ("D.q", "D.r"))
       .toDF("a_id", "b_id")
-    assert(rows(Dedup.clusters(sp)) == rows(Dedup.clusters(sp, smallBound = 0)))
+    assert(rows(Dedup.clusters(sp)) == rows(distributedOnly(Dedup.clusters(sp))))
   }
 
   test("clusters: one Spark action per round — no separate changed-count job (round-3 verdict #1)") {
@@ -75,8 +76,8 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     }
     s2.listenerManager.register(listener)
     try {
-      // smallBound=0: this test pins the DISTRIBUTED loop's action profile
-      val c = Dedup.clusters(pairs, smallBound = 0).collect()
+      // distributedOnly: this test pins the DISTRIBUTED loop's action profile
+      val c = distributedOnly(Dedup.clusters(pairs)).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(c == (0L to 15L).map(_ -> 0L).toMap)
       // listener events are async: wait until the stream goes quiet

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.exec.Bounded.distributedOnly
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -79,17 +80,17 @@ class PqSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("small-corpus driver fast path == distributed training, bit for bit") {
-    // smallCollectBound=0 forces the distributed job loop; the default takes
+    // distributedOnly forces the distributed job loop; the default takes
     // the one-collect driver path on this 30-point corpus. Both kmeans and
     // PQ codebooks must agree exactly (same maximin start/tie rules, exact
     // Long sums, same floor(sum/cnt) update, empty clusters kept).
-    val viaJobs = Similarity.kmeansCentroids(blobs, col("vec_id"), col("embedding"),
-      k = 3, iters = 2, smallCollectBound = 0).map(_.toSeq).toSeq
+    val viaJobs = distributedOnly(Similarity.kmeansCentroids(blobs, col("vec_id"),
+      col("embedding"), k = 3, iters = 2)).map(_.toSeq).toSeq
     val viaDriver = Similarity.kmeansCentroids(blobs, col("vec_id"), col("embedding"),
       k = 3, iters = 2).map(_.toSeq).toSeq
     assert(viaDriver == viaJobs, "kmeans fast path diverges from the job loop")
-    val pqJobs = Similarity.pqCodebooks(blobs, col("vec_id"), col("embedding"),
-      dim, m = 2, ksub = 3, iters = 2, smallCollectBound = 0)
+    val pqJobs = distributedOnly(Similarity.pqCodebooks(blobs, col("vec_id"),
+      col("embedding"), dim, m = 2, ksub = 3, iters = 2))
       .map(_.map(_.toSeq).toSeq).toSeq
     val pqDriver = Similarity.pqCodebooks(blobs, col("vec_id"), col("embedding"),
       dim, m = 2, ksub = 3, iters = 2).map(_.map(_.toSeq).toSeq).toSeq
