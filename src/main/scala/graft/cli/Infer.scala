@@ -13,11 +13,15 @@ import graft.ner.{BracketNer, CapitalizedNer}
   * parquet out + d3js force/radial JSON. `--fused on` writes the triples
   * only; `--checkpoint` writes them bucket by bucket and stops there.
   *
-  * The graph is built from the written triples aggregate-first
-  * (`GraphBuilder.tripleEdges`): one hash aggregation to typed-triple
-  * multiplicities, then the value->type map, node keys and edge counts on
-  * that small relation, then the min-links filter and one driver collect
-  * finished by `GraphBuilder.collectedGraph`. The last stdout line is
+  * The graph is built from the written triples aggregate-first: one hash
+  * aggregation to typed-triple multiplicities. When they fit
+  * `--max-collected-edges` rows, one collect of them is finished on the
+  * driver (`GraphBuilder.localTripleEdges`: value->type map, node keys, edge
+  * counts, min-links filter); above it `GraphBuilder.tripleEdges` computes
+  * the same on the cluster before the guarded collect. Either way
+  * `GraphBuilder.collectedGraph` orders the d3 graph. `--link lsh` links
+  * the mention vocabulary on the driver when it is small
+  * (`Linker.withLshGroups`). The last stdout line is
   * `{"pages_out","samples","triples","nodes","links"}`; `triples` is the
   * written row count, summed from the multiplicities.
   *
@@ -30,8 +34,9 @@ import graft.ner.{BracketNer, CapitalizedNer}
   * Options: --terms-per-context N (50)  --min-links N (1)  --ner bracket|cap|stub-bio
   *          --name NAME (graph name)    --master local[N]   --synonyms FILE
   *          --docs-limit N (F2)         --checkpoint DIR --buckets N (resumable triples)
-  *          --link hash|lsh (synonym grouping: shuffle-free hash ids, or the
-  *            distributed minhash-LSH surface-form linking — P9 at scale);
+  *          --link hash|lsh (synonym grouping: shuffle-free hash ids, or
+  *            minhash-LSH surface-form linking — P9; driver-side for a small
+  *            vocabulary, distributed above it);
   *            with --checkpoint the LSH dictionary is computed once over the
   *            FULL page set (deterministic per url across chunked/resumed
   *            runs); --max-link-dict N caps its non-trivial entries
@@ -244,8 +249,9 @@ object Infer {
       return
     }
 
-    // --link lsh (unchekpointed): distributed minhash-LSH surface-form
-    // linking (near-duplicate values share a group — P9 at scale)
+    // --link lsh (unchekpointed): minhash-LSH surface-form linking
+    // (near-duplicate values share a group — P9), on the driver when the
+    // vocabulary is small, distributed otherwise
     lazy val parsed =
       if (linkLsh) Linker.withLshGroups(parseAndTranslate(pages).persist())
       else parseAndTranslate(pages)
@@ -293,54 +299,69 @@ object Infer {
         s""""asserted":${current.count()}}""")
     }
 
-    // graph build, aggregate-first (GraphBuilder.tripleEdges): the WRITTEN
-    // triples collapse once to their typed multiplicities, the type map, node
-    // keys and edge counts come from that small relation, and the graph is
-    // finished on the driver from one collect
+    // graph build, aggregate-first: the WRITTEN triples collapse once to their
+    // typed multiplicities. When those fit the collect cap (their rows bound
+    // the edge rows), one collect of them is finished on the driver
+    // (GraphBuilder.localTripleEdges); otherwise GraphBuilder.tripleEdges
+    // computes the type map, node keys and edge counts distributed
     val minLinks = opts.getOrElse("--min-links", "1").toDouble
     val name = opts.getOrElse("--name", "pages")
-    val built = GraphBuilder.tripleEdges(spark.read.parquet(s"$out/triples"))
+    val maxEdges = opts.getOrElse("--max-collected-edges", "2000000").toLong
+    val written = spark.read.parquet(s"$out/triples")
+    val local = GraphBuilder.localTripleEdges(written,
+      math.max(0L, math.min(maxEdges, Int.MaxValue - 1L)).toInt)
+    lazy val built = GraphBuilder.tripleEdges(written)
+    def state = local.map(_.stateDf(spark)).getOrElse(built.state)
     // --edge-store: fold this batch's UNFILTERED edge counts into the
     // persistent store (exactly-once per --batch-id) and build the graph from
     // the ACCRETED state — the continuous-crawl KG maintenance surface. Node
     // keys use this batch's value->type map; cross-batch key stability holds
     // when types are deterministic per value (true for annotated-page NER).
-    val edges = (opts.get("--edge-store") match {
-      case Some(storeDir) =>
-        val batchId = opts.getOrElse("--batch-id",
-          sys.error("--edge-store requires --batch-id (the idempotent-retry token)"))
-        if (!graft.ops.EdgeStore.merge(built.state, storeDir, batchId))
-          System.err.println(s"batch '$batchId' already in $storeDir ledger; fold skipped (idempotent retry)")
-        graft.ops.EdgeStore.edges(spark, storeDir, minLinks)
-      case None => GraphBuilder.edgesFromState(built.state, minLinks)
-    }).persist() // the guard count and the one collect (or JSON write) share it
+    // Left: the edge rows finished on the driver; Right: a persisted
+    // relation, which the guard count and the one collect (or JSON write) share
+    val edges: Either[Seq[org.apache.spark.sql.Row], org.apache.spark.sql.DataFrame] =
+      (opts.get("--edge-store"), local) match {
+        case (Some(storeDir), _) =>
+          val batchId = opts.getOrElse("--batch-id",
+            sys.error("--edge-store requires --batch-id (the idempotent-retry token)"))
+          if (!graft.ops.EdgeStore.merge(state, storeDir, batchId))
+            System.err.println(s"batch '$batchId' already in $storeDir ledger; fold skipped (idempotent retry)")
+          Right(graft.ops.EdgeStore.edges(spark, storeDir, minLinks).persist())
+        case (None, Some(l)) => Left(l.edgeRows(minLinks))
+        case (None, None)    => Right(GraphBuilder.edgesFromState(built.state, minLinks).persist())
+      }
     // --ntriples y: RDF dump of the aggregated edges next to the graph JSON —
     // a distributed sharded-.nt write (never collects), the triple-store
     // bulk-load artifact
     if (opts.get("--ntriples").exists(_ == "y"))
-      graft.io.Sinks.ntriples(graft.graph.Rdf.ntriples(edges), s"$out/ntriples")
-    // Guard the driver collect: post-aggregation graphs are normally small, but
-    // with --min-links 1 at web scale the edge set need not be driver-sized.
-    // Above the cap, write the graph distributed as JSON-lines parquet-side files
-    // instead of one pretty d3js file.
-    val maxEdges = opts.getOrElse("--max-collected-edges", "2000000").toLong
-    val nEdges = edges.count()
-    val graph = if (nEdges > maxEdges) {
-      edges.write.mode(SaveMode.Overwrite).json(s"$out/force_edges_json")
-      GraphBuilder.nodes(edges).write.mode(SaveMode.Overwrite).json(s"$out/force_nodes_json")
-      System.err.println(s"graph too large to collect ($nEdges edges > cap $maxEdges); " +
-        s"wrote distributed JSON under $out/force_{edges,nodes}_json")
-      graft.core.Graph(Seq(name), s"[$name]", Seq.empty, Seq.empty)
-    } else {
-      val g = GraphBuilder.collectedGraph(name, edges.collect().toSeq)
+      graft.io.Sinks.ntriples(graft.graph.Rdf.ntriples(
+        edges.getOrElse(GraphBuilder.edgesFromState(state, minLinks))), s"$out/ntriples")
+    def save(g: graft.core.Graph): graft.core.Graph = {
       D3Json.save(g, out, name, intLinkC = true, intNodeC = false)
       // reference parity: --out is an OPENABLE artifact — a viewer page next
       // to the force/radial JSON folders (backend/d3js/ui_web.py layout)
       graft.graph.Viewer.save(out, name)
       g
     }
+    // Guard the driver collect: post-aggregation graphs are normally small, but
+    // with --min-links 1 at web scale the edge set need not be driver-sized.
+    // Above the cap, write the graph distributed as JSON-lines parquet-side files
+    // instead of one pretty d3js file.
+    val graph = edges match {
+      case Left(rows) => save(GraphBuilder.collectedGraph(name, rows))
+      case Right(df) =>
+        val nEdges = df.count()
+        if (nEdges > maxEdges) {
+          df.write.mode(SaveMode.Overwrite).json(s"$out/force_edges_json")
+          GraphBuilder.nodes(df).write.mode(SaveMode.Overwrite).json(s"$out/force_nodes_json")
+          System.err.println(s"graph too large to collect ($nEdges edges > cap $maxEdges); " +
+            s"wrote distributed JSON under $out/force_{edges,nodes}_json")
+          graft.core.Graph(Seq(name), s"[$name]", Seq.empty, Seq.empty)
+        } else save(GraphBuilder.collectedGraph(name, df.collect().toSeq))
+    }
 
-    val nTriples = built.triples // the WRITTEN rows, summed from the multiplicities
+    // the WRITTEN rows, summed from the multiplicities
+    val nTriples = local.map(_.triples).getOrElse(built.triples)
     val nSamples = if (fusedMode) nTriples else samples.count() // fused: 1 sample == 1 triple
     println(s"""{"pages_out":"$out","samples":$nSamples,"triples":$nTriples,""" +
       s""""nodes":${graph.nodes.size},"links":${graph.links.size}}""")

@@ -27,6 +27,14 @@ object Bounded {
     case _               => false
   }
 
+  /** A column of `accepts` whose nulls the caller replays as values (an
+    * entity's missing type), not as keys: [[collect]] keeps rows that hold
+    * a null there. */
+  def orNull(accepts: ColumnType): ColumnType = OrNull(accepts)
+  private final case class OrNull(accepts: ColumnType) extends ColumnType {
+    def apply(t: DataType): Boolean = accepts(t)
+  }
+
   private val forceDistributed = new DynamicVariable(false)
 
   /** Runs `body` with every [[collect]] declining, so each operator called
@@ -37,17 +45,19 @@ object Bounded {
 
   /** The rows of `df`, from one `limit(bound + 1)` collect, when the driver
     * can replay them: `types` accept the columns one to one, and there are
-    * 1 to `bound` rows, none holding a null. Otherwise None, and the caller
-    * runs its distributed loop: a relation above the bound costs one
-    * bounded job, and nothing above `bound + 1` rows reaches the driver.
-    * A null key would be dropped by the distributed joins, but not by a
-    * driver replay keyed on it, so nulls always decline. */
+    * 1 to `bound` rows, none holding a null outside an [[orNull]] column.
+    * Otherwise None, and the caller runs its distributed loop: a relation
+    * above the bound costs one bounded job, and nothing above `bound + 1`
+    * rows reaches the driver. A null key would be dropped by the
+    * distributed joins, but not by a driver replay keyed on it, so nulls
+    * decline. */
   def collect(df: DataFrame, bound: Int, types: ColumnType*): Option[Array[Row]] = {
     val fields = df.schema.fields
     if (forceDistributed.value || fields.length != types.length ||
         fields.zip(types).exists { case (f, accepts) => !accepts(f.dataType) }) return None
+    val keys = types.indices.filterNot(i => types(i).isInstanceOf[OrNull])
     val rows = df.limit(bound + 1).collect()
-    if (rows.length > bound || rows.isEmpty || rows.exists(_.anyNull)) None
+    if (rows.length > bound || rows.isEmpty || rows.exists(r => keys.exists(r.isNullAt))) None
     else Some(rows)
   }
 

@@ -55,14 +55,14 @@ object D3Json {
 
   private def str(s: String): String = "\"" + escape(s) + "\""
 
-  /** Force-layout JSON. `intLinkC`: raw counts (builder, weights on) and all
-    * weights-off graphs carry Python ints; normalized weights are floats. */
   /** Python json.dump prints empty lists as `[]` inline; non-empty as
     * one-element-per-line at `indent` deeper. */
   private def jsonArray(items: Seq[String], closeIndent: String): String =
     if (items.isEmpty) "[]"
     else "[\n" + items.mkString(",\n") + "\n" + closeIndent + "]"
 
+  /** Force-layout JSON. `intLinkC`: raw counts (builder, weights on) and all
+    * weights-off graphs carry Python ints; normalized weights are floats. */
   def forceJson(g: Graph, intLinkC: Boolean, intNodeC: Boolean): String = {
     val basis = jsonArray(g.basis.map(b => "        " + str(b)), "    ")
     val nodes = jsonArray(g.nodes.map { n =>

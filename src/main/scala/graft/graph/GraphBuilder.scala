@@ -1,8 +1,10 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.core.{Graph, GraphLink, GraphNode}
+import graft.exec.Bounded
 
 /** Force-graph construction (reference
   * arelight/backend/d3js/relations_graph_builder.py:4-91).
@@ -10,11 +12,13 @@ import graft.core.{Graph, GraphLink, GraphNode}
   * Three builds with identical math:
   *  - DataFrame operators over raw relation rows (hash aggregate with map-side
   *    partials; the endpoint value->type lookup is a broadcast join);
-  *  - the aggregate-first build over a triples relation ([[tripleEdges]],
-  *    what `graft.cli.Infer` runs): the triples collapse once to their typed
+  *  - the aggregate-first build over a triples relation (what
+  *    `graft.cli.Infer` runs): the triples collapse once to their typed
   *    multiplicities, and the type map, node keys and edge counts are all
-  *    computed on that small relation; [[collectedGraph]] finishes a
-  *    driver-sized edge relation with the local build's node rollup;
+  *    computed on that small relation — on the driver from one bounded
+  *    collect ([[localTripleEdges]]), or distributed above the bound
+  *    ([[tripleEdges]]); [[collectedGraph]] finishes a driver-sized edge
+  *    relation with the local build's node rollup;
   *  - a pure-Scala local build replicating the reference float-for-float, used
   *    for golden tests and for the post-aggregation driver-sized graph algebra.
   */
@@ -338,23 +342,35 @@ object GraphBuilder {
       .union(triples.select(col("obj"), col("objType"),
         struct(col("docId"), col("sentInd"), col("sampleId"), lit(1).as("side"))))
 
+  /** The typed-triple multiplicities of a triples relation: (subj, subjType,
+    * obj, objType, pred, n), one hash aggregation (a crawl's 3.1 M triples are
+    * ~1.1 k rows). */
+  private def typedCounts(triples: DataFrame): DataFrame =
+    triples.groupBy(col("subj"), col("subjType"), col("obj"), col("objType"), col("pred"))
+      .agg(count(lit(1)).as("n"))
+
+  /** The last-occurrence winner ([[lastOccurrenceTypes]]) of each value in
+    * `values` (one column, `value`): the values seen with several types. */
+  private def lastTypes(triples: DataFrame, values: DataFrame): DataFrame =
+    lastOccurrenceTypes(triples).join(values, Seq("value"), "left_semi")
+      .groupBy(col("value")).agg(max_by(col("type"), col("ord")).as("type"))
+
   /** Aggregate-first edge state of a triples relation (subj, subjType, pred,
     * obj, objType, docId, sentInd, sampleId):
-    *  1. one hash aggregation collapses the triples to their typed
-    *     multiplicities (persisted: a crawl's 3.1 M triples are ~1.1 k rows);
+    *  1. [[typedCounts]] collapses the triples to their typed multiplicities
+    *     (persisted);
     *  2. a value seen with exactly one type (null included) takes it; only
     *     values seen with several types scan the triples again, for the
-    *     last-occurrence winner ([[lastOccurrenceTypes]]) — one small driver
-    *     job decides whether any exist;
+    *     last-occurrence winner ([[lastTypes]]) — one small driver job
+    *     decides whether any exist;
     *  3. node keys and the per-key sums of `n` are computed on the
     *     multiplicities, so raw values that clean to one key merge exactly as
     *     they do over the rows.
     * A struct-ordered `max_by` carried inside step 1 would turn its hash
-    * aggregation into a sort aggregation; the fallback avoids that. */
+    * aggregation into a sort aggregation; the fallback avoids that.
+    * [[localTripleEdges]] is the same build finished on the driver. */
   def tripleEdges(triples: DataFrame): TripleEdges = {
-    val counts = persistCoalesced(triples
-      .groupBy(col("subj"), col("subjType"), col("obj"), col("objType"), col("pred"))
-      .agg(count(lit(1)).as("n")))
+    val counts = persistCoalesced(typedCounts(triples))
     // persisted: the check for multi-typed values and the type map share it
     val typed = persistCoalesced(counts.select(col("subj").as("value"), col("subjType").as("type"))
       .union(counts.select(col("obj"), col("objType")))
@@ -366,16 +382,68 @@ object GraphBuilder {
     val multi = typed.filter(!single).select(col("value"))
     val singles = typed.filter(single).select(col("value"), col("type"))
     val typeMap =
-      if (multi.isEmpty) singles
-      else singles.unionByName(lastOccurrenceTypes(triples)
-        .join(multi, Seq("value"), "left_semi")
-        .groupBy(col("value")).agg(max_by(col("type"), col("ord")).as("type")))
+      if (multi.isEmpty) singles else singles.unionByName(lastTypes(triples, multi))
     val state = withNodeKeys(counts.select(col("subj").as("source"), col("obj").as("target"),
         col("pred").as("sent"), col("n")), typeMap)
       .na.drop(Seq("source", "target", "sent")) // F4, as in edgeState
       .groupBy(col("source"), col("target"), col("sent"))
       .agg(sum(col("n")).as("cnt"))
     new TripleEdges(state, counts, typed)
+  }
+
+  /** The aggregate-first edge state finished on the driver: `state` holds the
+    * rows (source, target, sent, cnt) of [[TripleEdges.state]], `triples` the
+    * rows of the triples relation (the sum of the multiplicities). */
+  final class LocalTripleEdges private[GraphBuilder] (val state: Seq[Row], val triples: Long) {
+    /** The rows (source, target, sent, c) of [[edgesFromState]] over `state`. */
+    def edgeRows(minLinks: Double): Seq[Row] =
+      state.collect { case Row(s, t, p, n: Long) if n >= minLinks => Row(s, t, p, n.toDouble) }
+
+    /** `state` as a relation, for the consumers of [[TripleEdges.state]]. */
+    def stateDf(spark: SparkSession): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(state: _*), StateSchema)
+  }
+
+  private val StateSchema = StructType(Seq(
+    StructField("source", StringType, nullable = false),
+    StructField("target", StringType, nullable = false),
+    StructField("sent", StringType),
+    StructField("cnt", LongType)))
+
+  /** [[tripleEdges]] finished on the driver, from one collect of the typed
+    * multiplicities when they fit `bound` rows ([[Bounded.collect]]; a null
+    * type is a value, a null value or label declines). A value with one type
+    * (null included) takes it, and only the values seen with several types
+    * run the distributed last-occurrence job ([[lastTypes]]), semi-joined to
+    * them. Node keys and the per-key sums follow on the driver. None when
+    * the multiplicities are empty, above `bound` or hold a null value or
+    * label: then [[tripleEdges]] builds the state. */
+  def localTripleEdges(triples: DataFrame, bound: Int): Option[LocalTripleEdges] = {
+    val (value, tpe) = (Bounded.Str, Bounded.orNull(Bounded.Str))
+    Bounded.collect(typedCounts(triples), bound, value, tpe, value, tpe, value, Bounded.Lng)
+      .map { rows =>
+        val seen = scala.collection.mutable.HashMap.empty[String, Set[Option[String]]]
+        def see(v: String, t: String): Unit =
+          seen.updateWith(v)(ts => Some(ts.getOrElse(Set.empty) + Option(t)))
+        rows.foreach { r => see(r.getString(0), r.getString(1)); see(r.getString(2), r.getString(3)) }
+        val multi = seen.collect { case (v, ts) if ts.size > 1 => v }.toSeq
+        val winners: Map[String, Option[String]] =
+          if (multi.isEmpty) Map.empty
+          else {
+            val spark = triples.sparkSession
+            import spark.implicits._
+            lastTypes(triples, multi.toDF("value")).collect()
+              .map(r => r.getString(0) -> Option(r.getString(1))).toMap
+          }
+        val key = seen.map { case (v, ts) => v -> nodeKey(winners.getOrElse(v, ts.head), v) }
+        val state = scala.collection.mutable.HashMap.empty[(String, String, String), Long]
+        rows.foreach { r =>
+          val k = (key(r.getString(0)), key(r.getString(2)), r.getString(4))
+          state.update(k, state.getOrElse(k, 0L) + r.getLong(5))
+        }
+        new LocalTripleEdges(state.iterator.map { case ((s, t, p), n) => Row(s, t, p, n) }.toSeq,
+          rows.iterator.map(_.getLong(5)).sum)
+      }
   }
 
   /** Node relation: degree over surviving edges, max-normalized

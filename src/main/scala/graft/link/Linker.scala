@@ -1,7 +1,9 @@
 package graft.link
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import graft.core.{Mention, ParsedDoc}
+import graft.core.ParsedDoc
+import graft.exec.Bounded
+import graft.graph.GraphBuilder
 import graft.text.TextOps
 
 /** Entity canonicalization (reference P9: synonym grouping,
@@ -18,9 +20,12 @@ import graft.text.TextOps
   *  2. [[withDictionary]]: a synonyms file (one comma-separated group per line,
   *     arelight/synonyms.py:4-14) broadcast as Map[canonicalKey -> groupId];
   *     unseen values fall back to strategy 1 offset into a disjoint id space.
-  *  3. [[registerMissing]]: the reference's register-unseen behavior as a two-pass
-  *     batch job — distinct unseen values get dense ids (ordered by value — the
-  *     engine fixes a deterministic order where the reference used encounter order).
+  *  3. Minhash-LSH linking of near-duplicate surface forms ([[withLshGroups]],
+  *     [[lshBroadcastDictionary]]): the distinct mention vocabulary is linked
+  *     on the driver ([[lshGroups]]) when it fits [[DriverVocabularyBound]]
+  *     values and [[DriverBucketWorkBound]] bucket pairs, else distributed
+  *     ([[linkGroupsDf]]) — identical partitions either way; only the
+  *     non-trivial entries reach the mentions, through strategy 2's probe.
   */
 object Linker {
 
@@ -70,54 +75,85 @@ object Linker {
     }
   }
 
-  /** Pure hash grouping — the default. */
-  def withHashGroups(docs: Dataset[ParsedDoc])(implicit spark: SparkSession): Dataset[ParsedDoc] = {
-    import spark.implicits._
-    docs.map { d =>
-      d.copy(sentences = d.sentences.map { s =>
-        s.copy(mentions = s.mentions.map(m => m.copy(groupId = hashGroupId(m.value))))
-      })
-    }
-  }
-
   // ------------------------------------------------------------ LSH linking
 
+  /** Largest distinct canonical vocabulary linked on the driver ([[lshGroups]]);
+    * above it [[linkGroupsDf]] links it distributed. */
+  val DriverVocabularyBound = 131072
+
+  /** Largest Σ|bucket|² over all bands that [[lshGroups]] takes on the
+    * driver — the candidate pairs it may verify. A boilerplate hub bucket
+    * above it links distributed instead of going quadratic on the driver.
+    * Every value adds at least `bands` (8), so the vocabulary bound alone
+    * costs 1 M of it. */
+  val DriverBucketWorkBound = 4000000L
+
   /** Character w-gram shingles of a canonical value ("$" padded, inner
-    * whitespace runs collapsed — linking should not distinguish spacing). */
+    * whitespace runs collapsed — linking should not distinguish spacing).
+    * Grams count code points, as Spark's `substr` does in [[linkGroupsDf]]. */
   private[graft] def charShingles(value: String, w: Int = 3): Seq[String] = {
     val s = "$" + graft.text.TextOps.canonicalKey(value).replaceAll(raw"\s+", " ") + "$"
-    if (s.length < w) Seq(s) else (0 to s.length - w).map(i => s.substring(i, i + w))
+    val cps = s.codePoints().toArray
+    if (cps.length < w) Seq(s) else (0 to cps.length - w).map(i => new String(cps, i, w))
   }
 
   private val P = 2147483647L
 
   /** Shingle base hash — md5-derived, IDENTICAL to the distributed family
-    * (graft.ops.Dedup.baseHash: top 60 bits of md5 hex, mod P) so the driver
+    * (graft.ops.Dedup.baseHash: top 60 bits of md5, mod P) so the driver
     * and DataFrame linkers generate the same candidate buckets and therefore
     * have identical recall. One hash family everywhere (round-2 verdict #4). */
   private[graft] def baseHash(s: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(8).map(b => f"$b%02x").mkString // first 8 bytes = 16 hex chars; need 15
-    java.lang.Long.parseLong(hex.substring(0, 15), 16) % P
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    (java.nio.ByteBuffer.wrap(md5).getLong >>> 4) % P
   }
-  private def minhash(shingles: Seq[Long], k: Int): Long =
-    shingles.map(h => ((1103515245L + 12345L * k) * h + 104729L + 7919L * k) % P).min
+  private def minhash(shingles: Array[Long], k: Int): Long = {
+    val (a, b) = (1103515245L + 12345L * k, 104729L + 7919L * k)
+    var m = Long.MaxValue
+    var i = 0
+    while (i < shingles.length) { m = math.min(m, (a * shingles(i) + b) % P); i += 1 }
+    m
+  }
 
   /** Minhash-LSH blocking over distinct mention VALUES (north_star linking
     * path): near-duplicate surface forms ("barack obama" / "barak obama") land
     * in shared buckets; candidates above the Jaccard threshold are merged with
-    * union-find into canonical groups. Runs on the distinct-value dictionary
-    * (entity vocabulary ≈ millions at 10^12 docs — broadcastable), NOT per
-    * mention: the per-mention path stays a map-side dictionary probe.
+    * union-find into canonical groups. Runs on the distinct-value dictionary,
+    * NOT per mention: the per-mention path stays a map-side dictionary probe.
     *
-    * Returns canonicalKey -> groupId (groupId = FIRST group member's hash id,
-    * deterministic under the sorted processing order). */
+    * Returns canonicalKey -> groupId (groupId = the hash id of the group's
+    * smallest member in Spark's string order — [[linkGroupsDf]]'s
+    * representative; the partition is [[linkGroupsDf]]'s too). */
   def lshGroups(values: Seq[String], bands: Int = 8, rowsPerBand: Int = 2,
-      jaccardThreshold: Double = DefaultJaccardThreshold, shingleW: Int = 3): Map[String, Long] = {
-    val canon = values.map(graft.text.TextOps.canonicalKey).distinct.sorted
-    val shingleSets = canon.map(v => charShingles(v, shingleW).distinct.map(baseHash).toVector)
-    // buckets per band
+      jaccardThreshold: Double = DefaultJaccardThreshold, shingleW: Int = 3): Map[String, Long] =
+    driverGroups(values, bands, rowsPerBand, jaccardThreshold, shingleW, Long.MaxValue).get
+
+  /** [[lshGroups]], or None when its buckets hold more than `maxBucketWork`
+    * Σ|bucket|² over all bands. */
+  private[link] def driverGroups(values: Seq[String], bands: Int, rowsPerBand: Int,
+      jaccardThreshold: Double, shingleW: Int, maxBucketWork: Long): Option[Map[String, Long]] = {
+    // indexed by position below: an Array, whatever Seq the caller passed
+    val canon = values.iterator.map(graft.text.TextOps.canonicalKey).toArray.distinct
+      .sorted(GraphBuilder.sparkStringOrdering)
+    // each distinct shingle once: an id and its base hash. A value keeps its
+    // shingle ids sorted, so its exact Jaccard with another is one merge
+    val shingleIds = scala.collection.mutable.HashMap.empty[String, Int]
+    val baseHashes = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val sets = canon.map(v => charShingles(v, shingleW).iterator.map { sh =>
+      shingleIds.getOrElseUpdate(sh, { baseHashes += baseHash(sh); baseHashes.size - 1 })
+    }.toArray.distinct.sorted)
+    val hashes = sets.map(_.map(baseHashes))
+    // per band: signature -> members, in ascending index order
+    val buckets = (0 until bands).map { b =>
+      val m = scala.collection.mutable.HashMap.empty[Seq[Long], scala.collection.mutable.ArrayBuffer[Int]]
+      hashes.indices.foreach { i =>
+        val sig = (0 until rowsPerBand).map(r => minhash(hashes(i), b * rowsPerBand + r))
+        m.getOrElseUpdate(sig, scala.collection.mutable.ArrayBuffer.empty[Int]) += i
+      }
+      m.values
+    }
+    if (buckets.iterator.flatten.map(m => m.size.toLong * m.size).sum > maxBucketWork) return None
     val parent = Array.tabulate(canon.length)(identity)
     def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); var c = x
       while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }; r }
@@ -125,25 +161,18 @@ object Linker {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb } // min-id wins
     }
-    def jaccard(a: Vector[Long], b: Vector[Long]): Double = {
-      val sa = a.toSet; val sb = b.toSet
-      if (sa.isEmpty && sb.isEmpty) 1.0
-      else sa.intersect(sb).size.toDouble / sa.union(sb).size.toDouble
+    // over the distinct shingles, as linkGroupsDf's array_intersect/union
+    def jaccard(a: Array[Int], b: Array[Int]): Double = {
+      var (i, j, inter) = (0, 0, 0)
+      while (i < a.length && j < b.length)
+        if (a(i) == b(j)) { inter += 1; i += 1; j += 1 } else if (a(i) < b(j)) i += 1 else j += 1
+      inter.toDouble / (a.length + b.length - inter).toDouble
     }
-    (0 until bands).foreach { b =>
-      val buckets = scala.collection.mutable.Map.empty[Seq[Long], List[Int]]
-      shingleSets.zipWithIndex.foreach { case (sh, i) =>
-        val sig = (0 until rowsPerBand).map(r => minhash(sh, b * rowsPerBand + r))
-        buckets.updateWith(sig)(l => Some(i :: l.getOrElse(Nil)))
-      }
-      buckets.values.foreach { members =>
-        val sorted = members.sorted
-        for (i <- sorted; j <- sorted if i < j)
-          if (find(i) != find(j) && jaccard(shingleSets(i), shingleSets(j)) >= jaccardThreshold)
-            union(i, j)
-      }
+    for (band <- buckets; members <- band; x <- members.indices; y <- x + 1 until members.size) {
+      val (i, j) = (members(x), members(y))
+      if (find(i) != find(j) && jaccard(sets(i), sets(j)) >= jaccardThreshold) union(i, j)
     }
-    canon.indices.map(i => canon(i) -> hashGroupId(canon(find(i)))).toMap
+    Some(canon.indices.map(i => canon(i) -> hashGroupId(canon(find(i)))).toMap)
   }
 
   // ------------------------------------- distributed LSH linking (DataFrame)
@@ -240,6 +269,28 @@ object Linker {
       .filter(vg => vg._2 != hashGroupId(vg._1))
   }
 
+  /** The NON-TRIVIAL linking dictionary of the docs' distinct canonical
+    * mention vocabulary — the one entry point of both LSH linking callers.
+    * Left: the entries, linked on the driver by [[lshGroups]] from one
+    * bounded collect of the vocabulary (at most [[DriverVocabularyBound]]
+    * values whose buckets fit [[DriverBucketWorkBound]]). Right: the
+    * relation (value, group_id) of [[lshNonTrivialDf]], linked distributed.
+    * Both give the same entries. */
+  private[link] def nonTrivialDictionary(docs: Dataset[ParsedDoc], bands: Int, rowsPerBand: Int,
+      jaccardThreshold: Double, shingleW: Int)(
+      implicit spark: SparkSession): Either[Map[String, Long], org.apache.spark.sql.DataFrame] = {
+    import spark.implicits._
+    val vocabulary = docs
+      .flatMap(_.sentences.flatMap(_.mentions.map(m => TextOps.canonicalKey(m.value))))
+      .toDF("value").distinct()
+    Bounded.collect(vocabulary, DriverVocabularyBound, Bounded.Str)
+      .flatMap(rows => driverGroups(rows.map(_.getString(0)).toSeq, bands, rowsPerBand,
+        jaccardThreshold, shingleW, DriverBucketWorkBound))
+      .map(groups => Left(groups.filter { case (v, g) => g != hashGroupId(v) }))
+      .getOrElse(Right(lshNonTrivialDf(docs, bands, rowsPerBand, jaccardThreshold, shingleW)
+        .toDF("value", "group_id")))
+  }
+
   /** Deterministic broadcastable linking dictionary over the FULL corpus —
     * the form checkpointed/resumable runs must use (the dictionary may not
     * depend on which buckets are co-resident in a run; see cli.Infer).
@@ -248,37 +299,45 @@ object Linker {
       bands: Int = 8, rowsPerBand: Int = 2,
       jaccardThreshold: Double = DefaultJaccardThreshold, shingleW: Int = 3)(
       implicit spark: SparkSession): Map[String, Long] = {
-    val entries = lshNonTrivialDf(docs, bands, rowsPerBand, jaccardThreshold, shingleW)
-      .limit(maxEntries + 1).collect()
-    require(entries.length <= maxEntries,
+    val entries = nonTrivialDictionary(docs, bands, rowsPerBand, jaccardThreshold, shingleW) match {
+      case Left(linked) => linked
+      case Right(df) => df.limit(maxEntries + 1).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
+    require(entries.size <= maxEntries,
       s"LSH linking dictionary exceeds $maxEntries non-trivial entries — too large to " +
         "broadcast deterministically; raise the cap or link unchekpointed via withLshGroups")
-    entries.toMap
+    entries
   }
 
-  /** Assign LSH-linked group ids to every mention. The LINKING always runs
-    * distributed ([[lshDictionaryDf]]); only the NON-TRIVIAL entries
-    * ([[lshNonTrivialDf]]) matter for assignment, which keeps the shuffle-free
-    * broadcast path viable far beyond the raw-vocabulary size (near-duplicate
-    * fractions are small). Above `maxBroadcastEntries` non-trivial entries the
-    * fallback is a mention-row join: per-doc distinct canonical values join
-    * the dictionary (mention-sized rows only), fold to one map per url, and a
-    * single sort-merge join reattaches them to docs — docs are exchanged
-    * exactly once and never cogrouped as objects. */
+  /** Assign LSH-linked group ids to every mention. Only the NON-TRIVIAL
+    * entries ([[nonTrivialDictionary]]) matter for assignment, which keeps the
+    * shuffle-free broadcast path ([[withDictionary]]) viable far beyond the
+    * raw-vocabulary size (near-duplicate fractions are small). Above
+    * `maxBroadcastEntries` non-trivial entries the fallback is a mention-row
+    * join: per-doc distinct canonical values join the dictionary
+    * (mention-sized rows only), fold to one map per url, and a single
+    * sort-merge join reattaches them to docs — docs are exchanged exactly
+    * once and never cogrouped as objects. */
   def withLshGroups(docs: Dataset[ParsedDoc], maxBroadcastEntries: Long = 1_000_000L,
       bands: Int = 8, rowsPerBand: Int = 2,
       jaccardThreshold: Double = DefaultJaccardThreshold, shingleW: Int = 3)(
       implicit spark: SparkSession): Dataset[ParsedDoc] = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    // consumed by count + (collect | join): checkpoint so the vocabulary
-    // pipeline (distinct + band join + components) runs once
-    val dict = lshNonTrivialDf(docs, bands, rowsPerBand, jaccardThreshold, shingleW)
-      .toDF("value", "group_id").localCheckpoint()
-    val n = dict.count()
-    if (n <= maxBroadcastEntries) {
-      withDictionary(docs, dict.as[(String, Long)].collect().toMap)
-    } else {
+    val broadcastOrJoin: Either[Map[String, Long], org.apache.spark.sql.DataFrame] =
+      nonTrivialDictionary(docs, bands, rowsPerBand, jaccardThreshold, shingleW) match {
+        case Left(entries) if entries.size > maxBroadcastEntries => Right(entries.toSeq.toDF("value", "group_id"))
+        case Right(df) =>
+          // consumed by the bounded collect and maybe the join: checkpoint so
+          // the distributed linking (distinct + band join + components) runs once
+          val dict = df.localCheckpoint()
+          val head = dict.limit(math.max(0L, math.min(maxBroadcastEntries, Int.MaxValue - 1L) + 1).toInt)
+            .collect()
+          if (head.length <= maxBroadcastEntries) Left(head.map(r => r.getString(0) -> r.getLong(1)).toMap)
+          else Right(dict)
+        case fits => fits
+      }
+    broadcastOrJoin.fold(withDictionary(docs, _), { dict =>
       // mention-row join path. Keyed by VALUE (group ids are value-determined),
       // so two distinct docs sharing a url can never cross-assign; (url, value)
       // is made distinct ACROSS docs so map_from_entries sees unique keys.
@@ -300,26 +359,6 @@ object Linker {
               m.copy(groupId = byValue.getOrElse(TextOps.canonicalKey(m.value), hashGroupId(m.value)))))
           })
         }
-    }
-  }
-
-  /** Reference register-unseen semantics as a batch two-pass: returns the base
-    * dictionary extended with dense ids for every distinct unseen canonical value.
-    * One distinct-shuffle over mention values; result must fit the driver
-    * (guarded) — at web scale use withHashGroups instead. */
-  def registerMissing(docs: Dataset[ParsedDoc], base: Map[String, Long], maxEntries: Int = 10_000_000)(
-      implicit spark: SparkSession): Map[String, Long] = {
-    import spark.implicits._
-    val known = spark.sparkContext.broadcast(base)
-    val unseen = docs
-      .flatMap(_.sentences.flatMap(_.mentions.map(m => TextOps.canonicalKey(m.value))))
-      .filter(v => !known.value.contains(v))
-      .distinct()
-      .orderBy("value")
-      .limit(maxEntries)
-      .as[String]
-      .collect()
-    val offset = if (base.isEmpty) 0L else base.values.max + 1L
-    base ++ unseen.iterator.zipWithIndex.map { case (v, i) => v -> (offset + i) }
+    })
   }
 }

@@ -512,6 +512,24 @@ object Bgp {
         array_join(array_sort(col("vals")), sep).as("agg_concat")): _*)
   }
 
+  /** Delta-term skip list from a caller-asserted PREDICATE MANIFEST of the
+    * delta batch (the realistic ingest contract: a crawl batch knows which
+    * relations it asserts). A pattern whose predicate is a plain constant
+    * outside the manifest has ΔP_i = ∅ by construction, so its union term
+    * is provably empty and never built. Inverse predicates normalize first;
+    * variable and negated-set predicates are conservatively kept. */
+  private def liveTermIndices(patterns: Seq[Pat],
+      deltaPreds: Option[Seq[String]]): Seq[Int] = deltaPreds match {
+    case None => patterns.indices
+    case Some(ps) =>
+      val set = ps.toSet
+      patterns.indices.filter { i =>
+        val p0 = patterns(i).p
+        val p = if (p0.startsWith("^")) p0.drop(1) else p0
+        isVar(p) || p.startsWith("!") || set.contains(p)
+      }
+  }
+
   /** Incremental maintenance of a materialized BGP view: the NEW solutions
     * that a `delta` batch of triples adds to the view over `base` — i.e.
     * `solutions(base ∪ delta) − solutions(base)` — computed WITHOUT ever
@@ -541,24 +559,6 @@ object Bgp {
     * every term scanning in-memory blocks (the repo-wide lineage-truncation
     * convention for multiply-consumed relations). Engine extension, no
     * reference counterpart. */
-  /** Delta-term skip list from a caller-asserted PREDICATE MANIFEST of the
-    * delta batch (the realistic ingest contract: a crawl batch knows which
-    * relations it asserts). A pattern whose predicate is a plain constant
-    * outside the manifest has ΔP_i = ∅ by construction, so its union term
-    * is provably empty and never built. Inverse predicates normalize first;
-    * variable and negated-set predicates are conservatively kept. */
-  private def liveTermIndices(patterns: Seq[Pat],
-      deltaPreds: Option[Seq[String]]): Seq[Int] = deltaPreds match {
-    case None => patterns.indices
-    case Some(ps) =>
-      val set = ps.toSet
-      patterns.indices.filter { i =>
-        val p0 = patterns(i).p
-        val p = if (p0.startsWith("^")) p0.drop(1) else p0
-        isVar(p) || p.startsWith("!") || set.contains(p)
-      }
-  }
-
   def viewDelta(base: DataFrame, delta: DataFrame, patterns: Seq[Pat],
       disjointDistinct: Boolean = false,
       deltaPreds: Option[Seq[String]] = None): DataFrame = {

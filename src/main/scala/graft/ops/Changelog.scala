@@ -36,11 +36,6 @@ object Changelog {
       .filter(col("w").isNotNull && col("w.op") === "add")
       .select("s", "p", "o")
 
-  /** The diff between the `t1` and `t2` snapshots (t1 < t2), computed in the
-    * SAME single aggregation — each key's winning entry at both cuts comes
-    * from one pass over the log. Output: (s, p, o, change) with change =
-    * 'added' (live at t2, not at t1) or 'removed' (live at t1, not at t2);
-    * keys live at both or neither are absent. */
   /** Validity intervals — the standard temporal-KG representation derived
     * from the changelog: one row per maximal interval during which a triple
     * was live, `(s, p, o, valid_from, valid_to)` with `valid_to` NULL for
@@ -135,6 +130,11 @@ object Changelog {
       .filter(col("live1") || col("live2"))
   }
 
+  /** The diff between the `t1` and `t2` snapshots (t1 < t2), computed in the
+    * SAME single aggregation — each key's winning entry at both cuts comes
+    * from one pass over the log. Output: (s, p, o, change) with change =
+    * 'added' (live at t2, not at t1) or 'removed' (live at t1, not at t2);
+    * keys live at both or neither are absent. */
   def asOfDelta(log: DataFrame, t1: Long, t2: Long): DataFrame = {
     require(t1 < t2, s"asOfDelta needs t1 < t2, got $t1 >= $t2")
     def live(w: String) = col(w).isNotNull && col(s"$w.op") === "add"

@@ -88,9 +88,6 @@ object Relational {
       .agg(count(lit(1)).as("n"), sum(col("k")).cast("long").as("k_sum"),
         min(col("k")).as("k_min"), max(col("k")).as("k_max"))
 
-  /** Sessionization: 30-minute-gap sessions per user via lag + running sum —
-    * the portable gaps-and-islands formulation (a Structured Streaming
-    * session_window covers the streaming case). */
   /** Distributed AS-OF join — an operator Spark lacks natively: each left
     * row joins the LATEST right row with right.time <= left.time on the same
     * key. Composed from existing operators (preference (a) of the custom-op

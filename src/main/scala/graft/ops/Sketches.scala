@@ -85,11 +85,6 @@ object Sketches {
     if (raw <= 2.5 * m && zeros > 0) m * math.log(m.toDouble / zeros) else raw
   }
 
-  /** Count-min sketch cell relation for frequency estimation of `key`:
-    * `depth` independent hash rows, cell = md5(row ++ key) mod `width`,
-    * exact counts per (r, cell). Output: (r, cell, cnt) — at most
-    * depth×width rows. Point estimates from [[cmsEstimate]] upper-bound the
-    * true frequency (never under-count). */
   /** The one (r, cell) hash both [[cmsSketch]] and [[cmsEstimate]] use —
     * shared so the two sides cannot drift apart. */
   private def cmsCells(keyed: DataFrame, depth: Int, width: Int): DataFrame = {
@@ -102,6 +97,11 @@ object Sketches {
           .cast("long") % width).as("cell"))
   }
 
+  /** Count-min sketch cell relation for frequency estimation of `key`:
+    * `depth` independent hash rows, cell = md5(row ++ key) mod `width`,
+    * exact counts per (r, cell). Output: (r, cell, cnt) — at most
+    * depth×width rows. Point estimates from [[cmsEstimate]] upper-bound the
+    * true frequency (never under-count). */
   def cmsSketch(df: DataFrame, key: Column, depth: Int = 4, width: Int = 64): DataFrame =
     cmsCells(df.select(key.cast("string").as("k")), depth, width)
       .groupBy(col("r"), col("cell")).agg(count(lit(1)).as("cnt"))

@@ -340,14 +340,6 @@ object TextStats {
       .groupBy(col("q")).agg(min(col("v")).as("value"))
   }
 
-  /** Per-source corpus health report — the C4/RefinedWeb-style per-domain
-    * rollup a webtext curation pipeline watches: document and token volume,
-    * exact-duplicate count (docs minus distinct content hashes WITHIN the
-    * source — a high rate flags boilerplate-heavy domains), and mean length.
-    * One two-level aggregation: count-distinct rewrites to a partial-agg
-    * pair of exchanges on (source, hash) then (source), so no per-source
-    * row list ever materializes; mean is exact-BIGINT-over-BIGINT double
-    * division (bit-identical cross-engine). */
   /** Zipf rank-frequency relation: top-k corpus terms with their global
     * rank (freq DESC, term ASC — deterministic). The frequency aggregation
     * is distributed (partial combines on the term key); the ranking window
@@ -366,6 +358,14 @@ object TextStats {
       .select(col("rank").cast("long").as("rank"), col("term"), col("freq"))
   }
 
+  /** Per-source corpus health report — the C4/RefinedWeb-style per-domain
+    * rollup a webtext curation pipeline watches: document and token volume,
+    * exact-duplicate count (docs minus distinct content hashes WITHIN the
+    * source — a high rate flags boilerplate-heavy domains), and mean length.
+    * One two-level aggregation: count-distinct rewrites to a partial-agg
+    * pair of exchanges on (source, hash) then (source), so no per-source
+    * row list ever materializes; mean is exact-BIGINT-over-BIGINT double
+    * division (bit-identical cross-engine). */
   def sourceStats(df: DataFrame, text: Column, source: Column): DataFrame =
     df.select(source.as("source"),
         size(split(trim(text), raw"\s+")).cast("long").as("toks"),

@@ -114,15 +114,21 @@ object DocSources {
   }
 
   /** WARC / .warc.gz archive scan → Pages (engine extension; see
-    * [[graft.sources.Warc]]). One narrow flatMap over `binaryFiles` —
-    * parallelism is file granularity, the Common-Crawl segment layout
-    * (thousands of ~1 GB files per crawl → thousands of tasks, no shuffle). */
+    * [[graft.sources.Warc]]). One narrow flatMap over the `binaryFile`
+    * source: parallelism is file granularity, the Common-Crawl segment
+    * layout (thousands of ~1 GB files per crawl → thousands of tasks, no
+    * shuffle). Its planner charges each file an open cost, so a few small
+    * files get a task each; with fewer files than cores, the decoded pages
+    * are dealt round-robin over the cores before the parse. */
   def warc(spark: SparkSession, path: String, lang: String = "en"): Dataset[graft.core.Page] = {
     import spark.implicits._
-    spark.sparkContext.binaryFiles(path).flatMap { case (name, pds) =>
-      val raw = pds.toArray()
+    val files = spark.read.format("binaryFile").load(path)
+      .select(col("path"), col("content")).as[(String, Array[Byte])]
+    val pages = files.flatMap { case (name, raw) =>
       val plain = if (name.endsWith(".gz")) Warc.gunzipAll(raw) else raw
       Warc.pages(plain, lang)
-    }.toDS()
+    }
+    val cores = spark.sparkContext.defaultParallelism
+    if (files.rdd.getNumPartitions < cores) pages.repartition(cores) else pages
   }
 }

@@ -35,8 +35,8 @@ import graft.text.TextOps
   *    layout and [[gunzipAll]] reads concatenated members.
   *
   * Scale shape: [[DocSources.warc]] parallelizes at file granularity via
-  * `binaryFiles` — Common Crawl's ~1 GB segment files give thousands of
-  * tasks per crawl, each a narrow map (no shuffle). At 100 TB the refinement
+  * the `binaryFile` source — Common Crawl's ~1 GB segment files give
+  * thousands of tasks per crawl, each a narrow map (no shuffle). At 100 TB the refinement
   * is byte-range splits driven by the CDX member index (each task gunzips
   * its own member range); the record parser here is already
   * offset-restartable because every member is self-delimiting.

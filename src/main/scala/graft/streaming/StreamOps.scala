@@ -6,14 +6,6 @@ import graft.core.{Page, Triple}
 import graft.kg.{KgPipeline, Scorer}
 import graft.ner.Ner
 
-/** Structured Streaming variants of the engine's operators.
-  *
-  * The reference is strictly bounded batch (SURVEY.md §2.8); these exist for
-  * the continuous-ingest deployment shape: a pages stream (e.g. new crawl
-  * segments landing in a table) flowing through the SAME row-local pipeline —
-  * stateless, so it needs no watermark — plus watermarked event-stream
-  * aggregations demonstrating tumbling windows and session windows.
-  */
 /** One closed user session ([[StreamOps.sessionsWithState]] output row).
   * `closed_by`: "gap" (a new event arrived past the gap), "cap" (maxEvents
   * reached), or "timeout" (watermark passed the idle deadline). Top-level
@@ -46,6 +38,14 @@ final case class LiveChange(s: String, p: String, o: String, live: Boolean,
   * no event buffer. */
 final case class LiveState(ts: Long, op: String)
 
+/** Structured Streaming variants of the engine's operators.
+  *
+  * The reference is strictly bounded batch (SURVEY.md §2.8); these exist for
+  * the continuous-ingest deployment shape: a pages stream (e.g. new crawl
+  * segments landing in a table) flowing through the SAME row-local pipeline —
+  * stateless, so it needs no watermark — plus watermarked event-stream
+  * aggregations demonstrating tumbling windows and session windows.
+  */
 object StreamOps {
 
   /** Streaming KG: pages stream -> triples stream. Stateless row-local maps;

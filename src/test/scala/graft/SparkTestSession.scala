@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test run (forked JVM). */
 object SparkTestSession {
@@ -19,4 +20,16 @@ trait SparkTestSession {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+}
+
+/** Registers a test twice: as is, and with every bounded driver path
+  * declining ([[graft.exec.Bounded.distributedOnly]]), so one body checks
+  * both paths. */
+trait BothPaths { self: AnyFunSuite =>
+  def bothPaths(name: String)(body: => Unit): Unit =
+    Seq(false, true).foreach { dist =>
+      test(if (dist) s"$name [distributedOnly]" else name) {
+        if (dist) graft.exec.Bounded.distributedOnly(body) else body
+      }
+    }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
-import graft.exec.Bounded.{Key, Lng, Str, arrayOf, distributedOnly}
+import graft.exec.Bounded.{Key, Lng, Str, arrayOf, distributedOnly, orNull}
 import graft.graph.{GraphBuilder, GraphOps}
 import graft.ops.{Dedup, Similarity}
 
@@ -28,6 +28,11 @@ class BoundedSpec extends AnyFunSuite with SparkTestSession {
     assert(Bounded.collect(df, 2, Str).isEmpty, "column count")
     assert(Bounded.collect(Seq(("a", Some(1L)), ("b", None)).toDF("k", "v"), 2, Str, Lng).isEmpty,
       "a null value")
+    val typed = Seq(("a", Option("T")), ("b", None)).toDF("k", "type")
+    assert(Bounded.collect(typed, 2, Str, orNull(Str)).map(_.length) == Some(2),
+      "a null where the caller replays it")
+    assert(Bounded.collect(typed.select("type", "k"), 2, orNull(Str), Str).map(_.length) == Some(2))
+    assert(Bounded.collect(typed.select("type", "k"), 2, Str, orNull(Str)).isEmpty, "a null key")
     val vecs = Seq((1, Seq(1L, 2L)), (2, Seq(3L))).toDF("id", "q")
     assert(Bounded.collect(vecs, 2, Key, arrayOf(Lng)).map(_.length) == Some(2))
   }

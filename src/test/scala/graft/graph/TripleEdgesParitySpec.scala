@@ -7,7 +7,9 @@ import graft.core.{Graph, GraphLink, GraphNode, Triple}
 
 /** [[GraphBuilder.tripleEdges]] + [[GraphBuilder.collectedGraph]] against the
   * row-level graph build Infer ran before them, copied below as the oracle:
-  * same edge state, same filtered edges, same nodes, same order. */
+  * same edge state, same filtered edges, same nodes, same order. Infer's
+  * driver finish ([[GraphBuilder.localTripleEdges]]) must write the same
+  * d3 JSON bytes as the build inside [[graft.exec.Bounded.distributedOnly]]. */
 class TripleEdgesParitySpec extends AnyFunSuite with graft.SparkTestSession {
   import spark.implicits._
 
@@ -43,8 +45,22 @@ class TripleEdgesParitySpec extends AnyFunSuite with graft.SparkTestSession {
     (state, graph, n)
   }
 
-  /** The built graph at each `minLinks`, after checking it against the oracle. */
-  private def assertParity(rows: Seq[Triple], minLinks: Double*): Seq[Graph] = {
+  /** Infer's graph: the driver finish when the multiplicities fit the
+    * collect cap, else the distributed build; with the path taken. */
+  private def inferGraph(t: DataFrame, minLinks: Double): (Graph, Long, Boolean) =
+    GraphBuilder.localTripleEdges(t, 2000000) match {
+      case Some(l) => (GraphBuilder.collectedGraph("g", l.edgeRows(minLinks)), l.triples, true)
+      case None    => val (_, g, n) = built(t, minLinks); (g, n, false)
+    }
+
+  private def json(g: Graph): String =
+    D3Json.forceJson(g, intLinkC = true, intNodeC = false) +
+      D3Json.radialJson(D3Json.toRadial(g), intC = true)
+
+  /** The built graph at each `minLinks`, after checking it against the oracle
+    * and Infer's graph against its distributed build; `driver`: whether
+    * Infer's graph is expected to be finished on the driver. */
+  private def assertParity(rows: Seq[Triple], driver: Boolean, minLinks: Double*): Seq[Graph] = {
     val t = rows.toDF().repartition(3)
     minLinks.map { m =>
       val (oState, oGraph) = oracle(t, m)
@@ -52,6 +68,17 @@ class TripleEdgesParitySpec extends AnyFunSuite with graft.SparkTestSession {
       assert(state == oState, s"edge state, minLinks $m")
       assert(graph == oGraph, s"graph and order, minLinks $m")
       assert(n == rows.length, "triples summed from the multiplicities")
+      val (g, triples, onDriver) = inferGraph(t, m)
+      val (dg, dTriples, dOnDriver) = graft.exec.Bounded.distributedOnly(inferGraph(t, m))
+      assert(onDriver == driver && !dOnDriver, s"path taken, minLinks $m")
+      assert(json(g) == json(dg) && json(g) == json(graph), s"d3 JSON bytes, minLinks $m")
+      assert(triples == n && dTriples == n)
+      GraphBuilder.localTripleEdges(t, 2000000).foreach { l =>
+        val b = GraphBuilder.tripleEdges(t)
+        assert(l.stateDf(spark).schema == b.state.schema, "edge-store state schema")
+        assert(l.stateDf(spark).collect().toSet == b.state.collect().toSet, "edge-store state rows")
+        b.unpersist()
+      }
       graph
     }
   }
@@ -70,7 +97,7 @@ class TripleEdgesParitySpec extends AnyFunSuite with graft.SparkTestSession {
       tr("bob", "PERSON", "neu", "bob", "PERSON"), // self-pair
       tr("bob", "PERSON", "neu", "bob", "PERSON", sent = 3),
       tr("usa", "GPE", "neg", "a.b", "ORG"))
-    val Seq(_, g) = assertParity(rows, 1, 2)
+    val Seq(_, g) = assertParity(rows, driver = true, 1, 2)
     // minLinks 2: X./X merge to ORG.X (3 links), a.b/a·b to ORG.a·b (2), the self-pair (2)
     assert(g.links == Seq(
       GraphLink("ORG.X", "PERSON.bob", 3.0, "pos"),
@@ -94,7 +121,7 @@ class TripleEdgesParitySpec extends AnyFunSuite with graft.SparkTestSession {
       tr("nul", null, "pos", "x", "LOC"),
       tr("half", "ORG", "neg", "nul", null, doc = "d3"),
       tr("x", "LOC", "neg", "half", null, doc = "d4"))
-    val Seq(g1, g) = assertParity(rows, 1, 2)
+    val Seq(g1, g) = assertParity(rows, driver = true, 1, 2)
     assert(Set("GPE.amb", "ORG.tb", "UNKNOWN.nul", "UNKNOWN.half").subsetOf(g1.nodes.map(_.id).toSet))
     assert(g.links == Seq(GraphLink("ORG.tb", "LOC.x", 2.0, "pos")))
   }
@@ -105,11 +132,19 @@ class TripleEdgesParitySpec extends AnyFunSuite with graft.SparkTestSession {
       tr("x", "LOC", null, "y", "LOC"),
       tr("x", "LOC", "neg", null, null),
       tr("x", "LOC", "neg", "y", "LOC"))
-    assertParity(rows, 1)
+    assertParity(rows, driver = false, 1)
+  }
+
+  test("driver finish declines above its bound, keeps null types, declines null values") {
+    val t = Seq(tr("a", null, "pos", "b", "ORG"), tr("b", "ORG", "neg", "c", null)).toDF()
+    assert(GraphBuilder.localTripleEdges(t, 2).map(_.triples) == Some(2L))
+    assert(GraphBuilder.localTripleEdges(t, 1).isEmpty, "above the bound")
+    assert(GraphBuilder.localTripleEdges(
+      Seq(tr("a", "ORG", "pos", null, "ORG")).toDF(), 10).isEmpty, "null value")
   }
 
   test("empty triples: empty state and graph, no NaN node weights") {
-    assert(assertParity(Seq.empty, 1, 2).forall(g => g.nodes.isEmpty && g.links.isEmpty))
+    assert(assertParity(Seq.empty, driver = false, 1, 2).forall(g => g.nodes.isEmpty && g.links.isEmpty))
   }
 
   test("generated corpus: parity over KgPipeline triples at several min-links") {
@@ -117,6 +152,6 @@ class TripleEdgesParitySpec extends AnyFunSuite with graft.SparkTestSession {
     val cfg = KgPipeline.Config(sampler = Sampler.Config(termsPerContext = 50, distInTermsBound = 50,
       renderText = false))
     val rows = KgPipeline.triplesFused(graft.gen.PageGen.pages(60), cfg, LexiconScorer()).collect().toSeq
-    assert(assertParity(rows, 1, 3).forall(g => g.links.nonEmpty && g.nodes.forall(n => n.c > 0 && n.c <= 1)))
+    assert(assertParity(rows, driver = true, 1, 3).forall(g => g.links.nonEmpty && g.nodes.forall(n => n.c > 0 && n.c <= 1)))
   }
 }

@@ -14,11 +14,11 @@ import org.apache.spark.sql.DataFrame
   * one run. The fix (cli.Infer): compute the dictionary ONCE over the full
   * page set (Linker.lshBroadcastDictionary) and probe it map-side inside
   * every bucket transform. */
-class CheckpointLinkSpec extends AnyFunSuite with SparkTestSession {
+class CheckpointLinkSpec extends AnyFunSuite with SparkTestSession with graft.BothPaths {
 
   private def tmp() = java.nio.file.Files.createTempDirectory("ckpt-link").toString
 
-  test("chunked lsh-linked runs match a single full run (dictionary over FULL set)") {
+  bothPaths("chunked lsh-linked runs match a single full run (dictionary over FULL set)") {
     import spark.implicits._
     val pages = PageGen.pages(60, 13L, 4)
     val cfg = KgPipeline.Config()
@@ -45,7 +45,7 @@ class CheckpointLinkSpec extends AnyFunSuite with SparkTestSession {
     assert(rows(full).nonEmpty)
   }
 
-  test("lshBroadcastDictionary holds only non-trivial entries and fails fast above the cap") {
+  bothPaths("lshBroadcastDictionary holds only non-trivial entries and fails fast above the cap") {
     import spark.implicits._
     import graft.core.{Mention, ParsedDoc, Sentence}
     def doc(url: String, value: String) =

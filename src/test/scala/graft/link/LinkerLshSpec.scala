@@ -25,6 +25,40 @@ class LinkerLshSpec extends AnyFunSuite {
     assert(a == b)
   }
 
+  test("baseHash is the top 60 bits of md5 mod P, as the hex formula computes it") {
+    val rnd = new scala.util.Random(5)
+    (1 to 10000).foreach { i =>
+      val s = rnd.nextString(rnd.nextInt(12))
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        .take(8).map(b => f"$b%02x").mkString
+      assert(Linker.baseHash(s) == java.lang.Long.parseLong(hex.substring(0, 15), 16) % 2147483647L,
+        s"string $i")
+    }
+  }
+
+  test("lshGroups gives the same groups from a List as from a Vector") {
+    val rnd = new scala.util.Random(9)
+    val words = Seq("alpha", "beta", "gamma", "delta", "corp", "fund", "union")
+    val values = List.fill(400)(Seq.fill(2 + rnd.nextInt(2))(words(rnd.nextInt(words.size)))
+      .map(w => if (rnd.nextInt(4) == 0) w.drop(1) else w).mkString(" "))
+    val groups = Linker.lshGroups(values)
+    assert(groups == Linker.lshGroups(values.toVector))
+    assert(groups.values.toSet.size < groups.size, "some values are linked")
+  }
+
+  test("hub gate: a boilerplate hub under the row bound, over the bucket gate, declines the driver") {
+    // whitespace variants of one string have identical shingle sets, so all
+    // of them share one bucket in each of the 8 bands: Σ|bucket|² = 8 n²
+    def hub(n: Int) = (1 to n).map(k => "all rights reserved" + " " * k + "footer")
+    val n = Iterator.from(1).find(n => 8L * n * n > Linker.DriverBucketWorkBound).get
+    assert(n <= Linker.DriverVocabularyBound)
+    def onDriver(vs: Seq[String]) =
+      Linker.driverGroups(vs, 8, 2, Linker.DefaultJaccardThreshold, 3, Linker.DriverBucketWorkBound)
+    assert(onDriver(hub(n)).isEmpty)
+    assert(onDriver(hub(n - 1)).exists(_.values.toSet.size == 1), "one group just under the gate")
+  }
+
   test("exact duplicates always share a group regardless of threshold") {
     val groups = Linker.lshGroups(Seq("x y z", "X  Y  Z", "other"), jaccardThreshold = 1.0)
     assert(groups(graft.text.TextOps.canonicalKey("x y z")) ==
@@ -34,7 +68,7 @@ class LinkerLshSpec extends AnyFunSuite {
 
 /** Distributed linking path (the web-scale replacement for the driver-side
   * union-find): DataFrame band join + exact verify + distributed components. */
-class LinkerDistributedSpec extends AnyFunSuite with graft.SparkTestSession {
+class LinkerDistributedSpec extends AnyFunSuite with graft.SparkTestSession with graft.BothPaths {
 
   private val fixture = Seq(
     "Barack Obama", "Barak Obama", "barack  obama",
@@ -84,7 +118,33 @@ class LinkerDistributedSpec extends AnyFunSuite with graft.SparkTestSession {
     assert(out("beta fund") == "beta fund")
   }
 
-  test("withLshGroups: broadcast path and mention-join path assign identical group ids") {
+  private def nearDupDocs = {
+    import spark.implicits._
+    import graft.core.{Mention, ParsedDoc, Sentence}
+    fixture.zipWithIndex.map { case (v, i) =>
+      ParsedDoc(s"u$i", "en", Seq(Sentence(0, v.split(" ").toSeq,
+        Seq(Mention(0, 0, v, "ORG", 0L, Linker.hashGroupId(v))))))
+    }.toDS()
+  }
+
+  test("the linking dictionary: driver-linked outside distributedOnly, same entries inside") {
+    val driver = Linker.nonTrivialDictionary(nearDupDocs, 8, 2, 0.55, 3)
+    val dist = graft.exec.Bounded.distributedOnly(Linker.nonTrivialDictionary(nearDupDocs, 8, 2, 0.55, 3))
+    assert(driver.isLeft && dist.isRight)
+    val entries = dist.toOption.get.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(driver.left.toOption.get == entries)
+    assert(entries.keySet == Set("barack obama", "barak obama", "european union", "alpha corp."))
+  }
+
+  bothPaths("withLshGroups: near-duplicate values share the representative's id") {
+    val byValue = Linker.withLshGroups(nearDupDocs, jaccardThreshold = 0.55).collect()
+      .flatMap(_.sentences.flatMap(_.mentions.map(m => m.value -> m.groupId))).toMap
+    assert(byValue("Barak Obama") == Linker.hashGroupId("barack  obama"))
+    assert(byValue("Europan Union") == byValue("European Union"))
+    assert(byValue("France") == Linker.hashGroupId("france"))
+  }
+
+  bothPaths("withLshGroups: broadcast path and mention-join path assign identical group ids") {
     import spark.implicits._
     val pages = graft.gen.PageGen.pages(40, 7L, 4)
     val docs = graft.kg.KgPipeline.parsePages(pages, graft.ner.BracketNer,
@@ -104,7 +164,7 @@ class LinkerDistributedSpec extends AnyFunSuite with graft.SparkTestSession {
     assert(!plan.contains("CoGroup"), plan)
   }
 
-  test("withLshGroups join path: duplicate-url docs don't cross-assign (value-keyed regroup)") {
+  bothPaths("withLshGroups join path: duplicate-url docs don't cross-assign (value-keyed regroup)") {
     import spark.implicits._
     import graft.core.{Mention, ParsedDoc, Sentence}
     // two DISTINCT docs sharing one url; same (sentInd, mentionId) ordinals
