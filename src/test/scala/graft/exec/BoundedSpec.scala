@@ -75,17 +75,27 @@ class BoundedSpec extends AnyFunSuite with SparkTestSession {
         s"iters=$it")
   }
 
+  // the whole family: PPR, dangling and trustRank share the replay too
   test("null keys: pageRank and pageRankResume equal their distributed paths") {
     val e = nullKeyed
     assert(rows(GraphOps.pageRank(e, 3)) == rows(distributedOnly(GraphOps.pageRank(e, 3))))
     val prev = distributedOnly(GraphOps.pageRank(e, 2))
     assert(rows(GraphOps.pageRankResume(e, prev, 1)) ==
       rows(distributedOnly(GraphOps.pageRankResume(e, prev, 1))))
+    assert(rows(GraphOps.personalizedPageRank(e, "A", 3)) ==
+      rows(distributedOnly(GraphOps.personalizedPageRank(e, "A", 3))))
+    assert(rows(GraphOps.pageRankDangling(e, 20, eps = 1000000L)) ==
+      rows(distributedOnly(GraphOps.pageRankDangling(e, 20, eps = 1000000L))))
+    val seeds = col("id").isin("A", "D")
+    assert(rows(GraphOps.trustRank(e, seeds, 3)) ==
+      rows(distributedOnly(GraphOps.trustRank(e, seeds, 3))))
     // a null source alone: the probed (source-joined) relation holds no
     // null, but prPrep's node set still counts the null node
     val src = Seq[(String, String, Double)](("A", "B", 1), ("B", "A", 1), (null, "C", 1))
       .toDF("source", "target", "c")
     assert(rows(GraphOps.pageRank(src, 2)) == rows(distributedOnly(GraphOps.pageRank(src, 2))))
+    assert(rows(GraphOps.trustRank(src, col("id") === "A", 2)) ==
+      rows(distributedOnly(GraphOps.trustRank(src, col("id") === "A", 2))))
     assert(rows(GraphOps.hits(src, 2)) == rows(distributedOnly(GraphOps.hits(src, 2))))
   }
 

@@ -281,6 +281,16 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
       rows(distributedOnly(GraphOps.pageRankDangling(e, iters = 20, eps = 100000000L))))
     assert(rows(GraphOps.personalizedPageRank(e, "A", iters = 3)) ==
       rows(distributedOnly(GraphOps.personalizedPageRank(e, "A", iters = 3))))
+    // a source outside the graph ranks every node 0 on both paths
+    val absent = rows(GraphOps.personalizedPageRank(e, "NOPE", iters = 2))
+    assert(absent == rows(distributedOnly(GraphOps.personalizedPageRank(e, "NOPE", iters = 2))))
+    assert(absent.forall(_(1) == 0L) && absent.size == 7)
+    // several seeds: mass and teleport split over k = 3 on both paths
+    val seeds = col("id").isin("A", "C", "X")
+    assert(rows(GraphOps.trustRank(e, seeds, iters = 3)) ==
+      rows(distributedOnly(GraphOps.trustRank(e, seeds, iters = 3))))
+    assert(rows(GraphOps.spamMass(e, seeds, iters = 3)) ==
+      rows(distributedOnly(GraphOps.spamMass(e, seeds, iters = 3))))
     val prev = GraphOps.pageRank(e, iters = 2)
     assert(rows(GraphOps.pageRankResume(e, prev, iters = 1)) ==
       rows(distributedOnly(GraphOps.pageRankResume(e, prev, iters = 1))))

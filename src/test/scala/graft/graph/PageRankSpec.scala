@@ -1,10 +1,10 @@
 package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestSession
+import graft.{BothPaths, SparkTestSession}
 import org.apache.spark.sql.functions._
 
-class PageRankSpec extends AnyFunSuite with SparkTestSession {
+class PageRankSpec extends AnyFunSuite with SparkTestSession with BothPaths {
 
   /** Local reference implementation of the exact recurrence (same integer
     * arithmetic, driver-side maps). */
@@ -175,6 +175,18 @@ class PageRankSpec extends AnyFunSuite with SparkTestSession {
     assert(got == Map(
       "a" -> (75000000000L + 85L * 500000000000L / 100L),
       "b" -> (75000000000L + 85L * 600000000000L / 100L)))
+  }
+
+  bothPaths("pageRankResume: a snapshot rank that overflows 85 * r * w raises, never wraps") {
+    import spark.implicits._
+    val e = Seq(("A", "B", "pos", 2.0), ("B", "C", "pos", 1.0), ("C", "A", "pos", 1.0))
+      .toDF("source", "target", "sent", "c")
+    // 85 * 10^17 * 2 > 2^63: Spark's ANSI multiply raises; so must the replay
+    val prev = Seq(("A", 100000000000000000L)).toDF("id", "r")
+    val ex = intercept[Exception](GraphOps.pageRankResume(e, prev, 1).collect())
+    val messages = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage).toLowerCase)
+    assert(messages.exists(_.contains("overflow")), ex.toString)
   }
 
   test("multigraph edges (parallel sents) collapse into one weight") {
