@@ -1221,10 +1221,9 @@ object SparkEntry {
     }),
     // spam-mass estimation over the extracted host graph: the permille of
     // each host's PageRank NOT covered by TrustRank authority (same seeds).
-    // spamMass preps the SAME edge relation twice (once for PageRank, once
-    // for TrustRank), so it gets the CHECKPOINTED host graph — the
-    // link-extraction regexp chain runs once, not per prep (the hostEdgesOf
-    // discipline; this was the r4->r5 web_spam_mass regression)
+    // It gets the CHECKPOINTED host graph, so the link-extraction regexp
+    // chain runs once, not per consumer (the hostEdgesOf discipline; this
+    // was the r4->r5 web_spam_mass regression)
     "web_spam_mass" -> ((s, d) => {
       val kcol = when(col("id").rlike("^h[0-9]+\\."),
         regexp_extract(col("id"), "^h([0-9]+)\\.", 1).cast("long")).otherwise(lit(-1L))

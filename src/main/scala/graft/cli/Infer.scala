@@ -217,7 +217,8 @@ object Infer {
     }
 
     // resumable path: triples written bucket-checkpointed, then exit
-    opts.get("--checkpoint").foreach { ckptDir =>
+    if (opts.contains("--checkpoint")) {
+      val ckptDir = opts("--checkpoint")
       val n = opts.getOrElse("--buckets", "16").toInt
       // --link lsh under checkpointing: group ids must NOT depend on which
       // buckets are co-resident in a run (Checkpoint's contract — the

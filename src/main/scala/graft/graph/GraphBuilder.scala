@@ -420,7 +420,8 @@ object GraphBuilder {
     * label: then [[tripleEdges]] builds the state. */
   def localTripleEdges(triples: DataFrame, bound: Int): Option[LocalTripleEdges] = {
     val (value, tpe) = (Bounded.Str, Bounded.orNull(Bounded.Str))
-    Bounded.collect(typedCounts(triples), bound, value, tpe, value, tpe, value, Bounded.Lng)
+    Bounded.collect("localTripleEdges", typedCounts(triples), bound,
+      value, tpe, value, tpe, value, Bounded.Lng)
       .map { rows =>
         val seen = scala.collection.mutable.HashMap.empty[String, Set[Option[String]]]
         def see(v: String, t: String): Unit =

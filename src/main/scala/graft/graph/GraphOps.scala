@@ -1,5 +1,7 @@
 package graft.graph
 
+import Math.{addExact, multiplyExact}
+import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.{Graph, GraphLink, GraphNode}
@@ -256,23 +258,30 @@ object GraphOps {
     * raises where the distributed plan does. The ow join drops null-source
     * edges that prPrep's node set still counts, so the nodes must number
     * `g.n` too. */
-  private def localEw(g: PrGraph): Option[LocalEw] =
-    Bounded.collect(g.ew, localBound, Str, Str, Lng, Lng).map { rows =>
+  private def localEw(label: String, g: PrGraph): Option[LocalEw] =
+    Bounded.collectAs(label, g.ew, localBound, Str, Str, Lng, Lng) { rows =>
       val es = rows.map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
-      (es, (es.map(_._1) ++ es.map(_._2)).distinct)
-    }.filter(_._2.length == g.n)
+      val nodes = (es.map(_._1) ++ es.map(_._2)).distinct
+      if (nodes.length == g.n) Right((es, nodes)) else Left(Bounded.NullKey)
+    }
 
   /** A (string, string) pair relation on the driver, else None. */
-  private def localPairs(adj: DataFrame): Option[Array[(String, String)]] =
-    Bounded.collect(adj, localBound, Str, Str)
+  private def localPairs(label: String, adj: DataFrame): Option[Array[(String, String)]] =
+    Bounded.collect(label, adj, localBound, Str, Str)
       .map(_.map(r => (r.getString(0), r.getString(1))))
 
   /** A (string, string, long) weighted adjacency on the driver, else None:
     * only string-keyed, long-weighted relations are replayable (the
     * comparators are UTF-8 byte order / exact Long). */
-  private def localAdj(adj: DataFrame): Option[Array[(String, String, Long)]] =
-    Bounded.collect(adj, localBound, Str, Str, Lng)
+  private def localAdj(label: String, adj: DataFrame): Option[Array[(String, String, Long)]] =
+    Bounded.collect(label, adj, localBound, Str, Str, Lng)
       .map(_.map(r => (r.getString(0), r.getString(1), r.getLong(2))))
+
+  /** A driver path's result rows as a DataFrame of `cols`, in `like`'s
+    * session. */
+  private def localDf[A <: Product : TypeTag](like: DataFrame, rows: Iterable[A],
+      cols: String*): DataFrame =
+    like.sparkSession.createDataFrame(rows.toSeq).toDF(cols: _*)
 
   /** The PageRank family's recurrence on the driver: the replay of
     * [[rankLoop]] over [[localEw]]'s arrays. From `r0`, each round sets
@@ -287,7 +296,6 @@ object GraphOps {
     * instead of wrapping. Truncating division == Spark `div`. */
   private def replayRanks(edges: DataFrame, local: LocalEw, r0: String => Long,
       tele: String => Long, iters: Int, dangling: Boolean = false, eps: Long = 0L): DataFrame = {
-    import Math.{addExact, multiplyExact}
     val (es, nodes) = local
     val at = nodes.zipWithIndex.toMap
     val (src, dst) = (es.map(e => at(e._1)), es.map(e => at(e._2)))
@@ -308,8 +316,7 @@ object GraphOps {
       r = next
       it += 1
     }
-    import edges.sparkSession.implicits._
-    nodes.toSeq.zip(r).toDF("id", "r")
+    localDf(edges, nodes.toSeq.zip(r), "id", "r")
   }
 
   /** The PageRank family's recurrence in Spark, over [[prPrep]]'s relations:
@@ -408,10 +415,16 @@ object GraphOps {
     * oracle); convergence-by-epsilon is a driver-side stop rule at scale. */
   def pageRank(edges: DataFrame, iters: Int = 3): DataFrame = {
     val g = prPrep(edges)
-    localEw(g) match {
-      case Some(l) => replayRanks(edges, l, _ => g.t, _ => g.base, iters)
-      case None => rankLoop(g, g.nodes.select(col("id"), lit(g.t).as("r")), lit(g.base), iters)
-    }
+    uniformRank(edges, g, localEw("pageRank", g), iters)
+  }
+
+  /** The uniform-start ranks ([[pageRank]], [[pageRankDangling]]) over a
+    * prepped graph and its probed edges. */
+  private def uniformRank(edges: DataFrame, g: PrGraph, local: Option[LocalEw], iters: Int,
+      dangling: Boolean = false, eps: Long = 0L): DataFrame = local match {
+    case Some(l) => replayRanks(edges, l, _ => g.t, _ => g.base, iters, dangling, eps)
+    case None => rankLoop(g, g.nodes.select(col("id"), lit(g.t).as("r")), lit(g.base), iters,
+      dangling, eps)
   }
 
   /** Warm-start [[pageRank]]: resume the identical iteration from a PERSISTED
@@ -429,7 +442,8 @@ object GraphOps {
     val g = prPrep(edges)
     val prev = prevRanks.select(col("id"), col("r"))
     // the stored ranks are node-sized, so the driver path collects them too
-    val local = for (l <- localEw(g); rows <- Bounded.collect(prev, localBound, Str, Lng))
+    val local = for (l <- localEw("pageRankResume", g);
+         rows <- Bounded.collect("pageRankResume.ranks", prev, localBound, Str, Lng))
       yield (l, rows.map(r => r.getString(0) -> r.getLong(1)).toMap)
     local match {
       case Some((l, stored)) =>
@@ -461,11 +475,7 @@ object GraphOps {
   def pageRankDangling(edges: DataFrame, iters: Int = 3, eps: Long = 0L): DataFrame = {
     require(eps >= 0 && eps < 1000000000000L, s"eps out of [0, 1e12): $eps")
     val g = prPrep(edges)
-    localEw(g) match {
-      case Some(l) => replayRanks(edges, l, _ => g.t, _ => g.base, iters, dangling = true, eps)
-      case None => rankLoop(g, g.nodes.select(col("id"), lit(g.t).as("r")), lit(g.base), iters,
-        dangling = true, eps)
-    }
+    uniformRank(edges, g, localEw("pageRankDangling", g), iters, dangling = true, eps)
   }
 
   /** Personalized PageRank: all restart mass concentrated on `source` — the
@@ -485,7 +495,8 @@ object GraphOps {
     * counterpart (see [[pageRank]]). */
   def personalizedPageRank(edges: DataFrame, source: String, iters: Int = 3): DataFrame = {
     val g = prPrep(edges)
-    seededRank(edges, g, localEw(g).map(_ -> Set(source)), col("id") === source, 1L, iters)
+    seededRank(edges, g, localEw("personalizedPageRank", g).map(_ -> Set(source)),
+      col("id") === source, 1L, iters)
   }
 
   /** TrustRank: personalized PageRank whose teleport set is a SEED SET of
@@ -507,9 +518,15 @@ object GraphOps {
     * Engine extension, no reference counterpart (see [[pageRank]]'s note). */
   def trustRank(edges: DataFrame, seedPred: Column, iters: Int = 3): DataFrame = {
     val g = prPrep(edges)
+    trustRankOf("trustRank", edges, g, localEw("trustRank", g), seedPred, iters)
+  }
+
+  /** [[trustRank]] over a prepped graph and its probed edges. */
+  private def trustRankOf(label: String, edges: DataFrame, g: PrGraph, ew: Option[LocalEw],
+      seedPred: Column, iters: Int): DataFrame = {
     // an empty seed set declines the collect, so the count's check below fails it
-    val local = for (l <- localEw(g);
-         seeds <- Bounded.collect(g.nodes.filter(seedPred), localBound, Str))
+    val local = for (l <- ew;
+         seeds <- Bounded.collect(s"$label.seeds", g.nodes.filter(seedPred), localBound, Str))
       yield (l, seeds.map(_.getString(0)).toSet)
     seededRank(edges, g, local, seedPred, {
       val k = g.nodes.filter(seedPred).count()
@@ -540,9 +557,9 @@ object GraphOps {
   /** Spam-mass estimation (Gyöngyi, Garcia-Molina, Pedersen — "Link Spam
     * Detection Based on Mass Estimation"): the share of a node's PageRank
     * NOT backed by trusted-seed authority. Runs [[pageRank]] and
-    * [[trustRank]] over the same edges, normalizes each vector to exact
-    * integer permille OF ITS OWN TOTAL (the two iterations use different
-    * absolute scales by construction), and reports
+    * [[trustRank]] over one prep and one probe of the edges, normalizes each
+    * vector to exact integer permille OF ITS OWN TOTAL (the two iterations
+    * use different absolute scales by construction), and reports
     * `spam_mass_permille = 1000·max(pr − tr, 0) div max(pr, 1)` — 1000 =
     * all of the node's rank is unaccounted for by trust (spam shape), 0 =
     * trust covers its full share. The inner difference clamps at zero
@@ -552,8 +569,11 @@ object GraphOps {
     * node-sized; the totals broadcast. Output: (id, pr_permille,
     * tr_permille, spam_mass_permille). */
   def spamMass(edges: DataFrame, seedPred: Column, iters: Int = 3): DataFrame = {
-    val pr = pageRank(edges, iters).select(col("id"), col("r").as("pr"))
-    val tr = trustRank(edges, seedPred, iters).select(col("id"), col("r").as("tr"))
+    val g = prPrep(edges)
+    val local = localEw("spamMass", g)
+    val pr = uniformRank(edges, g, local, iters).select(col("id"), col("r").as("pr"))
+    val tr = trustRankOf("spamMass", edges, g, local, seedPred, iters)
+      .select(col("id"), col("r").as("tr"))
     val prt = pr.agg(sum(col("pr")).as("prt"))
     val trt = tr.agg(sum(col("tr")).as("trt"))
     pr.join(tr, "id")
@@ -575,11 +595,7 @@ object GraphOps {
     * (they carry no connectivity); isolated nodes never enter the edge
     * relation and are absent, as in the dedup clustering family. */
   def connectedComponents(edges: DataFrame): DataFrame =
-    graft.ops.Dedup.clusters(
-      edges.filter(col("source") =!= col("target"))
-        .select(least(col("source"), col("target")).as("a_id"),
-          greatest(col("source"), col("target")).as("b_id"))
-        .distinct())
+    graft.ops.Dedup.clusters(undirectedSimple(edges).toDF("a_id", "b_id"))
 
   /** k-core decomposition by fixed-round peeling: repeatedly drop nodes whose
     * degree in the SURVIVING undirected simple graph is below `k`; after
@@ -598,40 +614,36 @@ object GraphOps {
     * key; lineage truncated per round. */
   def kCore(edges: DataFrame, k: Long = 2, rounds: Int = 4): DataFrame = {
     require(k >= 1 && rounds >= 1, s"k and rounds must be positive: k=$k rounds=$rounds")
-    val und = edges.filter(col("source") =!= col("target"))
-      .select(least(col("source"), col("target")).as("a"),
-        greatest(col("source"), col("target")).as("b"))
-      .distinct()
+    val und = undirectedSimple(edges)
     var adj = und.select(col("a").as("x"), col("b").as("n"))
       .union(und.select(col("b"), col("a")))
       .localCheckpoint()
     // small-graph fast path: the fixed-round peeling driver-side — each
     // round drops every node below k in the surviving adjacency, exactly
     // the distributed degree-filter + double semi-join (spec-pinned)
-    localPairs(adj).foreach { a0 =>
-      val spark = edges.sparkSession
-      import spark.implicits._
+    localPairs("kCore", adj).map { a0 =>
       var a = a0
       for (_ <- 1 to rounds) {
         val deg = a.groupBy(_._1).map { case (x, es) => x -> es.length }
         val keep = deg.collect { case (x, c) if c >= k => x }.toSet
         a = a.filter { case (x, n) => keep(x) && keep(n) }
       }
-      return a.groupBy(_._1).toSeq.map { case (x, es) => (x, es.length.toLong) }
-        .toDF("id", "deg")
+      localDf(edges, a.groupBy(_._1).toSeq.map { case (x, es) => (x, es.length.toLong) },
+        "id", "deg")
+    }.getOrElse {
+      // adj feeds three consumers per peeling round (degree agg + two
+      // semi-joins): the lazy plan triples per round, so the budget is tight
+      val ck = roundCkpt(rounds, maxLazy = 4)
+      for (_ <- 1 to rounds) {
+        val keep = adj.groupBy(col("x")).agg(count(lit(1)).as("c"))
+          .filter(col("c") >= k).select(col("x"))
+        adj = ck(adj.join(keep, "x")
+          .join(keep.withColumnRenamed("x", "n"), "n")
+          .select(col("x"), col("n")))
+      }
+      adj.groupBy(col("x")).agg(count(lit(1)).as("deg"))
+        .select(col("x").as("id"), col("deg"))
     }
-    // adj feeds three consumers per peeling round (degree agg + two
-    // semi-joins): the lazy plan triples per round, so the budget is tight
-    val ck = roundCkpt(rounds, maxLazy = 4)
-    for (_ <- 1 to rounds) {
-      val keep = adj.groupBy(col("x")).agg(count(lit(1)).as("c"))
-        .filter(col("c") >= k).select(col("x"))
-      adj = ck(adj.join(keep, "x")
-        .join(keep.withColumnRenamed("x", "n"), "n")
-        .select(col("x"), col("n")))
-    }
-    adj.groupBy(col("x")).agg(count(lit(1)).as("deg"))
-      .select(col("x").as("id"), col("deg"))
   }
 
   /** Neighbor-set Jaccard similarity between node pairs sharing at least one
@@ -653,9 +665,7 @@ object GraphOps {
     // neighbor, full degrees for the jaccard denominator (one double
     // division of exact ints, as distributed)
     val und0 = undirectedSimple(edges).localCheckpoint()
-    wedgeDriver(und0).foreach { case (deg, members) =>
-      val spark = edges.sparkSession
-      import spark.implicits._
+    wedgeDriver("neighborJaccard", und0).map { case (deg, members) =>
       val acc = collection.mutable.HashMap.empty[(String, String), Long]
         .withDefaultValue(0L)
       members.foreach { case (n, ms) =>
@@ -668,23 +678,24 @@ object GraphOps {
           }
         }
       }
-      return acc.toSeq.map { case ((a, b), inter) =>
+      localDf(edges, acc.toSeq.map { case ((a, b), inter) =>
         val (da, db) = (deg(a), deg(b))
         (a, b, inter, da, db, inter.toDouble / (da + db - inter).toDouble)
-      }.toDF("a", "b", "inter", "da", "db", "jaccard")
+      }, "a", "b", "inter", "da", "db", "jaccard")
+    }.getOrElse {
+      val (deg, small) = wedgePrep(und0, maxDegree)
+      val inter = small.select(col("x").as("pa"), col("n"))
+        .join(small.select(col("x").as("pb"), col("n")), "n")
+        .filter(col("pa") < col("pb"))
+        .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("inter"))
+      inter
+        .join(deg.select(col("x").as("pa"), col("deg").as("da")), "pa")
+        .join(deg.select(col("x").as("pb"), col("deg").as("db")), "pb")
+        .select(col("pa").as("a"), col("pb").as("b"), col("inter"),
+          col("da"), col("db"),
+          (col("inter").cast("double") /
+            (col("da") + col("db") - col("inter")).cast("double")).as("jaccard"))
     }
-    val (deg, small) = wedgePrep(und0, maxDegree)
-    val inter = small.select(col("x").as("pa"), col("n"))
-      .join(small.select(col("x").as("pb"), col("n")), "n")
-      .filter(col("pa") < col("pb"))
-      .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("inter"))
-    inter
-      .join(deg.select(col("x").as("pa"), col("deg").as("da")), "pa")
-      .join(deg.select(col("x").as("pb"), col("deg").as("db")), "pb")
-      .select(col("pa").as("a"), col("pb").as("b"), col("inter"),
-        col("da"), col("db"),
-        (col("inter").cast("double") /
-          (col("da") + col("db") - col("inter")).cast("double")).as("jaccard"))
   }
 
   /** HITS hub/authority scores over the weighted directed edge relation, in
@@ -713,7 +724,7 @@ object GraphOps {
     // `x div greatest(1, total div 1e6)` truncating normalization — all
     // operands non-negative, so Spark's div == Scala /). Bit-equal scores,
     // spec-pinned; above the bound the distributed loop runs unchanged.
-    localEw(g).foreach { case (es, nodeSet) =>
+    localEw("hits", g).map { case (es, nodeSet) =>
       var hub = nodeSet.map(_ -> 1000000L).toMap
       var auth = nodeSet.map(_ -> 1000000L).toMap
       for (_ <- 1 to iters) {
@@ -728,36 +739,35 @@ object GraphOps {
         val hDiv = math.max(1L, hsum / 1000000L)
         hub = nodeSet.map(n => n -> hRaw(n) / hDiv).toMap
       }
-      val spark = edges.sparkSession
-      import spark.implicits._
-      return nodeSet.toSeq.map(n => (n, hub(n), auth(n))).toDF("id", "hub", "auth")
+      localDf(edges, nodeSet.toSeq.map(n => (n, hub(n), auth(n))), "id", "hub", "auth")
+    }.getOrElse {
+      val ew = g.ew.select(col("source"), col("target"), col("w")).localCheckpoint()
+      val nodes = g.nodes
+      // auth feeds two consumers per round (hub update + the final zip), so
+      // the lazy plan doubles per iteration — a tighter budget than the
+      // linear-chain operators
+      val ck = roundCkpt(iters, maxLazy = 4)
+      var scores = nodes.select(col("id"), lit(1000000L).as("hub"), lit(1000000L).as("auth"))
+      for (_ <- 1 to iters) {
+        val aRaw = ew.join(scores.select(col("id"), col("hub")), ew("source") === col("id"))
+          .groupBy(col("target")).agg(sum(col("hub") * col("w")).as("a_raw"))
+        val aNorm = aRaw.agg(sum(col("a_raw")).as("asum"))
+        val auth = ck(nodes.join(aRaw, nodes("id") === aRaw("target"), "left")
+          .crossJoin(broadcast(aNorm))
+          .select(col("id"),
+            expr("coalesce(a_raw, 0L) div greatest(1L, asum div 1000000L)").as("auth")))
+        val hRaw = ew.join(auth.select(col("id"), col("auth")), ew("target") === col("id"))
+          .groupBy(col("source")).agg(sum(col("auth") * col("w")).as("h_raw"))
+        val hNorm = hRaw.agg(sum(col("h_raw")).as("hsum"))
+        scores = ck(nodes.join(hRaw, nodes("id") === hRaw("source"), "left")
+          .crossJoin(broadcast(hNorm))
+          .select(col("id"),
+            expr("coalesce(h_raw, 0L) div greatest(1L, hsum div 1000000L)").as("hub"))
+          .join(auth.withColumnRenamed("id", "aid"), col("id") === col("aid"))
+          .select(col("id"), col("hub"), col("auth")))
+      }
+      scores
     }
-    val ew = g.ew.select(col("source"), col("target"), col("w")).localCheckpoint()
-    val nodes = g.nodes
-    // auth feeds two consumers per round (hub update + the final zip), so
-    // the lazy plan doubles per iteration — a tighter budget than the
-    // linear-chain operators
-    val ck = roundCkpt(iters, maxLazy = 4)
-    var scores = nodes.select(col("id"), lit(1000000L).as("hub"), lit(1000000L).as("auth"))
-    for (_ <- 1 to iters) {
-      val aRaw = ew.join(scores.select(col("id"), col("hub")), ew("source") === col("id"))
-        .groupBy(col("target")).agg(sum(col("hub") * col("w")).as("a_raw"))
-      val aNorm = aRaw.agg(sum(col("a_raw")).as("asum"))
-      val auth = ck(nodes.join(aRaw, nodes("id") === aRaw("target"), "left")
-        .crossJoin(broadcast(aNorm))
-        .select(col("id"),
-          expr("coalesce(a_raw, 0L) div greatest(1L, asum div 1000000L)").as("auth")))
-      val hRaw = ew.join(auth.select(col("id"), col("auth")), ew("target") === col("id"))
-        .groupBy(col("source")).agg(sum(col("auth") * col("w")).as("h_raw"))
-      val hNorm = hRaw.agg(sum(col("h_raw")).as("hsum"))
-      scores = ck(nodes.join(hRaw, nodes("id") === hRaw("source"), "left")
-        .crossJoin(broadcast(hNorm))
-        .select(col("id"),
-          expr("coalesce(h_raw, 0L) div greatest(1L, hsum div 1000000L)").as("hub"))
-        .join(auth.withColumnRenamed("id", "aid"), col("id") === col("aid"))
-        .select(col("id"), col("hub"), col("auth")))
-    }
-    scores
   }
 
   /** Synchronous label-propagation communities over the undirected weighted
@@ -782,12 +792,9 @@ object GraphOps {
     // small-graph fast path: one collect + the identical synchronous
     // argmax rounds driver-side ((wsum desc, label asc) with labels in
     // UTF-8 binary order) — bit-equal labels, spec-pinned
-    localAdj(adj).foreach { a =>
-      val spark = adj.sparkSession
-      import spark.implicits._
-      return lpaDriver(a, rounds).toSeq.toDF("id", "label")
-    }
-    lpaOn(adj, rounds)
+    localAdj("labelPropagation", adj).map { a =>
+      localDf(adj, lpaDriver(a, rounds).toSeq, "id", "label")
+    }.getOrElse(lpaOn(adj, rounds))
   }
 
   /** The distributed LPA round loop over a prepared doubled adjacency
@@ -985,12 +992,9 @@ object GraphOps {
     // microseconds of real work on a coarsened/small graph — collect the
     // checkpointed adjacency once and replay the identical moves loop
     // driver-side ([[louvainMovesDriver]]; bit-equal labels, spec-pinned).
-    localAdj(prep._2).foreach { a =>
-      val spark = edges.sparkSession
-      import spark.implicits._
-      return louvainMovesDriver(a, rounds, colors).toSeq.toDF("id", "label")
-    }
-    louvainMovesOn(prep, rounds, colors)
+    localAdj("louvainMoves", prep._2).map { a =>
+      localDf(edges, louvainMovesDriver(a, rounds, colors).toSeq, "id", "label")
+    }.getOrElse(louvainMovesOn(prep, rounds, colors))
   }
 
   /** The distributed moves loop over an already-materialized
@@ -1072,9 +1076,7 @@ object GraphOps {
     // small-graph fast path: moves AND the coarsening rollup driver-side
     // off the one collected adjacency (same least/greatest-by-binary-UTF-8
     // collapse, 2x self-loop convention, exact Long sums)
-    localAdj(prep._2).foreach { a =>
-      val spark = edges.sparkSession
-      import spark.implicits._
+    localAdj("louvainCoarsen", prep._2).map { a =>
       val label = louvainMovesDriver(a, rounds, colors).toMap
       val rolled = collection.mutable.HashMap.empty[(String, String), Long]
         .withDefaultValue(0L)
@@ -1085,18 +1087,19 @@ object GraphOps {
           rolled(key) += (if (la == lb) w * 2L else w)
         }
       }
-      return rolled.toSeq.map { case ((ca, cb), w) => (ca, cb, w) }
-        .toDF("ca", "cb", "w")
+      localDf(edges, rolled.toSeq.map { case ((ca, cb), w) => (ca, cb, w) },
+        "ca", "cb", "w")
+    }.getOrElse {
+      val labels = louvainMovesOn(prep, rounds, colors).localCheckpoint()
+      val (und, _, _) = prep
+      und
+        .join(labels.select(col("id").as("a"), col("label").as("la")), "a")
+        .join(labels.select(col("id").as("b"), col("label").as("lb")), "b")
+        .select(least(col("la"), col("lb")).as("ca"),
+          greatest(col("la"), col("lb")).as("cb"),
+          when(col("la") === col("lb"), col("w") * 2L).otherwise(col("w")).as("w0"))
+        .groupBy(col("ca"), col("cb")).agg(sum(col("w0")).as("w"))
     }
-    val labels = louvainMovesOn(prep, rounds, colors).localCheckpoint()
-    val (und, _, _) = prep
-    und
-      .join(labels.select(col("id").as("a"), col("label").as("la")), "a")
-      .join(labels.select(col("id").as("b"), col("label").as("lb")), "b")
-      .select(least(col("la"), col("lb")).as("ca"),
-        greatest(col("la"), col("lb")).as("cb"),
-        when(col("la") === col("lb"), col("w") * 2L).otherwise(col("w")).as("w0"))
-      .groupBy(col("ca"), col("cb")).agg(sum(col("w0")).as("w"))
   }
 
   /** KG summarization over the [[louvainMoves]] partition: one row per
@@ -1114,9 +1117,7 @@ object GraphOps {
     // small-graph fast path: moves and all three rollups driver-side off
     // the one collected adjacency (exact Long sums; representative = max
     // weighted degree, ties to the smallest id in binary UTF-8 order)
-    localAdj(prep._2).foreach { a =>
-      val spark = edges.sparkSession
-      import spark.implicits._
+    localAdj("communityProfile", prep._2).map { a =>
       val label = louvainMovesDriver(a, rounds, colors).toMap
       val ki = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       a.foreach { case (x, _, w) => ki(x) += w }
@@ -1135,28 +1136,29 @@ object GraphOps {
       a.foreach { case (x, n, w) =>
         if (sparkStringOrdering.lt(x, n) && label(x) == label(n)) in2(label(x)) += w * 2L
       }
-      return csize.keys.toSeq.map(l => (l, csize(l), totKi(l), in2(l), top(l)))
-        .toDF("label", "csize", "tot_ki", "in2_w", "top_member")
+      localDf(edges, csize.keys.toSeq.map(l => (l, csize(l), totKi(l), in2(l), top(l))),
+        "label", "csize", "tot_ki", "in2_w", "top_member")
+    }.getOrElse {
+      val labels = louvainMovesOn(prep, rounds, colors).localCheckpoint()
+      val (und, _, deg) = prep
+      val withKi = labels.join(deg.select(col("x").as("id"), col("ki")), "id")
+        .localCheckpoint()
+      val sz = withKi.groupBy(col("label"))
+        .agg(count(lit(1)).as("csize"), sum(col("ki")).as("tot_ki"))
+      val inw = und
+        .join(labels.select(col("id").as("a"), col("label").as("la")), "a")
+        .join(labels.select(col("id").as("b"), col("label").as("lb")), "b")
+        .filter(col("la") === col("lb"))
+        .groupBy(col("la").as("label")).agg((sum(col("w")) * 2L).as("in2_w"))
+      val top = withKi
+        .withColumn("rn", row_number().over(
+          Window.partitionBy(col("label")).orderBy(col("ki").desc, col("id").asc)))
+        .filter(col("rn") === 1).select(col("label"), col("id").as("top_member"))
+      sz.join(inw, Seq("label"), "left")
+        .select(col("label"), col("csize"), col("tot_ki"),
+          coalesce(col("in2_w"), lit(0L)).as("in2_w"))
+        .join(top, "label")
     }
-    val labels = louvainMovesOn(prep, rounds, colors).localCheckpoint()
-    val (und, _, deg) = prep
-    val withKi = labels.join(deg.select(col("x").as("id"), col("ki")), "id")
-      .localCheckpoint()
-    val sz = withKi.groupBy(col("label"))
-      .agg(count(lit(1)).as("csize"), sum(col("ki")).as("tot_ki"))
-    val inw = und
-      .join(labels.select(col("id").as("a"), col("label").as("la")), "a")
-      .join(labels.select(col("id").as("b"), col("label").as("lb")), "b")
-      .filter(col("la") === col("lb"))
-      .groupBy(col("la").as("label")).agg((sum(col("w")) * 2L).as("in2_w"))
-    val top = withKi
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("label")).orderBy(col("ki").desc, col("id").asc)))
-      .filter(col("rn") === 1).select(col("label"), col("id").as("top_member"))
-    sz.join(inw, Seq("label"), "left")
-      .select(col("label"), col("csize"), col("tot_ki"),
-        coalesce(col("in2_w"), lit(0L)).as("in2_w"))
-      .join(top, "label")
   }
 
   /** Weisfeiler-Lehman structural relabeling (the 1-WL color refinement
@@ -1173,19 +1175,14 @@ object GraphOps {
     * degree), lineage truncated. Output: (id, wl). Engine extension, no
     * reference counterpart. */
   def wlLabels(edges: DataFrame, rounds: Int = 2): DataFrame = {
-    val und = edges.filter(col("source") =!= col("target"))
-      .select(least(col("source"), col("target")).as("a"),
-        greatest(col("source"), col("target")).as("b"))
-      .distinct()
+    val und = undirectedSimple(edges)
     val adj = und.select(col("a").as("x"), col("b").as("n"))
       .union(und.select(col("b"), col("a")))
       .localCheckpoint()
     // small-graph fast path: degree-seeded md5 relabeling driver-side —
     // per round lbl := md5hex(lbl | "|" | sorted-neighbor-lbls joined ",")
     // with the neighbor multiset sorted in UTF-8 binary order
-    localPairs(adj).foreach { a =>
-      val spark = edges.sparkSession
-      import spark.implicits._
+    localPairs("wlLabels", adj).map { a =>
       val nbrs = a.groupBy(_._1).map { case (x, g) => x -> g.map(_._2) }
       var lbl: collection.Map[String, String] =
         nbrs.map { case (x, ns) => x -> ns.length.toString }
@@ -1198,28 +1195,29 @@ object GraphOps {
           x -> d.map(b => f"$b%02x").mkString
         }
       }
-      return lbl.toSeq.toDF("id", "wl")
+      localDf(edges, lbl.toSeq, "id", "wl")
+    }.getOrElse {
+      var labels = adj.groupBy(col("x").as("id"))
+        .agg(count(lit(1)).cast("string").as("lbl"))
+      val ck = roundCkpt(rounds, maxLazy = 4)
+      for (_ <- 1 to rounds) {
+        val nb = adj.join(labels.select(col("id").as("n"), col("lbl")), "n")
+          .groupBy(col("x")).agg(sort_array(collect_list(col("lbl"))).as("nl"))
+        labels = ck(labels.join(nb, col("id") === nb("x"))
+          .select(col("id"), md5(concat(col("lbl"), lit("|"),
+            array_join(col("nl"), ",")).cast("binary")).as("lbl")))
+      }
+      labels.select(col("id"), col("lbl").as("wl"))
     }
-    var labels = adj.groupBy(col("x").as("id"))
-      .agg(count(lit(1)).cast("string").as("lbl"))
-    val ck = roundCkpt(rounds, maxLazy = 4)
-    for (_ <- 1 to rounds) {
-      val nb = adj.join(labels.select(col("id").as("n"), col("lbl")), "n")
-        .groupBy(col("x")).agg(sort_array(collect_list(col("lbl"))).as("nl"))
-      labels = ck(labels.join(nb, col("id") === nb("x"))
-        .select(col("id"), md5(concat(col("lbl"), lit("|"),
-          array_join(col("nl"), ",")).cast("binary")).as("lbl")))
-    }
-    labels.select(col("id"), col("lbl").as("wl"))
   }
 
   /** Driver-side wedge prep: the undirected simple adjacency collected
     * when small — (full degrees, per-node SORTED neighbor list in UTF-8
     * binary order so pair loops emit a < b exactly once). None when the
     * graph is big or non-string-keyed (distributed path runs). */
-  private def wedgeDriver(und: DataFrame)
+  private def wedgeDriver(label: String, und: DataFrame)
       : Option[(collection.Map[String, Long], collection.Map[String, Array[String]])] = {
-    localPairs(und).map { pairs =>
+    localPairs(label, und).map { pairs =>
       val deg = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       pairs.foreach { case (a, b) => deg(a) += 1L; deg(b) += 1L }
       val members = (pairs.map { case (a, b) => (b, a) } ++ pairs)
@@ -1255,9 +1253,7 @@ object GraphOps {
     // contributes 1e6 div floor(log2(deg z)) to every pair of its
     // neighbors — the length(bin(deg))-1 expression verbatim
     val undA = undirectedSimple(edges).localCheckpoint()
-    wedgeDriver(undA).foreach { case (deg, members) =>
-      val spark = edges.sparkSession
-      import spark.implicits._
+    wedgeDriver("adamicAdar", undA).map { case (deg, members) =>
       val inter = collection.mutable.HashMap.empty[(String, String), Long]
         .withDefaultValue(0L)
       val aa = collection.mutable.HashMap.empty[(String, String), Long]
@@ -1276,24 +1272,25 @@ object GraphOps {
           }
         }
       }
-      return inter.keys.toSeq.map { case k2 @ (a, b) => (a, b, inter(k2), aa(k2)) }
-        .toDF("a", "b", "inter", "aa_scaled")
+      localDf(edges, inter.keys.toSeq.map { case k2 @ (a, b) => (a, b, inter(k2), aa(k2)) },
+        "a", "b", "inter", "aa_scaled")
+    }.getOrElse {
+      val (_, small0) = wedgePrep(undA, maxDegree)
+      // a degree-1 node can never be a SHARED neighbor (it has one incident
+      // wedge side), so it forms no pair — and ilog2(1) = 0 would divide by
+      // zero if the projection runs before the join filter (plan-order
+      // dependent under ANSI). Filter first: correct AND total.
+      val small = small0.filter(col("deg") >= 2)
+      // truncating integer division (Spark `div` == DuckDB `//` on positives)
+      small.select(col("x").as("pa"), col("n"),
+          expr("1000000L div (length(bin(deg)) - 1)").as("aa_z"))
+        .join(small.select(col("x").as("pb"), col("n")), "n")
+        .filter(col("pa") < col("pb"))
+        .groupBy(col("pa"), col("pb"))
+        .agg(count(lit(1)).as("inter"),
+          sum(col("aa_z")).cast("long").as("aa_scaled"))
+        .select(col("pa").as("a"), col("pb").as("b"), col("inter"), col("aa_scaled"))
     }
-    val (_, small0) = wedgePrep(undA, maxDegree)
-    // a degree-1 node can never be a SHARED neighbor (it has one incident
-    // wedge side), so it forms no pair — and ilog2(1) = 0 would divide by
-    // zero if the projection runs before the join filter (plan-order
-    // dependent under ANSI). Filter first: correct AND total.
-    val small = small0.filter(col("deg") >= 2)
-    // truncating integer division (Spark `div` == DuckDB `//` on positives)
-    small.select(col("x").as("pa"), col("n"),
-        expr("1000000L div (length(bin(deg)) - 1)").as("aa_z"))
-      .join(small.select(col("x").as("pb"), col("n")), "n")
-      .filter(col("pa") < col("pb"))
-      .groupBy(col("pa"), col("pb"))
-      .agg(count(lit(1)).as("inter"),
-        sum(col("aa_z")).cast("long").as("aa_scaled"))
-      .select(col("pa").as("a"), col("pb").as("b"), col("inter"), col("aa_scaled"))
   }
 
   /** Multi-round BFS distances from one source node over the DIRECTED simple
@@ -1321,27 +1318,26 @@ object GraphOps {
       .distinct().localCheckpoint(true)
     // small-graph fast path: the frontier BFS driver-side (identical
     // hop-count distances; nodes unreached within the budget are absent)
-    localPairs(adj).foreach { es =>
-      val spark0 = edges.sparkSession
-      import spark0.implicits._
+    localPairs("bfs", adj).map { es =>
       val d = allPairsDistDriver(es, rounds, Array(source))
-      return d.toSeq.map { case ((_, dst), dd) => (dst, dd) }.toDF("id", "dist")
-    }
-    val spark = edges.sparkSession
-    var dist = spark.range(1).select(lit(source).as("id"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    var frontier = dist.select(col("id"))
-    for (r <- 1 to rounds) {
-      val reached = frontier.join(adj, frontier("id") === adj("src"))
-        .select(col("dst").as("id")).distinct()
-      val fresh = reached.join(dist.select(col("id").as("seen")),
-          reached("id") === col("seen"), "left_anti")
+      localDf(edges, d.toSeq.map { case ((_, dst), dd) => (dst, dd) }, "id", "dist")
+    }.getOrElse {
+      val spark = edges.sparkSession
+      var dist = spark.range(1).select(lit(source).as("id"), lit(0L).as("dist"))
         .localCheckpoint(true)
-      dist = dist.union(fresh.select(col("id"), lit(r.toLong).as("dist")))
-        .localCheckpoint(true)
-      frontier = fresh
+      var frontier = dist.select(col("id"))
+      for (r <- 1 to rounds) {
+        val reached = frontier.join(adj, frontier("id") === adj("src"))
+          .select(col("dst").as("id")).distinct()
+        val fresh = reached.join(dist.select(col("id").as("seen")),
+            reached("id") === col("seen"), "left_anti")
+          .localCheckpoint(true)
+        dist = dist.union(fresh.select(col("id"), lit(r.toLong).as("dist")))
+          .localCheckpoint(true)
+        frontier = fresh
+      }
+      dist
     }
-    dist
   }
 
   /** HyperBall (Boldi–Vigna): per-node HyperLogLog sketches of the out-ball
@@ -1465,9 +1461,7 @@ object GraphOps {
     // small-graph fast path: LPA labels AND the modularity rollups
     // driver-side off the one collected adjacency (exact Long sums,
     // q_num = in2_w * 2m - deg_w^2 — the distributed expression verbatim)
-    localAdj(adjLazy).foreach { a =>
-      val spark = edges.sparkSession
-      import spark.implicits._
+    localAdj("modularity", adjLazy).map { a =>
       val label = lpaDriver(a, rounds).toMap
       val dw = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       a.foreach { case (x, _, w) => dw(x) += w }
@@ -1478,33 +1472,34 @@ object GraphOps {
         if (sparkStringOrdering.lt(x, n) && label(x) == label(n)) in2(label(x)) += w * 2L
       }
       label.foreach { case (x, l) => degW(l) += dw(x) }
-      return degW.keys.toSeq
-        .map(l => (l, in2(l), degW(l), in2(l) * m2 - degW(l) * degW(l)))
-        .toDF("label", "in2_w", "deg_w", "q_num")
+      localDf(edges, degW.keys.toSeq
+        .map(l => (l, in2(l), degW(l), in2(l) * m2 - degW(l) * degW(l))),
+        "label", "in2_w", "deg_w", "q_num")
+    }.getOrElse {
+      val labels = lpaOn(adjLazy.localCheckpoint(), rounds)
+        .localCheckpoint()
+      val within = und
+        .join(labels.select(col("id").as("a"), col("label").as("la")), "a")
+        .join(labels.select(col("id").as("b"), col("label").as("lb")), "b")
+        .filter(col("la") === col("lb"))
+        .groupBy(col("la").as("label")).agg((sum(col("w")) * 2).as("in2_w"))
+      val degs = und.select(explode(array(
+          struct(col("a").as("id"), col("w")),
+          struct(col("b").as("id"), col("w")))).as("e"))
+        .select(col("e.id").as("id"), col("e.w").as("w"))
+        .groupBy("id").agg(sum("w").as("dw"))
+        .localCheckpoint(true)
+      val degc = degs.join(labels, "id")
+        .groupBy(col("label")).agg(sum(col("dw")).as("deg_w"))
+      val m2 = degs.agg(sum(col("dw")).as("m2"))
+      degc.join(within, Seq("label"), "left")
+        .crossJoin(broadcast(m2))
+        .select(col("label"),
+          coalesce(col("in2_w"), lit(0L)).as("in2_w"),
+          col("deg_w"),
+          (coalesce(col("in2_w"), lit(0L)) * col("m2") -
+            col("deg_w") * col("deg_w")).as("q_num"))
     }
-    val labels = lpaOn(adjLazy.localCheckpoint(), rounds)
-      .localCheckpoint()
-    val within = und
-      .join(labels.select(col("id").as("a"), col("label").as("la")), "a")
-      .join(labels.select(col("id").as("b"), col("label").as("lb")), "b")
-      .filter(col("la") === col("lb"))
-      .groupBy(col("la").as("label")).agg((sum(col("w")) * 2).as("in2_w"))
-    val degs = und.select(explode(array(
-        struct(col("a").as("id"), col("w")),
-        struct(col("b").as("id"), col("w")))).as("e"))
-      .select(col("e.id").as("id"), col("e.w").as("w"))
-      .groupBy("id").agg(sum("w").as("dw"))
-      .localCheckpoint(true)
-    val degc = degs.join(labels, "id")
-      .groupBy(col("label")).agg(sum(col("dw")).as("deg_w"))
-    val m2 = degs.agg(sum(col("dw")).as("m2"))
-    degc.join(within, Seq("label"), "left")
-      .crossJoin(broadcast(m2))
-      .select(col("label"),
-        coalesce(col("in2_w"), lit(0L)).as("in2_w"),
-        col("deg_w"),
-        (coalesce(col("in2_w"), lit(0L)) * col("m2") -
-          col("deg_w") * col("deg_w")).as("q_num"))
   }
 
   /** Luby-style maximal independent set over the undirected simple graph —
@@ -1535,9 +1530,7 @@ object GraphOps {
     // priority is the same md5(id|seed)||id string compared in UTF-8
     // binary order, winners/covered/undecided evolve identically
     // (spec-pinned vs the distributed loop)
-    localPairs(adj).foreach { a =>
-      val spark = edges.sparkSession
-      import spark.implicits._
+    localPairs("maximalIndependentSet", adj).map { a =>
       def prioD(id: String): String = {
         val d = java.security.MessageDigest.getInstance("MD5")
           .digest((id + "|" + seed).getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -1558,37 +1551,38 @@ object GraphOps {
         cov ++= newlyCov
         undec = undec.diff(winners).diff(newlyCov)
       }
-      return (mis.toSeq.map(_ -> "mis") ++ cov.toSeq.map(_ -> "covered") ++
-        undec.toSeq.map(_ -> "undecided")).toDF("id", "state")
+      localDf(edges, mis.toSeq.map(_ -> "mis") ++ cov.toSeq.map(_ -> "covered") ++
+        undec.toSeq.map(_ -> "undecided"), "id", "state")
+    }.getOrElse {
+      val nodes = adj.select(col("x").as("id")).distinct()
+      var undecided = nodes.localCheckpoint(true)
+      var mis = undecided.filter(lit(false)) // empty (id)
+      var covered = mis
+      for (_ <- 1 to rounds) {
+        val live = adj.join(undecided.select(col("id").as("x")), "x")
+          .join(undecided.select(col("id").as("n")), "n")
+        val minNbr = live.groupBy(col("x")).agg(min(prio(col("n"))).as("mp"))
+        // isolated undecided nodes (no undecided neighbor) enter unconditionally
+        val winners = undecided
+          .join(minNbr, undecided("id") === minNbr("x"), "left")
+          .filter(col("mp").isNull || prio(col("id")) < col("mp"))
+          .select(col("id")).localCheckpoint(true)
+        val newlyCovered = adj.join(winners.select(col("id").as("x")), "x")
+          .select(col("n").as("id")).distinct()
+          .join(winners, Seq("id"), "left_anti")
+          .join(covered, Seq("id"), "left_anti")
+          .localCheckpoint(true)
+        mis = mis.union(winners).localCheckpoint(true)
+        covered = covered.union(newlyCovered).localCheckpoint(true)
+        undecided = undecided
+          .join(winners, Seq("id"), "left_anti")
+          .join(newlyCovered, Seq("id"), "left_anti")
+          .localCheckpoint(true)
+      }
+      mis.select(col("id"), lit("mis").as("state"))
+        .union(covered.select(col("id"), lit("covered").as("state")))
+        .union(undecided.select(col("id"), lit("undecided").as("state")))
     }
-    val nodes = adj.select(col("x").as("id")).distinct()
-    var undecided = nodes.localCheckpoint(true)
-    var mis = undecided.filter(lit(false)) // empty (id)
-    var covered = mis
-    for (_ <- 1 to rounds) {
-      val live = adj.join(undecided.select(col("id").as("x")), "x")
-        .join(undecided.select(col("id").as("n")), "n")
-      val minNbr = live.groupBy(col("x")).agg(min(prio(col("n"))).as("mp"))
-      // isolated undecided nodes (no undecided neighbor) enter unconditionally
-      val winners = undecided
-        .join(minNbr, undecided("id") === minNbr("x"), "left")
-        .filter(col("mp").isNull || prio(col("id")) < col("mp"))
-        .select(col("id")).localCheckpoint(true)
-      val newlyCovered = adj.join(winners.select(col("id").as("x")), "x")
-        .select(col("n").as("id")).distinct()
-        .join(winners, Seq("id"), "left_anti")
-        .join(covered, Seq("id"), "left_anti")
-        .localCheckpoint(true)
-      mis = mis.union(winners).localCheckpoint(true)
-      covered = covered.union(newlyCovered).localCheckpoint(true)
-      undecided = undecided
-        .join(winners, Seq("id"), "left_anti")
-        .join(newlyCovered, Seq("id"), "left_anti")
-        .localCheckpoint(true)
-    }
-    mis.select(col("id"), lit("mis").as("state"))
-      .union(covered.select(col("id"), lit("covered").as("state")))
-      .union(undecided.select(col("id"), lit("undecided").as("state")))
   }
 
   /** Exact Katz centrality within `rounds` path lengths, in scaled-integer
@@ -1610,37 +1604,37 @@ object GraphOps {
       .distinct().localCheckpoint(true)
     // small-graph fast path: c_t(v) = Σ_{u→v} (num·c_{t-1}(u)) div den,
     // katz = Σ_t c_t — per-edge truncating division on non-negatives, so
-    // the driver replica is exact (spec-pinned vs the loop)
-    localPairs(adj).foreach { es =>
-      val spark = edges.sparkSession
-      import spark.implicits._
+    // the driver replica is exact (spec-pinned vs the loop); checked
+    // arithmetic raises where the loop's ANSI overflow does
+    localPairs("katz", adj).map { es =>
       val nodes = (es.map(_._1) ++ es.map(_._2)).distinct
       var c: collection.Map[String, Long] = nodes.map(_ -> 1000000L).toMap
       val acc = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       for (_ <- 1 to rounds) {
         val nxt = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
-        es.foreach { case (s, t) => nxt(t) += (num * c(s)) / den }
+        es.foreach { case (s, t) => nxt(t) = addExact(nxt(t), multiplyExact(num, c(s)) / den) }
         c = nodes.map(n => n -> nxt(n)).toMap
-        nodes.foreach(n => acc(n) += c(n))
+        nodes.foreach(n => acc(n) = addExact(acc(n), c(n)))
       }
-      return nodes.toSeq.map(n => (n, acc(n))).toDF("id", "k")
+      localDf(edges, nodes.toSeq.map(n => (n, acc(n))), "id", "k")
+    }.getOrElse {
+      val nodes = adj.select(col("src").as("id"))
+        .union(adj.select(col("dst").as("id"))).distinct().localCheckpoint(true)
+      var c = nodes.select(col("id"), lit(1000000L).as("c"))
+      var katzAcc = nodes.select(col("id"), lit(0L).as("k"))
+      // c feeds two consumers per round (next hop + the accumulator join)
+      val ck = roundCkpt(rounds, maxLazy = 5)
+      for (_ <- 1 to rounds) {
+        val next = adj.join(c, adj("src") === c("id"))
+          .select(col("dst").as("id"), expr(s"($num * c) div $den").as("contrib"))
+          .groupBy(col("id")).agg(sum(col("contrib")).as("c"))
+        c = ck(nodes.join(next, Seq("id"), "left")
+          .select(col("id"), coalesce(col("c"), lit(0L)).as("c")))
+        katzAcc = ck(katzAcc.join(c.select(col("id"), col("c")), Seq("id"))
+          .select(col("id"), (col("k") + col("c")).as("k")))
+      }
+      katzAcc
     }
-    val nodes = adj.select(col("src").as("id"))
-      .union(adj.select(col("dst").as("id"))).distinct().localCheckpoint(true)
-    var c = nodes.select(col("id"), lit(1000000L).as("c"))
-    var katzAcc = nodes.select(col("id"), lit(0L).as("k"))
-    // c feeds two consumers per round (next hop + the accumulator join)
-    val ck = roundCkpt(rounds, maxLazy = 5)
-    for (_ <- 1 to rounds) {
-      val next = adj.join(c, adj("src") === c("id"))
-        .select(col("dst").as("id"), expr(s"($num * c) div $den").as("contrib"))
-        .groupBy(col("id")).agg(sum(col("contrib")).as("c"))
-      c = ck(nodes.join(next, Seq("id"), "left")
-        .select(col("id"), coalesce(col("c"), lit(0L)).as("c")))
-      katzAcc = ck(katzAcc.join(c.select(col("id"), col("c")), Seq("id"))
-        .select(col("id"), (col("k") + col("c")).as("k")))
-    }
-    katzAcc
   }
 
   /** Bounded all-pairs BFS distances driver-side — the [[harmonic]]/
@@ -1688,31 +1682,30 @@ object GraphOps {
       .distinct().localCheckpoint(true)
     // small-graph fast path: the bounded all-pairs relation driver-side,
     // same Σ 1e6 div dist rollup (integer div, non-negative) — spec-pinned
-    localPairs(adj).foreach { es =>
-      val spark = edges.sparkSession
-      import spark.implicits._
+    localPairs("harmonic", adj).map { es =>
       val ns = (es.map(_._1) ++ es.map(_._2)).distinct
       val dist = allPairsDistDriver(es, rounds, ns)
       val h = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       dist.foreach { case ((s, t), d) => if (s != t) h(s) += 1000000L / d }
-      return ns.toSeq.map(n => (n, h(n))).toDF("id", "h")
-    }
-    val nodes = adj.select(col("asrc").as("id"))
-      .union(adj.select(col("adst").as("id"))).distinct().localCheckpoint(true)
-    var dist = nodes.select(col("id").as("src"), col("id").as("dst"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val ext = dist.join(adj, dist("dst") === adj("asrc"))
-        .select(col("src"), col("adst").as("dst"), (col("dist") + 1L).as("dist"))
-      dist = dist.union(ext)
-        .groupBy(col("src"), col("dst")).agg(min(col("dist")).as("dist"))
+      localDf(edges, ns.toSeq.map(n => (n, h(n))), "id", "h")
+    }.getOrElse {
+      val nodes = adj.select(col("asrc").as("id"))
+        .union(adj.select(col("adst").as("id"))).distinct().localCheckpoint(true)
+      var dist = nodes.select(col("id").as("src"), col("id").as("dst"), lit(0L).as("dist"))
         .localCheckpoint(true)
+      for (_ <- 1 to rounds) {
+        val ext = dist.join(adj, dist("dst") === adj("asrc"))
+          .select(col("src"), col("adst").as("dst"), (col("dist") + 1L).as("dist"))
+        dist = dist.union(ext)
+          .groupBy(col("src"), col("dst")).agg(min(col("dist")).as("dist"))
+          .localCheckpoint(true)
+      }
+      val h = dist.filter(col("src") =!= col("dst"))
+        .groupBy(col("src"))
+        .agg(sum(expr("1000000 div dist")).as("h"))
+      nodes.join(h, nodes("id") === h("src"), "left")
+        .select(col("id"), coalesce(col("h"), lit(0L)).as("h"))
     }
-    val h = dist.filter(col("src") =!= col("dst"))
-      .groupBy(col("src"))
-      .agg(sum(expr("1000000 div dist")).as("h"))
-    nodes.join(h, nodes("id") === h("src"), "left")
-      .select(col("id"), coalesce(col("h"), lit(0L)).as("h"))
   }
 
   /** Closeness centrality in exact scaled integers over the same bounded
@@ -1728,39 +1721,38 @@ object GraphOps {
       .distinct().localCheckpoint(true)
     // small-graph fast path: same BFS relation + the exact 1e6·reach div
     // Σdist rollup, zero for sinks — spec-pinned
-    localPairs(adj).foreach { es =>
-      val spark = edges.sparkSession
-      import spark.implicits._
+    localPairs("closeness", adj).map { es =>
       val ns = (es.map(_._1) ++ es.map(_._2)).distinct
       val dist = allPairsDistDriver(es, rounds, ns)
       val nr = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       val sd = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       dist.foreach { case ((s, t), d) => if (s != t) { nr(s) += 1L; sd(s) += d } }
-      return ns.toSeq.map { n =>
+      localDf(edges, ns.toSeq.map { n =>
         val c = if (sd(n) == 0L) 0L else (1000000L * nr(n)) / sd(n)
         (n, nr(n), sd(n), c)
-      }.toDF("id", "n_reach", "sum_dist", "closeness")
-    }
-    val nodes = adj.select(col("asrc").as("id"))
-      .union(adj.select(col("adst").as("id"))).distinct().localCheckpoint(true)
-    var dist = nodes.select(col("id").as("src"), col("id").as("dst"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val ext = dist.join(adj, dist("dst") === adj("asrc"))
-        .select(col("src"), col("adst").as("dst"), (col("dist") + 1L).as("dist"))
-      dist = dist.union(ext)
-        .groupBy(col("src"), col("dst")).agg(min(col("dist")).as("dist"))
+      }, "id", "n_reach", "sum_dist", "closeness")
+    }.getOrElse {
+      val nodes = adj.select(col("asrc").as("id"))
+        .union(adj.select(col("adst").as("id"))).distinct().localCheckpoint(true)
+      var dist = nodes.select(col("id").as("src"), col("id").as("dst"), lit(0L).as("dist"))
         .localCheckpoint(true)
+      for (_ <- 1 to rounds) {
+        val ext = dist.join(adj, dist("dst") === adj("asrc"))
+          .select(col("src"), col("adst").as("dst"), (col("dist") + 1L).as("dist"))
+        dist = dist.union(ext)
+          .groupBy(col("src"), col("dst")).agg(min(col("dist")).as("dist"))
+          .localCheckpoint(true)
+      }
+      val c = dist.filter(col("src") =!= col("dst"))
+        .groupBy(col("src"))
+        .agg(count(lit(1)).as("n_reach"), sum(col("dist")).as("sum_dist"))
+      nodes.join(c, nodes("id") === c("src"), "left")
+        .select(col("id"),
+          coalesce(col("n_reach"), lit(0L)).as("n_reach"),
+          coalesce(col("sum_dist"), lit(0L)).as("sum_dist"),
+          when(coalesce(col("sum_dist"), lit(0L)) === 0L, lit(0L))
+            .otherwise(expr("1000000 * n_reach div sum_dist")).as("closeness"))
     }
-    val c = dist.filter(col("src") =!= col("dst"))
-      .groupBy(col("src"))
-      .agg(count(lit(1)).as("n_reach"), sum(col("dist")).as("sum_dist"))
-    nodes.join(c, nodes("id") === c("src"), "left")
-      .select(col("id"),
-        coalesce(col("n_reach"), lit(0L)).as("n_reach"),
-        coalesce(col("sum_dist"), lit(0L)).as("sum_dist"),
-        when(coalesce(col("sum_dist"), lit(0L)) === 0L, lit(0L))
-          .otherwise(expr("1000000 * n_reach div sum_dist")).as("closeness"))
   }
 
   /** Betweenness centrality by bounded-radius Brandes in exact scaled
@@ -1897,9 +1889,7 @@ object GraphOps {
     // semantics (min-id pivot in UTF-8 binary order, innerRounds-bounded
     // forward/backward balls over the undecided-restricted edges, the
     // UNDECIDED sentinel for budget exhaustion). Spec-pinned vs the loop.
-    localPairs(adj).foreach { es =>
-      val spark = edges.sparkSession
-      import spark.implicits._
+    localPairs("scc", adj).map { es =>
       var undec = (es.map(_._1) ++ es.map(_._2)).distinct.toSet
       val out = collection.mutable.ArrayBuffer.empty[(String, String)]
       var outer = 0
@@ -1923,43 +1913,44 @@ object GraphOps {
         undec = undec diff sccSet
       }
       out ++= undec.toSeq.map(_ -> "UNDECIDED")
-      return out.toSeq.toDF("id", "scc")
-    }
-    val nodes = adj.select(col("src").as("id"))
-      .union(adj.select(col("dst").as("id"))).distinct()
-    val spark = edges.sparkSession
-    import spark.implicits._
-    var undecided = nodes.localCheckpoint(true)
-    var decided: Option[DataFrame] = None
-    var done = false
-    for (_ <- 1 to outerRounds if !done) {
-      val pvRow = undecided.agg(min(col("id"))).head()
-      if (pvRow.isNullAt(0)) done = true
-      else {
-        val pivot = pvRow.getString(0)
-        val ra = adj
-          .join(undecided.select(col("id").as("src")), Seq("src"))
-          .join(undecided.select(col("id").as("dst")), Seq("dst"))
-          .select(col("src"), col("dst")).localCheckpoint(true)
-        def reach(forward: Boolean): DataFrame = {
-          var set = Seq(pivot).toDF("id").localCheckpoint(true)
-          for (_ <- 1 to innerRounds) {
-            val step =
-              if (forward) set.join(ra, set("id") === ra("src")).select(ra("dst").as("id"))
-              else set.join(ra, set("id") === ra("dst")).select(ra("src").as("id"))
-            set = set.union(step).distinct().localCheckpoint(true)
+      localDf(edges, out.toSeq, "id", "scc")
+    }.getOrElse {
+      val nodes = adj.select(col("src").as("id"))
+        .union(adj.select(col("dst").as("id"))).distinct()
+      val spark = edges.sparkSession
+      import spark.implicits._
+      var undecided = nodes.localCheckpoint(true)
+      var decided: Option[DataFrame] = None
+      var done = false
+      for (_ <- 1 to outerRounds if !done) {
+        val pvRow = undecided.agg(min(col("id"))).head()
+        if (pvRow.isNullAt(0)) done = true
+        else {
+          val pivot = pvRow.getString(0)
+          val ra = adj
+            .join(undecided.select(col("id").as("src")), Seq("src"))
+            .join(undecided.select(col("id").as("dst")), Seq("dst"))
+            .select(col("src"), col("dst")).localCheckpoint(true)
+          def reach(forward: Boolean): DataFrame = {
+            var set = Seq(pivot).toDF("id").localCheckpoint(true)
+            for (_ <- 1 to innerRounds) {
+              val step =
+                if (forward) set.join(ra, set("id") === ra("src")).select(ra("dst").as("id"))
+                else set.join(ra, set("id") === ra("dst")).select(ra("src").as("id"))
+              set = set.union(step).distinct().localCheckpoint(true)
+            }
+            set
           }
-          set
+          val sccSet = reach(forward = true).join(reach(forward = false), "id")
+            .localCheckpoint(true)
+          val labeled = sccSet.withColumn("scc", lit(pivot))
+          decided = Some(decided.map(_.union(labeled)).getOrElse(labeled))
+          undecided = undecided.join(sccSet, Seq("id"), "left_anti").localCheckpoint(true)
         }
-        val sccSet = reach(forward = true).join(reach(forward = false), "id")
-          .localCheckpoint(true)
-        val labeled = sccSet.withColumn("scc", lit(pivot))
-        decided = Some(decided.map(_.union(labeled)).getOrElse(labeled))
-        undecided = undecided.join(sccSet, Seq("id"), "left_anti").localCheckpoint(true)
       }
+      val rest = undecided.withColumn("scc", lit("UNDECIDED"))
+      decided.map(_.union(rest)).getOrElse(rest)
     }
-    val rest = undecided.withColumn("scc", lit("UNDECIDED"))
-    decided.map(_.union(rest)).getOrElse(rest)
   }
 
   /** Exact neighborhood function + effective diameter (engine extension; no
@@ -1989,9 +1980,7 @@ object GraphOps {
     // small-graph fast path: same BFS relation; the cumulative/effective-
     // diameter read is over rounds+1 rows — pure driver arithmetic
     // (pairs_within·10 >= total·9, first radius reaching it flagged)
-    localPairs(adj).foreach { es =>
-      val spark = edges.sparkSession
-      import spark.implicits._
+    localPairs("neighborhoodFunction", adj).map { es =>
       val ns = (es.map(_._1) ++ es.map(_._2)).distinct
       val dist = allPairsDistDriver(es, rounds, ns)
       val perR = dist.groupBy(_._2).map { case (r, g) => r -> g.size.toLong }
@@ -2006,33 +1995,34 @@ object GraphOps {
         prevReached = reached
         (r, at, within, isEff)
       }
-      return rows.toDF("radius", "pairs_at", "pairs_within", "is_effective_diameter")
-    }
-    val nodes = adj.select(col("asrc").as("id"))
-      .union(adj.select(col("adst").as("id"))).distinct().localCheckpoint(true)
-    var dist = nodes.select(col("id").as("src"), col("id").as("dst"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val ext = dist.join(adj, dist("dst") === adj("asrc"))
-        .select(col("src"), col("adst").as("dst"), (col("dist") + 1L).as("dist"))
-      dist = dist.union(ext)
-        .groupBy(col("src"), col("dst")).agg(min(col("dist")).as("dist"))
+      localDf(edges, rows, "radius", "pairs_at", "pairs_within", "is_effective_diameter")
+    }.getOrElse {
+      val nodes = adj.select(col("asrc").as("id"))
+        .union(adj.select(col("adst").as("id"))).distinct().localCheckpoint(true)
+      var dist = nodes.select(col("id").as("src"), col("id").as("dst"), lit(0L).as("dist"))
         .localCheckpoint(true)
+      for (_ <- 1 to rounds) {
+        val ext = dist.join(adj, dist("dst") === adj("asrc"))
+          .select(col("src"), col("adst").as("dst"), (col("dist") + 1L).as("dist"))
+        dist = dist.union(ext)
+          .groupBy(col("src"), col("dst")).agg(min(col("dist")).as("dist"))
+          .localCheckpoint(true)
+      }
+      val perRadius = dist.groupBy(col("dist").as("radius"))
+        .agg(count(lit(1)).as("pairs_at"))
+      // rounds+1 rows from here on — the global windows are driver-trivial
+      val wCum = Window.orderBy(col("radius"))
+      val wAll = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      perRadius
+        .withColumn("pairs_within", sum(col("pairs_at")).over(wCum))
+        .withColumn("total", max(col("pairs_within")).over(wAll))
+        .withColumn("reached", col("pairs_within") * 10 >= col("total") * 9)
+        .withColumn("is_effective_diameter",
+          col("reached") && !coalesce(lag(col("reached"), 1).over(wCum), lit(false)))
+        .select(col("radius"), col("pairs_at"),
+          col("pairs_within").cast("long").as("pairs_within"),
+          col("is_effective_diameter"))
     }
-    val perRadius = dist.groupBy(col("dist").as("radius"))
-      .agg(count(lit(1)).as("pairs_at"))
-    // rounds+1 rows from here on — the global windows are driver-trivial
-    val wCum = Window.orderBy(col("radius"))
-    val wAll = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    perRadius
-      .withColumn("pairs_within", sum(col("pairs_at")).over(wCum))
-      .withColumn("total", max(col("pairs_within")).over(wAll))
-      .withColumn("reached", col("pairs_within") * 10 >= col("total") * 9)
-      .withColumn("is_effective_diameter",
-        col("reached") && !coalesce(lag(col("reached"), 1).over(wCum), lit(false)))
-      .select(col("radius"), col("pairs_at"),
-        col("pairs_within").cast("long").as("pairs_within"),
-        col("is_effective_diameter"))
   }
 
   /** Snapshot diff between two aggregated edge relations (source, target,
@@ -2086,9 +2076,7 @@ object GraphOps {
     // per round, support = per-edge triangle count from the same a<b<c
     // enumeration, edges below k-2 dropped; final support recomputed on
     // the surviving relation (spec-pinned vs the loop)
-    localPairs(und).foreach { pairs0 =>
-      val spark = edges.sparkSession
-      import spark.implicits._
+    localPairs("kTruss", und).map { pairs0 =>
       def supportOf(u: Array[(String, String)]): collection.Map[(String, String), Long] = {
         val sup = collection.mutable.HashMap.empty[(String, String), Long]
           .withDefaultValue(0L)
@@ -2103,17 +2091,18 @@ object GraphOps {
         u = u.filter(e => sup(e) >= k - 2)
       }
       val fin = supportOf(u)
-      return u.toSeq.map { case (a, b) => (a, b, fin((a, b))) }
-        .toDF("a", "b", "support")
+      localDf(edges, u.toSeq.map { case (a, b) => (a, b, fin((a, b))) },
+        "a", "b", "support")
+    }.getOrElse {
+      for (_ <- 1 to rounds) {
+        und = und.join(support(und), Seq("a", "b"), "left")
+          .filter(coalesce(col("support"), lit(0L)) >= k - 2)
+          .select(col("a"), col("b"))
+          .localCheckpoint(true)
+      }
+      und.join(support(und), Seq("a", "b"), "left")
+        .select(col("a"), col("b"), coalesce(col("support"), lit(0L)).as("support"))
     }
-    for (_ <- 1 to rounds) {
-      und = und.join(support(und), Seq("a", "b"), "left")
-        .filter(coalesce(col("support"), lit(0L)) >= k - 2)
-        .select(col("a"), col("b"))
-        .localCheckpoint(true)
-    }
-    und.join(support(und), Seq("a", "b"), "left")
-      .select(col("a"), col("b"), coalesce(col("support"), lit(0L)).as("support"))
   }
 
   /** Edge reciprocity of the directed simple graph: what fraction of directed
@@ -2248,9 +2237,7 @@ object GraphOps {
     // the ranked adjacency — one bounded collect and every walk replays
     // driver-side (same md5(node|t|seed) pick mod degree over the same
     // dst-ascending neighbor ranks; sink nodes end walks). Spec-pinned.
-    localPairs(adjd.select(col("src"), col("dst"))).foreach { es =>
-      val spark = edges.sparkSession
-      import spark.implicits._
+    localPairs("randomWalks", adjd.select(col("src"), col("dst"))).map { es =>
       val ranked = rankedAdj(es)
       val nodes = (es.map(_._1) ++ es.map(_._2)).distinct
       val out = collection.mutable.ArrayBuffer.empty[(String, Long, String)]
@@ -2269,27 +2256,28 @@ object GraphOps {
           t += 1
         }
       }
-      return out.toSeq.toDF("start", "step", "node")
+      localDf(edges, out.toSeq, "start", "step", "node")
+    }.getOrElse {
+      // node set read off the CHECKPOINTED adjacency (same rows, extra rank
+      // columns dropped) — deriving it from the lazy `adj` re-ran the whole
+      // upstream edge pipeline a second time
+      val nodes = adjd.select(col("src").as("id"))
+        .union(adjd.select(col("dst"))).distinct()
+      // cur feeds two consumers per step (next hop + the output union)
+      val ck = roundCkpt(walkLen, maxLazy = 5)
+      var cur = ck(
+        nodes.select(col("id").as("start"), col("id").as("node")))
+      var out = cur.select(col("start"), lit(0L).as("step"), col("node"))
+      for (t <- 1 to walkLen) {
+        val pick = conv(substring(md5(
+            concat(col("node"), lit(s"|$t|$seed"))), 1, 15), 16, 10)
+          .cast("long") % col("deg")
+        cur = ck(cur.join(adjd, cur("node") === adjd("src") && col("rnk") === pick)
+          .select(col("start"), col("dst").as("node")))
+        out = out.union(cur.select(col("start"), lit(t.toLong).as("step"), col("node")))
+      }
+      out
     }
-    // node set read off the CHECKPOINTED adjacency (same rows, extra rank
-    // columns dropped) — deriving it from the lazy `adj` re-ran the whole
-    // upstream edge pipeline a second time
-    val nodes = adjd.select(col("src").as("id"))
-      .union(adjd.select(col("dst"))).distinct()
-    // cur feeds two consumers per step (next hop + the output union)
-    val ck = roundCkpt(walkLen, maxLazy = 5)
-    var cur = ck(
-      nodes.select(col("id").as("start"), col("id").as("node")))
-    var out = cur.select(col("start"), lit(0L).as("step"), col("node"))
-    for (t <- 1 to walkLen) {
-      val pick = conv(substring(md5(
-          concat(col("node"), lit(s"|$t|$seed"))), 1, 15), 16, 10)
-        .cast("long") % col("deg")
-      cur = ck(cur.join(adjd, cur("node") === adjd("src") && col("rnk") === pick)
-        .select(col("start"), col("dst").as("node")))
-      out = out.union(cur.select(col("start"), lit(t.toLong).as("step"), col("node")))
-    }
-    out
   }
 
   /** node2vec-style SECOND-ORDER walks (Grover–Leskovec) — the walk corpus
@@ -2324,9 +2312,7 @@ object GraphOps {
     // md5(prev|cur|t|seed) mod Σmult over the cumulative ranges of the
     // rank-ordered candidates with the same return/shared/away
     // multiplicities. Dead ends truncate. Spec-pinned vs the loop.
-    localPairs(adjd.select(col("src"), col("dst"))).foreach { es =>
-      val spark = edges.sparkSession
-      import spark.implicits._
+    localPairs("node2vecWalks", adjd.select(col("src"), col("dst"))).map { es =>
       val ranked = rankedAdj(es)
       val edgeSet = es.toSet
       val nodes = (es.map(_._1) ++ es.map(_._2)).distinct
@@ -2361,45 +2347,46 @@ object GraphOps {
           }
         }
       }
-      return out.toSeq.toDF("start", "step", "node")
+      localDf(edges, out.toSeq, "start", "step", "node")
+    }.getOrElse {
+      val shared = adjd.select(col("src").as("p_src"), col("dst").as("p_dst"))
+      // node set off the CHECKPOINTED adjacency (see randomWalks) — the lazy
+      // `adj` form re-ran the whole upstream edge pipeline a second time
+      val nodes = adjd.select(col("src").as("id"))
+        .union(adjd.select(col("dst"))).distinct()
+      // st feeds two consumers per step (candidate join + the output union)
+      val ck = roundCkpt(walkLen, maxLazy = 4)
+      var out = nodes.select(col("id").as("start"), lit(0L).as("step"), col("id").as("node"))
+      var st = {
+        val pick = conv(substring(md5(concat(col("node"), lit(s"|1|$seed"))), 1, 15), 16, 10)
+          .cast("long") % col("deg")
+        ck(nodes.select(col("id").as("start"), col("id").as("node"))
+          .join(adjd, col("node") === adjd("src") && col("rnk") === pick)
+          .select(col("start"), col("node").as("prev"), col("dst").as("cur")))
+      }
+      out = out.union(st.select(col("start"), lit(1L).as("step"), col("cur").as("node")))
+      for (t <- 2 to walkLen) {
+        val cand = st.join(adjd, st("cur") === adjd("src"))
+          .join(shared, col("prev") === col("p_src") && col("dst") === col("p_dst"), "left")
+          .select(col("start"), col("prev"), col("cur"), col("dst"), col("rnk"),
+            when(col("dst") === col("prev"), lit(returnMult.toLong))
+              .when(col("p_dst").isNotNull, lit(sharedMult.toLong))
+              .otherwise(lit(awayMult.toLong)).as("mult"))
+        val ww = org.apache.spark.sql.expressions.Window.partitionBy(col("start"))
+        val cum = cand
+          .withColumn("cume",
+            sum(col("mult")).over(ww.orderBy(col("rnk"))
+              .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
+                org.apache.spark.sql.expressions.Window.currentRow)) - col("mult"))
+          .withColumn("total", sum(col("mult")).over(ww))
+        val pick = conv(substring(md5(concat(col("prev"), lit("|"), col("cur"),
+          lit(s"|$t|$seed"))), 1, 15), 16, 10).cast("long") % col("total")
+        st = ck(cum.filter(pick >= col("cume") && pick < col("cume") + col("mult"))
+          .select(col("start"), col("cur").as("prev"), col("dst").as("cur")))
+        out = out.union(st.select(col("start"), lit(t.toLong).as("step"), col("cur").as("node")))
+      }
+      out
     }
-    val shared = adjd.select(col("src").as("p_src"), col("dst").as("p_dst"))
-    // node set off the CHECKPOINTED adjacency (see randomWalks) — the lazy
-    // `adj` form re-ran the whole upstream edge pipeline a second time
-    val nodes = adjd.select(col("src").as("id"))
-      .union(adjd.select(col("dst"))).distinct()
-    // st feeds two consumers per step (candidate join + the output union)
-    val ck = roundCkpt(walkLen, maxLazy = 4)
-    var out = nodes.select(col("id").as("start"), lit(0L).as("step"), col("id").as("node"))
-    var st = {
-      val pick = conv(substring(md5(concat(col("node"), lit(s"|1|$seed"))), 1, 15), 16, 10)
-        .cast("long") % col("deg")
-      ck(nodes.select(col("id").as("start"), col("id").as("node"))
-        .join(adjd, col("node") === adjd("src") && col("rnk") === pick)
-        .select(col("start"), col("node").as("prev"), col("dst").as("cur")))
-    }
-    out = out.union(st.select(col("start"), lit(1L).as("step"), col("cur").as("node")))
-    for (t <- 2 to walkLen) {
-      val cand = st.join(adjd, st("cur") === adjd("src"))
-        .join(shared, col("prev") === col("p_src") && col("dst") === col("p_dst"), "left")
-        .select(col("start"), col("prev"), col("cur"), col("dst"), col("rnk"),
-          when(col("dst") === col("prev"), lit(returnMult.toLong))
-            .when(col("p_dst").isNotNull, lit(sharedMult.toLong))
-            .otherwise(lit(awayMult.toLong)).as("mult"))
-      val ww = org.apache.spark.sql.expressions.Window.partitionBy(col("start"))
-      val cum = cand
-        .withColumn("cume",
-          sum(col("mult")).over(ww.orderBy(col("rnk"))
-            .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-              org.apache.spark.sql.expressions.Window.currentRow)) - col("mult"))
-        .withColumn("total", sum(col("mult")).over(ww))
-      val pick = conv(substring(md5(concat(col("prev"), lit("|"), col("cur"),
-        lit(s"|$t|$seed"))), 1, 15), 16, 10).cast("long") % col("total")
-      st = ck(cum.filter(pick >= col("cume") && pick < col("cume") + col("mult"))
-        .select(col("start"), col("cur").as("prev"), col("dst").as("cur")))
-      out = out.union(st.select(col("start"), lit(t.toLong).as("step"), col("cur").as("node")))
-    }
-    out
   }
 
   /** Skip-gram training pairs from [[randomWalks]] output: co-occurring
@@ -2436,12 +2423,9 @@ object GraphOps {
   private[graft] def trianglesOfSimple(und: DataFrame): DataFrame = {
     // small-graph fast path: the same a<b<c wedge-close enumeration off one
     // bounded collect (each triangle exactly once)
-    localPairs(und).foreach { pairs =>
-      val spark = und.sparkSession
-      import spark.implicits._
-      return trianglesDriver(pairs).toSeq.toDF("a", "b", "c")
-    }
-    trianglesJoin(und)
+    localPairs("trianglesOfSimple", und).map { pairs =>
+      localDf(und, trianglesDriver(pairs).toSeq, "a", "b", "c")
+    }.getOrElse(trianglesJoin(und))
   }
 
   /** The distributed wedge-close join of [[trianglesOfSimple]], for callers
@@ -2485,31 +2469,30 @@ object GraphOps {
     // small-graph fast path: degrees, per-corner triangle counts and the
     // one double division of exact ints driver-side (deg < 2 filtered
     // before the division, as distributed)
-    localPairs(und).foreach { pairs =>
-      val spark = edges.sparkSession
-      import spark.implicits._
+    localPairs("clusteringCoeff", und).map { pairs =>
       val deg = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       pairs.foreach { case (a, b) => deg(a) += 1L; deg(b) += 1L }
       val tri = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       trianglesDriver(pairs).foreach { case (a, b, c) =>
         tri(a) += 1L; tri(b) += 1L; tri(c) += 1L
       }
-      return deg.keys.toSeq.filter(deg(_) >= 2L).map { id =>
+      localDf(edges, deg.keys.toSeq.filter(deg(_) >= 2L).map { id =>
         val (d, t) = (deg(id), tri(id))
         (id, d, t, (t * 2L).toDouble / (d * (d - 1L)).toDouble)
-      }.toDF("id", "deg", "tri", "coeff")
+      }, "id", "deg", "tri", "coeff")
+    }.getOrElse {
+      val deg = degreesOfSimple(und)
+      val triangles = trianglesJoin(und)
+      val triPerNode = triangles.select(col("a").as("id"))
+        .union(triangles.select(col("b")))
+        .union(triangles.select(col("c")))
+        .groupBy(col("id")).agg(count(lit(1)).as("tri"))
+      deg.filter(col("deg") >= 2)
+        .join(triPerNode, Seq("id"), "left")
+        .select(col("id"), col("deg"), coalesce(col("tri"), lit(0L)).as("tri"))
+        .withColumn("coeff",
+          (col("tri") * 2).cast("double") / (col("deg") * (col("deg") - 1)).cast("double"))
     }
-    val deg = degreesOfSimple(und)
-    val triangles = trianglesJoin(und)
-    val triPerNode = triangles.select(col("a").as("id"))
-      .union(triangles.select(col("b")))
-      .union(triangles.select(col("c")))
-      .groupBy(col("id")).agg(count(lit(1)).as("tri"))
-    deg.filter(col("deg") >= 2)
-      .join(triPerNode, Seq("id"), "left")
-      .select(col("id"), col("deg"), coalesce(col("tri"), lit(0L)).as("tri"))
-      .withColumn("coeff",
-        (col("tri") * 2).cast("double") / (col("deg") * (col("deg") - 1)).cast("double"))
   }
 
   /** The repo-wide md5 bucket hash as a Column (cross-engine: DuckDB replays
@@ -2551,9 +2534,7 @@ object GraphOps {
     // small-graph fast path: bounded Bellman-Ford driver-side off the
     // validated cost relation (same min-plus relaxation per round over the
     // cumulative settled set; costs are the already-divided Longs)
-    localAdj(adj).foreach { es =>
-      val spark0 = edges.sparkSession
-      import spark0.implicits._
+    localAdj("sssp", adj).map { es =>
       val nbrs = es.groupBy(_._1)
       val dist = collection.mutable.HashMap(source -> 0L)
       for (_ <- 1 to rounds) {
@@ -2565,17 +2546,18 @@ object GraphOps {
           if (!dist.contains(t) || d < dist(t)) dist(t) = d
         }
       }
-      return dist.toSeq.toDF("id", "dist")
+      localDf(edges, dist.toSeq, "id", "dist")
+    }.getOrElse {
+      val spark = edges.sparkSession
+      var dist = spark.range(1).select(lit(source).as("id"), lit(0L).as("dist"))
+      val ck = roundCkpt(rounds, maxLazy = 4)
+      for (_ <- 1 to rounds) {
+        val relaxed = dist.join(adj, dist("id") === adj("src"))
+          .select(col("dst").as("id"), (col("dist") + col("cost")).as("dist"))
+        dist = ck(dist.union(relaxed).groupBy(col("id")).agg(min(col("dist")).as("dist")))
+      }
+      dist
     }
-    val spark = edges.sparkSession
-    var dist = spark.range(1).select(lit(source).as("id"), lit(0L).as("dist"))
-    val ck = roundCkpt(rounds, maxLazy = 4)
-    for (_ <- 1 to rounds) {
-      val relaxed = dist.join(adj, dist("id") === adj("src"))
-        .select(col("dst").as("id"), (col("dist") + col("cost")).as("dist"))
-      dist = ck(dist.union(relaxed).groupBy(col("id")).agg(min(col("dist")).as("dist")))
-    }
-    dist
   }
 
   /** Degree-inequality profile of the graph: the Gini coefficient of the
@@ -2845,9 +2827,7 @@ object GraphOps {
     // small-graph fast path: pivot = min node id in UTF-8 binary order,
     // F/B = bounded forward/backward balls, then the four-way classify —
     // one bounded collect replaces the two frontier chains (spec-pinned)
-    localPairs(adj).foreach { es =>
-      val spark = edges.sparkSession
-      import spark.implicits._
+    localPairs("bowTie", adj).map { es =>
       val ns = (es.map(_._1) ++ es.map(_._2)).distinct
       val pivot = ns.reduce((a, b) => if (sparkStringOrdering.lt(a, b)) a else b)
       val fwd = es.groupBy(_._1); val bwd = es.groupBy(_._2)
@@ -2866,31 +2846,32 @@ object GraphOps {
         if (f(n) && b(n)) "CORE" else if (b(n)) "IN"
         else if (f(n)) "OUT" else "OTHER"
       }
-      return cls.groupBy(identity).toSeq.map { case (c, g) => (c, g.length.toLong) }
-        .toDF("cls", "n_nodes")
+      localDf(edges, cls.groupBy(identity).toSeq.map { case (c, g) => (c, g.length.toLong) },
+        "cls", "n_nodes")
+    }.getOrElse {
+      val nodes = adj.select(col("src").as("id"))
+        .union(adj.select(col("dst").as("id"))).distinct().localCheckpoint(true)
+      var f = nodes.agg(min(col("id")).as("id"))
+      var b = f
+      // two independent frontier chains, each 2x plan growth per round —
+      // rounds <= 4 stays one lazy plan (the roundCkpt policy note)
+      val ck = roundCkpt(rounds, maxLazy = 4)
+      for (_ <- 1 to rounds) {
+        f = ck(f.union(adj.join(f.withColumnRenamed("id", "src"), "src")
+            .select(col("dst").as("id")))
+          .distinct())
+        b = ck(b.union(adj.join(b.withColumnRenamed("id", "dst"), "dst")
+            .select(col("src").as("id")))
+          .distinct())
+      }
+      nodes
+        .join(f.withColumn("in_f", lit(1)), Seq("id"), "left")
+        .join(b.withColumn("in_b", lit(1)), Seq("id"), "left")
+        .select(when(col("in_f") === 1 && col("in_b") === 1, "CORE")
+          .when(col("in_b") === 1, "IN")
+          .when(col("in_f") === 1, "OUT")
+          .otherwise("OTHER").as("cls"))
+        .groupBy(col("cls")).agg(count(lit(1)).as("n_nodes"))
     }
-    val nodes = adj.select(col("src").as("id"))
-      .union(adj.select(col("dst").as("id"))).distinct().localCheckpoint(true)
-    var f = nodes.agg(min(col("id")).as("id"))
-    var b = f
-    // two independent frontier chains, each 2x plan growth per round —
-    // rounds <= 4 stays one lazy plan (the roundCkpt policy note)
-    val ck = roundCkpt(rounds, maxLazy = 4)
-    for (_ <- 1 to rounds) {
-      f = ck(f.union(adj.join(f.withColumnRenamed("id", "src"), "src")
-          .select(col("dst").as("id")))
-        .distinct())
-      b = ck(b.union(adj.join(b.withColumnRenamed("id", "dst"), "dst")
-          .select(col("src").as("id")))
-        .distinct())
-    }
-    nodes
-      .join(f.withColumn("in_f", lit(1)), Seq("id"), "left")
-      .join(b.withColumn("in_b", lit(1)), Seq("id"), "left")
-      .select(when(col("in_f") === 1 && col("in_b") === 1, "CORE")
-        .when(col("in_b") === 1, "IN")
-        .when(col("in_f") === 1, "OUT")
-        .otherwise("OTHER").as("cls"))
-      .groupBy(col("cls")).agg(count(lit(1)).as("n_nodes"))
   }
 }

@@ -283,10 +283,10 @@ object Linker {
     val vocabulary = docs
       .flatMap(_.sentences.flatMap(_.mentions.map(m => TextOps.canonicalKey(m.value))))
       .toDF("value").distinct()
-    Bounded.collect(vocabulary, DriverVocabularyBound, Bounded.Str)
-      .flatMap(rows => driverGroups(rows.map(_.getString(0)).toSeq, bands, rowsPerBand,
-        jaccardThreshold, shingleW, DriverBucketWorkBound))
-      .map(groups => Left(groups.filter { case (v, g) => g != hashGroupId(v) }))
+    Bounded.collectAs("nonTrivialDictionary", vocabulary, DriverVocabularyBound, Bounded.Str) {
+      rows => driverGroups(rows.map(_.getString(0)).toSeq, bands, rowsPerBand,
+        jaccardThreshold, shingleW, DriverBucketWorkBound).toRight(Bounded.OverBound)
+    }.map(groups => Left(groups.filter { case (v, g) => g != hashGroupId(v) }))
       .getOrElse(Right(lshNonTrivialDf(docs, bands, rowsPerBand, jaccardThreshold, shingleW)
         .toDF("value", "group_id")))
   }

@@ -214,7 +214,7 @@ object Dedup {
     // the unchanged distributed loop runs — 10^9-doc candidate graphs
     // never collect.
     val ids = pairs.select(col("a_id"), col("b_id"))
-    Bounded.collect(ids, localBound, Key, Key).foreach { probe =>
+    Bounded.collect("clusters", ids, localBound, Key, Key).map { probe =>
       val parent = collection.mutable.HashMap.empty[Any, Any]
       def find(x: Any): Any = {
         var r = x
@@ -246,69 +246,70 @@ object Dedup {
       val rows = parent.keys.toSeq.map(n =>
         org.apache.spark.sql.Row(n, minOf(find(n))))
       import scala.jdk.CollectionConverters._
-      return spark.createDataFrame(rows.asJava, schema)
-    }
-    // localCheckpoint (NOT persist): each round must TRUNCATE the logical plan,
-    // otherwise the plan tree deepens per iteration and AQE's per-action plan
-    // stringification goes quadratic (measured: a 10-round loop spun minutes of
-    // pure CPU inside explainString before any work ran)
-    val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .union(pairs.select(col("b_id"), col("a_id")))
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("cluster")).localCheckpoint()
-    var changed = 1L
-    var it = 0
-    // convergence detection rides INSIDE the propagate job: each node's old
-    // label is carried through the aggregation and compared in an observe()
-    // metric collected during the same action that materializes the round —
-    // one Spark action per round, not two. A fresh action on a deep plan
-    // costs ~0.45s of Catalyst analysis regardless of data size (round-3
-    // bench finding), so the separate changed-count join was pure overhead
-    // that dominated link_groups end-to-end (round-3 verdict #1).
-    val metricBase = s"graft_cc_${java.util.UUID.randomUUID().toString.take(8)}_"
-    while (changed > 0 && it < maxIter) {
-      // candidate label per node: min over own label and neighbors' labels.
-      // Own rows also carry the current label as `old` (null on neighbor
-      // rows, typed via the never-true when); max() keeps the single
-      // non-null old per id through the aggregate.
-      val own = labels.select(col("id"), col("cluster"), col("cluster").as("old"))
-      val viaNeighbors = edges
-        .join(labels.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), col("cluster"),
-          when(lit(false), col("cluster")).as("old"))
-      val propagated = own.union(viaNeighbors)
-        .groupBy("id").agg(min(col("cluster")).as("cluster"), max(col("old")).as("old"))
-      // pointer halving (union-find path compression, distributed): follow the
-      // label one hop — cluster(id) := cluster(cluster(id)). Labels are node
-      // ids, so the self-join always resolves; this turns chain-shaped
-      // components (graph diameter d) from O(d) rounds into O(log d).
-      val halved = propagated
-        .join(propagated.select(col("id").as("cluster"), col("cluster").as("cluster2")),
-          Seq("cluster"), "left")
-        .select(col("id"), coalesce(col("cluster2"), col("cluster")).as("cluster"),
-          col("old"))
-      val metricName = metricBase + it
-      val next = halved
-        .observe(metricName, coalesce(
-          sum(when(col("cluster") =!= col("old"), 1L).otherwise(0L)), lit(0L)).as("changed"))
-        .select(col("id"), col("cluster"))
-      val materialized = next.localCheckpoint()
-      changed = next.queryExecution.observedMetrics.get(metricName) match {
-        case Some(row) => if (row.isNullAt(0)) 0L else row.getLong(0)
-        case None => throw new IllegalStateException(
-          s"observe metric $metricName not collected during checkpoint — " +
-            "convergence detection would silently stall")
+      spark.createDataFrame(rows.asJava, schema)
+    }.getOrElse {
+      // localCheckpoint (NOT persist): each round must TRUNCATE the logical plan,
+      // otherwise the plan tree deepens per iteration and AQE's per-action plan
+      // stringification goes quadratic (measured: a 10-round loop spun minutes of
+      // pure CPU inside explainString before any work ran)
+      val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
+        .union(pairs.select(col("b_id"), col("a_id")))
+        .localCheckpoint()
+      var labels = edges.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("cluster")).localCheckpoint()
+      var changed = 1L
+      var it = 0
+      // convergence detection rides INSIDE the propagate job: each node's old
+      // label is carried through the aggregation and compared in an observe()
+      // metric collected during the same action that materializes the round —
+      // one Spark action per round, not two. A fresh action on a deep plan
+      // costs ~0.45s of Catalyst analysis regardless of data size (round-3
+      // bench finding), so the separate changed-count join was pure overhead
+      // that dominated link_groups end-to-end (round-3 verdict #1).
+      val metricBase = s"graft_cc_${java.util.UUID.randomUUID().toString.take(8)}_"
+      while (changed > 0 && it < maxIter) {
+        // candidate label per node: min over own label and neighbors' labels.
+        // Own rows also carry the current label as `old` (null on neighbor
+        // rows, typed via the never-true when); max() keeps the single
+        // non-null old per id through the aggregate.
+        val own = labels.select(col("id"), col("cluster"), col("cluster").as("old"))
+        val viaNeighbors = edges
+          .join(labels.withColumnRenamed("id", "src"), "src")
+          .select(col("dst").as("id"), col("cluster"),
+            when(lit(false), col("cluster")).as("old"))
+        val propagated = own.union(viaNeighbors)
+          .groupBy("id").agg(min(col("cluster")).as("cluster"), max(col("old")).as("old"))
+        // pointer halving (union-find path compression, distributed): follow the
+        // label one hop — cluster(id) := cluster(cluster(id)). Labels are node
+        // ids, so the self-join always resolves; this turns chain-shaped
+        // components (graph diameter d) from O(d) rounds into O(log d).
+        val halved = propagated
+          .join(propagated.select(col("id").as("cluster"), col("cluster").as("cluster2")),
+            Seq("cluster"), "left")
+          .select(col("id"), coalesce(col("cluster2"), col("cluster")).as("cluster"),
+            col("old"))
+        val metricName = metricBase + it
+        val next = halved
+          .observe(metricName, coalesce(
+            sum(when(col("cluster") =!= col("old"), 1L).otherwise(0L)), lit(0L)).as("changed"))
+          .select(col("id"), col("cluster"))
+        val materialized = next.localCheckpoint()
+        changed = next.queryExecution.observedMetrics.get(metricName) match {
+          case Some(row) => if (row.isNullAt(0)) 0L else row.getLong(0)
+          case None => throw new IllegalStateException(
+            s"observe metric $metricName not collected during checkpoint — " +
+              "convergence detection would silently stall")
+        }
+        labels = materialized
+        it += 1
       }
-      labels = materialized
-      it += 1
+      // never exit silently with a non-fixpoint labeling: split clusters would
+      // diverge from the connected-components contract without any signal
+      if (changed > 0) throw new IllegalStateException(
+        s"Dedup.clusters did not converge in $maxIter iterations ($changed labels still " +
+          s"changing) — component diameter exceeds 2^$maxIter; raise maxIter")
+      labels
     }
-    // never exit silently with a non-fixpoint labeling: split clusters would
-    // diverge from the connected-components contract without any signal
-    if (changed > 0) throw new IllegalStateException(
-      s"Dedup.clusters did not converge in $maxIter iterations ($changed labels still " +
-        s"changing) — component diameter exceeds 2^$maxIter; raise maxIter")
-    labels
   }
 
   /** Exact n-gram overlap between a corpus and a probe set (eval-set

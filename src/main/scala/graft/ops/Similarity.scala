@@ -317,37 +317,37 @@ object Similarity {
     // probe is abandoned and the scale-correct job loop runs — the driver
     // never holds more than localBound+1 quantized points (~8 MB for
     // dim=64).
-    if (seedSampleFraction.isEmpty) {
-      Bounded.collect(quantized(df, id, vec, scale), localBound, Key, arrayOf(Lng))
-        .foreach { head =>
-          require(head.length >= k, s"corpus has fewer than k=$k vectors")
-          val pts = head.map(r => (r.get(0), r.getSeq[Long](1).toArray))
-            .sortBy(_._1)(Bounded.keyOrdering).map(_._2)
-          return kmeansDriver(pts, k, iters)
-        }
-    }
-    // localCheckpoint, not persist: iterative consumers (memory note — AQE
-    // re-stringifies nested plans per action otherwise)
-    val q = quantized(df, id, vec, scale).localCheckpoint()
-    var cents: Array[Array[Long]] = seedSampleFraction match {
-      case None    => maximinExact(q, k)
-      case Some(f) => maximinSampled(q, k, f)
-    }
-    val dim = cents.head.length
-    for (_ <- 1 to iters) {
-      val sums = q.select(nearestCentroid(col("q"), cents).as("cluster"),
-          posexplode(col("q")))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(sum(col("col")).as("s"), count(lit(1)).as("cnt"))
-        .collect()
-      val next = cents.map(_.clone())
-      sums.foreach { r =>
-        val c = r.getLong(0).toInt
-        next(c)(r.getInt(1)) = math.floor(r.getLong(2).toDouble / r.getLong(3)).toLong
+    val local = if (seedSampleFraction.nonEmpty) None else Bounded.collect("kmeansCentroids",
+      quantized(df, id, vec, scale), localBound, Key, arrayOf(Lng))
+    local.map { head =>
+      require(head.length >= k, s"corpus has fewer than k=$k vectors")
+      val pts = head.map(r => (r.get(0), r.getSeq[Long](1).toArray))
+        .sortBy(_._1)(Bounded.keyOrdering).map(_._2)
+      kmeansDriver(pts, k, iters)
+    }.getOrElse {
+      // localCheckpoint, not persist: iterative consumers (memory note — AQE
+      // re-stringifies nested plans per action otherwise)
+      val q = quantized(df, id, vec, scale).localCheckpoint()
+      var cents: Array[Array[Long]] = seedSampleFraction match {
+        case None    => maximinExact(q, k)
+        case Some(f) => maximinSampled(q, k, f)
       }
-      cents = next
+      val dim = cents.head.length
+      for (_ <- 1 to iters) {
+        val sums = q.select(nearestCentroid(col("q"), cents).as("cluster"),
+            posexplode(col("q")))
+          .groupBy(col("cluster"), col("pos"))
+          .agg(sum(col("col")).as("s"), count(lit(1)).as("cnt"))
+          .collect()
+        val next = cents.map(_.clone())
+        sums.foreach { r =>
+          val c = r.getLong(0).toInt
+          next(c)(r.getInt(1)) = math.floor(r.getLong(2).toDouble / r.getLong(3)).toLong
+        }
+        cents = next
+      }
+      cents
     }
-    cents
   }
 
   /** Driver-side Lloyd over an id-ordered quantized point set — the
@@ -596,73 +596,74 @@ object Similarity {
     // subspace then trains through [[kmeansDriver]], whose math is the
     // distributed loop's bit-for-bit (PqSpec pins the paths equal). Above
     // the bound the probe is abandoned for the scale-correct job loop.
-    if (seedSampleFraction.isEmpty) {
-      val probe = df.select(id.as("id"), qs.as("qs"))
-      Bounded.collect(probe, localBound, Key, arrayOf(arrayOf(Lng))).foreach { head =>
-        require(head.length >= ksub, s"corpus has fewer than ksub=$ksub vectors")
-        val pts = head.map(r => (r.get(0), subvecs(r, 1)))
-          .sortBy(_._1)(Bounded.keyOrdering).map(_._2)
-        return Array.tabulate(m)(s => kmeansDriver(pts.map(_(s)), ksub, iters))
+    val probe = df.select(id.as("id"), qs.as("qs"))
+    val local = if (seedSampleFraction.nonEmpty) None
+      else Bounded.collect("pqCodebooks", probe, localBound, Key, arrayOf(arrayOf(Lng)))
+    local.map { head =>
+      require(head.length >= ksub, s"corpus has fewer than ksub=$ksub vectors")
+      val pts = head.map(r => (r.get(0), subvecs(r, 1)))
+        .sortBy(_._1)(Bounded.keyOrdering).map(_._2)
+      Array.tabulate(m)(s => kmeansDriver(pts.map(_(s)), ksub, iters))
+    }.getOrElse {
+      val q = probe.localCheckpoint()
+      val chosen: Array[scala.collection.mutable.ArrayBuffer[Array[Long]]] =
+        seedSampleFraction match {
+          case Some(f) =>
+            // one collect of the hash sample; per-subspace maximin driver-side
+            // with the same start/tie rules as the exact path
+            require(f > 0 && f <= 1, s"seedSampleFraction out of (0,1]: $f")
+            val rows = Sampling.sampleByHash(q, col("id"), f)
+              .select(col("id"), col("qs")).collect()
+            require(rows.length >= ksub,
+              s"seed sample has ${rows.length} < ksub=$ksub points; raise seedSampleFraction")
+            val pts = rows.map(r => (r.get(0), subvecs(r, 1)))
+              .sortBy(_._1)(Bounded.keyOrdering)
+            Array.tabulate(m) { s =>
+              maximinDriver(pts.map(_._2(s)), ksub)
+            }
+          case None =>
+            // init + N >= ksub guard in one TakeOrdered (as in [[maximinExact]])
+            val head = q.orderBy(col("id")).limit(ksub).collect()
+            require(head.length == ksub, s"corpus has fewer than ksub=$ksub vectors")
+            val acc = Array.tabulate(m)(s =>
+              scala.collection.mutable.ArrayBuffer(subvecs(head(0), 1)(s)))
+            var r = 1
+            while (r < ksub) {
+              // ONE job picks the farthest point of EVERY subspace: per-row
+              // min-distance to each subspace's chosen set, exploded to
+              // (subspace, d), per-subspace argmax with ties to the smaller id
+              val ds = array((0 until m).map(s =>
+                minDistCol(element_at(col("qs"), s + 1), acc(s).toSeq)): _*)
+              val rn = org.apache.spark.sql.expressions.Window
+                .partitionBy(col("s")).orderBy(col("d").desc, col("id"))
+              val best = q.select(col("id"), col("qs"), posexplode(ds).as(Seq("s", "d")))
+                .withColumn("rn", row_number().over(rn)).filter(col("rn") === 1)
+                .select(col("s"), col("qs")).collect()
+              best.foreach { row => acc(row.getInt(0)) += subvecs(row, 1)(row.getInt(0)) }
+              r += 1
+            }
+            acc
+        }
+      var books: Array[Array[Array[Long]]] = chosen.map(_.toArray)
+      for (_ <- 1 to iters) {
+        // ONE job sums every subspace: (s, cluster_s, pos, coordinate)
+        val cl = array((0 until m).map(s =>
+          nearestCentroid(element_at(col("qs"), s + 1), books(s))): _*)
+        val sums = q.select(col("qs"), posexplode(cl).as(Seq("s", "cl")))
+          .select(col("s"), col("cl"),
+            posexplode(element_at(col("qs"), col("s") + 1)).as(Seq("pos", "v")))
+          .groupBy(col("s"), col("cl"), col("pos"))
+          .agg(sum(col("v")).as("sv"), count(lit(1)).as("cnt"))
+          .collect()
+        val next = books.map(_.map(_.clone()))
+        sums.foreach { row =>
+          next(row.getInt(0))(row.getLong(1).toInt)(row.getInt(2)) =
+            math.floor(row.getLong(3).toDouble / row.getLong(4)).toLong
+        }
+        books = next
       }
+      books
     }
-    val q = df.select(id.as("id"), qs.as("qs")).localCheckpoint()
-    val chosen: Array[scala.collection.mutable.ArrayBuffer[Array[Long]]] =
-      seedSampleFraction match {
-        case Some(f) =>
-          // one collect of the hash sample; per-subspace maximin driver-side
-          // with the same start/tie rules as the exact path
-          require(f > 0 && f <= 1, s"seedSampleFraction out of (0,1]: $f")
-          val rows = Sampling.sampleByHash(q, col("id"), f)
-            .select(col("id"), col("qs")).collect()
-          require(rows.length >= ksub,
-            s"seed sample has ${rows.length} < ksub=$ksub points; raise seedSampleFraction")
-          val pts = rows.map(r => (r.get(0), subvecs(r, 1)))
-            .sortBy(_._1)(Bounded.keyOrdering)
-          Array.tabulate(m) { s =>
-            maximinDriver(pts.map(_._2(s)), ksub)
-          }
-        case None =>
-          // init + N >= ksub guard in one TakeOrdered (as in [[maximinExact]])
-          val head = q.orderBy(col("id")).limit(ksub).collect()
-          require(head.length == ksub, s"corpus has fewer than ksub=$ksub vectors")
-          val acc = Array.tabulate(m)(s =>
-            scala.collection.mutable.ArrayBuffer(subvecs(head(0), 1)(s)))
-          var r = 1
-          while (r < ksub) {
-            // ONE job picks the farthest point of EVERY subspace: per-row
-            // min-distance to each subspace's chosen set, exploded to
-            // (subspace, d), per-subspace argmax with ties to the smaller id
-            val ds = array((0 until m).map(s =>
-              minDistCol(element_at(col("qs"), s + 1), acc(s).toSeq)): _*)
-            val rn = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("s")).orderBy(col("d").desc, col("id"))
-            val best = q.select(col("id"), col("qs"), posexplode(ds).as(Seq("s", "d")))
-              .withColumn("rn", row_number().over(rn)).filter(col("rn") === 1)
-              .select(col("s"), col("qs")).collect()
-            best.foreach { row => acc(row.getInt(0)) += subvecs(row, 1)(row.getInt(0)) }
-            r += 1
-          }
-          acc
-      }
-    var books: Array[Array[Array[Long]]] = chosen.map(_.toArray)
-    for (_ <- 1 to iters) {
-      // ONE job sums every subspace: (s, cluster_s, pos, coordinate)
-      val cl = array((0 until m).map(s =>
-        nearestCentroid(element_at(col("qs"), s + 1), books(s))): _*)
-      val sums = q.select(col("qs"), posexplode(cl).as(Seq("s", "cl")))
-        .select(col("s"), col("cl"),
-          posexplode(element_at(col("qs"), col("s") + 1)).as(Seq("pos", "v")))
-        .groupBy(col("s"), col("cl"), col("pos"))
-        .agg(sum(col("v")).as("sv"), count(lit(1)).as("cnt"))
-        .collect()
-      val next = books.map(_.map(_.clone()))
-      sums.foreach { row =>
-        next(row.getInt(0))(row.getLong(1).toInt)(row.getInt(2)) =
-          math.floor(row.getLong(3).toDouble / row.getLong(4)).toLong
-      }
-      books = next
-    }
-    books
   }
 
   /** Driver-side maximin over an id-ordered point set (first point = the

@@ -22,14 +22,16 @@ trait SparkTestSession {
   }
 }
 
-/** Registers a test twice: as is, and with every bounded driver path
-  * declining ([[graft.exec.Bounded.distributedOnly]]), so one body checks
-  * both paths. */
+/** Registers a test twice: as is, where at least one bounded probe must
+  * take its driver path ([[graft.exec.Bounded.recording]]), and with every
+  * probe declining ([[graft.exec.Bounded.distributedOnly]]), so one body
+  * checks both paths. */
 trait BothPaths { self: AnyFunSuite =>
-  def bothPaths(name: String)(body: => Unit): Unit =
-    Seq(false, true).foreach { dist =>
-      test(if (dist) s"$name [distributedOnly]" else name) {
-        if (dist) graft.exec.Bounded.distributedOnly(body) else body
-      }
+  def bothPaths(name: String)(body: => Unit): Unit = {
+    test(name) {
+      val (_, probes) = graft.exec.Bounded.recording(body)
+      assert(probes.exists(_.path == graft.exec.Bounded.Driver), s"no fast path ran: $probes")
     }
+    test(s"$name [distributedOnly]")(graft.exec.Bounded.distributedOnly(body))
+  }
 }

@@ -5,44 +5,67 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
-import graft.exec.Bounded.{Key, Lng, Str, arrayOf, distributedOnly, orNull}
+import graft.exec.Bounded._
 import graft.graph.{GraphBuilder, GraphOps}
 import graft.ops.{Dedup, Similarity}
 
-/** The one bounded-collect probe of the driver fast paths: when it declines,
-  * the seam that forces every operator onto its distributed path, the Spark
-  * key order it shares with the driver replicas, and null-keyed inputs, on
-  * which each fast-path family must return the distributed path's answer. */
+/** The one bounded-collect probe of the driver fast paths: when it declines
+  * and the decision it records, the seam that forces every operator onto its
+  * distributed path, the Spark key order it shares with the driver replicas,
+  * and null-keyed inputs, on which each fast-path family must return the
+  * distributed path's answer. */
 class BoundedSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
 
   private def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
 
   test("collect: rows of a small, typed, null-free relation; None otherwise") {
+    // the rows, and the one decision the probe recorded: its path and rows collected
+    def probe(d: DataFrame, bound: Int, types: ColumnType*) = {
+      val (got, log) = recording(Bounded.collect("probe", d, bound, types: _*))
+      assert(log.map(_.label) == Seq("probe"), "one decision per probe")
+      (got.map(_.map(_.toSeq).toSet), log.head.path, log.head.rows)
+    }
     val df = Seq(("a", 1L), ("b", 2L)).toDF("k", "v")
-    assert(Bounded.collect(df, 2, Str, Lng).map(_.map(_.toSeq).toSet) ==
-      Some(Set(Seq("a", 1L), Seq("b", 2L))))
-    assert(Bounded.collect(df, 1, Str, Lng).isEmpty, "above the bound")
-    assert(Bounded.collect(df.filter(lit(false)), 2, Str, Lng).isEmpty, "no rows")
-    assert(Bounded.collect(df, 2, Str, Str).isEmpty, "a column type the caller cannot decode")
-    assert(Bounded.collect(df, 2, Str).isEmpty, "column count")
-    assert(Bounded.collect(Seq(("a", Some(1L)), ("b", None)).toDF("k", "v"), 2, Str, Lng).isEmpty,
-      "a null value")
+    assert(probe(df, 2, Str, Lng) == ((Some(Set(Seq("a", 1L), Seq("b", 2L))), Driver, 2)))
+    assert(probe(df, 1, Str, Lng) == ((None, OverBound, 2)), "above the bound")
+    assert(probe(df.filter(lit(false)), 2, Str, Lng) == ((None, Empty, 0)), "no rows")
+    assert(probe(df, 2, Str, Str) == ((None, Schema, 0)), "a column type the caller cannot decode")
+    assert(probe(df, 2, Str) == ((None, Schema, 0)), "column count")
+    assert(probe(Seq(("a", Some(1L)), ("b", None)).toDF("k", "v"), 2, Str, Lng) ==
+      ((None, NullKey, 2)), "a null value")
+    assert(distributedOnly(probe(df, 2, Str, Lng)) == ((None, Forced, 0)), "forced")
     val typed = Seq(("a", Option("T")), ("b", None)).toDF("k", "type")
-    assert(Bounded.collect(typed, 2, Str, orNull(Str)).map(_.length) == Some(2),
-      "a null where the caller replays it")
-    assert(Bounded.collect(typed.select("type", "k"), 2, orNull(Str), Str).map(_.length) == Some(2))
-    assert(Bounded.collect(typed.select("type", "k"), 2, Str, orNull(Str)).isEmpty, "a null key")
+    assert(probe(typed, 2, Str, orNull(Str)) ==
+      ((Some(Set(Seq("a", "T"), Seq("b", null))), Driver, 2)), "a null where the caller replays it")
+    assert(probe(typed.select("type", "k"), 2, orNull(Str), Str) ==
+      ((Some(Set(Seq("T", "a"), Seq(null, "b"))), Driver, 2)))
+    assert(probe(typed.select("type", "k"), 2, Str, orNull(Str)) == ((None, NullKey, 2)),
+      "a null key")
     val vecs = Seq((1, Seq(1L, 2L)), (2, Seq(3L))).toDF("id", "q")
-    assert(Bounded.collect(vecs, 2, Key, arrayOf(Lng)).map(_.length) == Some(2))
+    assert(probe(vecs, 2, Key, arrayOf(Lng)) ==
+      ((Some(Set(Seq(1, Seq(1L, 2L)), Seq(2, Seq(3L)))), Driver, 2)))
+    assert(Bounded.collect("unrecorded", df, 2, Str, Lng).isDefined)
+    assert(recording(())._2.isEmpty, "a probe outside recording is not kept")
+  }
+
+  test("recording: a caller that declines the collected rows records its own reason") {
+    // pageRank's probe collects the source-joined edges, which drop the null
+    // source that prPrep's node set still counts: localEw declines the rows
+    val src = Seq[(String, String, Double)](("A", "B", 1), ("B", "A", 1), (null, "C", 1))
+      .toDF("source", "target", "c")
+    val (_, log) = recording(GraphOps.pageRank(src, 2).collect())
+    assert(log == Seq(Decision("pageRank", NullKey, 2)))
+    val (_, ok) = recording(GraphOps.pageRank(src.filter(col("source").isNotNull), 2).collect())
+    assert(ok == Seq(Decision("pageRank", Driver, 2)))
   }
 
   test("distributedOnly: collect declines inside, and the seam resets after body throws") {
     val df = Seq(("a", 1L)).toDF("k", "v")
-    assert(distributedOnly(Bounded.collect(df, 10, Str, Lng)).isEmpty)
-    assert(distributedOnly(distributedOnly(1) + Bounded.collect(df, 10, Str, Lng).size) == 1)
+    assert(distributedOnly(Bounded.collect("t", df, 10, Str, Lng)).isEmpty)
+    assert(distributedOnly(distributedOnly(1) + Bounded.collect("t", df, 10, Str, Lng).size) == 1)
     intercept[IllegalStateException](distributedOnly(throw new IllegalStateException("boom")))
-    assert(Bounded.collect(df, 10, Str, Lng).isDefined)
+    assert(Bounded.collect("t", df, 10, Str, Lng).isDefined)
   }
 
   test("sparkStringOrdering is UTF-8 byte order on 20,000 random boundary-character pairs") {

@@ -1,7 +1,7 @@
 package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestSession
+import graft.{BothPaths, SparkTestSession}
 import graft.exec.Bounded.distributedOnly
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 /** Components, personalized PageRank, and neighbor-Jaccard over small graphs
   * with hand-computed expectations (the cross-engine oracle pins the KG-scale
   * behavior; these pin the arithmetic and the edge cases). */
-class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
+class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession with BothPaths {
 
   private def edges(rows: (String, String, Double)*): DataFrame = {
     import spark.implicits._
@@ -81,6 +81,21 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     // c1: B=250000 (from A), C=250000 (from B); c2: C=62500; c3: all zero
     assert(got == Map("A" -> 0L, "B" -> 250000L, "C" -> 312500L))
+  }
+
+  bothPaths("katz: a path count that overflows a long raises, never wraps") {
+    // K_{n,n} both ways: every count grows n·num/den-fold per round. The
+    // K_{20,20} case raises with any one replica site unchecked; in each
+    // other case one site overflows first and alone (the product num·c, the
+    // per-target sum, the accumulator), so unchecking it returns a value
+    def complete(n: Int) = edges((0 until n).flatMap(i => (0 until n).flatMap(j =>
+      Seq((s"L$i", s"R$j", 1.0), (s"R$j", s"L$i", 1.0)))): _*)
+    for ((n, num, den, rounds) <- Seq((20, 7L, 8L, 16), (10, 10L, 11L, 14), (10, 2L, 3L, 16),
+        (11, 7L, 12L, 16))) {
+      val ex = intercept[Exception](GraphOps.katz(complete(n), rounds, num, den).collect())
+      assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), s"K_{$n,$n} $num/$den x$rounds: $ex")
+    }
   }
 
   test("modularity: one community scores 0; two disjoint triangles score Q=1/2") {

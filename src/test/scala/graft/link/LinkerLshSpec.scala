@@ -136,6 +136,23 @@ class LinkerDistributedSpec extends AnyFunSuite with graft.SparkTestSession with
     assert(entries.keySet == Set("barack obama", "barak obama", "european union", "alpha corp."))
   }
 
+  test("the linking dictionary: a hub over the bucket-work bound declines after the collect") {
+    import spark.implicits._
+    import graft.core.{Mention, ParsedDoc, Sentence}
+    import graft.exec.Bounded.{Decision, OverBound, recording}
+    val n = Iterator.from(1).find(n => 8L * n * n > Linker.DriverBucketWorkBound).get
+    val hub = (1 to n).map { k =>
+      val v = "all rights reserved" + " " * k + "footer"
+      ParsedDoc(s"u$k", "en", Seq(Sentence(0, v.split(" ").toSeq,
+        Seq(Mention(0, 0, v, "ORG", 0L, Linker.hashGroupId(v))))))
+    }.toDS()
+    val (dict, log) = recording(Linker.nonTrivialDictionary(hub, 8, 2, 0.55, 3))
+    assert(dict.isRight)
+    // (the distributed dictionary's own component probe follows it)
+    assert(log.filter(_.label == "nonTrivialDictionary") ==
+      Seq(Decision("nonTrivialDictionary", OverBound, n)))
+  }
+
   bothPaths("withLshGroups: near-duplicate values share the representative's id") {
     val byValue = Linker.withLshGroups(nearDupDocs, jaccardThreshold = 0.55).collect()
       .flatMap(_.sentences.flatMap(_.mentions.map(m => m.value -> m.groupId))).toMap
