@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.Swap
 
 /** Persistent PageRank state — the analytics sibling of the EdgeStore: as
   * the edge store accretes crawl batches, the rank store lets each analytics
@@ -10,10 +11,9 @@ import org.apache.spark.sql.functions._
   * start. State is the post-aggregation (id, r) relation — graph-sized, tiny
   * relative to the corpus.
   *
-  * Crash safety: write-then-rename swap with a `.bak` hop and EVERY rename
-  * checked (Hadoop reports rename failure as `false`, not an exception — an
-  * unchecked swap can delete the only copy), recovery on every public entry
-  * — the [[graft.ops.Sketches]] register-store discipline. Single-writer.
+  * Crash safety: `ranks` is replaced through one [[graft.io.Swap]] commit
+  * (`ranks.next`, `ranks.bak`), with recovery on every public entry.
+  * Single-writer.
   *
   * NOT idempotent by design: re-running `advance` runs MORE iterations (the
   * iteration count, not the batch id, is the state's meaning) — it converges
@@ -21,48 +21,25 @@ import org.apache.spark.sql.functions._
   * contract; the rank store is a resumable gauge over whatever edges exist. */
 object RankStore {
 
-  private def fsOf(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def hp(s: String) = new org.apache.hadoop.fs.Path(s)
-
-  private def recover(spark: SparkSession, dir: String): Unit = {
-    val fs = fsOf(spark, dir)
-    if (fs.exists(hp(s"$dir/ranks.bak"))) {
-      if (!fs.exists(hp(s"$dir/ranks"))) { // crash mid-swap: restore
-        if (!fs.rename(hp(s"$dir/ranks.bak"), hp(s"$dir/ranks")))
-          sys.error(s"rank store recovery failed: $dir/ranks.bak -> $dir/ranks")
-      } else { fs.delete(hp(s"$dir/ranks.bak"), true); () } // stale hop: drop
-    }
-  }
+  private def swap(dir: String) = Swap(s"$dir/ranks", s"$dir/ranks.next", s"$dir/ranks.bak")
 
   /** The stored snapshot, if any. */
   def read(spark: SparkSession, dir: String): Option[DataFrame] = {
-    recover(spark, dir)
-    if (fsOf(spark, dir).exists(hp(s"$dir/ranks")))
+    if (swap(dir).exists(spark))
       Some(spark.read.parquet(s"$dir/ranks").select(col("id"), col("r")))
     else None
   }
 
   /** Swap `ranks` in as the new snapshot and return the MATERIALIZED
-    * relation. The eager localCheckpoint here is load-bearing twice over:
-    * the incoming plan may lazily read the CURRENT snapshot's files
-    * (pageRankResume over [[read]] stays one lazy plan for small budgets),
-    * so the swap would otherwise overwrite its own input, and the returned
-    * frame must survive the old files disappearing. */
+    * relation. The eager localCheckpoint is load-bearing: the incoming plan
+    * may lazily read the CURRENT snapshot's files (pageRankResume over
+    * [[read]] stays one lazy plan for small budgets), and the returned frame
+    * must survive the swap deleting them. */
   def write(ranks: DataFrame, dir: String): DataFrame = {
     val spark = ranks.sparkSession
-    recover(spark, dir)
-    val fs = fsOf(spark, dir)
-    def mv(from: String, to: String): Unit =
-      if (!fs.rename(hp(from), hp(to)))
-        sys.error(s"rank store swap failed: $from -> $to (both copies retained)")
+    swap(dir).recover(spark)
     val mat = ranks.select(col("id"), col("r")).localCheckpoint(true)
-    mat.write.mode("overwrite").parquet(s"$dir/ranks.next")
-    if (fs.exists(hp(s"$dir/ranks"))) mv(s"$dir/ranks", s"$dir/ranks.bak")
-    mv(s"$dir/ranks.next", s"$dir/ranks")
-    fs.delete(hp(s"$dir/ranks.bak"), true)
+    swap(dir).commit(spark)(tmp => mat.write.parquet(tmp))
     mat
   }
 

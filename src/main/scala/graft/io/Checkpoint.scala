@@ -49,10 +49,18 @@ object Checkpoint {
   private def dataPath(path: String) = s"$path/data"
 
   /** Buckets already recorded as complete; fails fast if the recorded modulus
-    * differs from `expectNBuckets` (bucket ids would mean different url sets). */
-  def completedBuckets(spark: SparkSession, path: String, expectNBuckets: Int = -1): Set[Long] =
-    try {
-      val lin = spark.read.parquet(lineagePath(path))
+    * differs from `expectNBuckets` (bucket ids would mean different url sets).
+    * No lineage yet — an absent `_lineage`, or one holding no visible file
+    * (only the `_temporary/` of a killed first append) — is a fresh start;
+    * any other read failure propagates. */
+  def completedBuckets(spark: SparkSession, path: String, expectNBuckets: Int = -1): Set[Long] = {
+    val dir = lineagePath(path)
+    val visible = Swap.exists(spark, dir) &&
+      Swap.fs(spark, dir).listStatus(new org.apache.hadoop.fs.Path(dir)).map(_.getPath.getName)
+        .exists(n => !n.startsWith("_") && !n.startsWith("."))
+    if (!visible) Set.empty
+    else {
+      val lin = spark.read.parquet(dir)
       if (expectNBuckets > 0) {
         // a lineage dir WITHOUT the n_buckets column is a pre-upgrade (or
         // foreign) checkpoint — fail fast rather than silently restarting
@@ -66,10 +74,8 @@ object Checkpoint {
             s"resume requested $expectNBuckets — bucket ids are incompatible")
       }
       lin.select("bucket").collect().map(_.getLong(0)).toSet
-    } catch {
-      case e: IllegalArgumentException => throw e
-      case _: Exception                => Set.empty // no lineage yet
     }
+  }
 
   /** Per-bucket lineage/metrics table (bucket, rows, wall_ms, n_buckets). */
   def lineage(spark: SparkSession, path: String): DataFrame =

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.Swap
 
 /** Persistent k-means quantizer state for CONTINUOUS ANN-index maintenance —
   * [[SigStore]]/[[graft.graph.RankStore]]/[[EdgeStore]]'s sibling for the
@@ -20,11 +21,9 @@ import org.apache.spark.sql.functions._
   * data drains) plus the seed batch's sums under the trained assignment.
   * Ingest assigns each new batch to the CURRENT derived centroids (classic
   * mini-batch k-means step) and folds its sums in — exactly-once per
-  * batchId via the [[EdgeStore]] ledger-inside-swapped-dir pattern.
-  *
-  * SINGLE-WRITER, like the other stores: crash-retry safe, not
-  * concurrent-writer safe (the optimistic-commit protocol is what an
-  * Iceberg/Delta table would add).
+  * batchId: the `_batches.txt` ledger and the pinned `_params.json` ride
+  * inside the state dir, which init and each ingest replace through one
+  * [[graft.io.Swap]] commit. Single-writer.
   *
   * Scale shape: state is k×dim rows (tiny); the only corpus-sized work per
   * ingest is the map-side argmin scan of the new batch (native
@@ -35,66 +34,30 @@ object CentroidStore {
   final case class Params(k: Int, dim: Int, scale: Int)
 
   private def statePath(store: String) = s"$store/state"
-  private val LedgerName = "_batches.txt"
-  private val ParamsName = "_params.json"
+  private def swap(store: String) =
+    Swap(statePath(store), s"${statePath(store)}.merge-tmp", s"${statePath(store)}.merge-bak")
 
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def p(s: String) = new org.apache.hadoop.fs.Path(s)
-
-  def exists(spark: SparkSession, store: String): Boolean =
-    fs(spark, store).exists(p(statePath(store)))
-
-  private def recover(spark: SparkSession, store: String): Unit = {
-    val f = fs(spark, store)
-    val (live, bak, tmp) =
-      (statePath(store), s"${statePath(store)}.merge-bak", s"${statePath(store)}.merge-tmp")
-    if (!f.exists(p(live)) && f.exists(p(bak)))
-      if (!f.rename(p(bak), p(live)))
-        sys.error(s"crash recovery failed: cannot restore $bak to $live")
-    f.delete(p(tmp), true)
-  }
+  def exists(spark: SparkSession, store: String): Boolean = swap(store).exists(spark)
 
   def mergedBatches(spark: SparkSession, store: String): Set[String] = {
-    recover(spark, store)
-    val f = fs(spark, store)
-    val ledger = p(s"${statePath(store)}/$LedgerName")
-    if (!f.exists(ledger)) Set.empty
-    else {
-      val in = f.open(ledger)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      s.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSet
-    }
+    swap(store).recover(spark)
+    Swap.readLedger(spark, statePath(store))
   }
 
-  private def writeLedger(spark: SparkSession, dir: String, ids: Set[String]): Unit = {
-    val out = fs(spark, dir).create(p(s"$dir/$LedgerName"), true)
-    try out.write((ids.toSeq.sorted.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def writeParams(spark: SparkSession, dir: String, params: Params): Unit = {
-    val out = fs(spark, dir).create(p(s"$dir/$ParamsName"), true)
-    try out.write(
-      s"""{"k":${params.k},"dim":${params.dim},"scale":${params.scale}}""".getBytes("UTF-8"))
-    finally out.close()
-  }
+  private def writeParams(spark: SparkSession, dir: String, params: Params): Unit =
+    Swap.writeParams(spark, dir, "k" -> params.k, "dim" -> params.dim, "scale" -> params.scale)
 
   /** Pinned params — a later run with different k/dim/scale fails fast
     * rather than folding incompatible sums. */
   def params(spark: SparkSession, store: String): Params = {
-    recover(spark, store)
-    val f = fs(spark, store)
-    val in = f.open(p(s"${statePath(store)}/$ParamsName"))
-    val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    def field(n: String) = s""""$n":(\\d+)""".r.findFirstMatchIn(s).get.group(1).toInt
-    Params(field("k"), field("dim"), field("scale"))
+    require(exists(spark, store), s"no centroid store at $store")
+    val m = Swap.readParams(spark, statePath(store))
+      .getOrElse(sys.error(s"centroid store at $store has no ${Swap.ParamsName}"))
+    Params(m("k"), m("dim"), m("scale"))
   }
 
   /** The raw (cell, pos, s, cnt) state relation. cnt repeats per pos. */
   def state(spark: SparkSession, store: String): DataFrame = {
-    recover(spark, store)
     require(exists(spark, store), s"no centroid store at $store")
     spark.read.parquet(statePath(store))
   }
@@ -137,20 +100,18 @@ object CentroidStore {
     val merged = virtual.union(seedSums)
       .groupBy(col("cell"), col("pos"))
       .agg(sum(col("s")).as("s"), sum(col("cnt")).as("cnt"))
-    val tmp = s"${statePath(store)}.merge-tmp"
-    merged.repartition(1).write.parquet(tmp)
-    writeLedger(spark, tmp, Set("init"))
-    writeParams(spark, tmp, params)
-    if (!fs(spark, store).rename(p(tmp), p(statePath(store))))
-      sys.error(s"init failed: cannot move $tmp to ${statePath(store)}")
+    swap(store).commit(spark) { tmp =>
+      merged.repartition(1).write.parquet(tmp)
+      Swap.writeLedger(spark, tmp, Set("init"))
+      writeParams(spark, tmp, params)
+    }
   }
 
   /** Fold one batch into the store under the CURRENT derived centroids.
     * Returns false (no-op) when `batchId` is already in the ledger. */
   def ingest(batch: DataFrame, id: Column, vec: Column, store: String,
       batchId: String): Boolean = {
-    require(batchId.trim.nonEmpty && !batchId.contains("\n"),
-      s"batchId must be a non-empty single-line token, got '$batchId'")
+    Swap.requireBatchId(batchId)
     val spark = batch.sparkSession
     val have = mergedBatches(spark, store)
     if (have.contains(batchId)) return false
@@ -160,22 +121,11 @@ object CentroidStore {
     val merged = state(spark, store).select("cell", "pos", "s", "cnt").union(delta)
       .groupBy(col("cell"), col("pos"))
       .agg(sum(col("s")).as("s"), sum(col("cnt")).as("cnt"))
-      .localCheckpoint() // sever from the state files about to be swapped out
-    val f = fs(spark, store)
-    val live = statePath(store)
-    val bak = s"$live.merge-bak"
-    val tmp = s"$live.merge-tmp"
-    merged.repartition(1).write.parquet(tmp)
-    writeLedger(spark, tmp, have + batchId)
-    writeParams(spark, tmp, pr)
-    f.delete(p(bak), true)
-    if (!f.rename(p(live), p(bak)))
-      sys.error(s"merge swap failed for $live — store left on the old state")
-    if (!f.rename(p(tmp), p(live))) {
-      f.rename(p(bak), p(live))
-      sys.error(s"merge swap failed for $live — old state restored")
+    swap(store).commit(spark) { tmp =>
+      merged.repartition(1).write.parquet(tmp)
+      Swap.writeLedger(spark, tmp, have + batchId)
+      writeParams(spark, tmp, pr)
     }
-    f.delete(p(bak), true)
     true
   }
 

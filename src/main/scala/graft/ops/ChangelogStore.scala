@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.Path
+import graft.io.Swap
 
 /** Persistent add/retract changelog for a CONTINUOUSLY-versioned KG — the
   * durable substrate under [[Changelog]]: each crawl/ingest batch appends
@@ -16,21 +18,18 @@ import org.apache.spark.sql.functions._
   * TRUE append-only merges (log-structured): each batch lands as its own
   * sub-directory `state/d-<md5(batchId)>/` holding the batch's parquet plus
   * an `_batches.txt` marker with the batch id, written OUTSIDE the state
-  * directory and committed by one atomic rename — so per-merge I/O is
-  * O(batch), never O(history), and [[StreamOps.changelogIngestStream]]'s
-  * per-micro-batch merges stay linear cumulative. The merged-batch ledger
-  * is DERIVED (union of the per-directory markers): a directory exists iff
-  * its marker does, so there is no global file to rewrite per merge and no
-  * torn-ledger crash window. A crash before the rename leaves a stray
-  * `.batch-tmp-*` directory that [[recover]] clears; after it, the batch is
-  * fully committed and a retry is a no-op. SINGLE-WRITER, like the
-  * siblings: serialize merges per store; at lakehouse scale this is the
-  * optimistic-commit protocol an Iceberg/Delta table provides.
+  * directory (`.batch-tmp-*`) and committed by one [[graft.io.Swap]] — so
+  * per-merge I/O is O(batch), never O(history), and
+  * [[StreamOps.changelogIngestStream]]'s per-micro-batch merges stay linear
+  * cumulative. The merged-batch ledger is DERIVED (union of the
+  * per-directory markers): a directory exists iff its marker does, so there
+  * is no global file to rewrite per merge and no torn-ledger crash window.
+  * SINGLE-WRITER, like the siblings: serialize merges per store.
   *
   * Only [[compact]] rewrites: it collapses all batch directories into one
   * `d-base` directory (whose marker carries ALL absorbed batch ids, so a
-  * re-driven pre-compaction batch remains a no-op) through the
-  * write-then-rename swap of the whole state directory.
+  * re-driven pre-compaction batch remains a no-op) and replaces the whole
+  * state directory through one [[graft.io.Swap]] commit.
   *
   * Scale shape: each batch is repartitioned on the triple key at write, so
   * snapshot aggregations over the union read stay hash-bucketed per file
@@ -39,13 +38,8 @@ import org.apache.spark.sql.functions._
 object ChangelogStore {
 
   private def statePath(store: String) = s"$store/state"
-  private val LedgerName = "_batches.txt"
-
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def p(s: String) = new org.apache.hadoop.fs.Path(s)
+  private def swap(store: String) =
+    Swap(statePath(store), s"${statePath(store)}.merge-tmp", s"${statePath(store)}.merge-bak")
 
   private def dirFor(batchId: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -53,68 +47,24 @@ object ChangelogStore {
     "d-" + md.map("%02x".format(_)).mkString.take(16)
   }
 
-  def exists(spark: SparkSession, store: String): Boolean =
-    fs(spark, store).exists(p(statePath(store)))
-
-  /** Restore a compaction swap interrupted between the two renames;
-    * additionally clear incomplete tmp writes (the compaction tmp and stray
-    * batch tmps) when entered from a WRITE path. Read paths (log/snapshot/
-    * mergedBatches) must stay side-effect-free beyond the swap restore: a
-    * reader running concurrently with an in-flight merge would otherwise
-    * delete the writer's uncommitted tmp dir and fail its commit rename —
-    * the SINGLE-WRITER contract covers merges, not readers. Idempotent. */
-  private def recover(spark: SparkSession, store: String,
-      clearTmps: Boolean = false): Unit = {
-    val f = fs(spark, store)
-    val (live, bak, tmp) =
-      (statePath(store), s"${statePath(store)}.merge-bak", s"${statePath(store)}.merge-tmp")
-    if (!f.exists(p(live)) && f.exists(p(bak)))
-      if (!f.rename(p(bak), p(live)))
-        sys.error(s"crash recovery failed: cannot restore $bak to $live")
-    if (clearTmps) {
-      f.delete(p(tmp), true)
-      if (f.exists(p(store)))
-        f.listStatus(p(store)).foreach { st =>
-          if (st.getPath.getName.startsWith(".batch-tmp-")) f.delete(st.getPath, true)
-        }
-    }
-  }
+  def exists(spark: SparkSession, store: String): Boolean = swap(store).exists(spark)
 
   /** The committed batch directories (full paths), i.e. every `state/d-*`. */
   private def batchDirs(spark: SparkSession, store: String): Seq[String] = {
-    val f = fs(spark, store)
     if (!exists(spark, store)) Seq.empty
-    else f.listStatus(p(statePath(store))).toIndexedSeq
+    else Swap.fs(spark, store).listStatus(new Path(statePath(store))).toIndexedSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("d-"))
       .map(_.getPath.toString).sorted
   }
 
   /** Batch ids already folded into the state (empty for a fresh store) —
     * the union of the per-directory commit markers. */
-  def mergedBatches(spark: SparkSession, store: String): Set[String] = {
-    recover(spark, store)
-    val f = fs(spark, store)
-    batchDirs(spark, store).iterator.flatMap { d =>
-      val marker = p(s"$d/$LedgerName")
-      if (!f.exists(marker)) Iterator.empty
-      else {
-        val in = f.open(marker)
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        s.split("\n").iterator.map(_.trim).filter(_.nonEmpty)
-      }
-    }.toSet
-  }
-
-  private def writeLedger(spark: SparkSession, dir: String, ids: Set[String]): Unit = {
-    val out = fs(spark, dir).create(p(s"$dir/$LedgerName"), true)
-    try out.write((ids.toSeq.sorted.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
+  def mergedBatches(spark: SparkSession, store: String): Set[String] =
+    batchDirs(spark, store).iterator.flatMap(Swap.readLedger(spark, _)).toSet
 
   /** The stored (s, p, o, ts, op) changelog relation — the union read over
     * the base + batch directories (each fully committed by construction). */
   def log(spark: SparkSession, store: String): DataFrame = {
-    recover(spark, store)
     require(exists(spark, store), s"no changelog store at $store")
     val dirs = batchDirs(spark, store)
     require(dirs.nonEmpty, s"changelog store at $store has no committed batches")
@@ -136,47 +86,21 @@ object ChangelogStore {
     * already committed — the idempotent-retry path. */
   def merge(entries: DataFrame, store: String, batchId: String,
       partitions: Int = 32): Boolean = {
-    require(batchId.trim.nonEmpty && !batchId.contains("\n"),
-      s"batchId must be a non-empty single-line token, got '$batchId'")
+    Swap.requireBatchId(batchId)
     val spark = entries.sparkSession
-    recover(spark, store, clearTmps = true) // write entry: clear stale tmps
     val have = mergedBatches(spark, store)
     if (have.contains(batchId)) return false
-    val f = fs(spark, store)
     val norm = entries.select(col("s").cast("string"), col("p").cast("string"),
       col("o").cast("string"), col("ts").cast("long"), col("op").cast("string"))
     val dname = dirFor(batchId)
-    val tmp = s"$store/.batch-tmp-$dname"
-    norm.repartition(partitions, col("s"), col("p"), col("o")).write.parquet(tmp)
-    writeLedger(spark, tmp, Set(batchId))
-    if (!f.exists(p(statePath(store)))) f.mkdirs(p(statePath(store)))
-    val dest = s"${statePath(store)}/$dname"
-    if (!f.rename(p(tmp), p(dest)))
-      sys.error(s"batch commit failed: cannot move $tmp to $dest")
+    // no directory holds this id's marker, so the commit is one rename (the
+    // bak path is never made); a retry clears its own stale `.batch-tmp-*`
+    Swap(s"${statePath(store)}/$dname", s"$store/.batch-tmp-$dname",
+        s"$store/.batch-bak-$dname").commit(spark) { tmp =>
+      norm.repartition(partitions, col("s"), col("p"), col("o")).write.parquet(tmp)
+      Swap.writeLedger(spark, tmp, Set(batchId))
+    }
     true
-  }
-
-  /** Compaction swap: replace the whole state directory with one holding a
-    * single `d-base` batch directory (data + the full absorbed-id marker). */
-  private def swapIn(spark: SparkSession, store: String, df: DataFrame,
-      ids: Set[String], partitions: Int): Unit = {
-    val f = fs(spark, store)
-    val (live, bak, tmp) =
-      (statePath(store), s"${statePath(store)}.merge-bak", s"${statePath(store)}.merge-tmp")
-    val baseDir = s"$tmp/d-base"
-    df.repartition(partitions, col("s"), col("p"), col("o")).write.parquet(baseDir)
-    writeLedger(spark, baseDir, ids)
-    if (f.exists(p(live))) {
-      f.delete(p(bak), true)
-      if (!f.rename(p(live), p(bak)))
-        sys.error(s"merge swap failed for $live — store left on the old state")
-      if (!f.rename(p(tmp), p(live))) {
-        f.rename(p(bak), p(live)) // never leave the live dir missing
-        sys.error(s"merge swap failed for $live — old state restored")
-      }
-      f.delete(p(bak), true)
-    } else if (!f.rename(p(tmp), p(live)))
-      sys.error(s"initial merge failed: cannot move $tmp to $live")
   }
 
   /** Collapse the history at-or-before `cut` to per-key winners
@@ -186,13 +110,13 @@ object ChangelogStore {
     * marker: a re-driven pre-compaction batch remains a no-op afterwards. */
   def compact(spark: SparkSession, store: String, cut: Long,
       partitions: Int = 32): Unit = {
-    recover(spark, store, clearTmps = true) // write entry: clear stale tmps
     val have = mergedBatches(spark, store)
     require(exists(spark, store), s"no changelog store at $store")
-    // the compaction plan reads the live batch dirs and writes to the tmp
-    // path; the live->bak rename happens only after that write completes,
-    // so no checkpoint is needed (same ordering as merge)
     val compacted = Changelog.compact(log(spark, store), cut)
-    swapIn(spark, store, compacted, have, partitions)
+    swap(store).commit(spark) { tmp =>
+      val baseDir = s"$tmp/d-base"
+      compacted.repartition(partitions, col("s"), col("p"), col("o")).write.parquet(baseDir)
+      Swap.writeLedger(spark, baseDir, have)
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.Swap
 
 /** Persistent connected-component labels for CONTINUOUS KG construction —
   * the entity-resolution sibling of [[EdgeStore]] (edge counts) and
@@ -17,9 +18,10 @@ import org.apache.spark.sql.functions._
   * kg_components_store oracle pins: unrolled init+ingest == one full-batch
   * recursive-closure recompute.
   *
-  * Exactly-once batch merges: identical ledger + write-then-rename swap
-  * protocol as [[EdgeStore]] (single-writer; `_batches.txt` rides inside the
-  * state dir so data and ledger commit atomically; recovery on every entry).
+  * Exactly-once batch merges, as in [[EdgeStore]]: `_batches.txt` rides
+  * inside the state dir, which each merge replaces through one
+  * [[graft.io.Swap]] commit, so data and ledger commit together.
+  * Single-writer.
   *
   * Scale shape: one merge = one [[Dedup.clusters]] run over (star ∪ delta)
   * — the star relation has one row per non-min node (state-sized, not
@@ -30,53 +32,21 @@ import org.apache.spark.sql.functions._
 object ComponentStore {
 
   private def statePath(store: String) = s"$store/state"
-  private val LedgerName = "_batches.txt"
+  private def swap(store: String) =
+    Swap(statePath(store), s"${statePath(store)}.merge-tmp", s"${statePath(store)}.merge-bak")
 
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def p(s: String) = new org.apache.hadoop.fs.Path(s)
-
-  def exists(spark: SparkSession, store: String): Boolean =
-    fs(spark, store).exists(p(statePath(store)))
-
-  /** Restore a swap interrupted between the two renames and clear incomplete
-    * tmp writes. Idempotent; called on every entry. */
-  private def recover(spark: SparkSession, store: String): Unit = {
-    val f = fs(spark, store)
-    val (live, bak, tmp) =
-      (statePath(store), s"${statePath(store)}.merge-bak", s"${statePath(store)}.merge-tmp")
-    if (!f.exists(p(live)) && f.exists(p(bak)))
-      if (!f.rename(p(bak), p(live)))
-        sys.error(s"crash recovery failed: cannot restore $bak to $live")
-    f.delete(p(tmp), true)
-  }
+  def exists(spark: SparkSession, store: String): Boolean = swap(store).exists(spark)
 
   /** Batch ids already folded into the state (empty for a fresh store). */
   def mergedBatches(spark: SparkSession, store: String): Set[String] = {
-    recover(spark, store)
-    val f = fs(spark, store)
-    val ledger = p(s"${statePath(store)}/$LedgerName")
-    if (!f.exists(ledger)) Set.empty
-    else {
-      val in = f.open(ledger)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      s.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSet
-    }
-  }
-
-  private def writeLedger(spark: SparkSession, dir: String, ids: Set[String]): Unit = {
-    val out = fs(spark, dir).create(p(s"$dir/$LedgerName"), true)
-    try out.write((ids.toSeq.sorted.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    swap(store).recover(spark)
+    Swap.readLedger(spark, statePath(store))
   }
 
   /** The (id, cluster) label relation. Nodes whose only edges were
     * self-loops never enter the state (self-loops carry no connectivity —
     * the [[graft.graph.GraphOps.connectedComponents]] contract). */
   def state(spark: SparkSession, store: String): DataFrame = {
-    recover(spark, store)
     require(exists(spark, store), s"no component store at $store")
     spark.read.parquet(statePath(store))
   }
@@ -87,8 +57,7 @@ object ComponentStore {
     * when `batchId` is already in the ledger — the idempotent-retry path. */
   def merge(delta: DataFrame, store: String, batchId: String,
       partitions: Int = 32): Boolean = {
-    require(batchId.trim.nonEmpty && !batchId.contains("\n"),
-      s"batchId must be a non-empty single-line token, got '$batchId'")
+    Swap.requireBatchId(batchId)
     val spark = delta.sparkSession
     val have = mergedBatches(spark, store) // runs crash recovery on entry
     if (have.contains(batchId)) return false
@@ -106,22 +75,10 @@ object ComponentStore {
           .distinct()
       else pairs
     val merged = Dedup.clusters(withStar)
-    val f = fs(spark, store)
-    val (live, bak, tmp) =
-      (statePath(store), s"${statePath(store)}.merge-bak", s"${statePath(store)}.merge-tmp")
-    merged.repartition(partitions, col("id")).write.parquet(tmp)
-    writeLedger(spark, tmp, have + batchId)
-    if (f.exists(p(live))) {
-      f.delete(p(bak), true)
-      if (!f.rename(p(live), p(bak)))
-        sys.error(s"merge swap failed for $live — store left on the old state")
-      if (!f.rename(p(tmp), p(live))) {
-        f.rename(p(bak), p(live)) // never leave the live dir missing
-        sys.error(s"merge swap failed for $live — old state restored")
-      }
-      f.delete(p(bak), true)
-    } else if (!f.rename(p(tmp), p(live)))
-      sys.error(s"initial merge failed: cannot move $tmp to $live")
+    swap(store).commit(spark) { tmp =>
+      merged.repartition(partitions, col("id")).write.parquet(tmp)
+      Swap.writeLedger(spark, tmp, have + batchId)
+    }
     true
   }
 }

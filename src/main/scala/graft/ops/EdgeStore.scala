@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.graph.GraphBuilder
+import graft.io.Swap
 
 /** Persistent KG edge-count state for CONTINUOUS construction: each crawl
   * batch contributes its UNFILTERED edge counts
@@ -15,20 +16,11 @@ import graft.graph.GraphBuilder
   *
   * Exactly-once batch merges: callers pass a `batchId`; the set of merged
   * batch ids rides INSIDE the state directory (`_batches.txt`, ignored by
-  * the parquet reader like `_SUCCESS`), and the directory is replaced by a
-  * write-then-rename swap — so the data and the ledger commit atomically.
-  * A crash before the swap leaves the old state + old ledger (retry
-  * re-merges); a crash after it leaves the new state + new ledger (retry is
-  * a no-op). Double-counting a re-driven batch is impossible either way.
-  *
-  * SINGLE-WRITER: the exactly-once contract covers crash-RETRY of one
-  * serial merge sequence, not concurrent writers — two simultaneous merges
-  * share the fixed `.merge-tmp`/`.merge-bak` paths and race the
-  * read-modify-write ledger, so the last swap would win with the other
-  * writer's batch folded from pre-swap state or its id missing from the
-  * ledger. Serialize merges per store (the Infer CLI and the streaming
-  * foreachBatch sink each do exactly one at a time); at lakehouse scale
-  * this is the optimistic-commit protocol an Iceberg/Delta table provides.
+  * the parquet reader like `_SUCCESS`), and each merge replaces the whole
+  * directory through one [[graft.io.Swap]] commit — so the data and the
+  * ledger commit together, and a re-driven batch is never counted twice.
+  * SINGLE-WRITER: serialize merges per store (the Infer CLI and the
+  * streaming foreachBatch sink each do exactly one at a time).
   *
   * Scale shape: one merge = one shuffle of (old state union delta) on the
   * group key; the state is edge-cardinality-sized (not corpus-sized) and is
@@ -41,6 +33,9 @@ object EdgeStore {
   private def statePath(store: String) = s"$store/state"
   private val StatsName = "_bgp_stats"
 
+  private def swap(store: String) =
+    Swap(statePath(store), s"${statePath(store)}.merge-tmp", s"${statePath(store)}.merge-bak")
+
   /** The per-predicate planning stats written by [[merge]] (None for a
     * store predating them): the (count map, relation total) that
     * [[graft.ops.Bgp.planPatternsCached]] plans from without scanning the
@@ -49,58 +44,24 @@ object EdgeStore {
     * that matters. Driver-sized: one row per distinct predicate. */
   def stats(spark: SparkSession, store: String): Option[(Map[String, Long], Long)] = {
     val path = s"${statePath(store)}/$StatsName"
-    if (!fs(spark, store).exists(p(path))) None
+    if (!exists(spark, store) || !Swap.exists(spark, path)) None
     else {
       val rows = spark.read.parquet(path).collect()
       val total = rows.collectFirst { case r if r.isNullAt(0) => r.getLong(1) }.getOrElse(0L)
       Some((rows.filterNot(_.isNullAt(0)).map(r => r.getString(0) -> r.getLong(1)).toMap, total))
     }
   }
-  private val LedgerName = "_batches.txt"
 
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def p(s: String) = new org.apache.hadoop.fs.Path(s)
-
-  def exists(spark: SparkSession, store: String): Boolean =
-    fs(spark, store).exists(p(statePath(store)))
-
-  /** Restore a swap interrupted between the two renames and clear incomplete
-    * tmp writes. Idempotent; called on every entry. */
-  private def recover(spark: SparkSession, store: String): Unit = {
-    val f = fs(spark, store)
-    val (live, bak, tmp) =
-      (statePath(store), s"${statePath(store)}.merge-bak", s"${statePath(store)}.merge-tmp")
-    if (!f.exists(p(live)) && f.exists(p(bak)))
-      if (!f.rename(p(bak), p(live)))
-        sys.error(s"crash recovery failed: cannot restore $bak to $live")
-    f.delete(p(tmp), true)
-  }
+  def exists(spark: SparkSession, store: String): Boolean = swap(store).exists(spark)
 
   /** Batch ids already folded into the state (empty for a fresh store). */
   def mergedBatches(spark: SparkSession, store: String): Set[String] = {
-    recover(spark, store)
-    val f = fs(spark, store)
-    val ledger = p(s"${statePath(store)}/$LedgerName")
-    if (!f.exists(ledger)) Set.empty
-    else {
-      val in = f.open(ledger)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      s.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSet
-    }
-  }
-
-  private def writeLedger(spark: SparkSession, dir: String, ids: Set[String]): Unit = {
-    val out = fs(spark, dir).create(p(s"$dir/$LedgerName"), true)
-    try out.write((ids.toSeq.sorted.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    swap(store).recover(spark)
+    Swap.readLedger(spark, statePath(store))
   }
 
   /** The raw (source, target, sent, cnt) state relation. */
   def state(spark: SparkSession, store: String): DataFrame = {
-    recover(spark, store)
     require(exists(spark, store), s"no edge store at $store")
     spark.read.parquet(statePath(store))
   }
@@ -117,8 +78,7 @@ object EdgeStore {
     * path. */
   def merge(delta: DataFrame, store: String, batchId: String,
       partitions: Int = 32): Boolean = {
-    require(batchId.trim.nonEmpty && !batchId.contains("\n"),
-      s"batchId must be a non-empty single-line token, got '$batchId'")
+    Swap.requireBatchId(batchId)
     val spark = delta.sparkSession
     val have = mergedBatches(spark, store) // runs crash recovery on entry
     if (have.contains(batchId)) return false
@@ -128,31 +88,19 @@ object EdgeStore {
       if (exists(spark, store))
         GraphBuilder.mergeEdgeState(spark.read.parquet(statePath(store)), norm)
       else norm
-    val f = fs(spark, store)
-    val (live, bak, tmp) =
-      (statePath(store), s"${statePath(store)}.merge-bak", s"${statePath(store)}.merge-tmp")
-    merged.repartition(partitions, col("source"), col("target"), col("sent"))
-      .write.parquet(tmp)
-    writeLedger(spark, tmp, have + batchId)
-    // per-predicate planning stats ride INSIDE the swap (underscore dir —
-    // hidden from the state's parquet reader, invalidated atomically with
-    // every merge): BGP sessions over the resident KG plan from this
-    // metadata instead of scanning the store (Bgp.planPatternsCached).
-    // Derived from the just-written files, so the merge plan runs once.
-    graft.ops.Bgp.predicateStats(
-        spark.read.parquet(tmp).select(col("sent").cast("string").as("p")))
-      .coalesce(1).write.parquet(s"$tmp/$StatsName")
-    if (f.exists(p(live))) {
-      f.delete(p(bak), true)
-      if (!f.rename(p(live), p(bak)))
-        sys.error(s"merge swap failed for $live — store left on the old state")
-      if (!f.rename(p(tmp), p(live))) {
-        f.rename(p(bak), p(live)) // never leave the live dir missing
-        sys.error(s"merge swap failed for $live — old state restored")
-      }
-      f.delete(p(bak), true)
-    } else if (!f.rename(p(tmp), p(live)))
-      sys.error(s"initial merge failed: cannot move $tmp to $live")
+    swap(store).commit(spark) { tmp =>
+      merged.repartition(partitions, col("source"), col("target"), col("sent"))
+        .write.parquet(tmp)
+      Swap.writeLedger(spark, tmp, have + batchId)
+      // per-predicate planning stats ride INSIDE the swap (underscore dir —
+      // hidden from the state's parquet reader, invalidated atomically with
+      // every merge): BGP sessions over the resident KG plan from this
+      // metadata instead of scanning the store (Bgp.planPatternsCached).
+      // Derived from the just-written files, so the merge plan runs once.
+      graft.ops.Bgp.predicateStats(
+          spark.read.parquet(tmp).select(col("sent").cast("string").as("p")))
+        .coalesce(1).write.parquet(s"$tmp/$StatsName")
+    }
     true
   }
 }

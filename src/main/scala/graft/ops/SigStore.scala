@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.Swap
 
 /** Persistent dedup state for CONTINUOUS ingest: the corpus is represented by
   * constant-size-per-document artifacts — its exact-content hashes and its
@@ -30,35 +31,27 @@ object SigStore {
 
   private def sigsPath(store: String) = s"$store/sigs"
   private def hashesPath(store: String) = s"$store/hashes"
-  private def paramsPath(store: String) = s"$store/_params.json"
+  private def swaps(store: String) = Seq(sigsPath(store), hashesPath(store))
+    .map(path => Swap(path, s"$path.compact-tmp", s"$path.compact-bak"))
 
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  def exists(spark: SparkSession, store: String): Boolean =
-    fs(spark, store).exists(new org.apache.hadoop.fs.Path(paramsPath(store)))
-
-  private def writeParams(spark: SparkSession, store: String, p: Params): Unit = {
-    val out = fs(spark, store).create(new org.apache.hadoop.fs.Path(paramsPath(store)), true)
-    try out.write(
-      s"""{"bands":${p.bands},"shingle_w":${p.shingleW},"rows_per_band":${p.rowsPerBand}}"""
-        .getBytes("UTF-8"))
-    finally out.close()
+  /** Whether the store has pinned params. Runs crash recovery first, so
+    * every entry (append, filterNew, compact) sees a healed layout. */
+  def exists(spark: SparkSession, store: String): Boolean = {
+    swaps(store).foreach(_.recover(spark))
+    Swap.exists(spark, s"$store/${Swap.ParamsName}")
   }
 
   private def readParams(spark: SparkSession, store: String): Params = {
-    val in = fs(spark, store).open(new org.apache.hadoop.fs.Path(paramsPath(store)))
-    val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    def f(k: String) = s""""$k":(\\d+)""".r.findFirstMatchIn(s)
-      .getOrElse(sys.error(s"malformed $store/_params.json: $s")).group(1).toInt
-    Params(f("bands"), f("shingle_w"), f("rows_per_band"))
+    val m = Swap.readParams(spark, store).getOrElse(sys.error(s"no signature store at $store"))
+    Params(m("bands"), m("shingle_w"), m("rows_per_band"))
   }
 
   /** Pin-or-check: first append writes the params; later appends/probes must
     * match them exactly. */
   private def pinParams(spark: SparkSession, store: String, p: Params): Unit =
-    if (!exists(spark, store)) writeParams(spark, store, p)
+    if (!exists(spark, store))
+      Swap.writeParams(spark, store,
+        "bands" -> p.bands, "shingle_w" -> p.shingleW, "rows_per_band" -> p.rowsPerBand)
     else {
       val have = readParams(spark, store)
       require(have == p,
@@ -133,14 +126,9 @@ object SigStore {
     * written by a version that records `id` in hashes; older stores fail
     * fast rather than half-retiring).
     *
-    * Crash safety: the new layout is fully written to a temp dir before the
-    * old dir is swapped out via rename. A crash in the window between the
-    * two renames (old already moved to the backup dir, new not yet in
-    * place) is healed at the START of the next compact()/probe-independent
-    * recovery step: a missing live dir with a present backup is rolled back
-    * to the backup before anything is deleted — so an interrupted
-    * compaction always leaves a recoverable layout, never a half-deleted
-    * one. Orphan temp dirs from a crash before the swap are cleared.
+    * Crash safety: each relation is replaced through its own
+    * [[graft.io.Swap]] commit (`sigs.compact-tmp`/`.compact-bak`, and the
+    * same for hashes); every entry runs its crash recovery.
     *
     * Retention preconditions (hashes carrying `id`, no null ids from
     * mixed-era files) are validated on BOTH relations before EITHER swap
@@ -150,16 +138,6 @@ object SigStore {
       dropIds: Option[DataFrame] = None): Unit = {
     require(exists(spark, store), s"no signature store at $store")
     require(partitions >= 1, s"partitions=$partitions must be >= 1")
-    val f = fs(spark, store)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    def recover(path: String): Unit = {
-      val bak = s"$path.compact-bak"
-      if (!f.exists(p(path)) && f.exists(p(bak))) {
-        if (!f.rename(p(bak), p(path)))
-          sys.error(s"crash recovery failed: cannot restore $bak to $path")
-      }
-    }
-    recover(sigsPath(store)); recover(hashesPath(store))
     // mergeSchema: hashes files from before the id column and after it can
     // coexist in one store — a single arbitrary footer must not decide
     // whether id exists (silently dropping it would make retention
@@ -174,27 +152,13 @@ object SigStore {
         "store has pre-id hash rows (id=null): retention cannot retire them — " +
           "recreate the store or compact without dropIds first")
     }
-    def swapIn(path: String)(rewrite: DataFrame => DataFrame): Unit = {
-      val tmp = s"$path.compact-tmp"
-      val bak = s"$path.compact-bak"
-      f.delete(p(tmp), true); f.delete(p(bak), true)
-      rewrite(read(path)).write.parquet(tmp)
-      if (!f.rename(p(path), p(bak)))
-        sys.error(s"compaction swap failed for $path — store left on the old layout")
-      if (!f.rename(p(tmp), p(path))) {
-        // roll the backup straight back so the live dir never stays missing
-        f.rename(p(bak), p(path))
-        sys.error(s"compaction swap failed for $path — old layout restored")
-      }
-      f.delete(p(bak), true)
-    }
     def retire(df: DataFrame): DataFrame = drop match {
       case None => df
       case Some(d) => df.join(d, df("id") === d("__drop_id"), "left_anti")
     }
-    swapIn(sigsPath(store))(df =>
-      retire(df).distinct().repartition(partitions, col("band"), col("sig")))
-    swapIn(hashesPath(store))(df =>
-      retire(df).distinct().repartition(partitions, col("text_hash")))
+    swaps(store).zip(Seq(Seq("band", "sig"), Seq("text_hash"))).foreach { case (swap, key) =>
+      swap.commit(spark)(tmp => retire(read(swap.live)).distinct()
+        .repartition(partitions, key.map(col): _*).write.parquet(tmp))
+    }
   }
 }

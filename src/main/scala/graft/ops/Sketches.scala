@@ -245,15 +245,11 @@ object Sketches {
     * IS exactly-once here and no batch ledger is needed. State is ≤2^p rows
     * regardless of corpus size.
     *
-    * Crash safety: write-then-rename swap with a `.bak` hop (the
-    * [[SigStore.compact]] recovery pattern) — a crash at any point leaves
-    * either the old or the new state recoverable, never a half-written dir.
-    * Single-writer, like the other stores. */
+    * Crash safety: `registers` is replaced through one [[graft.io.Swap]]
+    * commit (`registers.next`, `registers.bak`), with recovery on every
+    * entry. Single-writer, like the other stores. */
   def readRegisterStore(spark: org.apache.spark.sql.SparkSession, store: String): DataFrame = {
-    recoverStore(spark, store)
-    val cur = new org.apache.hadoop.fs.Path(s"$store/registers")
-    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(cur)) spark.read.parquet(cur.toString)
+    if (registerSwap(store).exists(spark)) spark.read.parquet(s"$store/registers")
     else spark.range(0).select(col("id").as("register"), col("id").as("max_rho"))
   }
 
@@ -262,63 +258,26 @@ object Sketches {
     * produces silent garbage that can never be lowered again, so p is pinned
     * on first merge and every later merge validates it (the SigStore params
     * discipline). */
-  def storeP(spark: org.apache.spark.sql.SparkSession, store: String): Option[Int] = {
-    val pp = new org.apache.hadoop.fs.Path(s"$store/_params.json")
-    val fs = pp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(pp)) None
-    else {
-      val in = fs.open(pp)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      """"p"\s*:\s*(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt)
-    }
-  }
+  def storeP(spark: org.apache.spark.sql.SparkSession, store: String): Option[Int] =
+    graft.io.Swap.readParams(spark, store).flatMap(_.get("p"))
 
   private def pinStoreP(spark: org.apache.spark.sql.SparkSession, store: String, p: Int): Unit =
     storeP(spark, store) match {
       case Some(q) =>
         require(q == p, s"register store $store was created with p=$q; merge with p=$p refused")
-      case None =>
-        val pp = new org.apache.hadoop.fs.Path(s"$store/_params.json")
-        val fs = pp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val out = fs.create(pp, true)
-        try out.write(s"""{"p":$p}""".getBytes("UTF-8")) finally out.close()
+      case None => graft.io.Swap.writeParams(spark, store, "p" -> p)
     }
 
-  private def recoverStore(spark: org.apache.spark.sql.SparkSession, store: String): Unit = {
-    val cur = new org.apache.hadoop.fs.Path(s"$store/registers")
-    val bak = new org.apache.hadoop.fs.Path(s"$store/registers.bak")
-    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(bak)) {
-      if (!fs.exists(cur)) {                           // crash mid-swap: restore
-        if (!fs.rename(bak, cur)) sys.error(s"register store recovery failed: $bak -> $cur")
-      } else { fs.delete(bak, true); () }              // stale hop: drop
-    }
-  }
+  private def registerSwap(store: String) =
+    graft.io.Swap(s"$store/registers", s"$store/registers.next", s"$store/registers.bak")
 
-  /** Fold a batch's [[hllRegisters]] relation into the store by register max.
-    * Every rename is CHECKED (Hadoop reports failure as boolean false, not an
-    * exception) and the `.bak` hop is deleted only after the new state is in
-    * place — a failed swap fails fast with both copies still on disk, the
-    * SigStore.compact/EdgeStore discipline. */
+  /** Fold a batch's [[hllRegisters]] relation into the store by register
+    * max, through one [[graft.io.Swap]] commit. */
   def mergeRegistersIntoStore(registers: DataFrame, store: String, p: Int = 8): Unit = {
     val spark = registers.sparkSession
     pinStoreP(spark, store, p)
     val merged = readRegisterStore(spark, store).union(registers)
       .groupBy(col("register")).agg(max(col("max_rho")).as("max_rho"))
-      .coalesce(1).persist() // force the read BEFORE the swap touches the dir
-    merged.count()
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hp(s: String) = new org.apache.hadoop.fs.Path(s)
-    def mv(from: String, to: String): Unit =
-      if (!fs.rename(hp(from), hp(to)))
-        sys.error(s"register store swap failed: $from -> $to (both copies retained)")
-    try {
-      merged.write.mode("overwrite").parquet(s"$store/registers.next")
-      if (fs.exists(hp(s"$store/registers")))
-        mv(s"$store/registers", s"$store/registers.bak")
-      mv(s"$store/registers.next", s"$store/registers")
-      fs.delete(hp(s"$store/registers.bak"), true)
-    } finally { merged.unpersist(); () }
+    registerSwap(store).commit(spark)(tmp => merged.coalesce(1).write.parquet(tmp))
   }
 }

@@ -153,4 +153,26 @@ class CheckpointSpec extends AnyFunSuite with SparkTestSession {
     // complete -> no-op (null rows were recorded, not perpetually pending)
     assert(Checkpoint.runResumable(rows, "url", "url", 4, p)(df => df).isComplete)
   }
+
+  test("a lineage dir holding only a killed append's _temporary/ is a fresh start") {
+    import spark.implicits._
+    val p = tmp()
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p, "_lineage", "_temporary", "0"))
+    val rows = Seq(("a", 1), ("b", 2)).toDF("url", "v")
+    val r = Checkpoint.runResumable(rows, "url", "url", 4, p)(df => df)
+    assert(r.processedBuckets.size == 4 && r.skippedBuckets == 0)
+    assert(Checkpoint.runResumable(rows, "url", "url", 4, p)(df => df).isComplete)
+  }
+
+  test("an unreadable lineage file raises instead of re-running every bucket") {
+    import spark.implicits._
+    val p = tmp()
+    val lin = java.nio.file.Paths.get(p, "_lineage")
+    java.nio.file.Files.createDirectories(lin)
+    java.nio.file.Files.write(lin.resolve("part-0.parquet"), "junk".getBytes("UTF-8"))
+    intercept[Exception] {
+      Checkpoint.runResumable(Seq(("a", 1)).toDF("url", "v"), "url", "url", 4, p)(df => df)
+    }
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(p, "data")))
+  }
 }

@@ -176,4 +176,38 @@ class SigStoreSpec extends AnyFunSuite with SparkTestSession {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(10L), s"kept $kept")
   }
+
+  /** A store of docs 1 and 2, a probe batch (an exact dup of 1, a near dup
+    * of 2, a fresh doc) and the crash of compact's kill window: sigs moved
+    * to its backup, the new layout lost. */
+  private def crashedStore(): (String, () => Set[Long]) = {
+    val store = tmp()
+    SigStore.append(
+      df(1L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+         2L -> "one two three four five six seven eight nine ten"),
+      col("text"), col("doc_id"), store, p)
+    val batch = df(
+      10L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+      11L -> "one two three four five six seven eight nine NEARBY",
+      12L -> "completely different words about spark catalyst planning")
+    def kept() = SigStore.filterNew(batch, col("text"), col("doc_id"), store, p)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(kept() == Set(12L))
+    java.nio.file.Files.move(java.nio.file.Paths.get(s"$store/sigs"),
+      java.nio.file.Paths.get(s"$store/sigs.compact-bak"))
+    (store, () => kept())
+  }
+
+  test("filterNew heals a crash between compact's renames") {
+    val (_, kept) = crashedStore()
+    assert(kept() == Set(12L))
+  }
+
+  test("append then compact after a crash between compact's renames keeps the pre-crash signatures") {
+    val (store, kept) = crashedStore()
+    SigStore.append(df(3L -> "zebra yak xylophone walrus vulture umbrella tiger"),
+      col("text"), col("doc_id"), store, p)
+    SigStore.compact(spark, store, partitions = 1)
+    assert(kept() == Set(12L))
+  }
 }
