@@ -57,7 +57,8 @@ object Bounded {
 
   /** Runs `body` with every [[collect]] declining, so each operator called
     * inside takes its distributed path: the reference side of the
-    * fast-path parity specs. */
+    * fast-path parity specs, and the distributed half of
+    * `graft.tools.SweepTime`'s per-query timings. */
   private[graft] def distributedOnly[T](body: => T): T =
     forceDistributed.withValue(true)(body)
 

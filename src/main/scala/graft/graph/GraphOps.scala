@@ -1,6 +1,6 @@
 package graft.graph
 
-import Math.{addExact, multiplyExact}
+import Math.{addExact, multiplyExact, subtractExact}
 import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -1296,16 +1296,8 @@ object GraphOps {
   /** Multi-round BFS distances from one source node over the DIRECTED simple
     * edge relation — reachability radius / hop distance over the constructed
     * KG (engine extension; no reference counterpart — the reference stops at
-    * the force-layout graph).
-    *
-    * Pregel frontier shape, the one that holds at web-graph scale: each round
-    * expands ONLY the frontier (nodes first reached last round), so every
-    * node is joined against the adjacency relation exactly once over the whole
-    * run — not once per round like the naive dist⨝adj formulation. Per round:
-    * one co-partitioned join (frontier ⨝ adj on the node key) + one anti-join
-    * against the settled set; lineage truncated per round
-    * ([[graft.ops.Dedup.clusters]] discipline — persist alone leaves a
-    * nested plan that AQE re-stringifies quadratically).
+    * the force-layout graph). The bounded BFS seeded with the source:
+    * [[bfsDriver]] on the driver, else the frontier loop [[bfsLoop]].
     *
     * `rounds` is FIXED (a round past the fixpoint is a no-op) so the DuckDB
     * oracle unrolls the identical expansion as chained MATERIALIZED CTEs.
@@ -1313,30 +1305,14 @@ object GraphOps {
     * (id, dist) for every node within `rounds` hops (source included, dist 0). */
   def bfs(edges: DataFrame, source: String, rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 64, s"rounds must be in [1,64]: $rounds")
-    val adj = edges.filter(col("source") =!= col("target"))
-      .select(col("source").as("src"), col("target").as("dst"))
-      .distinct().localCheckpoint(true)
-    // small-graph fast path: the frontier BFS driver-side (identical
-    // hop-count distances; nodes unreached within the budget are absent)
+    val adj = simpleAdj(edges)
+    // nodes unreached within the budget are absent on both paths
     localPairs("bfs", adj).map { es =>
-      val d = allPairsDistDriver(es, rounds, Array(source))
+      val d = bfsDriver(es, rounds, Array(source))
       localDf(edges, d.toSeq.map { case ((_, dst), dd) => (dst, dd) }, "id", "dist")
     }.getOrElse {
-      val spark = edges.sparkSession
-      var dist = spark.range(1).select(lit(source).as("id"), lit(0L).as("dist"))
-        .localCheckpoint(true)
-      var frontier = dist.select(col("id"))
-      for (r <- 1 to rounds) {
-        val reached = frontier.join(adj, frontier("id") === adj("src"))
-          .select(col("dst").as("id")).distinct()
-        val fresh = reached.join(dist.select(col("id").as("seen")),
-            reached("id") === col("seen"), "left_anti")
-          .localCheckpoint(true)
-        dist = dist.union(fresh.select(col("id"), lit(r.toLong).as("dist")))
-          .localCheckpoint(true)
-        frontier = fresh
-      }
-      dist
+      val seed = edges.sparkSession.range(1).select(lit(source).as("seed"), lit(source).as("id"))
+      bfsLoop(adj, seed, rounds).select(col("id"), col("dist"))
     }
   }
 
@@ -1346,13 +1322,9 @@ object GraphOps {
     * sets are impossible (engine extension; no reference counterpart).
     *
     * State is ONE register relation (id, register, max_rho) — at most
-    * 2^p rows per node. Each round pulls every dst-neighbor's registers into
-    * the src node and max-merges: one join of the adjacency relation with the
-    * register relation on the node key + one (id, register) groupBy whose
-    * partial aggregation collapses each partition to ≤ nodes×2^p rows before
-    * the exchange. Lineage truncated per round (the iterative-consumer
-    * discipline). Register max-merge is idempotent, so re-running a round
-    * past the fixpoint is a no-op and shard merges commute.
+    * 2^p rows per node — advanced by [[hyperBallRounds]]' max-merge round.
+    * Register max-merge is idempotent, so re-running a round past the
+    * fixpoint is a no-op and shard merges commute.
     *
     * The register layout is [[graft.ops.Sketches.hllCols]] — EXACTLY the
     * corpus-gauge HLL, so the invariant holds: after r rounds, node v's rows
@@ -1366,60 +1338,45 @@ object GraphOps {
     * node's ball includes itself at round 0). */
   def hyperBall(edges: DataFrame, p: Int = 4, rounds: Int = 2): DataFrame = {
     require(rounds >= 1 && rounds <= 16, s"rounds must be in [1,16]: $rounds")
-    val adj = edges.filter(col("source") =!= col("target"))
-      .select(col("source").as("src"), col("target").as("dst"))
-      .distinct().localCheckpoint(true)
-    val nodes = adj.select(col("src").as("id"))
-      .union(adj.select(col("dst").as("id"))).distinct()
-    val (reg, rho) = graft.ops.Sketches.hllCols(col("id"), p)
     // regs feeds two consumers per round (the neighbor pull + the union)
-    val ck = roundCkpt(rounds, maxLazy = 4)
-    var regs = ck(nodes
-      .select(col("id"), reg.as("register"), rho.as("max_rho")))
-    for (_ <- 1 to rounds) {
+    hyperBallRounds(edges, p, roundCkpt(rounds, maxLazy = 4)).drop(rounds).next()
+  }
+
+  /** The HyperBall register relations of [[hyperBall]], round by round:
+    * element 0 holds every node's own registers, element r those after r
+    * max-merge rounds, each passed through `ck`. A round pulls every
+    * dst-neighbor's registers into the src node and max-merges: one join of
+    * the adjacency relation with the register relation on the node key +
+    * one (id, register) groupBy whose partial aggregation collapses each
+    * partition to ≤ nodes×2^p rows before the exchange. */
+  private def hyperBallRounds(edges: DataFrame, p: Int,
+      ck: DataFrame => DataFrame): Iterator[DataFrame] = {
+    val adj = simpleAdj(edges)
+    val (reg, rho) = graft.ops.Sketches.hllCols(col("id"), p)
+    Iterator.iterate(ck(nodesOf(adj)
+        .select(col("id"), reg.as("register"), rho.as("max_rho")))) { regs =>
       val pulled = adj.join(regs, adj("dst") === regs("id"))
         .select(adj("src").as("id"), col("register"), col("max_rho"))
-      regs = ck(regs.union(pulled)
+      ck(regs.union(pulled)
         .groupBy(col("id"), col("register")).agg(max(col("max_rho")).as("max_rho")))
     }
-    regs
   }
 
   /** Effective-diameter ESTIMATE from HyperBall registers — the Boldi-Vigna
     * read that made web-graph diameters measurable at 10^12 nodes, where the
     * exact [[neighborhoodFunction]] all-pairs relation is infeasible. Runs
-    * the register max-merge round by round, summing per-node ball-size
-    * estimates into N̂(r), and reports the smallest r with
-    * N̂(r) ≥ 0.9·N̂(maxRounds). Estimates are float (HLL harmonic means) —
-    * spec-BOUNDED against the exact operator (small balls sit in HLL's
-    * linear-counting regime, where estimates are near-exact), not
-    * hash-pinned. Output rows: (radius, est_pairs, is_effective_diameter). */
+    * [[hyperBallRounds]] round by round (each round checkpointed, as N̂ reads
+    * it), summing per-node ball-size estimates into N̂(r), and reports the
+    * smallest r with N̂(r) ≥ 0.9·N̂(maxRounds). Estimates are float (HLL
+    * harmonic means) — spec-BOUNDED against the exact operator (small balls
+    * sit in HLL's linear-counting regime, where estimates are near-exact),
+    * not hash-pinned. Output rows: (radius, est_pairs, is_effective_diameter). */
   def effectiveDiameterEstimate(edges: DataFrame, p: Int = 4, maxRounds: Int = 3): Seq[(Int, Double, Boolean)] = {
     require(maxRounds >= 1 && maxRounds <= 16, s"rounds must be in [1,16]: $maxRounds")
-    val adj = edges.filter(col("source") =!= col("target"))
-      .select(col("source").as("src"), col("target").as("dst"))
-      .distinct().localCheckpoint(true)
-    val nodes = adj.select(col("src").as("id"))
-      .union(adj.select(col("dst").as("id"))).distinct()
-    val (reg, rho) = graft.ops.Sketches.hllCols(col("id"), p)
-    var regs = nodes
-      .select(col("id"), reg.as("register"), rho.as("max_rho"))
-      .localCheckpoint(true)
-    def nHat(r: DataFrame): Double = hyperBallSizes(r, p).values.sum
-    val perRound = Seq.newBuilder[(Int, Double)]
-    perRound += 0 -> nHat(regs)
-    for (r <- 1 to maxRounds) {
-      val pulled = adj.join(regs, adj("dst") === regs("id"))
-        .select(adj("src").as("id"), col("register"), col("max_rho"))
-      regs = regs.union(pulled)
-        .groupBy(col("id"), col("register")).agg(max(col("max_rho")).as("max_rho"))
-        .localCheckpoint(true)
-      perRound += r -> nHat(regs)
-    }
-    val rounds = perRound.result()
-    val total = rounds.last._2
-    val effIdx = rounds.indexWhere(_._2 >= 0.9 * total)
-    rounds.map { case (r, n) => (r, n, r == effIdx) }
+    val perRound = hyperBallRounds(edges, p, _.localCheckpoint(true))
+      .take(maxRounds + 1).map(hyperBallSizes(_, p).values.sum).toVector
+    val effIdx = perRound.indexWhere(_ >= 0.9 * perRound.last)
+    perRound.zipWithIndex.map { case (n, r) => (r, n, r == effIdx) }
   }
 
   /** Ball-size estimates from a [[hyperBall]] register relation: one
@@ -1460,20 +1417,22 @@ object GraphOps {
       .union(und.select(col("b"), col("a"), col("w")))
     // small-graph fast path: LPA labels AND the modularity rollups
     // driver-side off the one collected adjacency (exact Long sums,
-    // q_num = in2_w * 2m - deg_w^2 — the distributed expression verbatim)
+    // q_num = in2_w * 2m - deg_w^2 — the distributed expression verbatim);
+    // checked arithmetic raises where the loop's ANSI overflow does
     localAdj("modularity", adjLazy).map { a =>
       val label = lpaDriver(a, rounds).toMap
       val dw = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
-      a.foreach { case (x, _, w) => dw(x) += w }
-      val m2 = dw.valuesIterator.sum
+      a.foreach { case (x, _, w) => dw(x) = addExact(dw(x), w) }
+      val m2 = dw.valuesIterator.foldLeft(0L)(addExact)
       val in2 = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       val degW = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       a.foreach { case (x, n, w) =>
-        if (sparkStringOrdering.lt(x, n) && label(x) == label(n)) in2(label(x)) += w * 2L
+        if (sparkStringOrdering.lt(x, n) && label(x) == label(n))
+          in2(label(x)) = addExact(in2(label(x)), multiplyExact(w, 2L))
       }
-      label.foreach { case (x, l) => degW(l) += dw(x) }
-      localDf(edges, degW.keys.toSeq
-        .map(l => (l, in2(l), degW(l), in2(l) * m2 - degW(l) * degW(l))),
+      label.foreach { case (x, l) => degW(l) = addExact(degW(l), dw(x)) }
+      localDf(edges, degW.keys.toSeq.map(l => (l, in2(l), degW(l),
+          subtractExact(multiplyExact(in2(l), m2), multiplyExact(degW(l), degW(l))))),
         "label", "in2_w", "deg_w", "q_num")
     }.getOrElse {
       val labels = lpaOn(adjLazy.localCheckpoint(), rounds)
@@ -1599,9 +1558,7 @@ object GraphOps {
   def katz(edges: DataFrame, rounds: Int = 3, num: Long = 1L, den: Long = 8L): DataFrame = {
     require(rounds >= 1 && rounds <= 16, s"rounds must be in [1,16]: $rounds")
     require(num >= 1 && den > num, s"alpha = $num/$den must be in (0,1)")
-    val adj = edges.filter(col("source") =!= col("target"))
-      .select(col("source").as("src"), col("target").as("dst"))
-      .distinct().localCheckpoint(true)
+    val adj = simpleAdj(edges)
     // small-graph fast path: c_t(v) = Σ_{u→v} (num·c_{t-1}(u)) div den,
     // katz = Σ_t c_t — per-edge truncating division on non-negatives, so
     // the driver replica is exact (spec-pinned vs the loop); checked
@@ -1618,8 +1575,7 @@ object GraphOps {
       }
       localDf(edges, nodes.toSeq.map(n => (n, acc(n))), "id", "k")
     }.getOrElse {
-      val nodes = adj.select(col("src").as("id"))
-        .union(adj.select(col("dst").as("id"))).distinct().localCheckpoint(true)
+      val nodes = nodesOf(adj).localCheckpoint(true)
       var c = nodes.select(col("id"), lit(1000000L).as("c"))
       var katzAcc = nodes.select(col("id"), lit(0L).as("k"))
       // c feeds two consumers per round (next hop + the accumulator join)
@@ -1637,16 +1593,15 @@ object GraphOps {
     }
   }
 
-  /** Bounded all-pairs BFS distances driver-side — the [[harmonic]]/
-    * [[closeness]]/[[neighborhoodFunction]] min-dist recurrence's fixpoint
-    * within `rounds` hops (Bellman-Ford over unit edges == per-source BFS):
-    * (src, dst) -> dist for every pair at distance <= rounds, self-pairs at
-    * 0. */
-  private def allPairsDistDriver(es: Array[(String, String)], rounds: Int,
-      nodes: Array[String]): collection.Map[(String, String), Long] = {
+  /** The bounded unit-hop BFS on the driver, [[bfsLoop]]'s replica over
+    * collected (src, dst) pairs: (seed, id) -> dist for every node id within
+    * `rounds` hops of each seed, the seed itself at 0. Per seed one
+    * frontier expansion; the first discovery is the hop distance. */
+  private def bfsDriver(es: Array[(String, String)], rounds: Int,
+      seeds: Array[String]): collection.Map[(String, String), Long] = {
     val out = collection.mutable.HashMap.empty[(String, String), Long]
     val nbrs = es.groupBy(_._1).map { case (s, g) => s -> g.map(_._2) }
-    nodes.foreach { src =>
+    seeds.foreach { src =>
       val seen = collection.mutable.HashMap(src -> 0L)
       var frontier = Array(src)
       var d = 0L
@@ -1665,65 +1620,79 @@ object GraphOps {
     out
   }
 
+  /** The bounded unit-hop BFS, distributed: from `seeds` (seed, id), the
+    * start nodes of each seed at distance 0, every (seed, id, dist) with id
+    * within `rounds` hops of its seed over `adj` (src, dst).
+    *
+    * Pregel frontier shape, the one that holds at web-graph scale: each
+    * round joins ONLY the frontier (pairs first reached last round,
+    * `dist = r - 1`) with `adj` on the node key, so every (seed, node) pair
+    * is expanded exactly once over the run, not once per round like the
+    * naive dist⨝adj + min formulation. The reached pairs are unioned into
+    * the settled set under one (seed, id) min: one exchange settles and
+    * de-duplicates them, and a pair keeps its first (minimum) distance.
+    * Each round's settled set is checkpointed, for every caller: on a
+    * 40k-edge graph (local[4]) the lazy plan ([[roundCkpt]] at maxLazy =
+    * 4) was faster for the all-seed callers but slower for [[bowTie]],
+    * whose two balls and classify joins make one plan of 2 × 2^rounds
+    * subtrees. The seeds are not checkpointed: every caller's seed
+    * relation is cheap to re-read. [[bfsDriver]] is its driver replica. */
+  private def bfsLoop(adj: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
+    val step = adj.select(col("src").as("id"), col("dst"))
+    var dist = seeds.select(col("seed"), col("id"), lit(0L).as("dist"))
+    for (r <- 1 to rounds) {
+      val reached = dist.filter(col("dist") === r - 1).join(step, "id")
+        .select(col("seed"), col("dst").as("id"), lit(r.toLong).as("dist"))
+      dist = dist.union(reached).groupBy(col("seed"), col("id"))
+        .agg(min(col("dist")).as("dist")).localCheckpoint(true)
+    }
+    dist
+  }
+
   /** Exact outward harmonic centrality within `rounds` hops:
     * h(v) = Σ_{u ∈ B(v,rounds), u≠v} (10^6 div dist(v,u)) — scaled-integer
     * reciprocal distances, so the sum is order-insensitive and bit-identical
-    * cross-engine (a float 1/d sum is not). The all-source min-distance
-    * relation is the [[bfs]] recurrence seeded with EVERY node — O(V·E) per
-    * round, which is fine on the post-aggregation KG; at web-graph scale the
+    * cross-engine (a float 1/d sum is not). The distances are the bounded
+    * BFS ([[bfsDriver]] / [[bfsLoop]]) seeded with EVERY node — O(V·E),
+    * which is fine on the post-aggregation KG; at web-graph scale the
     * same quantity is ESTIMATED from [[hyperBall]] ball sizes (harmonic =
     * Σ_t (|B(v,t)|−|B(v,t−1)|)/t), which is why the two live side by side.
     *
     * Output: (id, h) for every node (h=0 for sinks with no out-reach). */
   def harmonic(edges: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 16, s"rounds must be in [1,16]: $rounds")
-    val adj = edges.filter(col("source") =!= col("target"))
-      .select(col("source").as("asrc"), col("target").as("adst"))
-      .distinct().localCheckpoint(true)
-    // small-graph fast path: the bounded all-pairs relation driver-side,
-    // same Σ 1e6 div dist rollup (integer div, non-negative) — spec-pinned
+    val adj = simpleAdj(edges)
+    // Σ 1e6 div dist on both paths (integer div, non-negative)
     localPairs("harmonic", adj).map { es =>
       val ns = (es.map(_._1) ++ es.map(_._2)).distinct
-      val dist = allPairsDistDriver(es, rounds, ns)
+      val dist = bfsDriver(es, rounds, ns)
       val h = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       dist.foreach { case ((s, t), d) => if (s != t) h(s) += 1000000L / d }
       localDf(edges, ns.toSeq.map(n => (n, h(n))), "id", "h")
     }.getOrElse {
-      val nodes = adj.select(col("asrc").as("id"))
-        .union(adj.select(col("adst").as("id"))).distinct().localCheckpoint(true)
-      var dist = nodes.select(col("id").as("src"), col("id").as("dst"), lit(0L).as("dist"))
-        .localCheckpoint(true)
-      for (_ <- 1 to rounds) {
-        val ext = dist.join(adj, dist("dst") === adj("asrc"))
-          .select(col("src"), col("adst").as("dst"), (col("dist") + 1L).as("dist"))
-        dist = dist.union(ext)
-          .groupBy(col("src"), col("dst")).agg(min(col("dist")).as("dist"))
-          .localCheckpoint(true)
-      }
-      val h = dist.filter(col("src") =!= col("dst"))
-        .groupBy(col("src"))
+      val nodes = nodesOf(adj).localCheckpoint(true)
+      val h = bfsLoop(adj, nodes.select(col("id").as("seed"), col("id")), rounds)
+        .filter(col("seed") =!= col("id"))
+        .groupBy(col("seed").as("id"))
         .agg(sum(expr("1000000 div dist")).as("h"))
-      nodes.join(h, nodes("id") === h("src"), "left")
+      nodes.join(h, Seq("id"), "left")
         .select(col("id"), coalesce(col("h"), lit(0L)).as("h"))
     }
   }
 
   /** Closeness centrality in exact scaled integers over the same bounded
-    * all-pairs BFS relation as [[harmonic]]: c(v) = 10^6·reach div Σdist
+    * all-pairs BFS as [[harmonic]]: c(v) = 10^6·reach div Σdist
     * with reach = |{u ≠ v : dist(v→u) ≤ rounds}| — harmonic's sibling that
     * web-graph studies quote; harmonic handles disconnected graphs more
     * gracefully, closeness is the classical definition. Zero for sinks.
     * Output: (id, n_reach, sum_dist, closeness) — every column BIGINT. */
   def closeness(edges: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 16, s"rounds must be in [1,16]: $rounds")
-    val adj = edges.filter(col("source") =!= col("target"))
-      .select(col("source").as("asrc"), col("target").as("adst"))
-      .distinct().localCheckpoint(true)
-    // small-graph fast path: same BFS relation + the exact 1e6·reach div
-    // Σdist rollup, zero for sinks — spec-pinned
+    val adj = simpleAdj(edges)
+    // the exact 1e6·reach div Σdist rollup on both paths, zero for sinks
     localPairs("closeness", adj).map { es =>
       val ns = (es.map(_._1) ++ es.map(_._2)).distinct
-      val dist = allPairsDistDriver(es, rounds, ns)
+      val dist = bfsDriver(es, rounds, ns)
       val nr = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       val sd = collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
       dist.foreach { case ((s, t), d) => if (s != t) { nr(s) += 1L; sd(s) += d } }
@@ -1732,21 +1701,12 @@ object GraphOps {
         (n, nr(n), sd(n), c)
       }, "id", "n_reach", "sum_dist", "closeness")
     }.getOrElse {
-      val nodes = adj.select(col("asrc").as("id"))
-        .union(adj.select(col("adst").as("id"))).distinct().localCheckpoint(true)
-      var dist = nodes.select(col("id").as("src"), col("id").as("dst"), lit(0L).as("dist"))
-        .localCheckpoint(true)
-      for (_ <- 1 to rounds) {
-        val ext = dist.join(adj, dist("dst") === adj("asrc"))
-          .select(col("src"), col("adst").as("dst"), (col("dist") + 1L).as("dist"))
-        dist = dist.union(ext)
-          .groupBy(col("src"), col("dst")).agg(min(col("dist")).as("dist"))
-          .localCheckpoint(true)
-      }
-      val c = dist.filter(col("src") =!= col("dst"))
-        .groupBy(col("src"))
+      val nodes = nodesOf(adj).localCheckpoint(true)
+      val c = bfsLoop(adj, nodes.select(col("id").as("seed"), col("id")), rounds)
+        .filter(col("seed") =!= col("id"))
+        .groupBy(col("seed").as("id"))
         .agg(count(lit(1)).as("n_reach"), sum(col("dist")).as("sum_dist"))
-      nodes.join(c, nodes("id") === c("src"), "left")
+      nodes.join(c, Seq("id"), "left")
         .select(col("id"),
           coalesce(col("n_reach"), lit(0L)).as("n_reach"),
           coalesce(col("sum_dist"), lit(0L)).as("sum_dist"),
@@ -1874,16 +1834,15 @@ object GraphOps {
     * peeled nodes (routing through the peeled SCC in both directions would
     * pull u into it), so later rounds still see them connected.
     *
-    * Scale shapes: per inner hop one co-partitioned join + distinct with
-    * truncated lineage; the pivot pick is a one-row driver agg (the bounded
+    * Scale shapes: F and B are the bounded BFS seeded with the pivot
+    * ([[bfsDriver]] / [[bfsLoop]]) over the undecided-restricted edges and
+    * their reverse; the pivot pick is a one-row driver agg (the bounded
     * collect convention); undecided shrinks monotonically. Output:
     * (id, scc) — scc = pivot id, or 'UNDECIDED'. */
   def scc(edges: DataFrame, outerRounds: Int = 3, innerRounds: Int = 3): DataFrame = {
     require(outerRounds >= 1 && outerRounds <= 9 && innerRounds >= 1 && innerRounds <= 9,
       s"rounds must be in [1,9]: outer=$outerRounds inner=$innerRounds")
-    val adj = edges.filter(col("source") =!= col("target"))
-      .select(col("source").as("src"), col("target").as("dst"))
-      .distinct().localCheckpoint(true)
+    val adj = simpleAdj(edges)
     // SMALL-GRAPH FAST PATH: the FW-BW peeling is ~8 checkpoint actions per
     // outer round — driver-replay off one bounded collect with identical
     // semantics (min-id pivot in UTF-8 binary order, innerRounds-bounded
@@ -1897,29 +1856,18 @@ object GraphOps {
         outer += 1
         val pivot = undec.reduce((a, b) => if (sparkStringOrdering.lt(a, b)) a else b)
         val live = es.filter { case (s, t) => undec(s) && undec(t) }
-        def reach(forward: Boolean): Set[String] = {
-          var set = Set(pivot)
-          for (_ <- 1 to innerRounds) {
-            val step = live.collect {
-              case (s, t) if forward && set(s)  => t
-              case (s, t) if !forward && set(t) => s
-            }
-            set = set ++ step
-          }
-          set
-        }
-        val sccSet = reach(forward = true) intersect reach(forward = false)
+        def ball(g: Array[(String, String)]) =
+          bfsDriver(g, innerRounds, Array(pivot)).keySet.map(_._2)
+        val sccSet = ball(live) intersect ball(live.map(_.swap))
         out ++= sccSet.toSeq.map(_ -> pivot)
         undec = undec diff sccSet
       }
       out ++= undec.toSeq.map(_ -> "UNDECIDED")
       localDf(edges, out.toSeq, "id", "scc")
     }.getOrElse {
-      val nodes = adj.select(col("src").as("id"))
-        .union(adj.select(col("dst").as("id"))).distinct()
       val spark = edges.sparkSession
       import spark.implicits._
-      var undecided = nodes.localCheckpoint(true)
+      var undecided = nodesOf(adj).localCheckpoint(true)
       var decided: Option[DataFrame] = None
       var done = false
       for (_ <- 1 to outerRounds if !done) {
@@ -1931,18 +1879,10 @@ object GraphOps {
             .join(undecided.select(col("id").as("src")), Seq("src"))
             .join(undecided.select(col("id").as("dst")), Seq("dst"))
             .select(col("src"), col("dst")).localCheckpoint(true)
-          def reach(forward: Boolean): DataFrame = {
-            var set = Seq(pivot).toDF("id").localCheckpoint(true)
-            for (_ <- 1 to innerRounds) {
-              val step =
-                if (forward) set.join(ra, set("id") === ra("src")).select(ra("dst").as("id"))
-                else set.join(ra, set("id") === ra("dst")).select(ra("src").as("id"))
-              set = set.union(step).distinct().localCheckpoint(true)
-            }
-            set
-          }
-          val sccSet = reach(forward = true).join(reach(forward = false), "id")
-            .localCheckpoint(true)
+          def ball(g: DataFrame) =
+            bfsLoop(g, Seq((pivot, pivot)).toDF("seed", "id"), innerRounds).select(col("id"))
+          val back = ra.select(col("dst").as("src"), col("src").as("dst"))
+          val sccSet = ball(ra).join(ball(back), "id").localCheckpoint(true)
           val labeled = sccSet.withColumn("scc", lit(pivot))
           decided = Some(decided.map(_.union(labeled)).getOrElse(labeled))
           undecided = undecided.join(sccSet, Seq("id"), "left_anti").localCheckpoint(true)
@@ -1957,16 +1897,16 @@ object GraphOps {
     * reference counterpart — the connectivity read behind web-graph studies).
     *
     * N(r) = #{(u,v) : dist(u→v) ≤ r} (self-pairs count at r=0, so N(0) = n),
-    * computed from the same bounded all-pairs BFS relation [[harmonic]]
-    * uses. The effective diameter is the smallest r with N(r) ≥ 0.9·N(rmax)
-    * within the computed horizon — compared as 10·N(r) ≥ 9·N(rmax), all
-    * BIGINT, so the relation is hash-exact cross-engine.
+    * computed from the same bounded all-pairs BFS ([[bfsDriver]] /
+    * [[bfsLoop]]) [[harmonic]] uses. The effective diameter is the smallest
+    * r with N(r) ≥ 0.9·N(rmax) within the computed horizon — compared as
+    * 10·N(r) ≥ 9·N(rmax), all BIGINT, so the relation is hash-exact
+    * cross-engine.
     *
-    * Scale shapes: the distance relation is per-round one co-partitioned
-    * join + min-agg with truncated lineage (the iterative discipline); the
-    * rollup collapses it to `rounds+1` rows, so the unpartitioned cumulative
-    * window at the end is over a constant-size relation. At 10^12 nodes the
-    * exact all-pairs relation is infeasible — [[hyperBall]] estimates the
+    * Scale shapes: the rollup collapses the distance relation to
+    * `rounds+1` rows, so the unpartitioned cumulative window at the end is
+    * over a constant-size relation. At 10^12 nodes the exact all-pairs
+    * relation is infeasible — [[hyperBall]] estimates the
     * SAME N(r) from per-node HLL registers; this operator is its exact
     * ground truth (HyperBallSpec pins the registers to the BFS balls).
     *
@@ -1974,15 +1914,13 @@ object GraphOps {
   def neighborhoodFunction(edges: DataFrame, rounds: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(rounds >= 1 && rounds <= 16, s"rounds must be in [1,16]: $rounds")
-    val adj = edges.filter(col("source") =!= col("target"))
-      .select(col("source").as("asrc"), col("target").as("adst"))
-      .distinct().localCheckpoint(true)
-    // small-graph fast path: same BFS relation; the cumulative/effective-
-    // diameter read is over rounds+1 rows — pure driver arithmetic
-    // (pairs_within·10 >= total·9, first radius reaching it flagged)
+    val adj = simpleAdj(edges)
+    // the cumulative/effective-diameter read is over rounds+1 rows — pure
+    // driver arithmetic (pairs_within·10 >= total·9, first radius reaching
+    // it flagged)
     localPairs("neighborhoodFunction", adj).map { es =>
       val ns = (es.map(_._1) ++ es.map(_._2)).distinct
-      val dist = allPairsDistDriver(es, rounds, ns)
+      val dist = bfsDriver(es, rounds, ns)
       val perR = dist.groupBy(_._2).map { case (r, g) => r -> g.size.toLong }
         .toSeq.sortBy(_._1)
       val total = perR.map(_._2).sum
@@ -1997,18 +1935,9 @@ object GraphOps {
       }
       localDf(edges, rows, "radius", "pairs_at", "pairs_within", "is_effective_diameter")
     }.getOrElse {
-      val nodes = adj.select(col("asrc").as("id"))
-        .union(adj.select(col("adst").as("id"))).distinct().localCheckpoint(true)
-      var dist = nodes.select(col("id").as("src"), col("id").as("dst"), lit(0L).as("dist"))
-        .localCheckpoint(true)
-      for (_ <- 1 to rounds) {
-        val ext = dist.join(adj, dist("dst") === adj("asrc"))
-          .select(col("src"), col("adst").as("dst"), (col("dist") + 1L).as("dist"))
-        dist = dist.union(ext)
-          .groupBy(col("src"), col("dst")).agg(min(col("dist")).as("dist"))
-          .localCheckpoint(true)
-      }
-      val perRadius = dist.groupBy(col("dist").as("radius"))
+      val nodes = nodesOf(adj).localCheckpoint(true)
+      val perRadius = bfsLoop(adj, nodes.select(col("id").as("seed"), col("id")), rounds)
+        .groupBy(col("dist").as("radius"))
         .agg(count(lit(1)).as("pairs_at"))
       // rounds+1 rows from here on — the global windows are driver-trivial
       val wCum = Window.orderBy(col("radius"))
@@ -2112,9 +2041,7 @@ object GraphOps {
     * exact counts; r = reciprocated / m is ONE double division of exact
     * BIGINTs. Output: one row (m, reciprocated, reciprocity). */
   def reciprocity(edges: DataFrame): DataFrame = {
-    val adj = edges.filter(col("source") =!= col("target"))
-      .select(col("source").as("src"), col("target").as("dst"))
-      .distinct().localCheckpoint(true)
+    val adj = simpleAdj(edges)
     val mutual = adj.join(
       adj.select(col("dst").as("src"), col("src").as("dst")), Seq("src", "dst"),
       "left_semi")
@@ -2405,6 +2332,19 @@ object GraphOps {
       .filter(col("i") =!= col("j") && abs(col("i") - col("j")) <= window)
       .groupBy(col("center"), col("context")).agg(count(lit(1)).as("cnt"))
   }
+
+  /** The directed simple graph (src, dst): self-loops dropped, parallel
+    * edges collapsed, checkpointed once — the directed twin of
+    * [[undirectedSimple]] and the shared prep of the directed analytics
+    * (the traversals, hyperBall, katz, reciprocity). */
+  private def simpleAdj(edges: DataFrame): DataFrame =
+    edges.filter(col("source") =!= col("target"))
+      .select(col("source").as("src"), col("target").as("dst"))
+      .distinct().localCheckpoint(true)
+
+  /** The node ids (id) of a [[simpleAdj]] relation. */
+  private def nodesOf(adj: DataFrame): DataFrame =
+    adj.select(col("src").as("id")).union(adj.select(col("dst").as("id"))).distinct()
 
   /** Collapse to the undirected simple graph: distinct node-ordered pairs
     * a < b, self-loops dropped — the shared prep of every undirected
@@ -2815,33 +2755,20 @@ object GraphOps {
     * documented: classification is exact for nodes within `rounds` hops of
     * the pivot, conservative (OTHER) beyond it.
     *
-    * Scale shape: per round one key-join frontier expansion + distinct per
-    * direction (same shape as [[bfs]]), every frontier localCheckpointed to
-    * truncate lineage; the classify step is two left joins on the node id
-    * and one vocabulary-sized rollup. No driver-side data beyond the plan. */
+    * Scale shape: F and B are the bounded BFS seeded with the pivot
+    * ([[bfsDriver]] / [[bfsLoop]]) over the edges and their reverse; the
+    * classify step is two left joins on the node id and one
+    * vocabulary-sized rollup. */
   def bowTie(edges: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 9, s"rounds must be in [1,9]: $rounds")
-    val adj = edges.filter(col("source") =!= col("target"))
-      .select(col("source").as("src"), col("target").as("dst"))
-      .distinct().localCheckpoint(true)
-    // small-graph fast path: pivot = min node id in UTF-8 binary order,
-    // F/B = bounded forward/backward balls, then the four-way classify —
-    // one bounded collect replaces the two frontier chains (spec-pinned)
+    val adj = simpleAdj(edges)
+    // pivot = min node id in UTF-8 binary order on both paths
     localPairs("bowTie", adj).map { es =>
       val ns = (es.map(_._1) ++ es.map(_._2)).distinct
       val pivot = ns.reduce((a, b) => if (sparkStringOrdering.lt(a, b)) a else b)
-      val fwd = es.groupBy(_._1); val bwd = es.groupBy(_._2)
-      def ball(out: Boolean): Set[String] = {
-        var set = Set(pivot)
-        for (_ <- 1 to rounds) {
-          val step = set.flatMap(v =>
-            (if (out) fwd.get(v).map(_.map(_._2)) else bwd.get(v).map(_.map(_._1)))
-              .getOrElse(Array.empty[String]))
-          set = set ++ step
-        }
-        set
-      }
-      val f = ball(out = true); val b = ball(out = false)
+      def ball(g: Array[(String, String)]) =
+        bfsDriver(g, rounds, Array(pivot)).keySet.map(_._2)
+      val f = ball(es); val b = ball(es.map(_.swap))
       val cls = ns.map { n =>
         if (f(n) && b(n)) "CORE" else if (b(n)) "IN"
         else if (f(n)) "OUT" else "OTHER"
@@ -2849,24 +2776,14 @@ object GraphOps {
       localDf(edges, cls.groupBy(identity).toSeq.map { case (c, g) => (c, g.length.toLong) },
         "cls", "n_nodes")
     }.getOrElse {
-      val nodes = adj.select(col("src").as("id"))
-        .union(adj.select(col("dst").as("id"))).distinct().localCheckpoint(true)
-      var f = nodes.agg(min(col("id")).as("id"))
-      var b = f
-      // two independent frontier chains, each 2x plan growth per round —
-      // rounds <= 4 stays one lazy plan (the roundCkpt policy note)
-      val ck = roundCkpt(rounds, maxLazy = 4)
-      for (_ <- 1 to rounds) {
-        f = ck(f.union(adj.join(f.withColumnRenamed("id", "src"), "src")
-            .select(col("dst").as("id")))
-          .distinct())
-        b = ck(b.union(adj.join(b.withColumnRenamed("id", "dst"), "dst")
-            .select(col("src").as("id")))
-          .distinct())
-      }
+      val nodes = nodesOf(adj).localCheckpoint(true)
+      val pivot = nodes.agg(min(col("id")).as("seed")).select(col("seed"), col("seed").as("id"))
+      def ball(g: DataFrame, in: String) =
+        bfsLoop(g, pivot, rounds).select(col("id"), lit(1).as(in))
+      val back = adj.select(col("dst").as("src"), col("src").as("dst"))
       nodes
-        .join(f.withColumn("in_f", lit(1)), Seq("id"), "left")
-        .join(b.withColumn("in_b", lit(1)), Seq("id"), "left")
+        .join(ball(adj, "in_f"), Seq("id"), "left")
+        .join(ball(back, "in_b"), Seq("id"), "left")
         .select(when(col("in_f") === 1 && col("in_b") === 1, "CORE")
           .when(col("in_b") === 1, "IN")
           .when(col("in_f") === 1, "OUT")

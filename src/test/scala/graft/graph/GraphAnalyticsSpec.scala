@@ -2,6 +2,7 @@ package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{BothPaths, SparkTestSession}
+import graft.exec.Bounded
 import graft.exec.Bounded.distributedOnly
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -14,6 +15,14 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession with BothPath
   private def edges(rows: (String, String, Double)*): DataFrame = {
     import spark.implicits._
     rows.toDF("source", "target", "c")
+  }
+
+  /** Runs `body` and asserts that a probe under each of `labels` took the
+    * driver, so a parity check fails when a fast path stops firing. */
+  private def onDriver(labels: String*)(body: => Unit): Unit = {
+    val (_, probes) = Bounded.recording(body)
+    val driver = probes.filter(_.path == Bounded.Driver).map(_.label).toSet
+    assert(labels.toSet.subsetOf(driver), s"a fast path did not run: $probes")
   }
 
   test("connectedComponents: two components, self-loops carry no connectivity") {
@@ -96,6 +105,17 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession with BothPath
       assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
         .exists(_.isInstanceOf[ArithmeticException]), s"K_{$n,$n} $num/$den x$rounds: $ex")
     }
+  }
+
+  bothPaths("modularity: a q_num that overflows a long raises, never wraps") {
+    // two disjoint triangles of weight 3e9: in2_w = deg_w = 1.8e10 and
+    // 2m = 3.6e10, so in2_w * 2m and deg_w^2 overflow (the sums do not)
+    val c = 3e9
+    val e = edges(("A", "B", c), ("B", "C", c), ("A", "C", c),
+      ("D", "E", c), ("E", "F", c), ("D", "F", c))
+    val ex = intercept[Exception](GraphOps.modularity(e).collect())
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), s"$ex")
   }
 
   test("modularity: one community scores 0; two disjoint triangles score Q=1/2") {
@@ -347,35 +367,42 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession with BothPath
   }
 
   test("sssp / bowTie: driver fast path == distributed loop") {
+    // plus a self-loop and a parallel edge, which the preps drop and merge
     val e = edges(("A", "B", 4), ("B", "C", 2), ("A", "C", 1), ("C", "D", 5),
-      ("D", "A", 1), ("X", "Y", 2))
+      ("D", "A", 1), ("X", "Y", 2), ("C", "C", 3), ("A", "B", 2))
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
-    for (r <- Seq(1, 4)) {
-      assert(rows(GraphOps.sssp(e, "A", rounds = r)) ==
-        rows(distributedOnly(GraphOps.sssp(e, "A", rounds = r))), s"sssp r=$r")
-      assert(rows(GraphOps.bowTie(e, rounds = r)) ==
-        rows(distributedOnly(GraphOps.bowTie(e, rounds = r))), s"bowtie r=$r")
+    onDriver("sssp", "bowTie") {
+      for (r <- Seq(1, 4, 5)) {
+        assert(rows(GraphOps.sssp(e, "A", rounds = r)) ==
+          rows(distributedOnly(GraphOps.sssp(e, "A", rounds = r))), s"sssp r=$r")
+        assert(rows(GraphOps.bowTie(e, rounds = r)) ==
+          rows(distributedOnly(GraphOps.bowTie(e, rounds = r))), s"bowtie r=$r")
+      }
     }
   }
 
   test("bfs family: driver fast path == distributed loop") {
-    // directed chain + branch + unreachable island; D unreached at rounds=1
+    // directed chain + branch + unreachable island; D unreached at rounds=1;
+    // a self-loop and a parallel edge, which the shared prep drops and merges
     val e = edges(("A", "B", 1), ("B", "C", 1), ("C", "D", 1), ("A", "C", 1),
-      ("X", "Y", 1), ("D", "A", 1))
+      ("X", "Y", 1), ("D", "A", 1), ("B", "B", 1), ("A", "B", 2))
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
-    for (r <- Seq(1, 3)) {
-      assert(rows(GraphOps.harmonic(e, rounds = r)) ==
-        rows(distributedOnly(GraphOps.harmonic(e, rounds = r))), s"harmonic r=$r")
-      assert(rows(GraphOps.closeness(e, rounds = r)) ==
-        rows(distributedOnly(GraphOps.closeness(e, rounds = r))), s"closeness r=$r")
-      assert(rows(GraphOps.neighborhoodFunction(e, rounds = r)) ==
-        rows(distributedOnly(GraphOps.neighborhoodFunction(e, rounds = r))), s"nf r=$r")
-      assert(rows(GraphOps.bfs(e, "A", rounds = r)) ==
-        rows(distributedOnly(GraphOps.bfs(e, "A", rounds = r))), s"bfs r=$r")
+    onDriver("bfs", "harmonic", "closeness", "neighborhoodFunction") {
+      // rounds 5 runs rounds past the fixpoint, which add nothing
+      for (r <- Seq(1, 3, 5)) {
+        assert(rows(GraphOps.harmonic(e, rounds = r)) ==
+          rows(distributedOnly(GraphOps.harmonic(e, rounds = r))), s"harmonic r=$r")
+        assert(rows(GraphOps.closeness(e, rounds = r)) ==
+          rows(distributedOnly(GraphOps.closeness(e, rounds = r))), s"closeness r=$r")
+        assert(rows(GraphOps.neighborhoodFunction(e, rounds = r)) ==
+          rows(distributedOnly(GraphOps.neighborhoodFunction(e, rounds = r))), s"nf r=$r")
+        assert(rows(GraphOps.bfs(e, "A", rounds = r)) ==
+          rows(distributedOnly(GraphOps.bfs(e, "A", rounds = r))), s"bfs r=$r")
+      }
+      // a source with no out-edges still reports itself at distance 0
+      assert(rows(GraphOps.bfs(e, "Y", rounds = 2)) ==
+        rows(distributedOnly(GraphOps.bfs(e, "Y", rounds = 2))))
     }
-    // a source with no out-edges still reports itself at distance 0
-    assert(rows(GraphOps.bfs(e, "Y", rounds = 2)) ==
-      rows(distributedOnly(GraphOps.bfs(e, "Y", rounds = 2))))
   }
 
   test("walks: driver fast path == distributed loop (first and second order)") {
@@ -396,16 +423,20 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession with BothPath
   }
 
   test("scc / kcore: driver fast path == distributed loop") {
-    // 2-cycle + 3-cycle + a bridge + a tail (peels off), plus a dyad
+    // 2-cycle + 3-cycle + a bridge + a tail (peels off), plus a dyad, a
+    // self-loop and a parallel edge
     val e = edges(("A", "B", 1), ("B", "A", 1), ("C", "D", 1), ("D", "E", 1),
-      ("E", "C", 1), ("B", "C", 1), ("E", "F", 1), ("X", "Y", 1))
+      ("E", "C", 1), ("B", "C", 1), ("E", "F", 1), ("X", "Y", 1), ("C", "C", 1),
+      ("A", "B", 2))
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
-    for ((o, i) <- Seq((3, 3), (1, 1), (2, 2)))
-      assert(rows(GraphOps.scc(e, o, i)) ==
-        rows(distributedOnly(GraphOps.scc(e, o, i))), s"scc outer=$o inner=$i")
-    for (k <- Seq(1L, 2L))
-      assert(rows(GraphOps.kCore(e, k = k)) ==
-        rows(distributedOnly(GraphOps.kCore(e, k = k))), s"kcore k=$k")
+    onDriver("scc", "kCore") {
+      for ((o, i) <- Seq((3, 3), (1, 1), (2, 2), (3, 5)))
+        assert(rows(GraphOps.scc(e, o, i)) ==
+          rows(distributedOnly(GraphOps.scc(e, o, i))), s"scc outer=$o inner=$i")
+      for (k <- Seq(1L, 2L))
+        assert(rows(GraphOps.kCore(e, k = k)) ==
+          rows(distributedOnly(GraphOps.kCore(e, k = k))), s"kcore k=$k")
+    }
   }
 
   test("lpa/modularity: small-graph driver fast path == distributed loop") {
