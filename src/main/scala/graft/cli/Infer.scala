@@ -1,7 +1,9 @@
 package graft.cli
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import graft.core.Page
+import graft.exec.Observed
 import graft.gen.PageGen
 import graft.graph.{D3Json, GraphBuilder}
 import graft.kg.{KgPipeline, LexiconScorer, Sampler}
@@ -174,10 +176,12 @@ object Infer {
     // the run; sources without markup (txt/csv/jsonl: html is null) simply
     // contribute no links. Composes with every page source incl. --warc.
     opts.get("--links").foreach { dir =>
-      import org.apache.spark.sql.functions.{col, lit}
+      import org.apache.spark.sql.functions.col
+      val linkCount = Observation()
       val links = graft.ops.WebGraph.extractLinks(
           pages.toDF().filter(col("html").isNotNull), col("html"), col("url"))
-        .localCheckpoint() // one page scan feeds both the link and host outputs
+        .observe(linkCount, count(lit(1)))
+        .localCheckpoint() // one page scan feeds the link and host outputs and the count
       links.write.mode(SaveMode.Overwrite).parquet(s"$dir/links")
       graft.io.Sinks.csv(graft.ops.WebGraph.hostGraph(links), s"$dir/hosts")
       // --frontier-store DIR --batch-id ID: fold this batch's in-link
@@ -197,7 +201,7 @@ object Infer {
           System.err.println(s"batch 'frontier-$batchId' already in $storeDir ledger; " +
             "fold skipped (idempotent retry)")
       }
-      println(s"""{"links_out":"$dir","links":${links.count()}}""")
+      println(s"""{"links_out":"$dir","links":${Observed.long(linkCount, "links")}}""")
     }
 
     // --mirrors DIR [--min-shared N]: mirror/shared-content host pairs over
@@ -206,14 +210,16 @@ object Infer {
     // re-scheduling fetches (ops/WebGraph.mirrorHosts).
     opts.get("--mirrors").foreach { dir =>
       import org.apache.spark.sql.functions.{col, md5}
+      val pairCount = Observation()
       val pairs = graft.ops.WebGraph.mirrorHosts(
         pages.toDF().filter(col("text").isNotNull),
         graft.ops.UrlOps.hostOf(col("url")),
         md5(col("text").cast("binary")),
         minShared = opts.getOrElse("--min-shared", "2").toLong)
+        .observe(pairCount, count(lit(1)))
         .localCheckpoint() // one materialization feeds the csv and the count
       graft.io.Sinks.csv(pairs, dir)
-      println(s"""{"mirrors_out":"$dir","host_pairs":${pairs.count()}}""")
+      println(s"""{"mirrors_out":"$dir","host_pairs":${Observed.long(pairCount, "host_pairs")}}""")
     }
 
     // resumable path: triples written bucket-checkpointed, then exit
@@ -262,9 +268,14 @@ object Infer {
       if (fusedMode) KgPipeline.triplesFused(pages, fusedCfg, scorer)
       else KgPipeline.triples(samples, scorer)
 
+    // the object path's sample count rides the contents write, a 1:1
+    // projection of the samples
+    val sampleCount = Observation()
     if (!fusedMode) {
       val preds = KgPipeline.predictions(samples, scorer)
-      KgPipeline.contentsCompat(samples).write.mode(SaveMode.Overwrite).parquet(s"$out/contents")
+      KgPipeline.contentsCompat(samples)
+        .observe(sampleCount, count(lit(1)))
+        .write.mode(SaveMode.Overwrite).parquet(s"$out/contents")
       KgPipeline.predictionsOneHot(preds).write.mode(SaveMode.Overwrite).parquet(s"$out/predict")
     }
     triples.write.mode(SaveMode.Overwrite).parquet(s"$out/triples")
@@ -275,16 +286,18 @@ object Infer {
     // retracted ('del' at T): the crawl-diff that keeps a continuously
     // re-crawled KG queryable at any point in time (ChangelogStore.snapshot)
     opts.get("--changelog-store").foreach { storeDir =>
-      import org.apache.spark.sql.functions.{col, concat, lit}
+      import org.apache.spark.sql.functions.{col, concat}
       val batchId = opts.getOrElse("--batch-id",
         sys.error("--changelog-store requires --batch-id (the idempotent-retry token)"))
       val ts = opts.getOrElse("--asof-ts",
         sys.error("--changelog-store requires --asof-ts (deterministic epoch seconds)")).toLong
+      val currentCount = Observation()
       val current = spark.read.parquet(s"$out/triples")
         .select(concat(col("subjType"), lit("."), col("subj")).as("s"),
           col("pred").as("p"),
           concat(col("objType"), lit("."), col("obj")).as("o"))
-        .distinct().localCheckpoint() // consumed twice (adds + retract anti-join)
+        .distinct().observe(currentCount, count(lit(1)))
+        .localCheckpoint() // consumed twice (adds + retract anti-join)
       val adds = current.select(col("s"), col("p"), col("o"),
         lit(ts).as("ts"), lit("add").as("op"))
       val entries =
@@ -297,7 +310,7 @@ object Infer {
         }
       val merged = graft.ops.ChangelogStore.merge(entries, storeDir, batchId)
       println(s"""{"changelog_store":"$storeDir","batch":"$batchId","merged":$merged,""" +
-        s""""asserted":${current.count()}}""")
+        s""""asserted":${Observed.long(currentCount, "asserted")}}""")
     }
 
     // graph build, aggregate-first: the WRITTEN triples collapse once to their
@@ -363,7 +376,8 @@ object Infer {
 
     // the WRITTEN rows, summed from the multiplicities
     val nTriples = local.map(_.triples).getOrElse(built.triples)
-    val nSamples = if (fusedMode) nTriples else samples.count() // fused: 1 sample == 1 triple
+    val nSamples = // fused: 1 sample == 1 triple
+      if (fusedMode) nTriples else Observed.long(sampleCount, "samples")
     println(s"""{"pages_out":"$out","samples":$nSamples,"triples":$nTriples,""" +
       s""""nodes":${graph.nodes.size},"links":${graph.links.size}}""")
     spark.stop()

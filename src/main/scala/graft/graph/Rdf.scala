@@ -108,55 +108,13 @@ object Rdf {
     * since rewriting can merge formerly-distinct triples. Output: the
     * rewritten, deduplicated (s, p, o) relation.
     *
-    * Hybrid component finding: up to `driverMaxEdges` distinct assertions
-    * the equivalence classes are solved with a driver-side union-find (one
-    * collect of the assertion-sized relation; at seconds-per-job fixed cost,
-    * the distributed propagate-loop's 4-6 rounds are pure overhead for a
-    * map that is about to be broadcast anyway), with bit-identical min-id
-    * labels to the distributed [[graft.ops.Dedup.clusters]] path used above
-    * the threshold (RdfSpec pins the two paths equal on the same input).
-    *
-    * `driverMaxEdges < 0` (the default) derives the threshold from driver
-    * heap: ~512 bytes/edge worst-case resident cost (two interned IRI
-    * strings at web-scale lengths plus HashMap node + boxing overhead),
-    * budgeted at 1/8 of `Runtime.maxMemory` so the collect can never take
-    * more than a thin slice of the driver, capped at 10^6 edges — beyond
-    * that the distributed path's fixed round cost is amortized anyway. On a
-    * 4 GiB driver this derives ~10^6; on a 512 MiB one ~130k. */
-  def sameAsCanonicalize(triples: DataFrame, sameAs: DataFrame,
-      driverMaxEdges: Long = -1L): DataFrame = {
-    val maxEdges =
-      if (driverMaxEdges >= 0) driverMaxEdges
-      else math.min(1000000L, Runtime.getRuntime.maxMemory / 8 / 512)
-    val spark = triples.sparkSession
-    val edges = sameAs.select(col("a").cast("string").as("a"),
-      col("b").cast("string").as("b")).distinct()
-    val nEdges = edges.count()
-    val labels: DataFrame =
-      if (nEdges <= maxEdges) {
-        val parent = scala.collection.mutable.HashMap.empty[String, String]
-        def find(x: String): String = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x // path compression
-          while (parent.getOrElse(c, c) != r) { val nxt = parent(c); parent(c) = r; c = nxt }
-          r
-        }
-        edges.collect().foreach { row =>
-          val (ra, rb) = (find(row.getString(0)), find(row.getString(1)))
-          if (ra != rb) parent(if (ra < rb) rb else ra) = if (ra < rb) ra else rb
-        }
-        val members = parent.keys.toSeq
-        val byRoot = members.groupBy(find)
-        val rows = byRoot.toSeq.flatMap { case (root, ms) =>
-          val all = (ms :+ root).distinct
-          val rep = all.min
-          all.map(m => (m, rep))
-        }
-        import spark.implicits._
-        rows.toDF("id", "cluster")
-      } else GraphOps.connectedComponents(
-        edges.select(col("a").as("source"), col("b").as("target")))
+    * The components are [[GraphOps.connectedComponents]]: one bounded
+    * probe of the assertions, then a driver union-find when they fit
+    * ([[graft.ops.Dedup.clusters]]), else the distributed loop; both pick
+    * the min id in Spark's (UTF-8 byte) order. */
+  def sameAsCanonicalize(triples: DataFrame, sameAs: DataFrame): DataFrame = {
+    val labels = GraphOps.connectedComponents(
+      sameAs.select(col("a").cast("string").as("source"), col("b").cast("string").as("target")))
     val canon = labels
       .filter(col("id") =!= col("cluster")) // identity rewrites are no-ops
     triples

@@ -1,7 +1,8 @@
 package graft.io
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.exec.Observed
 
 /** Resumable stage execution with per-partition lineage — the engine feature
   * behind the north_rule "resumable from checkpoint with per-partition lineage
@@ -24,9 +25,11 @@ import org.apache.spark.sql.functions._
   * The transform must be deterministic per url — which the whole engine is by
   * construction (deterministic ids, SURVEY.md §4.3).
   *
-  * Row metrics come from `Dataset.observe` ON the write pass (collected via a
-  * QueryExecutionListener) — NOT from re-reading the just-written output,
-  * which at 100 TB would be a second full pass over stage output.
+  * Row metrics come from an `Observation` ON the write pass (read through
+  * [[graft.exec.Observed]]) — NOT from re-reading the just-written output,
+  * which at 100 TB would be a second full pass over stage output. Only if
+  * the listener bus never delivers the metric does the run fall back to
+  * that rescan (`ResumeReport.rowCountSource == "rescan"`).
   */
 object Checkpoint {
 
@@ -85,28 +88,6 @@ object Checkpoint {
   def result(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(dataPath(path))
 
-  /** Collects the named observe-metric row emitted by a blocking action.
-    * QueryExecutionListener events arrive asynchronously, so the value is
-    * polled with a bounded wait; None on timeout (caller falls back). */
-  private final class ObservedMetric(spark: SparkSession, name: String) {
-    private val ref = new java.util.concurrent.atomic.AtomicReference[org.apache.spark.sql.Row]()
-    private val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        qe.observedMetrics.get(name).foreach(ref.set)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    def await(timeoutMs: Long = 30000): Option[org.apache.spark.sql.Row] = {
-      val deadline = System.nanoTime() + timeoutMs * 1000000L
-      try {
-        while (ref.get() == null && System.nanoTime() < deadline) Thread.sleep(10)
-        Option(ref.get())
-      } finally spark.listenerManager.unregister(listener)
-    }
-  }
-
   /** Run `transform` over the buckets of `input` not yet recorded in lineage,
     * writing outputs partitioned by bucket and appending lineage rows.
     *
@@ -142,16 +123,14 @@ object Checkpoint {
 
     // per-bucket row counts observed during the single write pass (one
     // conditional-sum aggregate per pending bucket — nBuckets is an operator
-    // config, small by design). The metric name is unique per invocation:
-    // the listener is session-global, and two concurrent runResumable calls
-    // sharing a SparkSession must never cross-read each other's metric row.
-    val metricName = s"graft_ckpt_${java.util.UUID.randomUUID().toString.take(8)}"
+    // config, small by design). Each call observes through its own
+    // Observation, so concurrent runResumable calls never cross-read.
     // coalesce: sum over ZERO rows is null — empty buckets must still record
     // rows=0 and complete (the documented contract), not NPE on getLong
     val perBucket = pending.map(b =>
       coalesce(sum(when(col(BucketCol) === b, 1L).otherwise(0L)), lit(0L)).as(s"rows_$b"))
-    val observed = out.observe(metricName, perBucket.head, perBucket.tail: _*)
-    val collector = new ObservedMetric(spark, metricName)
+    val rowsObs = Observation()
+    val observed = out.observe(rowsObs, perBucket.head, perBucket.tail: _*)
 
     observed.write
       .mode("overwrite")
@@ -160,7 +139,7 @@ object Checkpoint {
       .parquet(dataPath(path))
     val wallMs = (System.nanoTime() - t0) / 1000000L
 
-    val (counts, source) = collector.await() match {
+    val (counts, source) = Observed.row(rowsObs) match {
       case Some(row) =>
         (pending.zipWithIndex.map { case (b, i) =>
           b -> (if (row.isNullAt(i)) 0L else row.getLong(i))

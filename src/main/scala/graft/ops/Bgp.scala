@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import graft.exec.Observed
 
 /** SPARQL-style basic-graph-pattern (BGP) matching over an (s, p, o) triple
   * relation — the KG CONSUMER's query primitive: once the pipeline has
@@ -916,9 +917,7 @@ object Bgp {
     var delta = deltas.head
     var growing = true
     var it = 0
-    val metricBase = s"graft_tc_${java.util.UUID.randomUUID().toString.take(8)}_"
     while (growing && it < maxIter) {
-      val metricName = metricBase + it
       // SEEDED closure: the frontier delta is the provably small side
       // (it shrinks toward the fixpoint), but the checkpoint-propagated
       // stats UNDERESTIMATE the step relation, so the planner was
@@ -928,17 +927,13 @@ object Bgp {
       // unseeded (full-closure) regime the delta starts at |step| and
       // the hint would be wrong — leave the planner alone there.
       val d = if (seeds.nonEmpty) broadcast(delta) else delta
+      val novelObs = Observation()
       val fresh = d.join(step, col("z") === col("hs"))
         .select(col("x"), col("ho").as("z")).distinct()
         .join(closure, Seq("x", "z"), "left_anti")
-        .observe(metricName, count(lit(1)).as("novel"))
+        .observe(novelObs, count(lit(1)).as("novel"))
       val materialized = fresh.localCheckpoint()
-      val novel = fresh.queryExecution.observedMetrics.get(metricName) match {
-        case Some(row) => row.getLong(0)
-        case None => throw new IllegalStateException(
-          s"observe metric $metricName not collected during checkpoint — " +
-            "convergence detection would silently stall")
-      }
+      val novel = Observed.long(novelObs, "Bgp.reachability novel pairs")
       if (novel == 0L) growing = false
       else {
         deltas += materialized

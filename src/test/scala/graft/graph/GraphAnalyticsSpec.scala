@@ -521,6 +521,22 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestSession with BothPath
       rows(distributedOnly(GraphOps.communityProfile(e))))
   }
 
+  bothPaths("louvain family: a move score that overflows a long raises, never wraps") {
+    // the modularity overflow input: ki = 6e9 and 2m = 3.6e10, so a
+    // candidate's k_{x,C} * 2m is about 1.1e20 (the sums do not overflow)
+    val c = 3e9
+    val e = edges(("A", "B", c), ("B", "C", c), ("A", "C", c),
+      ("D", "E", c), ("E", "F", c), ("D", "F", c))
+    for ((name, op) <- Seq[(String, DataFrame => DataFrame)](
+        "louvainMoves" -> (GraphOps.louvainMoves(_)),
+        "louvainCoarsen" -> (GraphOps.louvainCoarsen(_)),
+        "communityProfile" -> (GraphOps.communityProfile(_)))) {
+      val ex = intercept[Exception](op(e).collect())
+      assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), s"$name: $ex")
+    }
+  }
+
   test("louvainCoarsen: barbell collapses to 2 supernodes; level-2 moves merge them") {
     val e = edges(("A", "B", 2), ("B", "C", 2), ("A", "C", 2),
       ("D", "E", 2), ("E", "F", 2), ("D", "F", 2), ("C", "D", 1))

@@ -28,10 +28,25 @@ class PageRankSpec extends AnyFunSuite with SparkTestSession with BothPaths {
     ("a", "b", 3L), ("a", "c", 1L), ("b", "c", 2L),
     ("c", "a", 1L), ("d", "c", 5L)) // d is a source-only node; no edge into d
 
-  private def edgesDf = {
-    import spark.implicits._
+  private def edgesDf = edgesIn(spark)
+
+  private def edgesIn(session: org.apache.spark.sql.SparkSession) = {
+    import session.implicits._
     edges.map { case (s, t, c) => (s, t, "pos", c.toDouble) }
       .toDF("source", "target", "sent", "c")
+  }
+
+  test("action profile: no count job in the prep; dangling eps = 0 adds only the sinks checkpoint") {
+    for ((path, run) <- Seq[(String, (=> Unit) => Unit)](
+        "default" -> (body => body),
+        "distributedOnly" -> (body => graft.exec.Bounded.distributedOnly(body)))) {
+      // the node count rides the nodes checkpoint
+      val pr = actions(s => run(GraphOps.pageRank(edgesIn(s), iters = 3).collect()))
+      assert(!pr.contains("count"), s"$path: pageRank launches a count action: $pr")
+      // at eps = 0 the dangling loop neither observes nor checkpoints per round
+      val dang = actions(s => run(GraphOps.pageRankDangling(edgesIn(s), iters = 3).collect()))
+      assert(dang.size <= pr.size + 1, s"$path: pageRankDangling $dang vs pageRank $pr")
+    }
   }
 
   test("matches the local reference recurrence exactly") {

@@ -1,12 +1,12 @@
 package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestSession
+import graft.{BothPaths, SparkTestSession}
 import org.apache.spark.sql.functions._
 
 /** N-Triples export: IRI encoding of every forbidden character, statement
   * grammar, and the text sink round-trip. */
-class RdfSpec extends AnyFunSuite with SparkTestSession {
+class RdfSpec extends AnyFunSuite with SparkTestSession with BothPaths {
   import spark.implicits._
 
   test("iriEncode: forbidden set percent-encoded, '%' first, UTF-8 passthrough") {
@@ -104,18 +104,19 @@ class RdfSpec extends AnyFunSuite with SparkTestSession {
     assert(got.length == 1 && got.head.getString(0) == "u" && got.head.getString(2) == "v")
   }
 
-  test("sameAsCanonicalize: driver union-find and distributed components agree bit-for-bit") {
-    // chains, a star, an isolated pair, reversed/duplicate assertions
+  bothPaths("sameAsCanonicalize: driver union-find and distributed components agree bit-for-bit") {
+    // chains, a star, an isolated pair, reversed/duplicate assertions, and
+    // a chain whose min differs between UTF-16 and UTF-8 order: U+1F600
+    // (surrogates D83D DE00) sorts first in UTF-16, U+FF21 in UTF-8 (EF BC
+    // A1 < F0 9F 98 80), and Spark orders strings by UTF-8 bytes
+    val (emoji, fullA) = ("u\uD83D\uDE00", "u\uFF21")
     val sameAs = Seq(("e1", "e2"), ("e2", "e3"), ("e3", "e4"), ("z1", "z2"),
-      ("h", "h1"), ("h", "h2"), ("h", "h3"), ("e2", "e1"), ("e1", "e2"))
+      ("h", "h1"), ("h", "h2"), ("h", "h3"), ("e2", "e1"), ("e1", "e2"), (emoji, fullA))
       .toDF("a", "b")
-    val triples = Seq(("e4", "r", "h3"), ("z2", "r", "e1"), ("q", "r", "q2"))
+    val triples = Seq(("e4", "r", "h3"), ("z2", "r", "e1"), ("q", "r", "q2"), (emoji, "r", "q"))
       .toDF("s", "p", "o")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    val viaDriver = rows(Rdf.sameAsCanonicalize(triples, sameAs))
-    val viaCluster = rows(Rdf.sameAsCanonicalize(triples, sameAs, driverMaxEdges = 0L))
-    assert(viaDriver == viaCluster)
-    assert(viaDriver == Set(("e1", "r", "h"), ("z1", "r", "e1"), ("q", "r", "q2")))
+    val got = Rdf.sameAsCanonicalize(triples, sameAs)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    assert(got == Set(("e1", "r", "h"), ("z1", "r", "e1"), ("q", "r", "q2"), (fullA, "r", "q")))
   }
 }

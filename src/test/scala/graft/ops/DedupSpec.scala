@@ -59,43 +59,24 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("clusters: one Spark action per round — no separate changed-count job (round-3 verdict #1)") {
-    // a CHILD session: ExecutionListenerManager is per-session, so actions
-    // from concurrently-running suites (which use the parent session) never
-    // land in this listener — the assertion observes only this clustering run
-    val s2 = spark.newSession()
-    import s2.implicits._
-    // long chain (diameter 15) forces several propagate rounds
-    val pairs = (0L until 15L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val funcNames = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        funcNames.add(funcName)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
-    }
-    s2.listenerManager.register(listener)
-    try {
+    // [[actions]] listens on a child session: only this clustering run's
+    // actions land in it
+    val names = actions { s2 =>
+      import s2.implicits._
+      // long chain (diameter 15) forces several propagate rounds
+      val pairs = (0L until 15L).map(i => (i, i + 1)).toDF("a_id", "b_id")
       // distributedOnly: this test pins the DISTRIBUTED loop's action profile
       val c = distributedOnly(Dedup.clusters(pairs)).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(c == (0L to 15L).map(_ -> 0L).toMap)
-      // listener events are async: wait until the stream goes quiet
-      val deadline = System.nanoTime() + 10000000000L
-      var last = -1
-      while (funcNames.size() != last && System.nanoTime() < deadline) {
-        last = funcNames.size(); Thread.sleep(300)
-      }
-      val names = scala.jdk.CollectionConverters.IteratorHasAsScala(
-        funcNames.iterator()).asScala.toList
-      // convergence detection rides the checkpoint action via observe():
-      // the old per-round `count()` job must be gone
-      assert(!names.contains("count"),
-        s"clustering still launches count() actions per round: $names")
-      // 2 setup checkpoints + 1 checkpoint per round + the final collect;
-      // diameter 15 with pointer halving converges well inside 8 rounds
-      assert(names.size <= 11, s"too many actions for a 15-diameter chain: $names")
-    } finally s2.listenerManager.unregister(listener)
+    }
+    // convergence detection rides the checkpoint action via observe():
+    // the old per-round `count()` job must be gone
+    assert(!names.contains("count"),
+      s"clustering still launches count() actions per round: $names")
+    // 2 setup checkpoints + 1 checkpoint per round + the final collect;
+    // diameter 15 with pointer halving converges well inside 8 rounds
+    assert(names.size <= 11, s"too many actions for a 15-diameter chain: $names")
   }
 
   test("clusters on planted duplicates: exact dups + near dup share one cluster") {
